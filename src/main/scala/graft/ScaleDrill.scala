@@ -298,7 +298,7 @@ object ScaleDrill {
       println(s"DRILL# corpus x$scale ready at $dir")
       // BuildParallelism SWEEP (opt-in, SPARK_GRAFT_DRILL_SWEEP_PAR =
       // comma list of pool sizes): cold sharded builds at S=8 under each
-      // pool size, so ShardedIvf.BuildParallelism is a measured constant
+      // pool size, so Sharded.BuildParallelism is a measured constant
       // (the curve's knee), not a reasoned guess. Run alone — the sweep
       // is its own drill mode.
       sys.env.get("SPARK_GRAFT_DRILL_SWEEP_PAR").foreach { spec =>
@@ -307,7 +307,7 @@ object ScaleDrill {
         // into everything the session builds afterwards
         try {
           for (p <- spec.split(",").map(_.trim.toInt)) {
-            spark.conf.set(graft.operators.ShardedIvf.BuildParallelismConf, p.toString)
+            spark.conf.set(graft.operators.Sharded.BuildParallelismConf, p.toString)
             graft.sources.PosixMetaBackend.deleteRecursively(
               graft.sources.VectorIndexStore.shardedIvfPath(spark, dir, sweepShards))
             report(scale, s"build:ivf_sharded_par$p", "cold", timed {
@@ -315,7 +315,7 @@ object ScaleDrill {
               ()
             })
           }
-        } finally spark.conf.unset(graft.operators.ShardedIvf.BuildParallelismConf)
+        } finally spark.conf.unset(graft.operators.Sharded.BuildParallelismConf)
       }
       // cold store builds, timed individually (delete any prior artifact)
       val builds = if (sys.env.contains("SPARK_GRAFT_DRILL_SKIP_BUILDS"))

@@ -192,14 +192,13 @@ object AnnEval {
       : DataFrame = {
     ShardedIvf.verifyShards(path, shards) // wrong S silently drops shards
     val np = IvfIndex.resolveShardedNProbeAt(path, nProbe)
-    val scored = (0 until shards).map { r =>
-      val shardPath = s"$path/shard=$r"
+    val scored = Sharded.unionShards(path, shards) { (_, shardPath) =>
       // predicate: the batch mirror of ShardedIvf.searchFiltered — each
       // shard's cell-partitioned vectors are filtered BEFORE its probe
       val vecs = IvfIndex.loadVectors(spark, shardPath).filter(col("vec_id") =!= 0)
       ivfScored(spark, predicate.fold(vecs)(vecs.filter),
         IvfIndex.loadModel(spark, shardPath), queries, np)
-    }.reduce(_ unionAll _)
+    }
     topKPerQuery(scored, k)
   }
 
@@ -227,15 +226,14 @@ object AnnEval {
                     predicate: Option[org.apache.spark.sql.Column] = None)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    Sharding.verifyShards(path, shards) // wrong S silently drops shards
+    ShardedPq.verifyShards(path, shards) // wrong S silently drops shards
     val sl = ShardedPq.resolveShardedShortlist(path, nProbe, shortlist)
-    val scored = (0 until shards).map { r =>
-      val shardPath = s"$path/shard=$r"
+    val scored = Sharded.unionShards(path, shards) { (r, shardPath) =>
       val enc = PqIndex.loadEncoded(spark, shardPath).filter(col("vec_id") =!= 0)
       pqApproxScores(spark, predicate.fold(enc)(enc.filter),
         PqIndex.loadModel(spark, shardPath), queries, nProbe)
         .withColumn("shard", lit(r))
-    }.reduce(_ unionAll _)
+    }
     val short = scored
       .withColumn("rn", row_number().over(
         Window.partitionBy("qid", "shard").orderBy(col("approx_d"), col("vec_id"))))

@@ -1,0 +1,390 @@
+package graft.operators
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** The ONE sharded-index composition: S independent local indexes over a
+  * disjoint hash partition of the corpus (FAISS's sharded indexes; the
+  * shape Odyssey and REPOSE use — one generic partitioning layer over
+  * interchangeable local indexes). The local index is the KIND: the
+  * abstract per-shard verbs below, with two instances — [[ShardedIvf]]
+  * (full-precision shards: model + vectors + qerr) and [[ShardedPq]]
+  * (encoded shards: coarse + codebooks + codes + qerr). Every shard is a
+  * self-contained single-index artifact under `path/shard=r`, so each
+  * per-shard verb (probe, calibrate, drift, retrain, compact) is the
+  * single-index verb; what is about SHARDING has one body here:
+  *
+  *   - ROUTING: `shard = pmod(xxhash64(vec_id), S)` ([[Sharded.shardCol]])
+  *     — disjoint and total, so probing every cell of every shard is
+  *     exactly the brute-force answer, and appends and deletes route by
+  *     the same hash.
+  *   - `shards.META`: the S an artifact was built with, and the loud
+  *     wrong-S guard ([[verifyShards]]) every verb runs.
+  *   - BUILD ([[build]]): one tagging pass, S concurrent pruned per-shard
+  *     builds; virgin paths build in place, rebuilds of a published path
+  *     go through scratch siblings + POSIX rename so a mid-build failure
+  *     leaves the old artifact serving.
+  *   - APPEND / DELETE: hash-routed under the root's writer lease.
+  *   - MAINTENANCE: the per-shard retrain sweep, [[compactShards]],
+  *     [[compactShardsIfDeleted]], and the catch-up replay's reverse
+  *     delta.
+  *   - GROWTH: [[Sharded.grownShards]], the overflow-safe judgment every
+  *     shard-count growth loop calls (the store's and `ShardedHome`'s).
+  */
+abstract class Sharded {
+
+  // ---- the index kind: what one local index supplies per shard ----
+
+  /** Build one shard's artifact at `dir` from its partition. */
+  protected def buildAt(spark: SparkSession, dir: String, part: DataFrame,
+                        nCells: Int): Unit
+
+  /** Apply a routed slice to one shard (the single-index append). */
+  protected def appendAt(spark: SparkSession, shardPath: String,
+                         slice: DataFrame): Unit
+
+  /** Tombstone a routed vec_id slice on one shard. */
+  protected def deleteAt(spark: SparkSession, shardPath: String,
+                         ids: DataFrame): Unit
+
+  /** Compact one shard at its own cell count. */
+  private[graft] def compactAt(spark: SparkSession, shardPath: String): Unit
+
+  /** The single-index tombstone-fraction compaction of one shard. */
+  protected def compactIfDeletedAt(spark: SparkSession, shardPath: String,
+                                   maxDeletedFraction: Double): Boolean
+
+  /** One shard's rows: the LOGICAL view (tombstones anti-joined) and the
+    * PHYSICAL table (as stored, footer-countable).
+    */
+  private[graft] def logicalAt(spark: SparkSession, shardPath: String): DataFrame
+  private[graft] def physicalAt(spark: SparkSession, shardPath: String): DataFrame
+
+  // ---- shared verbs ----
+
+  /** The shard count recorded at build/reshard time, when the artifact
+    * carries the `shards.META` sidecar.
+    */
+  def shardCount(path: String): Option[Int] =
+    graft.sources.Versioned.metaBackend.readString(Sharded.shardsMetaFile(path))
+      .flatMap(_.trim.toIntOption)
+
+  /** Loud mismatch guard for every verb that pairs a root with a
+    * caller-supplied S. Before the sidecar a mismatch was silent in both
+    * directions: probing a 4-shard artifact with shards=3 drops shard 3's
+    * candidates; appending with shards=5 routes vectors to a `shard=4`
+    * directory no reader scans. No-op on sidecar-less (legacy) artifacts,
+    * which trust the caller.
+    */
+  private[graft] def verifyShards(path: String, shards: Int): Unit =
+    shardCount(path).foreach { s =>
+      require(s == shards,
+        s"sharded artifact at $path was built with S=$s but the caller " +
+          s"passed shards=$shards — a wrong S silently drops shards from " +
+          "probes or routes appends to unread directories")
+    }
+
+  /** Every shard's logical / physical rows as one plan. */
+  private[graft] def logical(spark: SparkSession, path: String, shards: Int): DataFrame =
+    Sharded.unionShards(path, shards)((_, p) => logicalAt(spark, p))
+
+  private[graft] def physical(spark: SparkSession, path: String, shards: Int): DataFrame =
+    Sharded.unionShards(path, shards)((_, p) => physicalAt(spark, p))
+
+  /** Build S independent artifacts under `path/shard=r`: one tagging pass
+    * over `vectors`, then per-shard builds from pruned partitions (a
+    * `shard = r` filter is source-level partition pruning — no shard
+    * rescans the corpus), [[Sharded.buildParallelism]] at a time (the
+    * scheduler interleaves the concurrent jobs' stages across the
+    * executors). Each shard sizes its own geometry: `nCellsPerShard`, or
+    * `autoCells` of the shard's row count when <= 0 (counted once from
+    * the tagged table). The tagged scratch is deleted after the last
+    * shard publishes. Callers wanting idempotent atomic publication go
+    * through the store's `ensureSharded*` entries.
+    */
+  def build(spark: SparkSession, vectors: DataFrame, path: String,
+            shards: Int, nCellsPerShard: Int = -1): Unit = {
+    require(shards >= 1, s"shards=$shards")
+    // REBUILD of a path with published shards goes through a scratch
+    // sibling + directory-rename cutover so a mid-build failure leaves
+    // the old artifact fully serving. Directory rename is a POSIX
+    // primitive (the object-store meta plane deliberately has none), so
+    // an in-place rebuild on remote storage is refused loudly — remote
+    // deployments publish at a NEW root, which needs no rename at all.
+    // A VIRGIN path builds directly into `shard=r`. Decided BEFORE the
+    // corpus-sized tagging write: a refusal must cost S existence
+    // checks, not a corpus round trip.
+    val meta = graft.sources.Versioned.metaBackend
+    val rebuild = (0 until shards).exists(r => meta.exists(s"$path/shard=$r"))
+    if (rebuild) require(!path.contains("://"),
+      s"in-place rebuild of $path needs a POSIX directory rename for its " +
+        "crash-safe cutover; on remote storage build at a NEW root " +
+        "(reshard / ensure*) or delete the artifact first")
+    val taggedDir = s"$path/tagged"
+    // overwrite: a failed prior build's scratch must not fail the retry
+    vectors.select(col("vec_id"), col("label"), col("embedding"))
+      .withColumn("shard", Sharded.shardCol(shards))
+      .repartition(col("shard")) // shard-clustered: one file per shard dir
+      .write.mode("overwrite").partitionBy("shard").parquet(taggedDir)
+    try {
+      val tagged = spark.read.parquet(taggedDir)
+      // one column-pruned pass gives every shard's cardinality
+      val counts: Map[Int, Long] = tagged.groupBy("shard").count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.duration.Duration
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(shards, Sharded.buildParallelism(spark)),
+        (r: Runnable) => { val t = new Thread(r, "graft-shard-build"); t.setDaemon(true); t })
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      var succeeded = false
+      try {
+        // Crash atomicity of the rebuild CUTOVER is per-shard (a crash
+        // between renames leaves mixed generations — each a valid
+        // artifact, but membership may straddle corpora; the sidecar
+        // invalidation below keeps verifyShards from blessing that
+        // state); callers needing all-or-nothing publication use the
+        // store's ensure* entries, whose tmp-dir protocol wraps this.
+        val builds = (0 until shards).map { r =>
+          Future {
+            val target =
+              if (rebuild) s"$path/shard=$r.building" else s"$path/shard=$r"
+            // a failed prior attempt's leftovers must not fail the retry
+            // (the per-index parquet writes are ErrorIfExists)
+            meta.deleteRecursively(target)
+            val n = counts.getOrElse(r, 0L)
+            buildAt(spark, target, tagged.filter(col("shard") === r).drop("shard"),
+              if (nCellsPerShard > 0) nCellsPerShard
+              else graft.sources.VectorIndexStore.autoCells(n))
+          }
+        }
+        Await.result(Future.sequence(builds), Duration.Inf)
+        if (rebuild) {
+          // the sidecar must not bless a mixed-generation layout if this
+          // cutover crashes midway: drop it FIRST (absent sidecar = the
+          // legacy trust-the-caller mode), restamp only after the new
+          // generation is fully in place
+          meta.deleteRecursively(Sharded.shardsMetaFile(path))
+          for (r <- 0 until shards) {
+            meta.deleteRecursively(s"$path/shard=$r")
+            val ok = new java.io.File(s"$path/shard=$r.building")
+              .renameTo(new java.io.File(s"$path/shard=$r"))
+            if (!ok) throw new IllegalStateException(
+              s"could not publish shard $r of $path (rename failed)")
+          }
+        }
+        // a rebuild at a smaller S must not leave a larger prior build's
+        // tail shards lying around as unread directories
+        meta.list(path)
+          .filter(e => e.isDir && e.name.matches("shard=\\d+"))
+          .map(_.name.stripPrefix("shard=").toInt).filter(_ >= shards)
+          .foreach(r => meta.deleteRecursively(s"$path/shard=$r"))
+        meta.writeAtomic(Sharded.shardsMetaFile(path), shards.toString)
+        succeeded = true
+      } finally {
+        // on failure, Await rethrows the FIRST error while sibling shard
+        // builds may still be reading the scratch — quiesce them before
+        // the outer finally deletes it (bounded: a wedged sibling must
+        // not hang cleanup forever)
+        pool.shutdown()
+        pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
+        // a failed build must neither leak corpus-sized copies nor block
+        // the retry: a failed REBUILD leaves scratch siblings (the
+        // published shards are untouched), and a failed VIRGIN build
+        // leaves partial shard=r dirs — on a remote path those would
+        // read as "published shards" next time and brick the retry on
+        // the rename refusal. Both cleaned here; no-ops on success.
+        if (rebuild)
+          (0 until shards).foreach(r => meta.deleteRecursively(s"$path/shard=$r.building"))
+        else if (!succeeded)
+          (0 until shards).foreach(r => meta.deleteRecursively(s"$path/shard=$r"))
+      }
+    } finally
+      // scratch: on success every shard's vectors live inside its own
+      // artifact; on a shard-build failure a corpus-sized copy must not
+      // leak (and must not mask the root cause on retry)
+      meta.deleteRecursively(taggedDir)
+  }
+
+  /** Hash-route `newVectors` to their shards and append each slice
+    * through the kind's single-index append (existing-geometry
+    * assignment or encode, vec_id anti-join idempotence, error
+    * watermark — under the shard's own writer lease). S filtered passes
+    * over the BATCH, not the corpus — append batches are ingest-sized by
+    * contract.
+    */
+  def append(spark: SparkSession, path: String, shards: Int,
+             newVectors: DataFrame): Unit =
+    routed(path, shards,
+      newVectors.select(col("vec_id"), col("label"), col("embedding")))(
+      appendAt(spark, _, _))
+
+  /** DELETE: hash-route the ids (one column, vec_id) to their OWNING
+    * shards and tombstone each slice through the kind's single-index
+    * delete — only shards owning a deleted id pay a sidecar write (cost
+    * ∝ deletes, not S). Visible immediately (every reader anti-joins the
+    * sidecar — deleted codes never occupy shortlist slots), physical at
+    * the shard's next compact or retrain; re-adding an id requires that
+    * compact first.
+    */
+  def delete(spark: SparkSession, path: String, shards: Int,
+             ids: DataFrame): Unit =
+    routed(path, shards, ids.toDF("vec_id").distinct())(deleteAt(spark, _, _))
+
+  /** Routing under the sharded ROOT's writer lease: serializes appenders,
+    * deleters, retrains and the leased reshard, so two batches cannot
+    * interleave their per-shard passes and a delete cannot land between
+    * a reshard's corpus read and its cutover.
+    */
+  private def routed(path: String, shards: Int, rows: DataFrame)(
+      applyAt: (String, DataFrame) => Unit): Unit =
+    graft.sources.Versioned.withWriterLease(path) {
+      verifyShards(path, shards)
+      val tagged = rows.withColumn("shard", Sharded.shardCol(shards))
+      for (r <- 0 until shards) {
+        val slice = tagged.filter(col("shard") === r).drop("shard")
+        if (!slice.isEmpty) applyAt(s"$path/shard=$r", slice)
+      }
+    }
+
+  /** The per-shard drift check + recall-gated retrain sweep: each shard's
+    * qerr series is judged against ITS baseline, so a drifted shard
+    * retrains its own k_s cells while quiet shards cost a one-file qerr
+    * read. Sequential by design: retrain is rare scheduled maintenance
+    * and each retrain is itself a cluster-saturating job. `retrainAt`
+    * gets (r, shard path). Returns the number of shards retrained.
+    *
+    * `continueOnGateFailure`: a shard whose candidate FAILS ITS RECALL
+    * GATE (the stale-but-valid geometry keeps serving) aborts the sweep
+    * when false — the offline default, a loud operator signal. A
+    * STREAMING sink passes true so one persistently gate-failing shard
+    * cannot starve later drifted shards forever; the failure is logged
+    * and the next batch retries that shard.
+    */
+  protected def retrainSweep(path: String, shards: Int,
+                             continueOnGateFailure: Boolean)(
+      retrainAt: (Int, String) => Boolean): Int = {
+    verifyShards(path, shards)
+    (0 until shards).count { r =>
+      try retrainAt(r, s"$path/shard=$r")
+      catch {
+        case e: graft.sources.VectorIndexStore.RetrainRecallGateFailed
+            if continueOnGateFailure =>
+          System.err.println(
+            s"[graft] shard $r retrain skipped (recall gate): ${e.getMessage}")
+          false
+      }
+    }
+  }
+
+  /** Per-shard small-file COMPACTION: appends fragment each shard's cell
+    * directories exactly like a single index's, so the same
+    * pointer-published rewrite applies per shard, under the shard's
+    * writer lease; readers mid-probe keep their resolved version.
+    */
+  def compactShards(spark: SparkSession, path: String, shards: Int): Unit = {
+    verifyShards(path, shards)
+    (0 until shards).foreach(r => compactAt(spark, s"$path/shard=$r"))
+  }
+
+  /** Per-shard tombstone-fraction compaction sweep: only shards whose
+    * sidecar crossed the fraction pay a rewrite — after a skewed takedown
+    * (one customer's corpus, one source's documents) this compacts
+    * exactly the shards that need it. Returns the number compacted.
+    */
+  def compactShardsIfDeleted(spark: SparkSession, path: String, shards: Int,
+                             maxDeletedFraction: Double = 0.1): Int = {
+    verifyShards(path, shards)
+    (0 until shards).count(r =>
+      compactIfDeletedAt(spark, s"$path/shard=$r", maxDeletedFraction))
+  }
+
+  /** The reshard precondition: S′ builds at a NEW root (the shard count is
+    * part of the artifact identity; an in-place cutover would break
+    * readers holding the old S), from an old root whose S matches.
+    */
+  protected def requireNewRoot(oldPath: String, oldShards: Int,
+                               newPath: String): Unit = {
+    require(newPath != oldPath,
+      "reshard builds at a NEW root (shard count is part of the artifact " +
+        "identity; in-place cutover would break readers holding the old S)")
+    verifyShards(oldPath, oldShards)
+  }
+
+  /** The catch-up replay's REVERSE DELTA: ids physically present in the
+    * new root yet absent from the old root's LOGICAL view were removed
+    * during the window — pending tombstones and applied-and-cleared ones
+    * alike, so a mid-window compact cannot resurrect a takedown. They are
+    * tombstoned on the new root, minus the ids it already hides, so a
+    * repeated replay is a no-op. Id-column reads: corpus-shaped but
+    * column-pruned.
+    */
+  protected def replayRemovals(spark: SparkSession, oldPath: String,
+                               oldShards: Int, newPath: String,
+                               newShards: Int): Unit = {
+    val alreadyHidden = (0 until newShards).flatMap(r =>
+      graft.sources.Tombstones.read(spark, s"$newPath/shard=$r")
+        .map(_.select(col("doc_id").as("vec_id"))))
+    val removed0 = physical(spark, newPath, newShards).select("vec_id")
+      .join(logical(spark, oldPath, oldShards).select("vec_id"),
+        Seq("vec_id"), "left_anti").distinct()
+    // materialized once: isEmpty + S routed delete slices would otherwise
+    // re-run the reverse-delta scans each
+    val removed = ScaleOps.checkpointed(
+      if (alreadyHidden.isEmpty) removed0
+      else removed0.join(alreadyHidden.reduce(_ unionAll _),
+        Seq("vec_id"), "left_anti"))
+    if (!removed.isEmpty) delete(spark, newPath, newShards, removed)
+  }
+}
+
+/** The kind-free half of the sharded layer. */
+object Sharded {
+
+  /** Concurrent shard builds per [[Sharded.build]] call: enough to overlap
+    * the driver-side phases (sample collect, model fold) of one shard with
+    * the executor-side phases (assign scan, parquet write) of another,
+    * without S driver threads each broadcasting a model at once.
+    * Overridable per session via [[BuildParallelismConf]]; the default is
+    * the measured knee (SCALE.md round-15: S=8 cold builds on the 10×
+    * corpus, 8-core host — 16.8 / 7.0 / 5.0 / 5.2 / 4.4 s at pool
+    * 1/2/4/6/8; past 4 the concurrent jobs contend for the same executor
+    * slots, so 4 buys 3.3× of the available 3.8× and bounds driver-side
+    * model memory at 4 in-flight centroid arrays).
+    */
+  val BuildParallelism = 4
+
+  /** Conf key overriding [[BuildParallelism]] for a session. */
+  val BuildParallelismConf = "spark.graft.shard.buildParallelism"
+
+  private[graft] def buildParallelism(spark: SparkSession): Int =
+    spark.conf.getOption(BuildParallelismConf)
+      .flatMap(_.toIntOption).filter(_ >= 1)
+      .getOrElse(BuildParallelism)
+
+  /** Disjoint-total shard id of a vector id. */
+  private[graft] def shardCol(shards: Int): Column =
+    pmod(xxhash64(col("vec_id")), lit(shards.toLong)).cast("int")
+
+  private def shardsMetaFile(path: String) = s"$path/shards.META"
+
+  /** One plan over every shard: `load(r, path/shard=r)`, unioned. */
+  private[graft] def unionShards(path: String, shards: Int)(
+      load: (Int, String) => DataFrame): DataFrame =
+    (0 until shards).map(r => load(r, s"$path/shard=$r")).reduce(_ unionAll _)
+
+  /** The growth judgment every shard-count growth loop calls: `total`
+    * live rows over `shards` shards exceed the `maxShardRows` mean iff
+    * S′ = ceil(total / maxShardRows) > S, and S′ is the reshard target
+    * (sized so the post-reshard mean sits AT the policy line). Computed
+    * without `maxShardRows * shards` or `total + maxShardRows - 1`, both
+    * of which wrap under the no-growth sentinel `Long.MaxValue`. None =
+    * keep serving at S.
+    */
+  private[graft] def grownShards(total: Long, shards: Int,
+                                 maxShardRows: Long): Option[Int] = {
+    require(maxShardRows >= 1, s"maxShardRows=$maxShardRows")
+    val needed = total / maxShardRows + (if (total % maxShardRows == 0) 0 else 1)
+    if (needed <= shards) None else Some(math.toIntExact(needed))
+  }
+}

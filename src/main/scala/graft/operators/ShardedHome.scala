@@ -31,9 +31,8 @@ import org.apache.spark.sql.SparkSession
   * absorb redelivery — the shrunken-rebuild class is gone because "no
   * pointer" is the ONLY state that builds.
   *
-  * The growth loop here uses the CATCH-UP reshard
-  * ([[ShardedIvf.reshardCatchUpBuild]] / `reshardCatchUpReplay`), so the
-  * corpus-sized rebuild holds NO lease and ingest blocks only for the
+  * The growth loop here ([[grow]]) uses the kind's CATCH-UP reshard, so
+  * the corpus-sized rebuild holds NO lease and ingest blocks only for the
   * delta replay + pointer flip + GC — the bounded-stall protocol a
   * streaming-fed index needs (the store-level `reshardShardedIvf` keeps
   * the full-lease variant for scheduled offline maintenance).
@@ -99,129 +98,94 @@ object ShardedHome {
     stale
   }
 
-  /** The growth loop AT A HOME — [[graft.sources.VectorIndexStore.reshardShardedIvfIfNeeded]]
-    * re-expressed over the pointer, with the catch-up protocol: judge
-    * mean per-shard LIVE rows against `maxShardRows` — counted as
-    * physical parquet footer counts MINUS the tombstone sidecar's id
-    * count (each metadata-cheap / sidecar-sized; the LOGICAL count via
-    * the anti-joined view would be a tombstone broadcast join per shard
-    * per micro-batch — a real tax on a 1-second-batch sink). Stale
-    * sidecar ids (deletes of never-present rows) make this conservative:
-    * it can only UNDER-count live rows, delaying the reshard by at most
-    * the stale fraction, never triggering a spurious one — and the next
-    * compact clears them. Over the line, rebuild
-    * at S′ = ceil(total / maxShardRows) into the next generation
-    * directory WITHOUT the old generation's lease (appends keep
-    * landing), then — under that lease, the only blocked window —
-    * replay the landed delta, flip the pointer, and run the
-    * KEEP-PREVIOUS GC ([[gcBelow]]): the retired generation is RETAINED
-    * until the next reshard (or an explicit [[gcRetired]]) so a
-    * lease-free prober that resolved the old (path, S) pair just before
-    * the flip keeps its files mid-plan; only generations two or more
-    * flips old are deleted. Crash notes: a crash before the flip leaves
-    * the old generation serving and a stale next-gen directory (the
-    * retry's build treats it as an in-place rebuild — POSIX homes only,
-    * the documented direct-build contract); a crash after the flip
-    * leaves at worst an extra retired generation the next flip (or
-    * [[gcRetired]]) reclaims.
-    * Returns the serving (path, shards) pair either way, so a sink's
-    * maintenance step calls it unconditionally and follows the pointer.
+  /** The growth loop AT A HOME, for the full-precision composition —
+    * [[grow]] with the artifact-sourced, AppendLog-journaled catch-up pair
+    * ([[ShardedIvf.reshardCatchUpBuild]] / `reshardCatchUpReplay`).
     */
   def reshardIfNeeded(spark: SparkSession, home: String,
                       maxShardRows: Long =
                         graft.sources.VectorIndexStore.DefaultMaxShardRows)
-      : (String, Int) = {
-    require(maxShardRows >= 1, s"maxShardRows=$maxShardRows")
-    val (cur, s) = serving(home).getOrElse(throw new IllegalStateException(
-      s"no SERVING pointer at $home — nothing to reshard (the first " +
-        "streamed batch publishes it)"))
-    val total = (0 until s).map { r =>
-      val shardPath = s"$cur/shard=$r"
-      // physical footer count minus sidecar ids — see the growth-check
-      // note above (NOT the logical view: its tombstone anti-join would
-      // cost a broadcast join per shard on every micro-batch)
-      val physical = IvfIndex.loadVectorsRaw(spark, shardPath).count()
-      val deleted = graft.sources.Tombstones.read(spark, shardPath)
-        .map(_.distinct().count()).getOrElse(0L)
-      math.max(0L, physical - deleted)
-    }.sum
-    // the >= total short-circuit also keeps the product from overflowing
-    // under a no-op sentinel like Long.MaxValue
-    if (maxShardRows >= total || total <= maxShardRows * s) (cur, s)
-    else {
-      val newShards = ((total + maxShardRows - 1) / maxShardRows).toInt
-      val newName = s"gen-${genSeq(cur.split('/').last) + 1}"
-      val newDir = s"$home/$newName"
-      // phase 1 — no lease: ingest flows for the corpus-sized rebuild
-      ShardedIvf.reshardCatchUpBuild(spark, cur, s, newDir, newShards)
-      // phase 2 — the bounded stall: replay, flip, keep-previous GC
-      // under one lease (the retired generation survives until the NEXT
-      // reshard so a lease-free prober holding the pre-flip pair keeps
-      // its files; [[gcRetired]] reclaims it early)
-      graft.sources.Versioned.withWriterLease(cur) {
-        ShardedIvf.reshardCatchUpReplay(spark, cur, s, newDir, newShards)
-        publishServing(home, newName, newShards)
-        gcBelow(home, cur)
-      }
-      (newDir, newShards)
-    }
-  }
+      : (String, Int) =
+    grow(spark, home, maxShardRows, ShardedIvf)(
+      ShardedIvf.reshardCatchUpBuild(spark, _, _, _, _),
+      ShardedIvf.reshardCatchUpReplay(spark, _, _, _, _))
 
   /** [[reshardIfNeeded]] for an ENCODED home — the growth loop of
-    * [[graft.streaming.StreamingOps.arrivalShardedPqIngest]]. Same
-    * live-row judgment (physical encoded footer counts minus
-    * sidecar-sized tombstone counts); over the line the rebuild
-    * RE-ENCODES at S′ from the cold full-precision store
-    * ([[graft.sources.FpStore]]) scoped to the serving generation's
-    * LOGICAL membership — PQ shards hold one-byte codes, so the
-    * artifact-sourced catch-up of the IVF loop does not apply (decoding
-    * codes would bake quantization error into the new artifact), and
-    * the membership semi-join is what keeps deletion truth SINGLE: ids
-    * the serving index no longer holds (tombstoned or compacted away)
-    * fall out of the rebuild, so the new generation is born clean with
-    * no tombstone forwarding at all.
-    *
-    * Bounded-stall like the IVF loop ([[ShardedPq.reshardCatchUpBuild]] /
-    * `reshardCatchUpReplay`): the corpus-sized re-encode holds NO lease
-    * (external appenders keep landing on the old generation — the
-    * calling sink's own loop is serial either way), and the old lease is
-    * taken only for the replay of the landed delta + the pointer flip +
-    * the GC. The encoded protocol needs no journal: delta discovery is
-    * id-column anti-joins over the ~32×-narrower code tables — already
-    * the cheap shape the IVF append log exists to reach — and the
-    * delete axis reconciles by the same reverse delta, so a mid-window
-    * compact cannot resurrect a takedown here either.
+    * [[graft.streaming.StreamingOps.arrivalShardedPqIngest]]. Over the
+    * line the rebuild RE-ENCODES at S′ from the cold full-precision store
+    * `fpPath` ([[graft.sources.FpStore]]) scoped to the serving
+    * generation's LOGICAL membership ([[ShardedPq.reshardCatchUpBuild]] /
+    * `reshardCatchUpReplay`): PQ shards hold one-byte codes, so the
+    * artifact-sourced catch-up does not apply, and the membership
+    * semi-join keeps deletion truth SINGLE — ids the serving index no
+    * longer holds fall out of the rebuild, so the new generation is born
+    * clean with no tombstone forwarding.
     */
   def reshardPqIfNeeded(spark: SparkSession, home: String, fpPath: String,
                         maxShardRows: Long =
                           graft.sources.VectorIndexStore.DefaultMaxShardRows)
-      : (String, Int) = {
-    require(maxShardRows >= 1, s"maxShardRows=$maxShardRows")
+      : (String, Int) =
+    grow(spark, home, maxShardRows, ShardedPq)(
+      ShardedPq.reshardCatchUpBuild(spark, _, _, _, _, fpPath),
+      ShardedPq.reshardCatchUpReplay(spark, _, _, _, _, fpPath))
+
+  /** The ONE growth loop at a home — the store-level growth loop
+    * re-expressed over the pointer, with the kind's catch-up pair
+    * (`catchUpBuild` / `catchUpReplay`, each taking old path, old S, new
+    * path, new S). Judges per-shard LIVE rows through
+    * [[Sharded.grownShards]], counted as physical parquet footer counts
+    * MINUS the tombstone sidecar's id count (each metadata-cheap /
+    * sidecar-sized; the LOGICAL count via the anti-joined view would be
+    * a tombstone broadcast join per shard per micro-batch — a real tax
+    * on a 1-second-batch sink). Stale sidecar ids (deletes of
+    * never-present rows) make this conservative: it can only UNDER-count
+    * live rows, delaying the reshard by at most the stale fraction, never
+    * triggering a spurious one — and the next compact clears them.
+    *
+    * Over the line, rebuild at S′ into the next generation directory
+    * WITHOUT the old generation's lease (appends keep landing), then —
+    * under that lease, the only blocked window — replay the landed delta,
+    * flip the pointer, and run the KEEP-PREVIOUS GC ([[gcBelow]]): the
+    * retired generation is RETAINED until the next reshard (or an
+    * explicit [[gcRetired]]) so a lease-free prober that resolved the old
+    * (path, S) pair just before the flip keeps its files mid-plan. Crash
+    * notes: a crash before the flip leaves the old generation serving and
+    * a stale next-gen directory (the retry's build treats it as an
+    * in-place rebuild — POSIX homes only, the documented direct-build
+    * contract); a crash after the flip leaves at worst an extra retired
+    * generation the next flip (or [[gcRetired]]) reclaims.
+    * Returns the serving (path, shards) pair either way, so a sink's
+    * maintenance step calls it unconditionally and follows the pointer.
+    */
+  private def grow(spark: SparkSession, home: String, maxShardRows: Long,
+                   kind: Sharded)(
+      catchUpBuild: (String, Int, String, Int) => Unit,
+      catchUpReplay: (String, Int, String, Int) => Long): (String, Int) = {
     val (cur, s) = serving(home).getOrElse(throw new IllegalStateException(
       s"no SERVING pointer at $home — nothing to reshard (the first " +
         "streamed batch publishes it)"))
     val total = (0 until s).map { r =>
       val shardPath = s"$cur/shard=$r"
-      val physical = PqIndex.loadEncodedRaw(spark, shardPath).count()
+      val physical = kind.physicalAt(spark, shardPath).count()
       val deleted = graft.sources.Tombstones.read(spark, shardPath)
         .map(_.distinct().count()).getOrElse(0L)
       math.max(0L, physical - deleted)
     }.sum
-    if (maxShardRows >= total || total <= maxShardRows * s) (cur, s)
-    else {
-      val newShards = ((total + maxShardRows - 1) / maxShardRows).toInt
-      val newName = s"gen-${genSeq(cur.split('/').last) + 1}"
-      val newDir = s"$home/$newName"
-      // phase 1 — no lease: external appends flow for the re-encode
-      ShardedPq.reshardCatchUpBuild(spark, cur, s, newDir, newShards, fpPath)
-      // phase 2 — the bounded stall: replay both axes, flip,
-      // keep-previous GC (see [[gcBelow]] — probers keep the old pair)
-      graft.sources.Versioned.withWriterLease(cur) {
-        ShardedPq.reshardCatchUpReplay(spark, cur, s, newDir, newShards, fpPath)
-        publishServing(home, newName, newShards)
-        gcBelow(home, cur)
-      }
-      (newDir, newShards)
+    Sharded.grownShards(total, s, maxShardRows) match {
+      case None => (cur, s)
+      case Some(newShards) =>
+        val newName = s"gen-${genSeq(cur.split('/').last) + 1}"
+        val newDir = s"$home/$newName"
+        // phase 1 — no lease: ingest flows for the corpus-sized rebuild
+        catchUpBuild(cur, s, newDir, newShards)
+        // phase 2 — the bounded stall: replay, flip, keep-previous GC
+        // under one lease
+        graft.sources.Versioned.withWriterLease(cur) {
+          catchUpReplay(cur, s, newDir, newShards)
+          publishServing(home, newName, newShards)
+          gcBelow(home, cur)
+        }
+        (newDir, newShards)
     }
   }
 }

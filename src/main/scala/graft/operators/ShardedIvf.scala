@@ -3,213 +3,159 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Sharded IVF — the implemented form of the design path PAST the last
-  * single-index boundary. After round 13, [[IvfIndex.train]] scales to
-  * any cell count the k×dim centroid array can broadcast (~10⁶ cells at
-  * 128-dim). The remaining ceiling is that ARRAY itself: one flat coarse
-  * quantizer ultimately puts every centroid in every executor's memory
-  * and every probe's cell-selection scan. The standard answer (FAISS's
-  * sharded indexes, every distributed ANN store) is S INDEPENDENT
-  * sub-indexes over a disjoint hash partition of the corpus:
+/** Sharded IVF — the [[Sharded]] composition over full-precision IVF
+  * shards, the design path PAST the last single-index boundary. After
+  * round 13, [[IvfIndex.train]] scales to any cell count the k×dim
+  * centroid array can broadcast (~10⁶ cells at 128-dim); the remaining
+  * ceiling is that ARRAY itself — one flat coarse quantizer puts every
+  * centroid in every executor's memory and every probe's cell-selection
+  * scan. S independent sub-indexes cap every object at one shard's
+  * k_s×dim centroids. Each shard is built through
+  * [[graft.sources.VectorIndexStore.buildIvfAt]], so it carries the same
+  * lifecycle plane as a single index (`model`, cell-partitioned
+  * `vectors`, `qerr` watermarks, `qerr.BASELINE`); drift and retrain are
+  * judged PER SHARD, so one drifted shard retrains k_s cells, not k.
   *
-  *   - BUILD ([[build]]): ONE corpus pass tags every row with
-  *     `shard = pmod(xxhash64(vec_id), S)` and writes the tagged frame
-  *     parquet-partitioned by shard (shard-clustered — one file per
-  *     shard directory, the IvfIndex.save rationale). Each shard then
-  *     builds from ITS pruned partition only (a `shard = r` filter is
-  *     source-level partition pruning — no shard rescans the corpus),
-  *     through [[graft.sources.VectorIndexStore.buildIvfAt]], so every
-  *     shard artifact carries the SAME lifecycle plane as a single
-  *     index: `model` + cell-partitioned `vectors` + `qerr` watermark
-  *     log + `qerr.BASELINE`. Shard builds run CONCURRENTLY (bounded
-  *     pool of Spark job-submitting threads — the scheduler interleaves
-  *     their stages across the executors, which is exactly "S parallel
-  *     jobs" on one cluster); no object anywhere is ever larger than one
-  *     shard's k_s×dim centroids. The tagged scratch table is deleted
-  *     after the last shard publishes (each shard's vectors are
-  *     persisted inside its own artifact).
-  *   - MAINTENANCE: appends hash-route new vectors to their shard and
-  *     delegate to the per-shard `appendIvf` (anti-join idempotence,
-  *     distortion watermark — each under the shard's own writer lease);
-  *     drift and retrain are judged PER SHARD ([[retrainIfNeeded]] →
-  *     `retrainIvfIfNeeded` on each shard artifact), which is the point
-  *     of sharding: one drifted shard retrains k_s cells, not k.
-  *   - PROBE: each shard answers its own pruned top-k (nProbe of ITS
-  *     cells — the per-shard auto policy by default), and the global
-  *     answer is the k best of the S×k candidates. Driver memory peaks
-  *     at one shard's model at a time; the plan is a union of S
-  *     partition-pruned scans + one TakeOrdered (single-query
-  *     [[search]]) or one per-qid window over the union
-  *     ([[AnnEval.shardedTopK]], the batch-panel form the drill grades).
+  * Kind-specific here: the artifact-sourced [[reshard]], the
+  * AppendLog-journal catch-up pair, [[search]] and [[totalCells]].
   *
-  * Correctness shape (spec-gated): hash sharding makes every vector
-  * belong to exactly one shard, so probing ALL cells of ALL shards is
-  * EXACTLY the brute-force top-k (no result can be lost to sharding —
-  * unlike cell-pruning, shard membership is total; preserved under
-  * appends, which route by the same hash). Recall under partial probing
-  * degrades only through the same per-shard cell pruning the single
-  * index has; a query's true neighbors are spread across shards by an
-  * independent hash, so per-shard top-k union is the textbook
-  * recall-preserving composition. One measured caveat (SCALE.md
-  * round-14 §1, root-caused against three eliminated hypotheses): at a
-  * FIXED per-shard cell fraction, recall is lower than a same-fraction
-  * single index's, because each shard answers from an S×-sparser subset
-  * whose exact top-k sits at larger radii — a sharded deployment
-  * holding a recall target sizes `nProbe` wider from the measured
-  * curve (0.435/0.675/0.900/1.000 at 2.8%/10.5%/30.7%/100% of
-  * per-shard cells on the 100× drill corpus).
+  * PROBE: each shard answers its own pruned top-k (nProbe of ITS cells),
+  * and the global answer is the k best of the S×k candidates; driver
+  * memory peaks at one shard's model. Probing ALL cells of ALL shards is
+  * EXACTLY the brute-force top-k (membership is total, preserved under
+  * appends). One measured caveat (SCALE.md round-14 §1): at a FIXED
+  * per-shard cell fraction, recall is lower than a same-fraction single
+  * index's, because each shard answers from an S×-sparser subset whose
+  * exact top-k sits at larger radii — a sharded deployment holding a
+  * recall target sizes `nProbe` wider from the measured curve
+  * (0.435/0.675/0.900/1.000 at 2.8%/10.5%/30.7%/100% of per-shard cells
+  * on the 100× drill corpus).
   *
   * Lifecycle entry point:
-  * [[graft.sources.VectorIndexStore.ensureShardedIvf]] (idempotent
-  * atomic publication, like `ensureIvf`). This stays an API + spec +
-  * drill row (no declared query): every fixture corpus fits a single
-  * index by orders of magnitude, so a sharded declared query would
-  * drill the composition at a scale where it is pure overhead. The
-  * capability exists for the geometry that needs it — the scale-out
-  * form of the reference's one index (db_utils.py:93-110).
+  * [[graft.sources.VectorIndexStore.ensureShardedIvf]]. This stays an
+  * API + spec + drill row: every fixture corpus fits a single index by
+  * orders of magnitude — the capability exists for the geometry that
+  * needs it, the scale-out form of the reference's one index
+  * (db_utils.py:93-110).
   */
-object ShardedIvf {
+object ShardedIvf extends Sharded {
 
-  /** Concurrent shard builds per [[build]] call: enough to overlap the
-    * driver-side phases (sample collect, model fold) of one shard with
-    * the executor-side phases (assign scan, parquet write) of another,
-    * without S driver threads each broadcasting a model at once. The
-    * Spark scheduler shares the executors across the concurrent jobs.
-    * Overridable per session via [[BuildParallelismConf]] (how the drill
-    * sweeps it); the default is the measured knee of that sweep
-    * (SCALE.md round-15: S=8 cold builds on the 10× corpus, 8-core host
-    * — 16.8 / 7.0 / 5.0 / 5.2 / 4.4 s at pool 1/2/4/6/8; past 4 the
-    * concurrent jobs contend for the same executor slots and the curve
-    * is flat to within noise, so 4 buys 3.3× of the available 3.8× and
-    * keeps driver-side model memory bounded at 4 in-flight centroid
-    * arrays).
+  protected def buildAt(spark: SparkSession, dir: String, part: DataFrame,
+                        nCells: Int): Unit =
+    graft.sources.VectorIndexStore.buildIvfAt(spark, dir, part, nCells)
+
+  protected def appendAt(spark: SparkSession, shardPath: String,
+                         slice: DataFrame): Unit =
+    graft.sources.VectorIndexStore.appendIvf(spark, shardPath, slice)
+
+  protected def deleteAt(spark: SparkSession, shardPath: String,
+                         ids: DataFrame): Unit =
+    graft.sources.VectorIndexStore.deleteIvf(spark, shardPath, ids)
+
+  private[graft] def compactAt(spark: SparkSession, shardPath: String): Unit =
+    graft.sources.VectorIndexStore.compactIvf(spark, shardPath,
+      IvfIndex.loadModel(spark, shardPath).centroids.length)
+
+  protected def compactIfDeletedAt(spark: SparkSession, shardPath: String,
+                                   maxDeletedFraction: Double): Boolean =
+    graft.sources.VectorIndexStore.compactIvfIfDeleted(
+      spark, shardPath, maxDeletedFraction)
+
+  private[graft] def logicalAt(spark: SparkSession, shardPath: String): DataFrame =
+    IvfIndex.loadVectors(spark, shardPath)
+
+  private[graft] def physicalAt(spark: SparkSession, shardPath: String): DataFrame =
+    IvfIndex.loadVectorsRaw(spark, shardPath)
+
+  /** Build the S′ composition at `newPath` from the old root's own
+    * logical shard tables; a reused target root drops its width sidecar.
     */
-  val BuildParallelism = 4
-
-  /** Conf key overriding [[BuildParallelism]] for a session. */
-  val BuildParallelismConf = "spark.graft.shard.buildParallelism"
-
-
-  /** The shard count recorded at build/reshard time ([[Sharding]]'s
-    * `shards.META` sidecar), when the artifact carries it.
-    */
-  def shardCount(path: String): Option[Int] = Sharding.shardCount(path)
-
-  /** Loud wrong-S guard ([[Sharding.verifyShards]]). */
-  private[graft] def verifyShards(path: String, shards: Int): Unit =
-    Sharding.verifyShards(path, shards)
-
-  /** Build S independent IVF artifacts under `path/shard=r` — one
-    * tagging pass over the corpus, then per-shard builds from pruned
-    * partitions, [[BuildParallelism]] at a time. Each shard sizes its
-    * own geometry (`nCellsPerShard`, or `autoCells` of the shard's row
-    * count when <= 0 — counted once from the tagged table, not with a
-    * per-shard corpus scan) and trains through the same routed trainer
-    * as any single index (driver sample, or distributed Lloyd past
-    * `MaxTrainCells`). Callers wanting the idempotent published
-    * lifecycle go through `VectorIndexStore.ensureShardedIvf`.
-    */
-  def build(spark: SparkSession, vectors: DataFrame, path: String,
-            shards: Int, nCellsPerShard: Int = -1): Unit =
-    Sharding.buildSharded(spark, vectors, path, shards,
-      (dir, part, n) => {
-        val cells =
-          if (nCellsPerShard > 0) nCellsPerShard
-          else graft.sources.VectorIndexStore.autoCells(n)
-        graft.sources.VectorIndexStore.buildIvfAt(spark, dir, part, cells)
-      })
+  private def rebuildFrom(spark: SparkSession, oldPath: String,
+                          oldShards: Int, newPath: String, newShards: Int,
+                          nCellsPerShard: Int): Unit = {
+    build(spark, logical(spark, oldPath, oldShards)
+      .select(col("vec_id"), col("label"), col("embedding")),
+      newPath, newShards, nCellsPerShard)
+    graft.sources.Versioned.metaBackend.deleteRecursively(s"$newPath/nprobe.CAL")
+  }
 
   /** RESHARD: rebuild the composition at a new shard count S′ from the
     * old artifact's OWN shards — the growth verb for the shard count
-    * itself. `build`/`append` route by `pmod(xxhash64(vec_id), S)` with S
-    * fixed at build time, so a corpus that grows 10× grows every shard
-    * 10× and each shard's coarse quantizer marches back toward the
-    * broadcast ceiling sharding exists to avoid; this verb is how a
-    * deployment moves to S′ before that happens (or shrinks an
-    * over-sharded index — S′ < S is equally valid).
+    * itself. Routing fixes S at build time, so a corpus that grows 10×
+    * grows every shard 10× and each coarse quantizer marches back toward
+    * the broadcast ceiling; this verb moves to S′ before that happens (or
+    * shrinks an over-sharded index — S′ < S is equally valid).
     *
     * No external corpus is needed: each shard's full-precision vectors
-    * live inside its artifact, so the source of truth is the union of the
-    * S shard tables — INCLUDING every appended batch, which a rebuild
-    * from the original corpus would silently drop. One tagging pass
-    * re-tags that union under the S′ hash and the standard [[build]]
-    * machinery does the rest (pruned concurrent per-shard builds, fresh
-    * lifecycle plane per shard: model, cell-partitioned vectors, qerr
-    * watermarks, versioned baseline).
-    *
-    * The new artifact is built at a NEW root (`newPath`), not in place:
-    * the shard count is part of the artifact identity (readers address
-    * `shard=r` under a root they pair with an S they were configured
-    * with; the store path embeds S — `VectorIndexStore.shardedIvfPath`),
+    * live inside its artifact, so the union of the S LOGICAL shard tables
+    * is the source of truth — INCLUDING every appended batch, and with
+    * every pending delete applied physically (a resharded artifact is
+    * born clean). The new artifact is built at a NEW root: S is part of
+    * the artifact identity (`VectorIndexStore.shardedIvfPath` embeds it),
     * so cutover = repointing readers at (newPath, S′), and the old root
-    * stays intact for in-flight probes until the operator GCs it —
-    * exactly the Versioned-pointer discipline, one level up. The
-    * store-level entry (`VectorIndexStore.reshardShardedIvf`) wraps this
-    * in the same atomic publish-or-short-circuit protocol as
-    * `ensureShardedIvf` and GCs the old artifact.
+    * stays intact for in-flight probes — the Versioned-pointer discipline
+    * one level up. The store-level entry
+    * (`VectorIndexStore.reshardShardedIvf`) wraps this in atomic
+    * publication and GCs the old artifact.
     *
-    * Calibration does NOT transfer: a per-shard width sized for S shards
-    * says nothing about S′ (each S′-shard answers from a differently
-    * sparse subset — the measured trade AnnCalibrate exists for), so the
-    * new root carries no `nprobe.CAL` until recalibrated; probes fall
-    * back to the auto policy. Holds the OLD root's writer lease for the
-    * duration so a concurrent append cannot land between the read and
-    * the cutover and be lost (reshard is rare scheduled maintenance —
-    * blocking appends for one rebuild is the correct trade).
+    * Calibration does NOT transfer (a per-shard width sized for S says
+    * nothing about S′), so the new root has no `nprobe.CAL` until
+    * recalibrated. Holds the OLD root's writer lease for the duration so
+    * no append can land between the read and the cutover and be lost
+    * (reshard is rare scheduled maintenance — blocking appends for one
+    * rebuild is the correct trade).
     */
   def reshard(spark: SparkSession, oldPath: String, oldShards: Int,
               newPath: String, newShards: Int,
               nCellsPerShard: Int = -1): Unit = {
-    require(newPath != oldPath,
-      "reshard builds at a NEW root (shard count is part of the artifact " +
-        "identity; in-place cutover would break readers holding the old S)")
-    verifyShards(oldPath, oldShards)
+    requireNewRoot(oldPath, oldShards, newPath)
     graft.sources.Versioned.withWriterLease(oldPath) {
-      val corpus = (0 until oldShards).map { r =>
-        IvfIndex.loadVectors(spark, s"$oldPath/shard=$r")
-          .select(col("vec_id"), col("label"), col("embedding"))
-      }.reduce(_ unionAll _)
-      build(spark, corpus, newPath, newShards, nCellsPerShard)
-      // a reused target root must not serve a width sized for another S
-      graft.sources.Versioned.metaBackend.deleteRecursively(s"$newPath/nprobe.CAL")
+      rebuildFrom(spark, oldPath, oldShards, newPath, newShards, nCellsPerShard)
     }
   }
 
   /** CATCH-UP reshard, phase 1 of 2 — the bounded-stall protocol for
-    * streaming-fed indexes ([[reshard]] holds the old root's writer
-    * lease across read+build+GC, which is correct for scheduled
-    * maintenance but at 10⁹ vectors means hours of blocked ingest).
-    * This phase takes NO lease on the old root: it builds the S′
+    * streaming-fed indexes ([[reshard]] holds the old root's writer lease
+    * across read+build+GC, which at 10⁹ vectors means hours of blocked
+    * ingest). This phase takes NO lease on the old root: it builds the S′
     * composition at `newPath` from a SNAPSHOT of the old shard tables
-    * (the tagging pass materializes the snapshot in one read — appends
-    * landing after that listing simply miss it and are replayed in
-    * phase 2), so ingest keeps flowing for the whole corpus-sized
-    * rebuild. MUST be followed by [[reshardCatchUpReplay]] before
-    * cutover — publishing a phase-1-only artifact silently drops every
-    * append that landed during the build.
+    * (the tagging pass materializes it in one read — appends landing
+    * after that listing miss it and are replayed in phase 2). MUST be
+    * followed by [[reshardCatchUpReplay]] before cutover — publishing a
+    * phase-1-only artifact silently drops every append that landed
+    * during the build.
     */
   def reshardCatchUpBuild(spark: SparkSession, oldPath: String, oldShards: Int,
                           newPath: String, newShards: Int,
                           nCellsPerShard: Int = -1): Unit = {
-    require(newPath != oldPath,
-      "reshard builds at a NEW root (shard count is part of the artifact " +
-        "identity; in-place cutover would break readers holding the old S)")
-    verifyShards(oldPath, oldShards)
-    // per-shard watermarks, captured BEFORE the corpus read: an append
-    // racing the capture lands in the snapshot AND above the watermark,
-    // and the replay's idempotent append absorbs the overlap — the
-    // conservative direction; the reverse order could silently drop a
-    // racing append from both. Three axes per shard:
-    //   w  — append-seq watermark (last qerr seq; -1 when no qerr exists,
-    //        matching appendIvf's first seq = 0 — recording 0 here would
-    //        make since(0) silently drop the seq-0 window append);
-    //   dw — delete-journal watermark (AppendLog.delSeqWatermark; -1 when
-    //        no journal exists);
-    //   g  — Tombstones.generation: the replay trusts the delete journal
-    //        only if g is UNCHANGED, because a mid-window compact applies
-    //        pending tombstones physically and clears both the sidecar
-    //        and the journal — the one transition neither can witness.
-    val watermarks = (0 until oldShards).map { r =>
+    requireNewRoot(oldPath, oldShards, newPath)
+    // captured BEFORE the corpus read: an append racing the capture lands
+    // in the snapshot AND above the watermark, and the replay's
+    // idempotent append absorbs the overlap — the conservative direction;
+    // the reverse order could silently drop a racing append from both
+    val marks = watermarks(spark, oldPath, oldShards)
+    rebuildFrom(spark, oldPath, oldShards, newPath, newShards, nCellsPerShard)
+    // recorded at the NEW root so the replay (possibly another process)
+    // knows which appends and deletes the snapshot already holds
+    graft.sources.Versioned.metaBackend.writeAtomic(s"$newPath/catchup.META", marks)
+  }
+
+  /** Every old shard's current watermarks as `catchup.META` tokens
+    * "r:w:dw:g" — the snapshot capture of [[reshardCatchUpBuild]] and the
+    * post-replay advance of [[reshardCatchUpReplay]]:
+    *   w  — append-seq watermark (last qerr seq; -1 when no qerr exists,
+    *        matching appendIvf's first seq = 0 — recording 0 would make
+    *        since(0) silently drop the seq-0 window append);
+    *   dw — delete-journal watermark (AppendLog.delSeqWatermark; -1 when
+    *        no journal exists);
+    *   g  — Tombstones.generation: the replay trusts the delete journal
+    *        only if g is UNCHANGED, because a mid-window compact applies
+    *        pending tombstones physically and clears both the sidecar
+    *        and the journal — the one transition neither can witness.
+    */
+  private def watermarks(spark: SparkSession, oldPath: String,
+                         oldShards: Int): String =
+    (0 until oldShards).map { r =>
       val shardPath = s"$oldPath/shard=$r"
       val qerr = s"$shardPath/qerr"
       val w =
@@ -217,20 +163,8 @@ object ShardedIvf {
         else spark.read.parquet(qerr).count() - 1
       val dw = graft.sources.AppendLog.delSeqWatermark(spark, shardPath)
       val g = graft.sources.Tombstones.generation(shardPath)
-      (r, w, dw, g)
-    }
-    val corpus = (0 until oldShards).map { r =>
-      IvfIndex.loadVectors(spark, s"$oldPath/shard=$r")
-        .select(col("vec_id"), col("label"), col("embedding"))
-    }.reduce(_ unionAll _)
-    build(spark, corpus, newPath, newShards, nCellsPerShard)
-    // a reused target root must not serve a width sized for another S
-    graft.sources.Versioned.metaBackend.deleteRecursively(s"$newPath/nprobe.CAL")
-    // recorded at the NEW root so the replay (possibly another process)
-    // knows which appends and deletes the snapshot already holds
-    graft.sources.Versioned.metaBackend.writeAtomic(s"$newPath/catchup.META",
-      watermarks.map { case (r, w, dw, g) => s"$r:$w:$dw:$g" }.mkString(" "))
-  }
+      s"$r:$w:$dw:$g"
+    }.mkString(" ")
 
   /** One old shard's snapshot watermarks: append seq, and (v2 META) the
     * delete-journal seq + tombstone generation the delete axis trusts.
@@ -256,14 +190,13 @@ object ShardedIvf {
 
   /** CATCH-UP reshard, phase 2 of 2 — the ONLY window appends block:
     * under the old root's writer lease, the delta that landed during
-    * phase 1 (old-shard rows whose vec_id is absent from the new
-    * artifact — per-shard anti-join, batch-sized when the policy is
-    * sane) is hash-routed into the S′ artifact through the standard
-    * idempotent [[append]]. The caller cuts over INSIDE the same lease
-    * scope (publish the new identity / flip the serving pointer, then
-    * GC the old root) so nothing can land after the replay and be lost
-    * to the GC. Returns the replayed row count — the measured catch-up
-    * size, which the drill grades against the blocked window.
+    * phase 1 is hash-routed into the S′ artifact through the idempotent
+    * [[append]], and the window's deletes are forwarded. The caller cuts
+    * over INSIDE the same lease scope (publish the new identity / flip
+    * the serving pointer, then GC the old root) so nothing can land after
+    * the replay and be lost to the GC. Returns the replayed row count —
+    * the measured catch-up size, which the drill grades against the
+    * blocked window.
     */
   def reshardCatchUpReplay(spark: SparkSession, oldPath: String,
                            oldShards: Int, newPath: String,
@@ -277,51 +210,39 @@ object ShardedIvf {
       // prove completeness back to the watermark (legacy artifact, log
       // cleared by a mid-window compact/retrain) or when no watermark
       // was recorded (a snapshot built by older code).
-      lazy val snapshotIds = (0 until newShards).map { r =>
-        IvfIndex.loadVectors(spark, s"$newPath/shard=$r").select("vec_id")
-      }.reduce(_ unionAll _)
+      lazy val snapshotIds = logical(spark, newPath, newShards).select("vec_id")
       val wm = catchupWatermarks(newPath)
-      val perShard = (0 until oldShards).map { r =>
-        val shardPath = s"$oldPath/shard=$r"
-        wm.flatMap(_.get(r))
-          .flatMap(m => graft.sources.AppendLog.since(spark, shardPath,
-            m.appendSeq))
-          .getOrElse {
-            IvfIndex.loadVectors(spark, shardPath)
-              .select(col("vec_id"), col("label"), col("embedding"))
-              .join(snapshotIds, Seq("vec_id"), "left_anti")
-          }
-      }
       // dropDuplicates: a crash between AppendLog.record and the qerr
       // watermark row makes the retried append re-record the same batch
       // at the same seq — surplus log rows whose vec_ids must not
       // double-materialize as physical rows (appendIvf's idempotence
       // anti-join reads EXISTING presence only, not intra-batch dups)
-      val delta = perShard.reduce(_ unionAll _).dropDuplicates("vec_id")
+      val delta = Sharded.unionShards(oldPath, oldShards) { (r, shardPath) =>
+        wm.flatMap(_.get(r))
+          .flatMap(m => graft.sources.AppendLog.since(spark, shardPath, m.appendSeq))
+          .getOrElse {
+            logicalAt(spark, shardPath)
+              .select(col("vec_id"), col("label"), col("embedding"))
+              .join(snapshotIds, Seq("vec_id"), "left_anti")
+          }
+      }.dropDuplicates("vec_id")
       val n = delta.count()
       if (n > 0) append(spark, newPath, newShards, delta)
       // DELETES that landed during phase 1 are invisible to the forward
       // delta (they only REMOVE ids from the logical view, and an id the
       // snapshot already captured is physically present in the new
-      // artifact — serving it would silently undo a takedown). Two paths:
-      //   - JOURNAL (cost ∝ deletes): every shard's delete journal is
-      //     trustworthy — its Tombstones.generation is UNCHANGED since
-      //     the snapshot (no mid-window compact turned pending tombstones
-      //     into unjournaled physical absences) — so the window's
-      //     removals are exactly the journal rows above each dw. Only
-      //     WINDOW deletes forward: a pre-snapshot tombstone's id is
-      //     already physically absent from the new root (the snapshot
-      //     read the logical view), and forwarding it would plant a
-      //     stale sidecar row that silently hides a legitimate
-      //     post-cutover re-add.
-      //   - REVERSE DELTA (fallback — id-column reads, corpus-shaped but
-      //     column-pruned): ids physically present in the NEW root yet
-      //     absent from the OLD root's LOGICAL view were removed during
-      //     the window, whether their tombstones are still pending or a
-      //     mid-window compact already applied-and-cleared them. Used
-      //     when any shard's generation moved, its journal cannot prove
-      //     completeness, or the snapshot predates the v2 META.
-      val journalDeletes: Option[Seq[org.apache.spark.sql.DataFrame]] =
+      // artifact — serving it would silently undo a takedown). JOURNAL
+      // path (cost ∝ deletes) when every shard's delete journal is
+      // trustworthy — its Tombstones.generation UNCHANGED since the
+      // snapshot (no mid-window compact turned pending tombstones into
+      // unjournaled physical absences): the window's removals are exactly
+      // the journal rows above each dw. Only WINDOW deletes forward: a
+      // pre-snapshot tombstone's id is already physically absent from the
+      // new root, and forwarding it would plant a stale sidecar row that
+      // silently hides a legitimate post-cutover re-add. Otherwise (a
+      // generation moved, a journal cannot prove completeness, or a v1
+      // META) the reverse delta ([[replayRemovals]]).
+      val journalDeletes: Option[Seq[DataFrame]] =
         wm.flatMap { marks =>
           val per = (0 until oldShards).map { r =>
             val shardPath = s"$oldPath/shard=$r"
@@ -336,9 +257,6 @@ object ShardedIvf {
           }
           if (per.forall(_.isDefined)) Some(per.flatMap(_.get)) else None
         }
-      lazy val newPhysical = (0 until newShards).map { r =>
-        IvfIndex.loadVectorsRaw(spark, s"$newPath/shard=$r").select("vec_id")
-      }.reduce(_ unionAll _)
       journalDeletes match {
         case Some(dfs) if dfs.nonEmpty =>
           // semi-join against the new root's PHYSICAL ids: a delete that
@@ -350,157 +268,37 @@ object ShardedIvf {
           // (takedowns mid-reshard are rare); the no-delete path stays
           // delta-shaped.
           val ids = dfs.reduce(_ unionAll _).distinct()
-            .join(newPhysical, Seq("vec_id"), "left_semi")
+            .join(physical(spark, newPath, newShards).select("vec_id"),
+              Seq("vec_id"), "left_semi")
           if (!ids.isEmpty) delete(spark, newPath, newShards, ids)
         case Some(_) => () // no window deletes anywhere
-        case None =>
-          val oldLogical = (0 until oldShards).map { r =>
-            IvfIndex.loadVectors(spark, s"$oldPath/shard=$r").select("vec_id")
-          }.reduce(_ unionAll _)
-          // anti-join the new root's EXISTING tombstones so a repeated
-          // fallback replay is a no-op instead of re-appending the same
-          // sidecar rows
-          val alreadyHidden = (0 until newShards).flatMap(r =>
-            graft.sources.Tombstones.read(spark, s"$newPath/shard=$r")
-              .map(_.select(col("doc_id").as("vec_id"))))
-          val removed0 = newPhysical
-            .join(oldLogical, Seq("vec_id"), "left_anti").distinct()
-          val removed =
-            if (alreadyHidden.isEmpty) removed0
-            else removed0.join(alreadyHidden.reduce(_ unionAll _),
-              Seq("vec_id"), "left_anti")
-          if (!removed.isEmpty) delete(spark, newPath, newShards, removed)
+        case None => replayRemovals(spark, oldPath, oldShards, newPath, newShards)
       }
       // the new artifact is now current up to each old shard's PRESENT
       // state (the old lease is held — nothing lands mid-replay), so
       // advance the recorded watermarks on BOTH axes: a repeated replay
       // serves an empty delta instead of re-reading the same journal rows
-      // (replay idempotence — the appends would be anti-joined anyway,
-      // but the count must read 0 and the journals must not be re-scanned)
-      if (wm.isDefined) {
-        val advanced = (0 until oldShards).map { r =>
-          val shardPath = s"$oldPath/shard=$r"
-          val qerr = s"$shardPath/qerr"
-          val w =
-            if (!graft.sources.Fs.exists(spark, qerr)) -1L
-            else spark.read.parquet(qerr).count() - 1
-          val dw = graft.sources.AppendLog.delSeqWatermark(spark, shardPath)
-          val g = graft.sources.Tombstones.generation(shardPath)
-          s"$r:$w:$dw:$g"
-        }.mkString(" ")
+      if (wm.isDefined)
         graft.sources.Versioned.metaBackend.writeAtomic(
-          s"$newPath/catchup.META", advanced)
-      }
+          s"$newPath/catchup.META", watermarks(spark, oldPath, oldShards))
       n
     }
   }
 
-  /** Hash-route `newVectors` to their shards and append each slice
-    * through the per-shard `appendIvf` (existing-model assignment,
-    * vec_id anti-join idempotence, distortion watermark — under the
-    * shard's own writer lease). The sharded-root lease serializes
-    * concurrent SHARDED appenders so two batches cannot interleave
-    * their per-shard passes. S filtered passes over the BATCH (not the
-    * corpus) — append batches are ingest-sized by contract.
-    */
-  def append(spark: SparkSession, path: String, shards: Int,
-             newVectors: DataFrame): Unit =
-    Sharding.appendRouted(spark, path, shards, newVectors,
-      (shardPath, slice) =>
-        graft.sources.VectorIndexStore.appendIvf(spark, shardPath, slice))
-
-  /** DELETE vectors from the composition: hash-route the ids to their
-    * owning shards and tombstone each slice through the per-shard
-    * `deleteIvf` — each shard stays a fully self-contained single-index
-    * artifact, so every per-shard verb (probe, calibrate, retrain,
-    * compact) sees the deletion with no sharded-specific machinery.
-    * Under the root lease ([[Sharding.deleteRouted]]), so deletes
-    * serialize with appends and the leased [[reshard]] (whose logical
-    * corpus read then applies them PHYSICALLY — a resharded artifact is
-    * born clean). Per-shard contract as [[graft.sources.VectorIndexStore.deleteIvf]]:
-    * visible immediately, physical at the shard's next compact/retrain,
-    * re-add requires that compact first.
-    */
-  def delete(spark: SparkSession, path: String, shards: Int,
-             ids: DataFrame): Unit =
-    Sharding.deleteRouted(spark, path, shards, ids,
-      (shardPath, slice) =>
-        graft.sources.VectorIndexStore.deleteIvf(spark, shardPath, slice))
-
   /** Per-shard drift check + recall-gated retrain
-    * (`retrainIvfIfNeeded` on each shard artifact): each shard's qerr
-    * series is judged against ITS baseline, so a drifted shard retrains
-    * its own k_s cells while quiet shards are a one-file qerr read.
-    * Sequential by design: retrain is rare scheduled maintenance driven
-    * by a drift signal (usually one shard at a time), and each retrain
-    * is internally a distributed train+assign+recall-gate job — the
-    * cluster is already saturated by one. Returns the number of shards
-    * retrained.
-    *
-    * `continueOnGateFailure`: a shard whose retrain FAILS ITS RECALL
-    * GATE (`RetrainRecallGateFailed` — the candidate geometry was
-    * refused, the stale-but-valid one keeps serving) aborts the
-    * remaining shards' drift checks when false (the offline default: a
-    * refused retrain is a loud operator signal). A STREAMING sink
-    * passes true so one persistently gate-failing shard cannot starve
-    * later drifted shards' retrains forever — the failure is logged per
-    * shard and the sweep continues (the next batch retries the failed
-    * shard anyway).
+    * (`retrainIvfIfNeeded` on each shard artifact) through the shared
+    * sweep, `continueOnGateFailure` included. Each per-shard retrain
+    * invalidates its parent's `nprobe.CAL`
+    * (VectorIndexStore.invalidateProbeCal), so root-calibration staleness
+    * needs nothing extra here. Returns the number of shards retrained.
     */
   def retrainIfNeeded(spark: SparkSession, path: String, shards: Int,
                       factor: Double = 2.0, recallFloor: Double = 0.2,
                       nProbe: Int = IvfIndex.NProbeAuto, k: Int = 10,
-                      continueOnGateFailure: Boolean = false): Int = {
-    verifyShards(path, shards)
-    // root-calibration staleness is keyed to the retrain itself: each
-    // per-shard retrain invalidates its parent's nprobe.CAL
-    // (VectorIndexStore.invalidateProbeCal), so direct per-shard
-    // maintenance is covered too — nothing extra to do here
-    (0 until shards).count { r =>
-      try graft.sources.VectorIndexStore.retrainIvfIfNeeded(
-        spark, s"$path/shard=$r", factor, recallFloor, nProbe, k)
-      catch {
-        case e: graft.sources.VectorIndexStore.RetrainRecallGateFailed
-            if continueOnGateFailure =>
-          System.err.println(
-            s"[graft] shard $r retrain skipped (recall gate): ${e.getMessage}")
-          false
-      }
-    }
-  }
-
-  /** Per-shard small-file COMPACTION (`compactIvf` on each shard
-    * artifact): appends fragment each shard's cell directories exactly
-    * like a single index's, so the same pointer-published rewrite
-    * applies — per shard, under the shard's writer lease, readers
-    * mid-probe keep their resolved version. Completes the lifecycle
-    * symmetry: every maintenance verb a single index has (append,
-    * drift, retrain, compact) exists shard-wise here.
-    */
-  def compactShards(spark: SparkSession, path: String, shards: Int): Unit = {
-    verifyShards(path, shards)
-    (0 until shards).foreach { r =>
-      val shardPath = s"$path/shard=$r"
-      val nCells = IvfIndex.loadModel(spark, shardPath).centroids.length
-      graft.sources.VectorIndexStore.compactIvf(spark, shardPath, nCells)
-    }
-  }
-
-  /** Per-shard [[graft.sources.VectorIndexStore.compactIvfIfDeleted]]
-    * sweep: only shards whose tombstone sidecar crossed the fraction pay
-    * a rewrite — deletes hash-route unevenly only by id distribution, so
-    * after a skewed takedown (one customer's corpus, one source's
-    * documents) this compacts exactly the shards that need it. Returns
-    * the number of shards compacted.
-    */
-  def compactShardsIfDeleted(spark: SparkSession, path: String, shards: Int,
-                             maxDeletedFraction: Double = 0.1): Int = {
-    verifyShards(path, shards)
-    (0 until shards).count { r =>
-      graft.sources.VectorIndexStore.compactIvfIfDeleted(
-        spark, s"$path/shard=$r", maxDeletedFraction)
-    }
-  }
+                      continueOnGateFailure: Boolean = false): Int =
+    retrainSweep(path, shards, continueOnGateFailure)((_, shardPath) =>
+      graft.sources.VectorIndexStore.retrainIvfIfNeeded(
+        spark, shardPath, factor, recallFloor, nProbe, k))
 
   /** Global approximate top-k over all shards: per-shard pruned top-k
     * (each with ITS model's resolved `nProbe`), one union plan, one
@@ -513,15 +311,14 @@ object ShardedIvf {
              nProbe: Int = IvfIndex.NProbeAuto): DataFrame =
     searchFiltered(spark, path, shards, query, k, nProbe, predicate = None)
 
-  /** [[search]] scoped by a metadata predicate — filtered vector search
-    * over the SHARDED composition. The predicate applies to each shard's
-    * cell-partitioned vectors BEFORE its probe (partition pruning to the
-    * probed cells + parquet predicate pushdown, the single-index v22
-    * plan, S times), so the disjoint-membership union stays lossless and
-    * full probe over every shard IS the exact filtered top-k. Width
-    * note: neither the auto policy nor the root's `nprobe.CAL`
-    * (unfiltered contracts) promise a recall target under a predicate —
-    * size filtered workloads with
+  /** [[search]] scoped by a metadata predicate. The predicate applies to
+    * each shard's cell-partitioned vectors BEFORE its probe (partition
+    * pruning to the probed cells + parquet predicate pushdown, the
+    * single-index v22 plan, S times), so the disjoint-membership union
+    * stays lossless and full probe over every shard IS the exact filtered
+    * top-k. Width note: neither the auto policy nor the root's
+    * `nprobe.CAL` (unfiltered contracts) promise a recall target under a
+    * predicate — size filtered workloads with
     * [[AnnCalibrate.calibrateFilteredWidth]] over the shard paths and
     * pass the result as `nProbe`.
     */
@@ -532,15 +329,12 @@ object ShardedIvf {
       : DataFrame = {
     verifyShards(path, shards)
     val np = IvfIndex.resolveShardedNProbeAt(path, nProbe)
-    val perShard = (0 until shards).map { r =>
-      val shardPath = s"$path/shard=$r"
+    Sharded.unionShards(path, shards) { (_, shardPath) =>
       val model = IvfIndex.loadModel(spark, shardPath)
       val vecs = IvfIndex.loadVectors(spark, shardPath)
       IvfIndex.search(spark, predicate.fold(vecs)(vecs.filter),
         model, query, k, np)
-    }
-    perShard.reduce(_ unionAll _)
-      .orderBy(desc("sim"), col("vec_id"))
+    }.orderBy(desc("sim"), col("vec_id"))
       .limit(k)
   }
 

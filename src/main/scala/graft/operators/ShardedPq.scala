@@ -3,128 +3,88 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Sharded IVF-PQ — the composition of the engine's two scale answers,
-  * and the true 100 TB ANN design point: [[ShardedIvf]] takes the
-  * coarse geometry past one quantizer's broadcast ceiling, and PQ takes
-  * the per-vector memory down 32× (one byte per subspace instead of
-  * 4·dim bytes — at the reference's 1536-d (db_utils.py:33) a
-  * full-precision shard is ~6 KB/vector, untenable exactly where
-  * sharding is needed). S independent IVF-PQ sub-indexes over the same
-  * disjoint `pmod(xxhash64(vec_id), S)` partition ([[Sharding]] — same
-  * routing, same `shards.META` guard, same build machinery):
+/** Sharded IVF-PQ — the [[Sharded]] composition over encoded shards, and
+  * the true 100 TB ANN design point: sharding takes the coarse geometry
+  * past one quantizer's broadcast ceiling, and PQ takes the per-vector
+  * memory down 32× (one byte per subspace instead of 4·dim bytes — at the
+  * reference's 1536-d (db_utils.py:33) a full-precision shard is
+  * ~6 KB/vector, untenable exactly where sharding is needed). Each shard
+  * is built through [[graft.sources.VectorIndexStore.buildPqAt]] and
+  * carries the full PQ lifecycle plane (coarse model, codebooks,
+  * cell-partitioned one-byte codes, qerr quantization watermarks,
+  * versioned baseline).
   *
-  *   - BUILD: one tagging pass, concurrent pruned per-shard
-  *     [[graft.sources.VectorIndexStore.buildPqAt]] — each shard
-  *     carries the full PQ lifecycle plane (coarse model, codebooks,
-  *     cell-partitioned one-byte codes, qerr quantization watermarks,
-  *     versioned baseline). Per-shard coarse cells default to
-  *     `autoCells` of the shard's rows (constant occupancy).
-  *   - MAINTENANCE: appends hash-route to the per-shard `appendPq`
-  *     (anti-join idempotence, quantization watermark);
-  *     [[retrainIfNeeded]] judges drift PER SHARD and retrains from the
-  *     caller-supplied full-precision corpus slice (the PQ artifact
-  *     deliberately carries no full-precision vectors — at scale the
-  *     slice is a pruned read of the same cold store the re-rank
-  *     already consults); [[compactShards]] rewrites fragmented cell
-  *     directories per shard behind Versioned pointers.
-  *   - PROBE ([[AnnEval.shardedPqTopK]] / [[search]]): each shard ADC-
-  *     scores its probed cells and keeps ITS shortlist (per-shard rank
-  *     — membership is disjoint, so shortlists union without loss),
-  *     one exact cosine re-rank of the unioned shortlists against the
-  *     full-precision store, one global top-k. Driver memory peaks at
-  *     one shard's (coarse + codebooks) at a time.
-  *   - CALIBRATION
-  *     ([[graft.sources.VectorIndexStore.calibrateShardedPqShortlist]]):
-  *     the one-pass recall-vs-shortlist curve generalizes — a true
-  *     neighbor enters the answer iff its cell is probed AND its
-  *     per-(query, SHARD) ADC rank is <= the per-shard shortlist, so
-  *     the capture width is one window over the unioned ADC frames.
-  *     One `shortlist.CAL` at the sharded root (per-shard depth),
-  *     honored by the [[PqIndex.ShortlistCalibrated]] sentinel,
-  *     invalidated by any shard's retrain.
-  *
-  * RESHARD: an encoded composition reshards by RE-ENCODING from the
-  * full-precision store at S′ (the artifact-sourced reshard of
-  * [[ShardedIvf]] does not apply — PQ shards hold codes, not vectors,
-  * and decoding codes would bake quantization error into the new
-  * artifact). `VectorIndexStore.reshardShardedPq` wraps that build in
-  * the same collision-guarded atomic publish + GC as the IVF one.
+  * Kind-specific here, because the PQ artifact deliberately carries no
+  * full-precision vectors:
+  *   - [[retrainIfNeeded]] feeds each shard the hash-routed slice of a
+  *     caller-supplied full-precision corpus (at scale, a pruned read of
+  *     the same cold store the re-rank already consults);
+  *   - RESHARD re-encodes from the full-precision store at S′ (decoding
+  *     codes would bake quantization error into the new artifact): the
+  *     store's `reshardShardedPq`, and the fp-store catch-up pair here;
+  *   - PROBE ([[search]] / [[AnnEval.shardedPqTopK]]): each shard
+  *     ADC-scores its probed cells and keeps ITS shortlist (membership is
+  *     disjoint, so shortlists union without loss), one exact cosine
+  *     re-rank of the union against the full-precision store, one global
+  *     top-k;
+  *   - CALIBRATION: one `shortlist.CAL` at the sharded root (per-shard
+  *     depth, [[resolveShardedShortlist]]), invalidated by any shard's
+  *     retrain.
   */
-object ShardedPq {
+object ShardedPq extends Sharded {
 
-  /** The shard count recorded at build time (`shards.META`). */
-  def shardCount(path: String): Option[Int] = Sharding.shardCount(path)
+  protected def buildAt(spark: SparkSession, dir: String, part: DataFrame,
+                        nCells: Int): Unit =
+    graft.sources.VectorIndexStore.buildPqAt(spark, dir, part, nCells)
 
-  /** Build S independent IVF-PQ artifacts under `path/shard=r` — one
-    * tagging pass, concurrent pruned per-shard PQ builds
-    * ([[ShardedIvf.BuildParallelism]]-bounded, same conf override).
-    */
-  def build(spark: SparkSession, vectors: DataFrame, path: String,
-            shards: Int, nCellsPerShard: Int = -1): Unit =
-    Sharding.buildSharded(spark, vectors, path, shards,
-      (dir, part, n) => {
-        val cells =
-          if (nCellsPerShard > 0) nCellsPerShard
-          else graft.sources.VectorIndexStore.autoCells(n)
-        graft.sources.VectorIndexStore.buildPqAt(spark, dir, part, cells)
-      })
+  protected def appendAt(spark: SparkSession, shardPath: String,
+                         slice: DataFrame): Unit =
+    graft.sources.VectorIndexStore.appendPq(spark, shardPath, slice)
 
-  /** Hash-route `newVectors` to their shards and append each slice
-    * through the per-shard `appendPq` (existing-codebook encode, vec_id
-    * anti-join idempotence, quantization watermark).
-    */
-  def append(spark: SparkSession, path: String, shards: Int,
-             newVectors: DataFrame): Unit =
-    Sharding.appendRouted(spark, path, shards, newVectors,
-      (shardPath, slice) =>
-        graft.sources.VectorIndexStore.appendPq(spark, shardPath, slice))
+  protected def deleteAt(spark: SparkSession, shardPath: String,
+                         ids: DataFrame): Unit =
+    graft.sources.VectorIndexStore.deletePq(spark, shardPath, ids)
 
-  /** DELETE from the encoded composition — [[ShardedIvf.delete]] with
-    * the per-shard `deletePq`: the owning shards' tombstones anti-join
-    * their encoded tables before every ADC scan, so deleted codes never
-    * occupy shortlist slots anywhere in the union. Physical at each
-    * shard's next compact or retrain (whose re-encode excludes them).
-    */
-  def delete(spark: SparkSession, path: String, shards: Int,
-             ids: DataFrame): Unit =
-    Sharding.deleteRouted(spark, path, shards, ids,
-      (shardPath, slice) =>
-        graft.sources.VectorIndexStore.deletePq(spark, shardPath, slice))
+  private[graft] def compactAt(spark: SparkSession, shardPath: String): Unit =
+    graft.sources.VectorIndexStore.compactPq(spark, shardPath,
+      PqIndex.loadModel(spark, shardPath).coarse.centroids.length)
+
+  protected def compactIfDeletedAt(spark: SparkSession, shardPath: String,
+                                   maxDeletedFraction: Double): Boolean =
+    graft.sources.VectorIndexStore.compactPqIfDeleted(
+      spark, shardPath, maxDeletedFraction)
+
+  private[graft] def logicalAt(spark: SparkSession, shardPath: String): DataFrame =
+    PqIndex.loadEncoded(spark, shardPath)
+
+  private[graft] def physicalAt(spark: SparkSession, shardPath: String): DataFrame =
+    PqIndex.loadEncodedRaw(spark, shardPath)
 
   /** CATCH-UP reshard for the ENCODED composition, phase 1 of 2 — the
-    * bounded-stall protocol ([[ShardedIvf.reshardCatchUpBuild]]'s shape)
-    * at the geometry that serves at 100 TB. Takes NO lease on the old
-    * root: the corpus-sized RE-ENCODE (from the cold full-precision
-    * store scoped to the old root's logical membership — PQ shards hold
-    * codes, so re-encoding from fp is the only reshard source that does
-    * not bake quantization error in) runs while appends keep landing on
-    * the old generation. MUST be followed by [[reshardCatchUpReplay]]
-    * before cutover.
+    * bounded-stall protocol ([[ShardedIvf.reshardCatchUpBuild]]'s shape).
+    * Takes NO lease on the old root: the corpus-sized RE-ENCODE (from the
+    * cold full-precision store scoped to the old root's logical
+    * membership) runs while appends keep landing on the old generation.
+    * MUST be followed by [[reshardCatchUpReplay]] before cutover.
     *
-    * No journal and no watermark sidecar, unlike the IVF protocol: the
-    * encoded tables are ~32× narrower than full-precision (one byte per
-    * subspace), so the replay's delta discovery is an id-column
-    * anti-join over CODES — already the cheap shape the IVF append log
-    * exists to reach. The snapshot is simply the membership the build
-    * read; deltas and removals are recomputed against it structurally.
+    * No journal, unlike the IVF protocol: the encoded tables are ~32×
+    * narrower than full-precision, so the replay's delta discovery is an
+    * id-column anti-join over CODES — already the cheap shape the IVF
+    * append log exists to reach. The snapshot is simply the membership
+    * the build read.
     */
   def reshardCatchUpBuild(spark: SparkSession, oldPath: String,
                           oldShards: Int, newPath: String, newShards: Int,
                           fpPath: String, nCellsPerShard: Int = -1): Unit = {
-    require(newPath != oldPath,
-      "reshard builds at a NEW root (shard count is part of the artifact " +
-        "identity; in-place cutover would break readers holding the old S)")
-    Sharding.verifyShards(oldPath, oldShards)
+    requireNewRoot(oldPath, oldShards, newPath)
     // fp watermark captured BEFORE the membership read — the conservative
     // direction: an upsert racing the capture lands above the watermark
     // AND (if its codes landed too) in the snapshot, and the replay's
     // delta semi-join absorbs the overlap
     val fpw = graft.sources.FpStore.maxSeq(spark, fpPath)
-    val membership = (0 until oldShards).map { r =>
-      PqIndex.loadEncoded(spark, s"$oldPath/shard=$r").select("vec_id")
-    }.reduce(_ unionAll _)
-    val corpus = graft.sources.FpStore.readMember(spark, fpPath, membership)
-    build(spark, corpus, newPath, newShards, nCellsPerShard)
+    build(spark, graft.sources.FpStore.readMember(spark, fpPath,
+      logical(spark, oldPath, oldShards).select("vec_id")),
+      newPath, newShards, nCellsPerShard)
     // a reused target root must not serve a depth sized for another S
     graft.sources.Versioned.metaBackend.deleteRecursively(s"$newPath/shortlist.CAL")
     // recorded at the NEW root so the replay (possibly another process)
@@ -144,12 +104,8 @@ object ShardedPq {
     *     [[append]]. Every appender must [[graft.sources.FpStore.upsert]]
     *     BEFORE appending codes (the sinks do; the require makes an
     *     appender that skipped it loud, not a silent drop).
-    *   - DELETES that landed during phase 1: new-physical ids absent
-    *     from the old LOGICAL view (pending tombstones AND
-    *     applied-and-cleared ones alike — the reverse delta, so a
-    *     mid-window compact cannot resurrect a takedown) → tombstoned on
-    *     the new root, anti-joined against its existing tombstones so a
-    *     repeated replay is a no-op.
+    *   - DELETES that landed during phase 1: the reverse delta
+    *     ([[replayRemovals]]).
     *
     * Naturally idempotent with no watermark state: after a replay the
     * new root's physical ids ⊇ the old logical view, so a repeat serves
@@ -159,30 +115,25 @@ object ShardedPq {
   def reshardCatchUpReplay(spark: SparkSession, oldPath: String,
                            oldShards: Int, newPath: String, newShards: Int,
                            fpPath: String): Long = {
-    Sharding.verifyShards(oldPath, oldShards)
+    verifyShards(oldPath, oldShards)
     graft.sources.Versioned.withWriterLease(oldPath) {
-      val newPhysical = (0 until newShards).map { r =>
-        PqIndex.loadEncodedRaw(spark, s"$newPath/shard=$r").select("vec_id")
-      }.reduce(_ unionAll _)
-      val oldLogical = (0 until oldShards).map { r =>
-        PqIndex.loadEncoded(spark, s"$oldPath/shard=$r").select("vec_id")
-      }.reduce(_ unionAll _)
       // materialized ONCE (eager local checkpoint): the delta plan reads
       // both roots' id columns, and its consumers (count, the window
       // fetch's semi-join, S per-shard append slices) would each
       // re-evaluate those corpus-id scans — and a plain persist would be
       // UNSAFE here (the append below refreshes the new root's listing,
       // invalidating a cached plan over it; the checkpoint pins the data)
-      val delta = graft.operators.ScaleOps.checkpointed(
-        oldLogical.join(newPhysical, Seq("vec_id"), "left_anti").distinct())
+      val delta = ScaleOps.checkpointed(
+        logical(spark, oldPath, oldShards).select("vec_id")
+          .join(physical(spark, newPath, newShards).select("vec_id"),
+            Seq("vec_id"), "left_anti").distinct())
       val n = delta.count()
       if (n > 0) {
         // Payload fetch, DELTA-SHAPED when possible: the snapshot's fp
         // watermark (catchup.META) + FpStore's per-batch seq stamps let
         // the scan prune every pre-window file by footer stats — the
         // blocked window must not re-read the full-width fp store to
-        // fetch a batch-sized delta (the same corpus-re-read smell the
-        // IVF append journal closed; here the fp store's own append-only
+        // fetch a batch-sized delta (here the fp store's own append-only
         // layout is the journal). FpStore.since/read resolve max-seq per
         // id (latest-wins), so a window re-add serves its NEWEST
         // payload. Falls back to the full semi-join scan when the
@@ -197,13 +148,12 @@ object ShardedPq {
           .readString(s"$newPath/catchup.META")
           .map(_.trim).filter(_.startsWith("fpw:"))
           .flatMap(_.stripPrefix("fpw:").toLongOption)
-        val windowRows = fpw.map(w => graft.operators.ScaleOps.checkpointed(
+        val windowRows = fpw.map(w => ScaleOps.checkpointed(
           graft.sources.FpStore.since(spark, fpPath, w)
             .join(delta, Seq("vec_id"), "left_semi")))
         val rows = windowRows.filter(_.count() == n).getOrElse {
-          graft.operators.ScaleOps.checkpointed(
-            graft.sources.FpStore.read(spark, fpPath)
-              .join(delta, Seq("vec_id"), "left_semi"))
+          ScaleOps.checkpointed(graft.sources.FpStore.read(spark, fpPath)
+            .join(delta, Seq("vec_id"), "left_semi"))
         }
         val got = rows.count()
         require(got == n,
@@ -218,27 +168,15 @@ object ShardedPq {
       graft.sources.Versioned.metaBackend.writeAtomic(
         s"$newPath/catchup.META",
         s"fpw:${graft.sources.FpStore.maxSeq(spark, fpPath)}")
-      val alreadyHidden = (0 until newShards).flatMap(r =>
-        graft.sources.Tombstones.read(spark, s"$newPath/shard=$r")
-          .map(_.select(org.apache.spark.sql.functions.col("doc_id")
-            .as("vec_id"))))
-      val removed0 = newPhysical
-        .join(oldLogical, Seq("vec_id"), "left_anti").distinct()
-      // same one-evaluation materialization: isEmpty + S routed delete
-      // slices would otherwise re-run the reverse-delta scans each
-      val removed = graft.operators.ScaleOps.checkpointed(
-        if (alreadyHidden.isEmpty) removed0
-        else removed0.join(alreadyHidden.reduce(_ unionAll _),
-          Seq("vec_id"), "left_anti"))
-      if (!removed.isEmpty) delete(spark, newPath, newShards, removed)
+      replayRemovals(spark, oldPath, oldShards, newPath, newShards)
       n
     }
   }
 
   /** Per-shard drift check + recall-gated retrain (`retrainPqIfNeeded`
     * on each shard artifact, fed the hash-routed slice of the
-    * caller-supplied full-precision corpus). Sequential by design, like
-    * [[ShardedIvf.retrainIfNeeded]]. Returns the number of shards
+    * caller-supplied full-precision corpus) through the shared sweep,
+    * `continueOnGateFailure` included. Returns the number of shards
     * retrained; each retrain invalidates the sharded root's
     * `shortlist.CAL` (a depth sized for the old geometry is stale).
     */
@@ -248,49 +186,13 @@ object ShardedPq {
                       nProbe: Int = IvfIndex.NProbeAuto, k: Int = 10,
                       shortlist: Int = PqIndex.DefaultShortlist,
                       continueOnGateFailure: Boolean = false): Int = {
-    Sharding.verifyShards(path, shards)
     val tagged = fullPrecision
       .select(col("vec_id"), col("label"), col("embedding"))
-      .withColumn("shard", Sharding.shardCol(shards))
-    (0 until shards).count { r =>
-      // continueOnGateFailure: same contract as ShardedIvf.retrainIfNeeded
-      // (a streaming caller must not let one gate-failing shard starve
-      // the rest of the sweep; offline callers keep the loud default)
-      try graft.sources.VectorIndexStore.retrainPqIfNeeded(
-        spark, s"$path/shard=$r",
+      .withColumn("shard", Sharded.shardCol(shards))
+    retrainSweep(path, shards, continueOnGateFailure)((r, shardPath) =>
+      graft.sources.VectorIndexStore.retrainPqIfNeeded(spark, shardPath,
         tagged.filter(col("shard") === r).drop("shard"),
-        factor, recallFloor, nProbe, k, shortlist)
-      catch {
-        case e: graft.sources.VectorIndexStore.RetrainRecallGateFailed
-            if continueOnGateFailure =>
-          System.err.println(
-            s"[graft] shard $r retrain skipped (recall gate): ${e.getMessage}")
-          false
-      }
-    }
-  }
-
-  /** Per-shard small-file compaction (`compactPq` on each shard). */
-  def compactShards(spark: SparkSession, path: String, shards: Int): Unit = {
-    Sharding.verifyShards(path, shards)
-    (0 until shards).foreach { r =>
-      val shardPath = s"$path/shard=$r"
-      val nCells = PqIndex.loadModel(spark, shardPath).coarse.centroids.length
-      graft.sources.VectorIndexStore.compactPq(spark, shardPath, nCells)
-    }
-  }
-
-  /** Per-shard tombstone-fraction compaction sweep
-    * ([[ShardedIvf.compactShardsIfDeleted]] on the encoded composition).
-    * Returns the number of shards compacted.
-    */
-  def compactShardsIfDeleted(spark: SparkSession, path: String, shards: Int,
-                             maxDeletedFraction: Double = 0.1): Int = {
-    Sharding.verifyShards(path, shards)
-    (0 until shards).count { r =>
-      graft.sources.VectorIndexStore.compactPqIfDeleted(
-        spark, s"$path/shard=$r", maxDeletedFraction)
-    }
+        factor, recallFloor, nProbe, k, shortlist))
   }
 
   /** Single-query top-k over all shards: per-shard ADC shortlist (each
@@ -331,14 +233,13 @@ object ShardedPq {
                      shortlist: Int = PqIndex.DefaultShortlist,
                      predicate: Option[org.apache.spark.sql.Column] = None)
       : DataFrame = {
-    Sharding.verifyShards(path, shards)
+    verifyShards(path, shards)
     val sl = resolveShardedShortlist(path, nProbe, shortlist)
-    val shorts = (0 until shards).map { r =>
-      val shardPath = s"$path/shard=$r"
+    val shorts = Sharded.unionShards(path, shards) { (_, shardPath) =>
       val enc = PqIndex.loadEncoded(spark, shardPath)
       PqIndex.adcShortlist(spark, predicate.fold(enc)(enc.filter),
         PqIndex.loadModel(spark, shardPath), query, nProbe, sl)
-    }.reduce(_ unionAll _)
+    }
     val qCol = lit(query.toArray).cast("array<float>")
     shorts.select("vec_id")
       .join(fullPrecision.select(col("vec_id"), col("label"), col("embedding")), "vec_id")

@@ -59,7 +59,14 @@ object VectorIndexStore {
 
   // shard count is part of the artifact identity, like nCells for ivfPath
   def shardedIvfPath(spark: SparkSession, sfDir: String, shards: Int): String =
-    s"${root(spark)}/ivfsh${shards}_${tag(sfDir)}"
+    shardedPath(spark, sfDir, "ivfsh", shards)
+
+  def shardedPqPath(spark: SparkSession, sfDir: String, shards: Int): String =
+    shardedPath(spark, sfDir, "pqsh", shards)
+
+  private def shardedPath(spark: SparkSession, sfDir: String, prefix: String,
+                          shards: Int): String =
+    s"${root(spark)}/$prefix${shards}_${tag(sfDir)}"
 
   /** Cell count for an n-vector corpus at constant target occupancy.
     * SemDeDup consumers size their IVF geometry with this: the within-cell
@@ -114,20 +121,58 @@ object VectorIndexStore {
     * `ShardedIvf.append`/`retrainIfNeeded`.
     */
   def ensureShardedIvf(spark: SparkSession, sfDir: String, shards: Int,
-                       nCellsPerShard: Int = -1): String = {
-    val path = shardedIvfPath(spark, sfDir, shards)
+                       nCellsPerShard: Int = -1): String =
+    ensureSharded(spark, graft.operators.ShardedIvf,
+      shardedIvfPath(spark, sfDir, shards), sfDir, shards, nCellsPerShard)
+
+  /** [[ensureShardedIvf]] for the sharded IVF-PQ composition
+    * ([[graft.operators.ShardedPq]] — the sharded coarse geometry with
+    * the 32× PQ memory point; the true 100 TB ANN design shape).
+    */
+  def ensureShardedPq(spark: SparkSession, sfDir: String, shards: Int,
+                      nCellsPerShard: Int = -1): String =
+    ensureSharded(spark, graft.operators.ShardedPq,
+      shardedPqPath(spark, sfDir, shards), sfDir, shards, nCellsPerShard)
+
+  private def ensureSharded(spark: SparkSession, kind: graft.operators.Sharded,
+                            path: String, sfDir: String, shards: Int,
+                            nCellsPerShard: Int): String = {
     PhysicalLayout.ensureDir(path) { tmp =>
-      graft.operators.ShardedIvf.build(spark,
-        Tables.load(spark, sfDir, "embeddings"), tmp, shards, nCellsPerShard)
+      kind.build(spark, Tables.load(spark, sfDir, "embeddings"), tmp, shards,
+        nCellsPerShard)
       markComplete(tmp)
     }
     path
   }
 
+  /** The store reshard preconditions: a real S -> S′ change over a
+    * complete artifact. Returns the (old, new) identity paths.
+    */
+  private def reshardPaths(oldShards: Int, newShards: Int)(
+      pathOf: Int => String): (String, String) = {
+    require(newShards != oldShards && newShards >= 1,
+      s"reshard $oldShards -> $newShards is not a reshard")
+    val oldPath = pathOf(oldShards)
+    require(Versioned.metaBackend.exists(s"$oldPath/_SUCCESS"),
+      s"no complete sharded artifact at $oldPath to reshard")
+    (oldPath, pathOf(newShards))
+  }
+
+  /** Refuse a complete artifact at the reshard target: ensureDir would
+    * short-circuit onto ITS corpus and the GC would destroy the live one.
+    */
+  private def refuseExistingTarget(oldPath: String, newPath: String): Unit =
+    if (Versioned.metaBackend.exists(s"$newPath/_SUCCESS"))
+      throw new IllegalStateException(
+        s"an artifact already exists at the target shard count " +
+          s"($newPath); resharding onto it would repoint readers at " +
+          s"ITS corpus and GC the live one at $oldPath — delete the " +
+          "target first (or pick another S') if that artifact is " +
+          "disposable")
+
   /** The shared reshard PUBLICATION protocol of both sharded
     * compositions: refuse a pre-existing artifact at the target identity
-    * (ensureDir would short-circuit onto a DIFFERENT corpus and the GC
-    * would destroy the live one), run `build` under BOTH writer leases —
+    * ([[refuseExistingTarget]]), run `build` under BOTH writer leases —
     * the old root's (so no append can land between the corpus read and
     * the GC and be lost) and the NEW root's (two reshards from
     * DIFFERENT old artifacts converging on the same S' hold disjoint
@@ -143,13 +188,7 @@ object VectorIndexStore {
                              gcOld: Boolean)(build: => Unit): Unit =
     Versioned.withWriterLease(oldPath) {
       Versioned.withWriterLease(newPath) {
-        if (Versioned.metaBackend.exists(s"$newPath/_SUCCESS"))
-          throw new IllegalStateException(
-            s"an artifact already exists at the target shard count " +
-              s"($newPath); resharding onto it would repoint readers at " +
-              s"ITS corpus and GC the live one at $oldPath — delete the " +
-              "target first (or pick another S') if that artifact is " +
-              "disposable")
+        refuseExistingTarget(oldPath, newPath)
         build
       }
       if (gcOld) Versioned.metaBackend.deleteRecursively(oldPath)
@@ -170,13 +209,8 @@ object VectorIndexStore {
   def reshardShardedIvf(spark: SparkSession, sfDir: String, oldShards: Int,
                         newShards: Int, nCellsPerShard: Int = -1,
                         gcOld: Boolean = true): String = {
-    require(newShards != oldShards && newShards >= 1,
-      s"reshard $oldShards -> $newShards is not a reshard")
-    val oldPath = shardedIvfPath(spark, sfDir, oldShards)
-    require(Versioned.metaBackend.exists(s"$oldPath/_SUCCESS"),
-      s"no complete sharded artifact at $oldPath to reshard")
-    val newPath = shardedIvfPath(spark, sfDir, newShards)
-    // collision refusal + both-lease publication + GC: [[reshardPublish]]
+    val (oldPath, newPath) =
+      reshardPaths(oldShards, newShards)(shardedIvfPath(spark, sfDir, _))
     // (withWriterLease is re-entrant, so ShardedIvf.reshard's own
     // old-path acquisition folds into the helper's)
     reshardPublish(oldPath, newPath, gcOld) {
@@ -210,23 +244,13 @@ object VectorIndexStore {
                                oldShards: Int, newShards: Int,
                                nCellsPerShard: Int = -1,
                                gcOld: Boolean = true): String = {
-    require(newShards != oldShards && newShards >= 1,
-      s"reshard $oldShards -> $newShards is not a reshard")
-    val oldPath = shardedIvfPath(spark, sfDir, oldShards)
-    require(Versioned.metaBackend.exists(s"$oldPath/_SUCCESS"),
-      s"no complete sharded artifact at $oldPath to reshard")
-    val newPath = shardedIvfPath(spark, sfDir, newShards)
+    val (oldPath, newPath) =
+      reshardPaths(oldShards, newShards)(shardedIvfPath(spark, sfDir, _))
     require(!newPath.contains("://"),
       s"catch-up reshard publishes $newPath by directory rename (POSIX " +
         "only); on remote storage use reshardShardedIvf at a new root")
     Versioned.withWriterLease(newPath) {
-      if (Versioned.metaBackend.exists(s"$newPath/_SUCCESS"))
-        throw new IllegalStateException(
-          s"an artifact already exists at the target shard count " +
-            s"($newPath); resharding onto it would repoint readers at " +
-            s"ITS corpus and GC the live one at $oldPath — delete the " +
-            "target first (or pick another S') if that artifact is " +
-            "disposable")
+      refuseExistingTarget(oldPath, newPath)
       val tmp = newPath + ".tmp-" + ProcessHandle.current().pid() +
         "-" + System.nanoTime()
       // PHASE 1 — no old-root lease: ingest flows for the whole rebuild
@@ -251,87 +275,6 @@ object VectorIndexStore {
     newPath
   }
 
-  /** Default reshard trigger: the per-shard corpus size at which the
-    * shard's own constant-occupancy geometry ([[autoCells]], target
-    * occupancy 128) reaches 4096 cells. Well below any hard limit — a
-    * 4096×128-d centroid array is ~4 MB, broadcastable by orders of
-    * magnitude — because resharding EARLY is cheap (the artifact-sourced
-    * re-tag measured CHEAPER than the original build at 100×,
-    * SCALE.md round-15 §6) while resharding late means every probe and
-    * retrain in the interim paid the oversized-shard cost.
-    */
-  val DefaultMaxShardRows: Long = 4096L * 128
-
-  /** GROWTH LOOP for the shard count — the `-IfNeeded` form of
-    * [[reshardShardedIvf]], completing the maintenance symmetry
-    * (retrainIvfIfNeeded judges drift, compactIfNeeded judges segment
-    * counts, this judges per-shard corpus growth): appends hash-route
-    * into a FIXED S forever, so the mean per-shard corpus grows with
-    * the total and each shard marches back toward the single-index
-    * ceiling. When the mean per-shard rows exceed `maxShardRows`,
-    * reshard to S′ = ceil(total / maxShardRows) (> S whenever the
-    * trigger fires, and sized so the post-reshard mean sits AT the
-    * policy line, not just under it). The check costs S parquet
-    * footer-count jobs (metadata reads — no corpus scan). Returns the
-    * serving (path, shards) pair either way, so a maintenance scheduler
-    * can call it unconditionally and follow the pointer.
-    */
-  def reshardShardedIvfIfNeeded(spark: SparkSession, sfDir: String,
-                                shards: Int,
-                                maxShardRows: Long = DefaultMaxShardRows,
-                                gcOld: Boolean = true): (String, Int) = {
-    require(maxShardRows >= 1, s"maxShardRows=$maxShardRows")
-    val path = shardedIvfPath(spark, sfDir, shards)
-    // "call it unconditionally" must survive its own reshard: a scheduler
-    // re-invoking with a now-stale configured S (the artifact was
-    // resharded and GC'd) gets a diagnostic naming the serving artifacts,
-    // not an opaque missing-path failure from the first shard read
-    if (!Versioned.metaBackend.exists(s"$path/_SUCCESS")) {
-      val siblings = Versioned.metaBackend.list(root(spark))
-        .filter(e => e.isDir && e.name.startsWith("ivfsh") &&
-          e.name.endsWith(tag(sfDir)))
-        .map(_.name)
-      throw new IllegalStateException(
-        s"no sharded artifact at S=$shards for $sfDir ($path) — it was " +
-          "likely resharded and GC'd; follow the (path, shards) pair a " +
-          "prior reshard returned" +
-          (if (siblings.nonEmpty)
-            s" (serving artifacts for this corpus: ${siblings.mkString(", ")})"
-          else ""))
-    }
-    graft.operators.ShardedIvf.verifyShards(path, shards)
-    val total = (0 until shards).map { r =>
-      IvfIndex.loadVectors(spark, s"$path/shard=$r").count()
-    }.sum
-    if (total <= maxShardRows * shards) (path, shards)
-    else {
-      val newShards = ((total + maxShardRows - 1) / maxShardRows).toInt
-      (reshardShardedIvf(spark, sfDir, shards, newShards, gcOld = gcOld),
-        newShards)
-    }
-  }
-
-  // shard count is part of the artifact identity, like shardedIvfPath
-  def shardedPqPath(spark: SparkSession, sfDir: String, shards: Int): String =
-    s"${root(spark)}/pqsh${shards}_${tag(sfDir)}"
-
-  /** Idempotent SHARDED IVF-PQ build over the `embeddings` fixture
-    * ([[graft.operators.ShardedPq]] — the composition of the sharded
-    * coarse geometry with the 32× PQ memory point; the true 100 TB ANN
-    * design shape). Same atomic publish-or-short-circuit protocol as
-    * [[ensureShardedIvf]].
-    */
-  def ensureShardedPq(spark: SparkSession, sfDir: String, shards: Int,
-                      nCellsPerShard: Int = -1): String = {
-    val path = shardedPqPath(spark, sfDir, shards)
-    PhysicalLayout.ensureDir(path) { tmp =>
-      graft.operators.ShardedPq.build(spark,
-        Tables.load(spark, sfDir, "embeddings"), tmp, shards, nCellsPerShard)
-      markComplete(tmp)
-    }
-    path
-  }
-
   /** [[reshardShardedIvf]] for the ENCODED composition: a sharded PQ
     * artifact reshards by RE-ENCODING the full-precision corpus at S′ —
     * its shards hold one-byte codes, not vectors (that is their point),
@@ -347,12 +290,8 @@ object VectorIndexStore {
   def reshardShardedPq(spark: SparkSession, sfDir: String, oldShards: Int,
                        newShards: Int, nCellsPerShard: Int = -1,
                        gcOld: Boolean = true): String = {
-    require(newShards != oldShards && newShards >= 1,
-      s"reshard $oldShards -> $newShards is not a reshard")
-    val oldPath = shardedPqPath(spark, sfDir, oldShards)
-    require(Versioned.metaBackend.exists(s"$oldPath/_SUCCESS"),
-      s"no complete sharded PQ artifact at $oldPath to reshard")
-    val newPath = shardedPqPath(spark, sfDir, newShards)
+    val (oldPath, newPath) =
+      reshardPaths(oldShards, newShards)(shardedPqPath(spark, sfDir, _))
     reshardPublish(oldPath, newPath, gcOld) {
       ensureShardedPq(spark, sfDir, newShards, nCellsPerShard)
       // the rebuild re-encodes from the FULL-PRECISION store, which knows
@@ -372,48 +311,84 @@ object VectorIndexStore {
     newPath
   }
 
-  /** [[reshardShardedIvfIfNeeded]] for the ENCODED composition — the
-    * growth LOOP at the 32× memory point, completing the maintenance
-    * symmetry (the IVF composition has had its loop since the verb
-    * landed; the PQ composition only had the verb). Judges mean
-    * per-shard ENCODED rows against `maxShardRows` (S parquet footer
-    * counts when quiet); over the line it reshards to
-    * ceil(total / maxShardRows) via [[reshardShardedPq]] — which
-    * re-encodes from the full-precision store, the documented
-    * source-of-truth difference from the artifact-sourced IVF loop —
-    * and returns the serving (path, shards) pair for schedulers. The
-    * same stale-S diagnostic applies: a scheduler re-calling with the
-    * pre-reshard S gets the serving pqsh* artifacts named, not a
-    * missing-path failure.
+  /** Default reshard trigger: the per-shard corpus size at which the
+    * shard's own constant-occupancy geometry ([[autoCells]], target
+    * occupancy 128) reaches 4096 cells. Well below any hard limit — a
+    * 4096×128-d centroid array is ~4 MB, broadcastable by orders of
+    * magnitude — because resharding EARLY is cheap (the artifact-sourced
+    * re-tag measured CHEAPER than the original build at 100×,
+    * SCALE.md round-15 §6) while resharding late means every probe and
+    * retrain in the interim paid the oversized-shard cost.
+    */
+  val DefaultMaxShardRows: Long = 4096L * 128
+
+  /** GROWTH LOOP for the shard count — the `-IfNeeded` form of
+    * [[reshardShardedIvf]], completing the maintenance symmetry
+    * (retrainIvfIfNeeded judges drift, compactIfNeeded judges segment
+    * counts, this judges per-shard corpus growth): appends hash-route
+    * into a FIXED S forever, so the mean per-shard corpus grows with
+    * the total and each shard marches back toward the single-index
+    * ceiling. See [[reshardShardedIfNeeded]]. Returns the serving (path,
+    * shards) pair either way, so a maintenance scheduler can call it
+    * unconditionally and follow the pointer.
+    */
+  def reshardShardedIvfIfNeeded(spark: SparkSession, sfDir: String,
+                                shards: Int,
+                                maxShardRows: Long = DefaultMaxShardRows,
+                                gcOld: Boolean = true): (String, Int) =
+    reshardShardedIfNeeded(spark, sfDir, shards, maxShardRows,
+      graft.operators.ShardedIvf, "ivfsh")(
+      reshardShardedIvf(spark, sfDir, shards, _, gcOld = gcOld))
+
+  /** [[reshardShardedIvfIfNeeded]] for the ENCODED composition: over the
+    * line it reshards via [[reshardShardedPq]] — which re-encodes from
+    * the full-precision store, the documented source-of-truth difference
+    * from the artifact-sourced IVF loop.
     */
   def reshardShardedPqIfNeeded(spark: SparkSession, sfDir: String,
                                shards: Int,
                                maxShardRows: Long = DefaultMaxShardRows,
-                               gcOld: Boolean = true): (String, Int) = {
-    require(maxShardRows >= 1, s"maxShardRows=$maxShardRows")
-    val path = shardedPqPath(spark, sfDir, shards)
+                               gcOld: Boolean = true): (String, Int) =
+    reshardShardedIfNeeded(spark, sfDir, shards, maxShardRows,
+      graft.operators.ShardedPq, "pqsh")(
+      reshardShardedPq(spark, sfDir, shards, _, gcOld = gcOld))
+
+  /** The ONE store-level growth loop: judge the mean per-shard LOGICAL
+    * rows against `maxShardRows` ([[graft.operators.Sharded.grownShards]]
+    * — S footer-count jobs when no tombstones are pending, no corpus
+    * scan); over the line, `reshardTo` S′ = ceil(total / maxShardRows)
+    * (> S whenever the trigger fires, and sized so the post-reshard mean
+    * sits AT the policy line) and return the new pair. `prefix` names the
+    * kind's store identity (`<prefix><S>_<tag>`): a scheduler re-invoking
+    * with a now-stale configured S (the artifact was resharded and GC'd)
+    * gets a diagnostic naming the serving artifacts, not an opaque
+    * missing-path failure from the first shard read.
+    */
+  private def reshardShardedIfNeeded(spark: SparkSession, sfDir: String,
+                                     shards: Int, maxShardRows: Long,
+                                     kind: graft.operators.Sharded,
+                                     prefix: String)(
+      reshardTo: Int => String): (String, Int) = {
+    val path = shardedPath(spark, sfDir, prefix, shards)
     if (!Versioned.metaBackend.exists(s"$path/_SUCCESS")) {
       val siblings = Versioned.metaBackend.list(root(spark))
-        .filter(e => e.isDir && e.name.startsWith("pqsh") &&
+        .filter(e => e.isDir && e.name.startsWith(prefix) &&
           e.name.endsWith(tag(sfDir)))
         .map(_.name)
       throw new IllegalStateException(
-        s"no sharded PQ artifact at S=$shards for $sfDir ($path) — it " +
-          "was likely resharded and GC'd; follow the (path, shards) pair " +
-          "a prior reshard returned" +
+        s"no sharded artifact at S=$shards for $sfDir ($path) — it was " +
+          "likely resharded and GC'd; follow the (path, shards) pair a " +
+          "prior reshard returned" +
           (if (siblings.nonEmpty)
             s" (serving artifacts for this corpus: ${siblings.mkString(", ")})"
           else ""))
     }
-    graft.operators.Sharding.verifyShards(path, shards)
-    val total = (0 until shards).map { r =>
-      graft.operators.PqIndex.loadEncoded(spark, s"$path/shard=$r").count()
-    }.sum
-    if (total <= maxShardRows * shards) (path, shards)
-    else {
-      val newShards = ((total + maxShardRows - 1) / maxShardRows).toInt
-      (reshardShardedPq(spark, sfDir, shards, newShards, gcOld = gcOld),
-        newShards)
+    kind.verifyShards(path, shards)
+    val total = (0 until shards)
+      .map(r => kind.logicalAt(spark, s"$path/shard=$r").count()).sum
+    graft.operators.Sharded.grownShards(total, shards, maxShardRows) match {
+      case None => (path, shards)
+      case Some(newShards) => (reshardTo(newShards), newShards)
     }
   }
 
@@ -430,7 +405,7 @@ object VectorIndexStore {
                                   target: Double = 0.9, k: Int = 10,
                                   nProbe: Int = graft.operators.IvfIndex.NProbeAuto,
                                   maxPanel: Int = 32): PqShortCal = {
-    graft.operators.Sharding.verifyShards(path, shards)
+    graft.operators.ShardedPq.verifyShards(path, shards)
     val corpus = fullPrecision.select("vec_id", "label", "embedding")
       .filter(org.apache.spark.sql.functions.col("vec_id") =!= 0)
     val panel = graft.operators.AnnEval.rowPanel(corpus, maxPanel)

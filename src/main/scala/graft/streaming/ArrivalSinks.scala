@@ -39,30 +39,20 @@ import org.apache.spark.sql.functions._
 private[streaming] object ArrivalSinks {
 
   /** The per-geometry verb set the shared batch body is parameterized
-    * by. `persist` runs FIRST on every non-empty upsert batch (the
-    * encoded geometry's cold full-precision store —
-    * [[graft.sources.FpStore]], under its writer lease; no-op for the
-    * self-contained IVF artifacts).
+    * by: the sharded composition itself (build, routed append/delete,
+    * per-shard compact) plus what the sinks add per geometry. `persist`
+    * runs FIRST on every non-empty upsert batch (the encoded geometry's
+    * cold full-precision store — [[graft.sources.FpStore]], under its
+    * writer lease; no-op for the self-contained IVF artifacts).
     */
   private[streaming] case class GeomVerbs(
-    name: String,
-    build: (SparkSession, DataFrame, String, Int) => Unit,
-    append: (SparkSession, String, Int, DataFrame) => Unit,
-    delete: (SparkSession, String, Int, DataFrame) => Unit,
+    sharded: graft.operators.Sharded,
     maintain: (SparkSession, String, Int) => Unit,
     grow: (SparkSession, String, Long) => Unit,
-    persist: (SparkSession, DataFrame) => Unit,
-    compactShard: (SparkSession, String) => Unit,
-    shardTombstoned: (SparkSession, String, DataFrame) => DataFrame)
+    persist: (SparkSession, DataFrame) => Unit)
 
   private[streaming] def ivfVerbs(): GeomVerbs = GeomVerbs(
-    name = "ivf",
-    build = (sp, vecs, dir, s) =>
-      graft.operators.ShardedIvf.build(sp, vecs, dir, s),
-    append = (sp, dir, s, vecs) =>
-      graft.operators.ShardedIvf.append(sp, dir, s, vecs),
-    delete = (sp, dir, s, ids) =>
-      graft.operators.ShardedIvf.delete(sp, dir, s, ids),
+    sharded = graft.operators.ShardedIvf,
     maintain = (sp, dir, s) => {
       graft.operators.ShardedIvf.retrainIfNeeded(sp, dir, s,
         continueOnGateFailure = true)
@@ -72,45 +62,26 @@ private[streaming] object ArrivalSinks {
       graft.operators.ShardedHome.reshardIfNeeded(sp, h, maxRows)
       ()
     },
-    persist = (_, _) => (),
-    compactShard = (sp, shardPath) => {
-      val nCells =
-        graft.operators.IvfIndex.loadModel(sp, shardPath).centroids.length
-      graft.sources.VectorIndexStore.compactIvf(sp, shardPath, nCells)
-    },
-    shardTombstoned = (sp, shardPath, ids) =>
-      graft.sources.Tombstones.read(sp, shardPath) match {
-        case Some(t) => ids.join(t.select(col("doc_id").as("vec_id")),
-          Seq("vec_id"), "left_semi")
-        case None => ids.limit(0)
-      })
+    persist = (_, _) => ())
 
   private[streaming] def pqVerbs(fpPath: String): GeomVerbs =
     GeomVerbs(
-      name = "pq",
-      build = (sp, vecs, dir, s) =>
-        graft.operators.ShardedPq.build(sp, vecs, dir, s),
-      append = (sp, dir, s, vecs) =>
-        graft.operators.ShardedPq.append(sp, dir, s, vecs),
-      delete = (sp, dir, s, ids) =>
-        graft.operators.ShardedPq.delete(sp, dir, s, ids),
+      sharded = graft.operators.ShardedPq,
       maintain = (_, _, _) => (), // PQ retrain is external scheduled work
       grow = (sp, h, maxRows) => {
         graft.operators.ShardedHome.reshardPqIfNeeded(sp, h, fpPath, maxRows)
         ()
       },
-      persist = (sp, vecs) => graft.sources.FpStore.upsert(sp, fpPath, vecs),
-      compactShard = (sp, shardPath) => {
-        val nCells = graft.operators.PqIndex.loadModel(sp, shardPath)
-          .coarse.centroids.length
-        graft.sources.VectorIndexStore.compactPq(sp, shardPath, nCells)
-      },
-      shardTombstoned = (sp, shardPath, ids) =>
-        graft.sources.Tombstones.read(sp, shardPath) match {
-          case Some(t) => ids.join(t.select(col("doc_id").as("vec_id")),
-            Seq("vec_id"), "left_semi")
-          case None => ids.limit(0)
-        })
+      persist = (sp, vecs) => graft.sources.FpStore.upsert(sp, fpPath, vecs))
+
+  /** The ids of `ids` (one vec_id column) one shard's sidecar tombstones. */
+  private def shardTombstoned(sp: SparkSession, shardPath: String,
+                              ids: DataFrame): DataFrame =
+    graft.sources.Tombstones.read(sp, shardPath) match {
+      case Some(t) => ids.join(t.select(col("doc_id").as("vec_id")),
+        Seq("vec_id"), "left_semi")
+      case None => ids.limit(0)
+    }
 
   /** The shared batch body. `ups` is the embedded upsert frame
     * (vec_id, label, embedding); `dels` one vec_id column;
@@ -132,14 +103,14 @@ private[streaming] object ArrivalSinks {
     if (!upsEmpty) StreamingOps.retryOnContention() { verbs.persist(sp, ups) }
     def applyDeletes(dir: String, sN: Int): Unit =
       if (!dels.isEmpty) StreamingOps.retryOnContention() {
-        verbs.delete(sp, dir, sN, dels)
+        verbs.sharded.delete(sp, dir, sN, dels)
       }
     graft.operators.ShardedHome.serving(home) match {
       case None =>
         if (!upsEmpty) {
           val gen = graft.operators.ShardedHome.InitialGen
           StreamingOps.retryOnContention() {
-            verbs.build(sp, ups, s"$home/$gen", shards)
+            verbs.sharded.build(sp, ups, s"$home/$gen", shards)
           }
           graft.operators.ShardedHome.publishServing(home, gen, shards)
           applyDeletes(s"$home/$gen", shards)
@@ -162,13 +133,13 @@ private[streaming] object ArrivalSinks {
             graft.sources.Tombstones.read(sp, s"$dir0/shard=$r").isDefined)
           if (withSidecar.nonEmpty) {
             val upIds = ups.select("vec_id")
-              .withColumn("shard", graft.operators.Sharding.shardCol(s0))
+              .withColumn("shard", graft.operators.Sharded.shardCol(s0))
             withSidecar.foreach { r =>
               val slice = upIds.filter(col("shard") === r).drop("shard")
               val shardPath = s"$dir0/shard=$r"
-              if (!verbs.shardTombstoned(sp, shardPath, slice).isEmpty)
+              if (!shardTombstoned(sp, shardPath, slice).isEmpty)
                 try StreamingOps.retryOnContention() {
-                  verbs.compactShard(sp, shardPath)
+                  verbs.sharded.compactAt(sp, shardPath)
                 } catch {
                   // a FULLY tombstoned shard refuses its compact (an empty
                   // partitioned rewrite is unreadable — the store contract);
@@ -187,7 +158,7 @@ private[streaming] object ArrivalSinks {
         // re-resolve once and retry on the new pair
         def appendResolved(dir: String, sN: Int): Unit =
           StreamingOps.retryOnContention() {
-            verbs.append(sp, dir, sN, ups)
+            verbs.sharded.append(sp, dir, sN, ups)
           }
         // delete-only batches skip the append path entirely — no root
         // writer lease, no S per-shard append probes for an empty frame

@@ -658,7 +658,7 @@ object StreamingOps {
     * the streaming half of the delete verb. Per micro-batch: upserts
     * hash-route through the per-shard append anti-joins FIRST, then the
     * batch's deletes tombstone their owning shards
-    * ([[graft.operators.ShardedIvf.delete]]) — so a same-batch
+    * ([[graft.operators.Sharded.delete]]) — so a same-batch
     * upsert+delete of one id ends DELETED (takedown wins), and a
     * fresh-checkpoint FULL redelivery, which collapses the whole history
     * into one batch, converges to the same final state as the
@@ -801,7 +801,7 @@ object StreamingOps {
     * batch). The arrival feed is CDC-shaped like the IVF sink's
     * (`doc_<id>.txt` upserts, `del_<id>.txt` takedown markers): deletes
     * tombstone the owning ENCODED shards after the batch's appends
-    * ([[graft.operators.ShardedPq.delete]] — deleted codes never occupy
+    * ([[graft.operators.Sharded.delete]] — deleted codes never occupy
     * shortlist slots; takedown wins in-batch, fresh-checkpoint replay
     * converges, same marker-ordering boundary as the IVF CDC sink).
     *

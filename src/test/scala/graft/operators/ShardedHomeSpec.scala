@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * reshard to the next generation (pointer flip + old-generation GC,
   * membership preserved), and the loud no-pointer diagnostic.
   */
-class ShardedHomeSpec extends SparkTestBase {
+class ShardedHomeSpec extends SparkTestBase with ShardedKinds {
 
   private lazy val emb = Tables.load(spark, sf, "embeddings")
 
@@ -76,22 +76,10 @@ class ShardedHomeSpec extends SparkTestBase {
   }
 
   test("growth check counts LIVE rows (physical minus sidecar) without a logical anti-join scan") {
-    val home = java.nio.file.Files.createTempDirectory("graft_shhome_d").toString
-    ShardedIvf.build(spark, emb, s"$home/${ShardedHome.InitialGen}", 2,
-      nCellsPerShard = 8)
-    ShardedHome.publishServing(home, ShardedHome.InitialGen, 2)
-    val n = emb.count()
-    // budget sized so the FULL corpus is over the line but the post-delete
-    // LIVE count is under it: counting deleted rows toward growth would
-    // reshard; counting live rows must not
-    ShardedIvf.delete(spark, s"$home/gen-1", 2,
-      emb.filter(col("vec_id") % 2 === 0).select("vec_id"))
-    val live = emb.filter(col("vec_id") % 2 =!= 0).count()
-    val budget = (live + n) / 4 // live/2 < budget < n/2 per shard mean
-    assert(live <= budget * 2 && n > budget * 2, "premise: budget separates")
-    assert(ShardedHome.reshardIfNeeded(spark, home, maxShardRows = budget)
-      == (s"$home/gen-1", 2),
-      "tombstoned rows must not count toward growth (deletes thin shards)")
-    assert(ShardedHome.serving(home).contains((s"$home/gen-1", 2)))
+    liveRowsGrowthCase(ivfKind)
+  }
+
+  test("encoded growth check counts LIVE rows (physical minus sidecar) without a logical anti-join scan") {
+    liveRowsGrowthCase(pqKind)
   }
 }

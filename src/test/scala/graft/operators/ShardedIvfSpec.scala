@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * disjoint-total membership, exactness under full probing, recall
   * under the default pruned probe, and per-shard model independence.
   */
-class ShardedIvfSpec extends SparkTestBase {
+class ShardedIvfSpec extends SparkTestBase with ShardedKinds {
 
   private lazy val emb = Tables.load(spark, sf, "embeddings")
 
@@ -180,37 +180,7 @@ class ShardedIvfSpec extends SparkTestBase {
   }
 
   test("compactShards bounds per-cell file counts and preserves probe results") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_shivf_cmp").toString + "/ix"
-    val shards = 2
-    val base = emb.filter(col("vec_id") < 300)
-    ShardedIvf.build(spark, base, root, shards, nCellsPerShard = 8)
-    // three append batches fragment every touched cell directory
-    for (lo <- Seq(300, 360, 420))
-      ShardedIvf.append(spark, root, shards,
-        emb.filter(col("vec_id") >= lo && col("vec_id") < lo + 60))
-    val (qid, qv) = emb.filter(col("vec_id") === 1)
-      .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])].head()
-    val before = ShardedIvf.search(spark, root, shards, qv, k = 10)
-      .filter(col("vec_id") =!= qid)
-      .select("vec_id").as[Long].collect().toSeq
-    // count the RESOLVED vectors table only (compaction publishes a new
-    // Versioned dir and keeps the legacy one for in-flight readers)
-    def partFiles(r: Int): Int = {
-      def count(f: java.io.File): Int =
-        if (f.isDirectory) f.listFiles().map(count).sum
-        else if (f.getName.startsWith("part-")) 1 else 0
-      count(new java.io.File(IvfIndex.vectorsDir(s"$root/shard=$r")))
-    }
-    val filesBefore = (0 until shards).map(partFiles).sum
-    ShardedIvf.compactShards(spark, root, shards)
-    val filesAfter = (0 until shards).map(partFiles).sum
-    assert(filesAfter < filesBefore,
-      s"compaction must cut files: $filesBefore -> $filesAfter")
-    val after = ShardedIvf.search(spark, root, shards, qv, k = 10)
-      .filter(col("vec_id") =!= qid)
-      .select("vec_id").as[Long].collect().toSeq
-    assert(after == before, "compaction must not change probe results")
+    compactShardsCase(ivfKind)
   }
 
   test("retrainIfNeeded is per-shard: quiet index is a no-op, drifted shards retrain") {

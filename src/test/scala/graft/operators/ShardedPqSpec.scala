@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * (honored / policy-mismatch degrade / retrain invalidation), and the
   * shards.META guard shared with [[ShardedIvf]].
   */
-class ShardedPqSpec extends SparkTestBase {
+class ShardedPqSpec extends SparkTestBase with ShardedKinds {
 
   private lazy val emb = Tables.load(spark, sf, "embeddings")
 
@@ -107,6 +107,10 @@ class ShardedPqSpec extends SparkTestBase {
       nProbe = 8, shortlist = emb.count().toInt)
       .select("vec_id").as[Long].collect().toSeq
     assert(got == exactTop(10, qid, qv))
+  }
+
+  test("compactShards bounds per-cell file counts and preserves probe results") {
+    compactShardsCase(pqKind)
   }
 
   test("retrainIfNeeded is per-shard and feeds hash-routed full-precision slices") {
