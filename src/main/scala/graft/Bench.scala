@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
 
 /** Perf gate (driver contract): run every declared query at the given SF and
   * print one JSON line of per-query seconds. A warmup pass first scans each
@@ -11,21 +10,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expressions.GraftFunctions.register(spark)
-
-    // optional focus filter for local iteration: comma-separated names
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
     // LIFECYCLE-class queries (per-JVM DrillOnce drills / heavy artifact
     // ensures: streamed-index lifecycles, sharded builds, drift-retrains)
     // run LAST: their first rep builds indexes and runs streaming
@@ -45,16 +29,11 @@ object Bench {
       "v19_pq_drift_retrain", "v20_sharded_reshard", "v21_sharded_pq",
       "v23_filtered_pq", "v24_filtered_sharded_pq", "v25_deleted_knn",
       "v26_deleted_sharded")
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .sortBy { case (n, _) => (lifecycleLast.contains(n), n) }
-    if (selected.isEmpty) {
-      // a typo'd filter must not masquerade as an empty-but-successful run
-      System.err.println(
-        s"[bench] SPARK_GRAFT_ONLY matched no queries: ${only.getOrElse(Set.empty).mkString(",")}")
-      spark.stop()
-      sys.exit(2)
-    }
+    // optional focus filter for local iteration: comma-separated names
+    val selected = Harness.selectOrExit("SPARK_GRAFT_ONLY",
+        sys.env.get("SPARK_GRAFT_ONLY"), SparkEntry.queries.keys.toSeq.sorted)
+      .sortBy(n => (lifecycleLast.contains(n), n))
+    val spark = Harness.localSession()
 
     // warmup: touch every table + exercise codegen once
     Tables.all.foreach(n => Tables.load(spark, sfDir, n).count())
@@ -78,26 +57,6 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }.min
 
-    // WORK COUNTERS: rows read from sources and rows written to shuffles,
-    // accumulated per task. These make a timing claim falsifiable from the
-    // artifact alone — identical work + different seconds = environment
-    // noise, different work = a real plan change (the round-8 driver tail
-    // showed 2-5x per-query "regressions" that a clean re-run measured
-    // flat; with counters that distinction needs no re-run).
-    val rowsInAcc = new java.util.concurrent.atomic.AtomicLong
-    val shuffleAcc = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            rowsInAcc.addAndGet(m.inputMetrics.recordsRead)
-            shuffleAcc.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-          }
-        }
-      })
-
     // Per-query MIN over `reps` timed runs (default 3). A single timing
     // charges whatever the OS page cache / JIT felt like that second to the
     // query — round-4 driver tails showed 2-9x phantom "regressions" in
@@ -105,56 +64,46 @@ object Bench {
     // plans flat. Min-of-N measures the plan, not the cache.
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS")
       .flatMap(_.toIntOption).getOrElse(3).max(1)
-    val results = selected.map { case (name, fn) =>
+    val queries = SparkEntry.queries
+    val results = selected.map { name =>
       // A rep that throws must not contribute its wall time to min() — an
       // intermittently fast-failing query would otherwise report the
       // failure's elapsed time as its benchmark number with no error signal.
-      // Each successful rep carries its (secs, rows_in, shuffle_rows); the
-      // reported counters come from the same rep as the reported min time.
-      val runs = (1 to reps).flatMap { _ =>
-        org.apache.spark.sql.GraftShim.drainListenerBus(spark)
-        val in0 = rowsInAcc.get(); val sh0 = shuffleAcc.get()
-        // driver-JVM GC time charged to this rep: with byte-equal work
-        // counters, a wall-clock delta that tracks gc_ms is JVM state
-        // (allocation pressure from earlier queries), not a plan change
-        // — the attribution the round-15 x-family inflation needed
-        val gc0 = java.lang.management.ManagementFactory
-          .getGarbageCollectorMXBeans.stream()
-          .mapToLong(_.getCollectionTime).sum()
-        val t0 = System.nanoTime()
-        // noop sink, not count(): count() lets Catalyst PRUNE work that
-        // doesn't change cardinality (a final unique-key left join and its
-        // whole build subtree, every projected expression, final sorts) —
-        // x15 benched at ~5% of its real work that way. The noop write
-        // evaluates every output column and executes the full declared
-        // plan, so secs/rows_in/shuffle_rows describe the query as
-        // declared, not a cardinality skeleton.
-        val ok = try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          true
-        } catch { case _: Throwable => false }
-        val secs = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.GraftShim.drainListenerBus(spark)
-        val gcMs = java.lang.management.ManagementFactory
-          .getGarbageCollectorMXBeans.stream()
-          .mapToLong(_.getCollectionTime).sum() - gc0
-        if (ok) Some((secs, rowsInAcc.get() - in0, shuffleAcc.get() - sh0, gcMs))
-        else None
+      // The reported counters come from the same rep as the reported min
+      // time; the last failed rep's exception class is kept as the error.
+      val runs = (1 to reps).map { i =>
+        val (failure, work) = Harness.measure(spark) {
+          // noop sink, not count(): count() lets Catalyst PRUNE work that
+          // doesn't change cardinality (a final unique-key left join and its
+          // whole build subtree, every projected expression, final sorts) —
+          // x15 benched at ~5% of its real work that way. The noop write
+          // evaluates every output column and executes the full declared
+          // plan, so secs/rows_in/shuffle_rows describe the query as
+          // declared, not a cardinality skeleton.
+          try {
+            queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
+            None
+          } catch { case e: Throwable => Some(e) }
+        }
+        failure.foreach(e => System.err.println(
+          s"[bench] $name rep $i failed: ${e.getClass.getName}: ${e.getMessage}"))
+        failure.toLeft(work)
       }
-      name -> runs
+      (name, runs.collect { case Right(w) => w },
+        runs.collect { case Left(e) => e.getClass.getName }.lastOption)
     }
-    val failed = results.collect { case (n, rs) if rs.isEmpty => n }
+    val failed = results.collect { case (n, rs, _) if rs.isEmpty => n }
     // a query whose every rep failed reports -1 (never a plausible seconds
     // value) and is named in the errors array
-    val qs = results.map { case (k, rs) =>
-      s"\"" + k + "\":" + (if (rs.nonEmpty) rs.map(_._1).min else -1.0)
+    val qs = results.map { case (k, rs, _) =>
+      s"\"" + k + "\":" + (if (rs.nonEmpty) rs.map(_.secs).min else -1.0)
     }.mkString("{", ",", "}")
-    val work = results.map { case (k, rs) =>
-      val (sec, in, sh, gc) =
-        if (rs.nonEmpty) rs.minBy(_._1) else (-1.0, -1L, -1L, -1L)
-      "\"" + k + "\":" + s"""{"secs":$sec,"rows_in":$in,"shuffle_rows":$sh,"gc_ms":$gc}"""
+    val work = results.map { case (k, rs, error) =>
+      val w = if (rs.nonEmpty) rs.minBy(_.secs) else Harness.Work(-1.0, -1L, -1L, -1L)
+      val err = error.fold("")(c => s""","error":"$c"""")
+      "\"" + k + "\":" + s"""{"secs":${w.secs},"rows_in":${w.rowsIn},"shuffle_rows":${w.shuffleRows},"gc_ms":${w.gcMs}$err}"""
     }.mkString("{", ",", "}")
-    val total = results.collect { case (_, rs) if rs.nonEmpty => rs.map(_._1).min }.sum
+    val total = results.collect { case (_, rs, _) if rs.nonEmpty => rs.map(_.secs).min }.sum
     val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Per-FAMILY subtotals (family = the query-name prefix letter: c/d/g/
     // k/m/p/r/s/t/v/x): round-over-round total deltas must be attributable
@@ -164,7 +113,7 @@ object Bench {
     // Printed at the HEAD of the contract line AND on the short trailing
     // line, so any single surviving line carries them.
     val families = results
-      .collect { case (n, rs) if rs.nonEmpty => n.take(1) -> rs.map(_._1).min }
+      .collect { case (n, rs, _) if rs.nonEmpty => n.take(1) -> rs.map(_.secs).min }
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (f, xs) => f""""$f":${xs.map(_._2).sum}%.2f""" }
       .mkString("{", ",", "}")

@@ -38,14 +38,13 @@ object ClusterLaunch {
       .map(p => new java.io.File(p).getAbsolutePath).mkString(":")
 
   /** Apply the executor launch config to a builder targeting a
-    * local-cluster master.
+    * local-cluster master (executor memory is the caller's conf).
     */
-  def configure(b: SparkSession.Builder, executorMemory: String): SparkSession.Builder = {
+  def configure(b: SparkSession.Builder): SparkSession.Builder = {
     require(sys.env.contains("SPARK_HOME"),
       "local-cluster masters need SPARK_HOME (=/opt/spark): worker JVMs " +
         "resolve the executor launch command from it")
     b.config("spark.executor.extraClassPath", absoluteClasspath)
       .config("spark.executor.extraJavaOptions", AddOpens)
-      .config("spark.executor.memory", executorMemory)
   }
 }

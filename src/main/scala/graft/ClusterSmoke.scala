@@ -26,7 +26,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * probe in EACH mode (per-mode artifact roots, so the cluster run pays
   * its own executor-side build rather than probing the local run's).
   *
-  * Counters (rows_in / shuffle_rows, the Bench/Drill listener) are
+  * Counters (rows_in / shuffle_rows, from the Harness meter) are
   * plan-deterministic at equal parallelism (8 slots both modes, same
   * shuffle.partitions/AQE/broadcast configs), so COUNTER EQUALITY is the
   * falsifiable form of "the cluster ran the same plans" — a divergence
@@ -67,9 +67,8 @@ object ClusterSmoke {
     new java.io.File(outRoot).mkdirs()
 
     // focus filters for iterating on one failure (Bench's ONLY contract)
-    val only = sys.env.get("SPARK_GRAFT_SMOKE_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val slice = only.map(f => SliceNames.filter(f)).getOrElse(SliceNames)
+    val slice = Harness.selectOrExit("SPARK_GRAFT_SMOKE_ONLY",
+      sys.env.get("SPARK_GRAFT_SMOKE_ONLY"), SliceNames)
     val clusterOnly = sys.env.contains("SPARK_GRAFT_SMOKE_CLUSTER_ONLY")
 
     // the shared probe artifact must be rebuilt per INVOCATION (a prior
@@ -143,54 +142,27 @@ object ClusterSmoke {
     // memoized lifecycle drills (v19) must run IN THIS MODE, on this
     // mode's executors — not reuse the previous session's scalars
     graft.queries.DrillOnce.reset()
-    val builder = SparkSession.builder()
-      .master(master)
-      .appName(s"graft-clustersmoke-$mode")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.index.dir", s"$artifactRoot/index")
-      .config("spark.graft.shingles.dir", s"$artifactRoot/shingles")
-      .config("spark.graft.minhash.dir", s"$artifactRoot/minhash")
-      .config("spark.graft.postings.dir", s"$artifactRoot/postings")
-      .config("spark.graft.substr.dir", s"$artifactRoot/substr")
-    if (master.startsWith("local-cluster"))
-      // executor classpath + JDK-17 opens (the round-13 relative-classpath
-      // lesson lives in ClusterLaunch's doc)
-      ClusterLaunch.configure(builder, executorMemory = "3g")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expressions.GraftFunctions.register(spark)
-
-    val rowsInAcc = new java.util.concurrent.atomic.AtomicLong
-    val shuffleAcc = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            rowsInAcc.addAndGet(m.inputMetrics.recordsRead)
-            shuffleAcc.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-          }
-        }
-      })
+    // local-cluster executors get their classpath + JDK-17 opens from
+    // the factory (the round-13 relative-classpath lesson lives in
+    // ClusterLaunch's doc)
+    val spark = Harness.session(master, 8,
+      "spark.app.name" -> s"graft-clustersmoke-$mode",
+      "spark.executor.memory" -> "3g",
+      "spark.graft.index.dir" -> s"$artifactRoot/index",
+      "spark.graft.shingles.dir" -> s"$artifactRoot/shingles",
+      "spark.graft.minhash.dir" -> s"$artifactRoot/minhash",
+      "spark.graft.postings.dir" -> s"$artifactRoot/postings",
+      "spark.graft.substr.dir" -> s"$artifactRoot/substr")
 
     def timedRun(name: String, df: => DataFrame): Run = {
-      org.apache.spark.sql.GraftShim.drainListenerBus(spark)
-      val in0 = rowsInAcc.get(); val sh0 = shuffleAcc.get()
-      val t0 = System.nanoTime()
-      val collected = df.collect()
-      val secs = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+      val (collected, w) = Harness.measure(spark)(df.collect())
       // canonical digest: sorted row renderings, md5-folded — both modes
       // run in THIS JVM, so formatting is identical and the digest
       // compares values, not plan or partition order
       val md = java.security.MessageDigest.getInstance("MD5")
       collected.map(_.toString).sorted.foreach(s => md.update(s.getBytes("UTF-8")))
-      Run(name, secs, md.digest().map("%02x".format(_)).mkString,
-        collected.length.toLong, rowsInAcc.get() - in0, shuffleAcc.get() - sh0)
+      Run(name, w.secs, md.digest().map("%02x".format(_)).mkString,
+        collected.length.toLong, w.rowsIn, w.shuffleRows)
     }
 
     /** Run `body` with the index-store root overridden, restoring OR

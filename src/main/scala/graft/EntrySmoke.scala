@@ -1,14 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("local[8]", 8)
     val df = SparkEntry.entry(spark).cache()
     println("ENTRY ROWS: " + df.count())
     println("ZERO VECTORS: " + df.filter(VectorFunctions.normSq(col("content_vector")) === 0.0).count())

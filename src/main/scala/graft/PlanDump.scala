@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
@@ -19,31 +18,22 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = args(2)
-    val only = args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expressions.GraftFunctions.register(spark)
+    val selected = Harness.selectOrExit("the query list argument", args.lift(3),
+      SparkEntry.queries.keys.toSeq.sorted)
+    val spark = Harness.localSession()
     Files.createDirectories(Paths.get(outDir))
     val mode = ExplainMode.fromString("formatted")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val txt = df.queryExecution.explainString(mode)
-          Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
-          println(s"[plandump] wrote ${name}_$suffix.txt")
-        } catch { case e: Throwable =>
-          System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-        }
+    val queries = SparkEntry.queries
+    selected.foreach { name =>
+      try {
+        val df = queries(name)(spark, sfDir)
+        val txt = df.queryExecution.explainString(mode)
+        Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
+        println(s"[plandump] wrote ${name}_$suffix.txt")
+      } catch { case e: Throwable =>
+        System.err.println(s"[plandump] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
+    }
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Empirical scaling drill: measure the artifact-heavy query families at
@@ -59,7 +59,7 @@ object ScaleDrill {
     */
   private val knobMap: Seq[(String, String)] = Seq(
     "SKIP_BUILDS" -> "cold store builds: build:shingle build:minhash build:substr",
-    "ONLY=a,b" -> "restrict the per-query rows to the named queries",
+    "ONLY=a,b" -> "restrict the per-query rows and retrain:pq to the named ones",
     "SKIP_ANN" -> ("the ENTIRE ANN section: build:ivf* probe:* calibrate:* " +
       "reshard:* delete:* compact:* build:pq* (everything below nests in it)"),
     "SKIP_PROBE" -> ("standalone probe TIMING rows only: probe:ivf_knn20 " +
@@ -102,7 +102,7 @@ object ScaleDrill {
     val outRoot = args.lift(1).getOrElse("/tmp/graft_scaledrill")
     val scales = if (args.length > 2) args.drop(2).map(_.toInt).toSeq else Seq(1, 10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_DRILL_PARTS", "256")
+    val parts = sys.env.getOrElse("SPARK_GRAFT_DRILL_PARTS", "256").toInt
     // SPARK_GRAFT_DRILL_MASTER runs the SAME drill on a different master —
     // `local-cluster[2,4,6144]` puts every measured plan behind real
     // executor JVMs (run via plain `java -cp`, outside sbt, like
@@ -110,52 +110,27 @@ object ScaleDrill {
     // single-JVM run at equal slot count, which is the multi-process
     // form of the determinism claim at DRILL scale (SCALE.md round-14).
     val master = sys.env.getOrElse("SPARK_GRAFT_DRILL_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      // deployment-shaped parallelism: start high, let AQE coalesce to
-      // the data volume (parallelismFirst + 1 MB min partition are the
-      // Spark defaults a real cluster runs with)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster"))
-      ClusterLaunch.configure(builder,
-        executorMemory = sys.env.getOrElse("SPARK_GRAFT_DRILL_EXEC_MEM", "6g"))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expressions.GraftFunctions.register(spark)
+    val all = Seq(
+      "x02_jaccard_stats", "x03_minhash_neardup", "x06_dup_clusters",
+      "x07_containment", "x11_curation_funnel", "x14_funnel_ivf_semantic",
+      "x15_exact_substring_dedup", "v18_semdedup")
+    // focus filter for drilling a subset (same contract as Bench's ONLY);
+    // it also names the retrain:pq row
+    val selected = Harness.selectOrExit("SPARK_GRAFT_DRILL_ONLY",
+      sys.env.get("SPARK_GRAFT_DRILL_ONLY"), all :+ "retrain:pq")
+    // deployment-shaped parallelism: start high, let AQE coalesce to
+    // the data volume (parallelismFirst + 1 MB min partition are the
+    // Spark defaults a real cluster runs with)
+    val spark = Harness.session(master, parts,
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> parts.toString,
+      "spark.executor.memory" -> sys.env.getOrElse("SPARK_GRAFT_DRILL_EXEC_MEM", "6g"))
 
-    val rowsInAcc = new java.util.concurrent.atomic.AtomicLong
-    val shuffleAcc = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            rowsInAcc.addAndGet(m.inputMetrics.recordsRead)
-            shuffleAcc.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-          }
-        }
-      })
-
-    def timed[T](body: => T): (Double, Long, Long) = {
-      org.apache.spark.sql.GraftShim.drainListenerBus(spark)
-      val in0 = rowsInAcc.get(); val sh0 = shuffleAcc.get()
-      val t0 = System.nanoTime()
-      body
-      val secs = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.GraftShim.drainListenerBus(spark)
-      (secs, rowsInAcc.get() - in0, shuffleAcc.get() - sh0)
-    }
+    def timed[T](body: => T): Harness.Work = Harness.measure(spark)(body)._2
     val rows = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, Double, Long, Long)]
-    def report(scale: Int, name: String, phase: String,
-               m: (Double, Long, Long)): Unit = {
-      rows += ((scale, name, phase, m._1, m._2, m._3))
-      println(f"""DRILL {"scale":$scale,"name":"$name","phase":"$phase","secs":${m._1}%.3f,"rows_in":${m._2},"shuffle_rows":${m._3},"master":"$master"}""")
+    def report(scale: Int, name: String, phase: String, m: Harness.Work): Unit = {
+      rows += ((scale, name, phase, m.secs, m.rowsIn, m.shuffleRows))
+      println(f"""DRILL {"scale":$scale,"name":"$name","phase":"$phase","secs":${m.secs}%.3f,"rows_in":${m.rowsIn},"shuffle_rows":${m.shuffleRows},"master":"$master"}""")
     }
     // DRILLRECALL/DRILLCAL payloads are PERSISTED into the drill artifact,
     // not just printed: every recall/width/shortlist a doc quotes must be
@@ -278,19 +253,10 @@ object ScaleDrill {
       dir
     }
 
-    val all = Seq(
-      "x02_jaccard_stats", "x03_minhash_neardup", "x06_dup_clusters",
-      "x07_containment", "x11_curation_funnel", "x14_funnel_ivf_semantic",
-      "x15_exact_substring_dedup", "v18_semdedup")
     // The retrain-at-scale drill (below) runs to 10×: the recall-grading
     // half (exactTopK panel oracle) is what grades the retrain, and at
     // 100× the measurement would mostly time that oracle, not the engine.
     val retrainScaleCap = 10
-    // focus filter for drilling a subset (same contract as Bench's ONLY)
-    val filter = sys.env.get("SPARK_GRAFT_DRILL_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    def selected(scale: Int): Seq[String] =
-      filter.map(f => all.filter(f)).getOrElse(all)
     val m = SparkEntry.queries
 
     for (scale <- scales) {
@@ -330,7 +296,7 @@ object ScaleDrill {
         graft.sources.PosixMetaBackend.deleteRecursively(p)
         report(scale, name, "cold", timed { build(); () })
       }
-      for (q <- selected(scale)) {
+      for (q <- selected if all.contains(q)) {
         val fn = m(q)
         report(scale, q, "first", timed {
           fn(spark, dir).write.mode("overwrite").format("noop").save()
@@ -338,7 +304,7 @@ object ScaleDrill {
         val probes = (1 to 2).map { _ =>
           timed { fn(spark, dir).write.mode("overwrite").format("noop").save() }
         }
-        report(scale, q, "probe", probes.minBy(_._1))
+        report(scale, q, "probe", probes.minBy(_.secs))
         if (sys.env.contains("SPARK_GRAFT_DRILL_EXPLAIN"))
           println(s"""DRILLPLAN {"scale":$scale,"name":"$q",${planCensus(fn(spark, dir))}}""")
       }
@@ -379,7 +345,7 @@ object ScaleDrill {
                 .write.mode("overwrite").format("noop").save()
             }
           }
-          report(scale, "probe:ivf_knn20", "probe", reps.minBy(_._1))
+          report(scale, "probe:ivf_knn20", "probe", reps.minBy(_.secs))
         }
         // Recall gate for the ACCELERATED build: the same 20-query probe
         // graded against exact kNN over the full corpus (one broadcast
@@ -418,7 +384,7 @@ object ScaleDrill {
                   .write.mode("overwrite").format("noop").save()
               }
             }
-            report(scale, "probe:ivf_filtered", "probe", repsF.minBy(_._1))
+            report(scale, "probe:ivf_filtered", "probe", repsF.minBy(_.secs))
           }
           if (!sys.env.contains("SPARK_GRAFT_DRILL_SKIP_RECALL")) {
             val exactF = graft.operators.AnnEval.exactTopK(spark,
@@ -511,7 +477,7 @@ object ScaleDrill {
                   .write.mode("overwrite").format("noop").save()
               }
             }
-            report(scale, "probe:ivf_sharded", "probe", repsS.minBy(_._1))
+            report(scale, "probe:ivf_sharded", "probe", repsS.minBy(_.secs))
           }
           // FILTERED probe on the COMPOSITION (round 16): the
           // probe:ivf_filtered predicate (label = 3, ~10% selective)
@@ -528,7 +494,7 @@ object ScaleDrill {
                   .write.mode("overwrite").format("noop").save()
               }
             }
-            report(scale, "probe:ivf_sharded_filtered", "probe", repsSF.minBy(_._1))
+            report(scale, "probe:ivf_sharded_filtered", "probe", repsSF.minBy(_.secs))
           }
           if (!sys.env.contains("SPARK_GRAFT_DRILL_SKIP_RECALL")) {
             val exactSF = graft.operators.AnnEval.exactTopK(spark,
@@ -795,7 +761,7 @@ object ScaleDrill {
                   .write.mode("overwrite").format("noop").save()
               }
             }
-            report(scale, "probe:pq_filtered", "probe", repsPF.minBy(_._1))
+            report(scale, "probe:pq_filtered", "probe", repsPF.minBy(_.secs))
           }
           exactPqF.foreach { exactF =>
             val gotPF = graft.operators.AnnEval.pqTopKFrames(spark, fEnc,
@@ -899,7 +865,7 @@ object ScaleDrill {
                     .write.mode("overwrite").format("noop").save()
                 }
               }
-              report(scale, "probe:pq_sharded", "probe", repsQ.minBy(_._1))
+              report(scale, "probe:pq_sharded", "probe", repsQ.minBy(_.secs))
             }
             // filtered probe on the COMPOSED encoded geometry — the
             // v24 plan: each shard's encoded frame filtered before its
@@ -912,7 +878,7 @@ object ScaleDrill {
                     .write.mode("overwrite").format("noop").save()
                 }
               }
-              report(scale, "probe:pq_sharded_filtered", "probe", repsQF.minBy(_._1))
+              report(scale, "probe:pq_sharded_filtered", "probe", repsQF.minBy(_.secs))
             }
             exactPqF.foreach { exactF =>
               val gotQF = graft.operators.AnnEval.shardedPqTopK(spark,
@@ -999,8 +965,7 @@ object ScaleDrill {
       // at a FIXED shortlist is the grading getting harder, not the
       // retrain getting worse — a deployment holds its recall floor by
       // sizing re-rank depth to the corpus, so the drill does too).
-      if (scale <= retrainScaleCap &&
-          filter.forall(_.contains("retrain:pq"))) {
+      if (scale <= retrainScaleCap && selected.contains("retrain:pq")) {
         val emb = spark.read.parquet(s"$dir/embeddings.parquet")
         val trancheA = emb.select((col("vec_id") * 2).as("vec_id"),
           col("label"), col("embedding"))

@@ -1,40 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // optional focus filter for local iteration (same contract as Bench);
     // the driver sets no filter, so its runs always dump everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    // same guard as Bench: a typo'd filter must not overwrite a previous
-    // dump with an empty one that reads as success
-    if (only.exists(o => !SparkEntry.queries.keys.exists(o.contains))) {
-      System.err.println(
-        s"[verify] SPARK_GRAFT_ONLY matched no queries: ${only.get.mkString(",")}")
-      spark.stop()
-      sys.exit(2)
-    }
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val selected = Harness.selectOrExit("SPARK_GRAFT_ONLY",
+      sys.env.get("SPARK_GRAFT_ONLY"), SparkEntry.queries.keys.toSeq)
+    val spark = Harness.localSession()
+    new java.io.File(outDir).mkdirs()
+    val queries = SparkEntry.queries
+    selected.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -50,7 +32,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
 /** Golden-value generator for the non-SQL-expressible oracles (the VALUES
   * literals in PipelineQueries.GoldenD08/GoldenD09,
   * MultimodalQueries.GoldenM04, and TextQueries.GoldenT21): prints each
@@ -14,13 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object GoldenGen {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session("local[8]", 8)
     val m = Registry.asMap
     for (d <- Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
       val n = spark.read.parquet(s"$d/documents.parquet").count()

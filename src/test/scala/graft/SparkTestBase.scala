@@ -7,17 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-test). sf0.001 fixtures keep suites fast.
   */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
+  lazy val spark: SparkSession = Harness.session("local[4]", 4,
+    "spark.app.name" -> getClass.getSimpleName,
+    "spark.sql.warehouse.dir" ->
       java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   def sf: String = "/root/testdata/sf0.001"
-
-  spark.sparkContext.setLogLevel("WARN")
 }

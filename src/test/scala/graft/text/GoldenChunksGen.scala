@@ -2,7 +2,6 @@ package graft.text
 
 import graft.operators.Ingest
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Golden-fixture generator for GoldenChunksSpec. Run ONLY on an intentional
@@ -27,17 +26,11 @@ object GoldenChunksGen {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // UTC like SparkTestBase/Verify: the canonical metadata column
-      // renders the injected timestamp with the SESSION timezone, so a
-      // generator on a non-UTC host would write goldens the UTC-pinned
-      // spec (and the pinned digest literals) could never match
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // UTC (the factory's, like SparkTestBase/Verify): the canonical
+    // metadata column renders the injected timestamp with the SESSION
+    // timezone, so a generator on a non-UTC host would write goldens the
+    // UTC-pinned spec (and the pinned digest literals) could never match
+    val spark = graft.Harness.session("local[8]", 8)
     for ((sf, suffix) <- Seq("sf0.01" -> "sf001", "sf0.1" -> "sf01")) {
       val docs = Tables.load(spark, s"/root/testdata/$sf", "documents")
       Ingest.chunkDocuments(spark, docs).toDF()
