@@ -129,7 +129,7 @@ object Graft {
     val model = graft.operators.PqIndex.train(spark, corpus)
     val encoded = graft.operators.PqIndex.encode(spark, corpus, model)
     graft.operators.PqIndex.search(spark, encoded, corpus, model,
-      queryVec.toSeq, k, nProbe, shortlist)
+      queryVec, k, nProbe, shortlist)
   }
 
   /** Persist a trained IVF index (model sidecar + cell-partitioned corpus)
@@ -179,7 +179,7 @@ object Graft {
     // path-aware: NProbeCalibrated resolves from the artifact's nprobe.CAL
     graft.operators.IvfIndex.search(spark,
       graft.operators.IvfIndex.loadVectors(spark, indexPath), model,
-      queryVec.toSeq, k,
+      queryVec, k,
       graft.operators.IvfIndex.resolveNProbeAt(indexPath, nProbe,
         model.centroids.length))
   }
@@ -204,7 +204,7 @@ object Graft {
     graft.operators.IvfIndex.search(spark,
       graft.operators.IvfIndex.loadVectors(spark, indexPath)
         .filter(predicate),
-      model, queryVec.toSeq, k,
+      model, queryVec, k,
       graft.operators.IvfIndex.resolveNProbeAt(indexPath, nProbe,
         model.centroids.length))
   }
@@ -285,13 +285,13 @@ object Graft {
   def shardedKnn(spark: SparkSession, path: String, shards: Int,
                  queryVec: Array[Float], k: Int,
                  nProbe: Int = graft.operators.IvfIndex.NProbeAuto): DataFrame =
-    graft.operators.ShardedIvf.search(spark, path, shards, queryVec.toSeq, k, nProbe)
+    graft.operators.ShardedIvf.search(spark, path, shards, queryVec, k, nProbe)
 
   /** Batched panel top-k over a sharded artifact (one union plan + one
     * global per-qid window) — the form recall grading uses.
     */
   def shardedProbe(spark: SparkSession, path: String, shards: Int,
-                   queries: Seq[(Long, Seq[Float])], k: Int,
+                   queries: Seq[(Long, Array[Float])], k: Int,
                    nProbe: Int = graft.operators.IvfIndex.NProbeAuto): DataFrame =
     graft.operators.AnnEval.shardedTopK(spark, path, shards, queries, k, nProbe)
 
@@ -330,7 +330,7 @@ object Graft {
     * `nprobe.CAL` (the unfiltered-corpus contract) is not touched.
     */
   def calibrateFilteredWidth(spark: SparkSession, path: String,
-                             queries: Seq[(Long, Seq[Float])],
+                             queries: Seq[(Long, Array[Float])],
                              predicate: org.apache.spark.sql.Column,
                              target: Double = 0.9, k: Int = 10,
                              maxWidth: Int = Int.MaxValue)
@@ -375,14 +375,14 @@ object Graft {
                    nProbe: Int = graft.operators.IvfIndex.NProbeAuto,
                    shortlist: Int = graft.operators.PqIndex.DefaultShortlist): DataFrame =
     graft.operators.ShardedPq.search(spark, path, shards, fullPrecision,
-      queryVec.toSeq, k, nProbe, shortlist)
+      queryVec, k, nProbe, shortlist)
 
   /** Batched panel top-k over a sharded PQ artifact — the form recall
     * grading uses ([[graft.operators.AnnEval.shardedPqTopK]]).
     */
   def shardedPqProbe(spark: SparkSession, path: String, shards: Int,
                      fullPrecision: DataFrame,
-                     queries: Seq[(Long, Seq[Float])], k: Int,
+                     queries: Seq[(Long, Array[Float])], k: Int,
                      nProbe: Int = graft.operators.IvfIndex.NProbeAuto,
                      shortlist: Int = graft.operators.PqIndex.DefaultShortlist): DataFrame =
     graft.operators.AnnEval.shardedPqTopK(spark, path, shards, fullPrecision,

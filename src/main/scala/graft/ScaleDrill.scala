@@ -336,7 +336,7 @@ object ScaleDrill {
         val ivfPath = graft.sources.VectorIndexStore.ivfPath(spark, dir, cells)
         val probeQs = emb.orderBy("vec_id").limit(20)
           .select(col("vec_id"), col("embedding"))
-          .as[(Long, Seq[Float])].collect().toSeq
+          .as[(Long, Array[Float])].collect().toSeq
         if (!skipProbeRows) {
           val reps = (1 to 3).map { _ =>
             timed {

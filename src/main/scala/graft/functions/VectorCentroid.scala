@@ -8,14 +8,14 @@ import org.apache.spark.sql.expressions.Aggregator
   * merge is associative/commutative so Catalyst runs it as partial + final
   * aggregation (map-side combine — the property that makes it scale).
   */
-object VectorCentroid extends Aggregator[Seq[Float], (Array[Double], Long), Seq[Double]] {
+object VectorCentroid extends Aggregator[Array[Float], (Array[Double], Long), Seq[Double]] {
 
   override def zero: (Array[Double], Long) = (Array.empty[Double], 0L)
 
   private def grow(a: Array[Double], n: Int): Array[Double] =
     if (a.length >= n) a else java.util.Arrays.copyOf(a, n)
 
-  override def reduce(b: (Array[Double], Long), v: Seq[Float]): (Array[Double], Long) = {
+  override def reduce(b: (Array[Double], Long), v: Array[Float]): (Array[Double], Long) = {
     if (v == null) return b
     // grow to the widest vector seen (ragged inputs: missing tail = 0)
     val acc = grow(b._1, v.length)

@@ -40,6 +40,26 @@ object VectorFunctions {
   def cosineSimHof(a: Column, b: Column): Column =
     dot(a, b) / sqrt(normSq(a) * normSq(b))
 
+  /** Random-hyperplane LSH signature of one vector: bit p is set when the
+    * dot product with `planes(p)` over their common prefix (a sequential
+    * double fold, bitwise what the DuckDB oracle's `list_dot_product`
+    * computes) is >= 0.
+    */
+  def lshSignature(planes: IndexedSeq[Array[Double]], v: Array[Float]): Int = {
+    var sig = 0
+    var p = 0
+    while (p < planes.length) {
+      val plane = planes(p)
+      var dot = 0.0
+      var i = 0
+      val n = math.min(plane.length, v.length)
+      while (i < n) { dot += plane(i) * v(i); i += 1 }
+      if (dot >= 0) sig |= (1 << p)
+      p += 1
+    }
+    sig
+  }
+
   /** Squared L2 distance (used by LSH bucketing and knn variants). */
   def l2Sq(a: Column, b: Column): Column =
     aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => (x - y) * (x - y)),

@@ -70,7 +70,7 @@ object AnnCalibrate {
     * unfiltered-corpus width.
     */
   def neighborWidths(spark: SparkSession, shardPaths: Seq[String],
-                     queries: Seq[(Long, Seq[Float])], k: Int,
+                     queries: Seq[(Long, Array[Float])], k: Int,
                      maxWidth: Int = Int.MaxValue,
                      predicate: Option[org.apache.spark.sql.Column] = None)
       : DataFrame = {
@@ -116,7 +116,7 @@ object AnnCalibrate {
     */
   def pqShortlistWidths(spark: SparkSession, pqPath: String,
                         fullPrecision: DataFrame,
-                        queries: Seq[(Long, Seq[Float])], k: Int,
+                        queries: Seq[(Long, Array[Float])], k: Int,
                         nProbe: Int = IvfIndex.NProbeAuto): DataFrame =
     pqShortlistWidthsFrames(spark,
       PqIndex.loadEncoded(spark, pqPath).filter(col("vec_id") =!= 0),
@@ -128,7 +128,7 @@ object AnnCalibrate {
     */
   def pqShortlistWidthsFrames(spark: SparkSession, encoded: DataFrame,
                               model: PqIndex.Model, fullPrecision: DataFrame,
-                              queries: Seq[(Long, Seq[Float])], k: Int,
+                              queries: Seq[(Long, Array[Float])], k: Int,
                               nProbe: Int = IvfIndex.NProbeAuto): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ranked = AnnEval.pqApproxScores(spark, encoded, model, queries, nProbe)
@@ -154,7 +154,7 @@ object AnnCalibrate {
     */
   def shardedPqShortlistWidths(spark: SparkSession, path: String, shards: Int,
                                fullPrecision: DataFrame,
-                               queries: Seq[(Long, Seq[Float])], k: Int,
+                               queries: Seq[(Long, Array[Float])], k: Int,
                                nProbe: Int = IvfIndex.NProbeAuto): DataFrame =
     pqShortlistWidthsAt(spark,
       (0 until shards).map(r => s"$path/shard=$r"), fullPrecision,
@@ -180,7 +180,7 @@ object AnnCalibrate {
     */
   def pqShortlistWidthsAt(spark: SparkSession, shardPaths: Seq[String],
                           fullPrecision: DataFrame,
-                          queries: Seq[(Long, Seq[Float])], k: Int,
+                          queries: Seq[(Long, Array[Float])], k: Int,
                           nProbe: Int = IvfIndex.NProbeAuto,
                           predicate: Option[org.apache.spark.sql.Column] = None)
       : DataFrame = {
@@ -263,7 +263,7 @@ object AnnCalibrate {
     * about the unfiltered corpus the sidecar contract covers).
     */
   def calibrateFilteredWidth(spark: SparkSession, shardPaths: Seq[String],
-                             queries: Seq[(Long, Seq[Float])], k: Int,
+                             queries: Seq[(Long, Array[Float])], k: Int,
                              target: Double,
                              predicate: org.apache.spark.sql.Column,
                              maxWidth: Int = Int.MaxValue)
@@ -291,7 +291,7 @@ object AnnCalibrate {
     */
   def calibrateFilteredShortlist(spark: SparkSession, shardPaths: Seq[String],
                                  fullPrecision: DataFrame,
-                                 queries: Seq[(Long, Seq[Float])], k: Int,
+                                 queries: Seq[(Long, Array[Float])], k: Int,
                                  target: Double,
                                  predicate: org.apache.spark.sql.Column,
                                  nProbe: Int = IvfIndex.NProbeAuto)

@@ -32,11 +32,11 @@ object AnnEval {
     * sf0.1), the same cardinality class as the IVF training sample.
     */
   def queryPanel(spark: SparkSession, emb: DataFrame,
-                 stride: Int = 50): Seq[(Long, Seq[Float])] = {
+                 stride: Int = 50): Seq[(Long, Array[Float])] = {
     import spark.implicits._
     emb.filter(col("vec_id") % stride === 0 && col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect().toSeq.sortBy(_._1)
+      .as[(Long, Array[Float])].collect().toSeq.sortBy(_._1)
   }
 
   /** Id-space-agnostic panel: the `maxPanel` rows with the smallest
@@ -47,13 +47,13 @@ object AnnEval {
     * single-partition global sort — safe at any corpus size. Used by the
     * retrain recall gate.
     */
-  def rowPanel(corpus: DataFrame, maxPanel: Int = 32): Seq[(Long, Seq[Float])] = {
+  def rowPanel(corpus: DataFrame, maxPanel: Int = 32): Seq[(Long, Array[Float])] = {
     import corpus.sparkSession.implicits._
     corpus
       .orderBy(xxhash64(col("vec_id")), col("vec_id"))
       .limit(maxPanel)
       .select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect().toSeq.sortBy(_._1)
+      .as[(Long, Array[Float])].collect().toSeq.sortBy(_._1)
   }
 
   /** Hash-stratified ORACLE-RECOMPUTABLE panel: the `maxPanel` rows with
@@ -66,13 +66,13 @@ object AnnEval {
     * Plan: distributed partial top-k (TakeOrderedAndProject) + a P-row
     * collect — safe at any corpus size.
     */
-  def md5Panel(corpus: DataFrame, maxPanel: Int): Seq[(Long, Seq[Float])] = {
+  def md5Panel(corpus: DataFrame, maxPanel: Int): Seq[(Long, Array[Float])] = {
     import corpus.sparkSession.implicits._
     corpus
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(maxPanel)
       .select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect().toSeq.sortBy(_._1)
+      .as[(Long, Array[Float])].collect().toSeq.sortBy(_._1)
   }
 
   /** Exact cosine near-dup pairs ANCHORED on a fixed panel: canonical
@@ -87,7 +87,7 @@ object AnnEval {
     * is recomputable verbatim in the DuckDB oracle, so anchored pair/drop
     * counts are hash-gated rather than taken on faith.
     */
-  def panelAnchoredPairs(corpus: DataFrame, panel: Seq[(Long, Seq[Float])],
+  def panelAnchoredPairs(corpus: DataFrame, panel: Seq[(Long, Array[Float])],
                          tau: Double): DataFrame = {
     import corpus.sparkSession.implicits._
     val panelDf = broadcast(panel.toDF("pid", "pemb"))
@@ -114,7 +114,7 @@ object AnnEval {
     * single pass is the right plan.)
     */
   def exactTopK(spark: SparkSession, corpus: DataFrame,
-                queries: Seq[(Long, Seq[Float])], k: Int): DataFrame = {
+                queries: Seq[(Long, Array[Float])], k: Int): DataFrame = {
     import spark.implicits._
     val panel = broadcast(queries.toDF("qid", "qemb"))
     topKPerQuery(
@@ -133,7 +133,7 @@ object AnnEval {
     * scored only against the queries probing its cell.
     */
   def ivfTopK(spark: SparkSession, indexPath: String,
-              queries: Seq[(Long, Seq[Float])], k: Int,
+              queries: Seq[(Long, Array[Float])], k: Int,
               nProbe: Int = IvfIndex.NProbeAuto): DataFrame = {
     val model = IvfIndex.loadModel(spark, indexPath)
     ivfTopKFrames(spark,
@@ -147,7 +147,7 @@ object AnnEval {
     * pointers are published (nothing on disk references it yet).
     */
   def ivfTopKFrames(spark: SparkSession, vectors: DataFrame, model: IvfIndex.Model,
-                    queries: Seq[(Long, Seq[Float])], k: Int,
+                    queries: Seq[(Long, Array[Float])], k: Int,
                     nProbe: Int = IvfIndex.NProbeAuto): DataFrame =
     topKPerQuery(ivfScored(spark, vectors, model, queries, nProbe), k)
 
@@ -157,7 +157,7 @@ object AnnEval {
     * unions one of these per shard before its single global window.
     */
   private def ivfScored(spark: SparkSession, vectors: DataFrame,
-                        model: IvfIndex.Model, queries: Seq[(Long, Seq[Float])],
+                        model: IvfIndex.Model, queries: Seq[(Long, Array[Float])],
                         nProbe: Int): DataFrame = {
     import spark.implicits._
     val np = IvfIndex.resolveNProbe(nProbe, model.centroids.length)
@@ -186,7 +186,7 @@ object AnnEval {
     * KB-sized probe frames.
     */
   def shardedTopK(spark: SparkSession, path: String, shards: Int,
-                  queries: Seq[(Long, Seq[Float])], k: Int,
+                  queries: Seq[(Long, Array[Float])], k: Int,
                   nProbe: Int = IvfIndex.NProbeAuto,
                   predicate: Option[org.apache.spark.sql.Column] = None)
       : DataFrame = {
@@ -220,7 +220,7 @@ object AnnEval {
     */
   def shardedPqTopK(spark: SparkSession, path: String, shards: Int,
                     fullPrecision: DataFrame,
-                    queries: Seq[(Long, Seq[Float])], k: Int,
+                    queries: Seq[(Long, Array[Float])], k: Int,
                     nProbe: Int = IvfIndex.NProbeAuto,
                     shortlist: Int = PqIndex.DefaultShortlist,
                     predicate: Option[org.apache.spark.sql.Column] = None)
@@ -258,7 +258,7 @@ object AnnEval {
     * the batched form of [[PqIndex.search]].
     */
   def pqTopK(spark: SparkSession, pqPath: String, fullPrecision: DataFrame,
-             queries: Seq[(Long, Seq[Float])], k: Int,
+             queries: Seq[(Long, Array[Float])], k: Int,
              nProbe: Int = IvfIndex.NProbeAuto,
              shortlist: Int = PqIndex.DefaultShortlist): DataFrame = {
     val model = PqIndex.loadModel(spark, pqPath)
@@ -292,7 +292,7 @@ object AnnEval {
     * pointers are published.
     */
   def pqTopKFrames(spark: SparkSession, encoded: DataFrame, model: PqIndex.Model,
-                   fullPrecision: DataFrame, queries: Seq[(Long, Seq[Float])],
+                   fullPrecision: DataFrame, queries: Seq[(Long, Array[Float])],
                    k: Int, nProbe: Int = IvfIndex.NProbeAuto,
                    shortlist: Int = PqIndex.DefaultShortlist): DataFrame = {
     import spark.implicits._
@@ -322,7 +322,7 @@ object AnnEval {
     */
   private[graft] def pqApproxScores(spark: SparkSession, encoded: DataFrame,
                                     model: PqIndex.Model,
-                                    queries: Seq[(Long, Seq[Float])],
+                                    queries: Seq[(Long, Array[Float])],
                                     nProbe: Int): DataFrame = {
     import spark.implicits._
     val np = IvfIndex.resolveNProbe(nProbe, model.coarse.centroids.length)

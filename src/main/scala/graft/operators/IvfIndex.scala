@@ -48,7 +48,7 @@ object IvfIndex {
                         members: Array[Array[Int]]) extends Serializable {
 
     /** Nearest centroid id under grouped search (ties by lowest id). */
-    def nearestCell(v: Seq[Float], centroids: Array[Array[Double]]): Int = {
+    def nearestCell(v: Array[Float], centroids: Array[Array[Double]]): Int = {
       // distances to every group center (g ≈ √k of them)
       val g = groupCenters.length
       val gd = new Array[Double](g)
@@ -122,7 +122,7 @@ object IvfIndex {
       * until at least [[Hier.WProbeGroups]] groups AND `n` candidate
       * centroids have been seen; candidates sort by (distance, id).
       */
-    def nearestCells(v: Seq[Float], centroids: Array[Array[Double]],
+    def nearestCells(v: Array[Float], centroids: Array[Array[Double]],
                      n: Int): Seq[Int] = {
       // n <= 0 returns empty like the flat Model.nearestCells (take(n)) —
       // without this the pinned head would make the grouped path return
@@ -175,8 +175,14 @@ object IvfIndex {
       * shorter than the centroid reads as zero-padded (the centroid-tail
       * squares are accumulated); vector dims beyond the centroid's are
       * ignored, exactly as training ignores them in the sums.
+      *
+      * Every IVF/PQ kernel takes its vector as `Array[Float]`, decoded
+      * once at the typed-Dataset boundary (`.as[(..., Array[Float])]`).
+      * Spark decodes an array column typed as a Scala `Seq` into a linked
+      * `List`, whose `v(i)` is O(i): these per-dimension loops would turn
+      * O(dims²) per vector per centroid.
       */
-    private[operators] def sqDist(cent: Array[Double], v: Seq[Float]): Double = {
+    private[operators] def sqDist(cent: Array[Double], v: Array[Float]): Double = {
       var d = 0.0
       var i = 0
       val lim = math.min(cent.length, v.length)
@@ -251,7 +257,7 @@ object IvfIndex {
     @transient private lazy val hier: Option[Hier] =
       if (centroids.length > HierThreshold) Some(Hier.build(centroids)) else None
 
-    def nearestCell(v: Seq[Float]): Int = hier match {
+    def nearestCell(v: Array[Float]): Int = hier match {
       case Some(h) => h.nearestCell(v, centroids)
       case None => nearestCells(v, 1).head
     }
@@ -262,11 +268,22 @@ object IvfIndex {
       * through [[hier]]: probe cell selection drives recall directly and
       * its cost is per-query, not per-corpus-row.
       */
-    def nearestCells(v: Seq[Float], n: Int): Seq[Int] = {
+    def nearestCells(v: Array[Float], n: Int): Seq[Int] = {
       val dists = centroids.indices.map { c =>
         (c, Hier.sqDist(centroids(c), v))
       }
       dists.sortBy { case (c, d) => (d, c) }.take(n).map(_._1)
+    }
+
+    /** `n` nearest cells for CORPUS-SIDE multi-assignment (SemDeDup's
+      * multi-probe expansion — one call per corpus row): exact
+      * [[nearestCells]] below [[HierThreshold]], grouped search above it.
+      * Probe-side cell selection keeps using [[nearestCells]] directly
+      * (per-query cost, exactness buys recall).
+      */
+    def assignCells(v: Array[Float], n: Int): Seq[Int] = hier match {
+      case Some(h) => h.nearestCells(v, centroids, n)
+      case None => nearestCells(v, n)
     }
 
     /** Squared L2 distance of `v` to its ASSIGNED centroid — the coarse
@@ -280,18 +297,7 @@ object IvfIndex {
       * instead of the flat O(k·dim) that made the baseline sweep half of
       * the quadratic build).
       */
-    /** `n` nearest cells for CORPUS-SIDE multi-assignment (SemDeDup's
-      * multi-probe expansion — one call per corpus row): exact
-      * [[nearestCells]] below [[HierThreshold]], grouped search above it.
-      * Probe-side cell selection keeps using [[nearestCells]] directly
-      * (per-query cost, exactness buys recall).
-      */
-    def assignCells(v: Seq[Float], n: Int): Seq[Int] = hier match {
-      case Some(h) => h.nearestCells(v, centroids, n)
-      case None => nearestCells(v, n)
-    }
-
-    def assignmentDistortion(v: Seq[Float]): Double = hier match {
+    def assignmentDistortion(v: Array[Float]): Double = hier match {
       case Some(h) => Hier.sqDist(centroids(h.nearestCell(v, centroids)), v)
       case None =>
         var best = Double.MaxValue
@@ -315,7 +321,7 @@ object IvfIndex {
     import org.apache.spark.sql.functions._
     val bc = spark.sparkContext.broadcast(model)
     vectors.select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])]
+      .as[(Long, Array[Float])]
       .map { case (_, e) => bc.value.assignmentDistortion(e) }
       .toDF("sq_err")
       .agg(count(lit(1)).as("n_vectors"), avg("sq_err").as("mean_sq_err"))
@@ -329,8 +335,8 @@ object IvfIndex {
                                        sampleSize: Int): Array[Array[Double]] = {
     import spark.implicits._
     embeddings.orderBy("vec_id").limit(sampleSize)
-      .select("embedding").as[Seq[Float]].collect()
-      .map(_.map(_.toDouble).toArray)
+      .select("embedding").as[Array[Float]].collect()
+      .map(_.map(_.toDouble))
   }
 
   /** Ceiling on DRIVER-SAMPLE-trainable cell counts: past this, the
@@ -408,7 +414,7 @@ object IvfIndex {
     var centroids = distinctInit(spark, embeddings, k)
     val dims = centroids(0).length
     val vecs = embeddings.select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])]
+      .as[(Long, Array[Float])]
     for (_ <- 0 until iters) {
       val bc = spark.sparkContext.broadcast(Model(centroids))
       val perCell = vecs
@@ -416,7 +422,7 @@ object IvfIndex {
         .toDF("cell", "vec_id", "embedding")
         .repartition(col("cell"))
         .sortWithinPartitions("cell", "vec_id")
-        .as[(Int, Long, Seq[Float])]
+        .as[(Int, Long, Array[Float])]
         .mapPartitions { it =>
           val out = scala.collection.mutable.ArrayBuffer
             .empty[(Int, Array[Double], Long)]
@@ -548,7 +554,7 @@ object IvfIndex {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(model)
     embeddings.select(col("vec_id"), col("label"), col("embedding"))
-      .as[(Long, Int, Seq[Float])]
+      .as[(Long, Int, Array[Float])]
       .map { case (id, label, e) => (id, label, e, bc.value.nearestCell(e)) }
       .toDF("vec_id", "label", "embedding", "cell")
   }
@@ -727,9 +733,9 @@ object IvfIndex {
     * constant-cell-fraction policy ([[autoNProbe]]).
     */
   def search(spark: SparkSession, assigned: DataFrame, model: Model,
-             query: Seq[Float], k: Int, nProbe: Int = NProbeAuto): DataFrame = {
+             query: Array[Float], k: Int, nProbe: Int = NProbeAuto): DataFrame = {
     val cells = model.nearestCells(query, resolveNProbe(nProbe, model.centroids.length))
-    val qCol = lit(query.toArray).cast("array<float>")
+    val qCol = lit(query).cast("array<float>")
     assigned
       .filter(col("cell").isin(cells: _*))
       .select(col("vec_id"), col("label"),

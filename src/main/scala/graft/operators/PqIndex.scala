@@ -37,7 +37,7 @@ object PqIndex {
 
     def m: Int = codebooks.length
 
-    def residual(v: Seq[Float], cell: Int): Array[Double] = {
+    def residual(v: Array[Float], cell: Int): Array[Double] = {
       val cent = coarse.centroids(cell)
       val r = new Array[Double](cent.length)
       var i = 0
@@ -49,7 +49,7 @@ object PqIndex {
     }
 
     /** Nearest codebook entry per subspace → m byte-sized codes. */
-    def encode(v: Seq[Float], cell: Int): Array[Byte] = {
+    def encode(v: Array[Float], cell: Int): Array[Byte] = {
       val r = residual(v, cell)
       val out = new Array[Byte](m)
       var s = 0
@@ -81,7 +81,7 @@ object PqIndex {
       * ADC approximation error). Same nearest-entry scan as [[encode]],
       * accumulating the winning distances instead of the codes.
       */
-    def quantError(v: Seq[Float], cell: Int): Double = {
+    def quantError(v: Array[Float], cell: Int): Double = {
       val r = residual(v, cell)
       var total = 0.0
       var s = 0
@@ -110,7 +110,7 @@ object PqIndex {
     /** ADC lookup table for one probed cell: table(sub)(code) = squared L2
       * between the query's residual subvector and that codebook entry.
       */
-    def adcTable(query: Seq[Float], cell: Int): Array[Array[Double]] = {
+    def adcTable(query: Array[Float], cell: Int): Array[Array[Double]] = {
       val r = residual(query, cell)
       Array.tabulate(m) { s =>
         val book = codebooks(s)
@@ -212,7 +212,7 @@ object PqIndex {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(model)
     embeddings.select(col("vec_id"), col("label"), col("embedding"))
-      .as[(Long, Int, Seq[Float])]
+      .as[(Long, Int, Array[Float])]
       .map { case (id, label, e) =>
         val cell = bc.value.coarse.nearestCell(e)
         (id, label, cell, bc.value.encode(e, cell))
@@ -230,7 +230,7 @@ object PqIndex {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(model)
     vectors.select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])]
+      .as[(Long, Array[Float])]
       .map { case (_, e) =>
         bc.value.quantError(e, bc.value.coarse.nearestCell(e))
       }
@@ -377,7 +377,7 @@ object PqIndex {
     * distances (TakeOrderedAndProject). Returns (vec_id, label, approx_d).
     */
   def adcShortlist(spark: SparkSession, encoded: DataFrame, model: Model,
-                   query: Seq[Float], nProbe: Int = IvfIndex.NProbeAuto,
+                   query: Array[Float], nProbe: Int = IvfIndex.NProbeAuto,
                    shortlist: Int = PqIndex.DefaultShortlist): DataFrame = {
     import spark.implicits._
     val cells = model.coarse.nearestCells(query,
@@ -405,10 +405,10 @@ object PqIndex {
     * lookup of `shortlist` rows, the only full-precision read).
     */
   def search(spark: SparkSession, encoded: DataFrame, fullPrecision: DataFrame,
-             model: Model, query: Seq[Float], k: Int,
+             model: Model, query: Array[Float], k: Int,
              nProbe: Int = IvfIndex.NProbeAuto, shortlist: Int = PqIndex.DefaultShortlist): DataFrame = {
     val short = adcShortlist(spark, encoded, model, query, nProbe, shortlist)
-    val qCol = lit(query.toArray).cast("array<float>")
+    val qCol = lit(query).cast("array<float>")
     short.select("vec_id")
       .join(fullPrecision.select(col("vec_id"), col("label"), col("embedding")), "vec_id")
       .select(col("vec_id"), col("label"),

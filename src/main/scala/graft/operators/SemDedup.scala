@@ -79,7 +79,7 @@ object SemDedup {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(model)
     vectors.select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])]
+      .as[(Long, Array[Float])]
       .flatMap { case (id, e) =>
         // assignCells: exact below IvfIndex.HierThreshold (fixture
         // geometries unchanged), grouped O(2√k·dim) above it — this is a

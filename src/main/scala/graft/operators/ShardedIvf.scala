@@ -307,7 +307,7 @@ object ShardedIvf extends Sharded {
     * [[AnnEval.shardedTopK]].
     */
   def search(spark: SparkSession, path: String, shards: Int,
-             query: Seq[Float], k: Int,
+             query: Array[Float], k: Int,
              nProbe: Int = IvfIndex.NProbeAuto): DataFrame =
     searchFiltered(spark, path, shards, query, k, nProbe, predicate = None)
 
@@ -323,7 +323,7 @@ object ShardedIvf extends Sharded {
     * pass the result as `nProbe`.
     */
   def searchFiltered(spark: SparkSession, path: String, shards: Int,
-                     query: Seq[Float], k: Int,
+                     query: Array[Float], k: Int,
                      nProbe: Int = IvfIndex.NProbeAuto,
                      predicate: Option[org.apache.spark.sql.Column] = None)
       : DataFrame = {

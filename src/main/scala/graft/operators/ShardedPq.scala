@@ -201,7 +201,7 @@ object ShardedPq extends Sharded {
     * full-precision store, one global TakeOrdered.
     */
   def search(spark: SparkSession, path: String, shards: Int,
-             fullPrecision: DataFrame, query: Seq[Float], k: Int,
+             fullPrecision: DataFrame, query: Array[Float], k: Int,
              nProbe: Int = IvfIndex.NProbeAuto,
              shortlist: Int = PqIndex.DefaultShortlist): DataFrame =
     searchFiltered(spark, path, shards, fullPrecision, query, k, nProbe,
@@ -228,7 +228,7 @@ object ShardedPq extends Sharded {
     * and pass the result as `shortlist`.
     */
   def searchFiltered(spark: SparkSession, path: String, shards: Int,
-                     fullPrecision: DataFrame, query: Seq[Float], k: Int,
+                     fullPrecision: DataFrame, query: Array[Float], k: Int,
                      nProbe: Int = IvfIndex.NProbeAuto,
                      shortlist: Int = PqIndex.DefaultShortlist,
                      predicate: Option[org.apache.spark.sql.Column] = None)
@@ -240,7 +240,7 @@ object ShardedPq extends Sharded {
       PqIndex.adcShortlist(spark, predicate.fold(enc)(enc.filter),
         PqIndex.loadModel(spark, shardPath), query, nProbe, sl)
     }
-    val qCol = lit(query.toArray).cast("array<float>")
+    val qCol = lit(query).cast("array<float>")
     shorts.select("vec_id")
       .join(fullPrecision.select(col("vec_id"), col("label"), col("embedding")), "vec_id")
       .select(col("vec_id"), col("label"),

@@ -437,7 +437,7 @@ object StreamingQueries extends QuerySet {
         val model = graft.operators.IvfIndex.loadModel(s, ivf)
         val vecs = graft.operators.IvfIndex.loadVectors(s, ivf)
         val qvec = vecs.filter(col("vec_id") === 0)
-          .select("embedding").as[Seq[Float]].head()
+          .select("embedding").as[Array[Float]].head()
         val probe = graft.operators.IvfIndex.search(s,
           vecs.filter(col("vec_id") =!= 0), model, qvec, k = 10)
         val hits = probe.select("vec_id")
@@ -930,7 +930,7 @@ object StreamingQueries extends QuerySet {
         val qv = stored
           .filter(col("vec_id") >= 250 &&
             graft.functions.VectorFunctions.norm(col("embedding")) > 0)
-          .orderBy("vec_id").select("embedding").as[Seq[Float]].head()
+          .orderBy("vec_id").select("embedding").as[Array[Float]].head()
         val topSim = graft.operators.ShardedIvf.search(s, dir1, s1, qv, k = 1,
           nProbe = Int.MaxValue).select("sim").as[Double].head()
         val lateFound = topSim == 1.0
@@ -1020,7 +1020,7 @@ object StreamingQueries extends QuerySet {
           .filter(col("vec_id") >= 250 &&
             graft.functions.VectorFunctions.norm(col("embedding")) > 0)
           .orderBy("vec_id").select(col("vec_id"), col("embedding"))
-          .as[(Long, Seq[Float])].head()
+          .as[(Long, Array[Float])].head()
         val topSim = graft.operators.ShardedPq.search(s, dir, sh, fp,
           probe._2, k = 1, nProbe = Int.MaxValue, shortlist = nDocs.toInt)
           .select("sim").as[Double].head()
@@ -1373,7 +1373,7 @@ object StreamingQueries extends QuerySet {
         graft.sources.CdcLog.append(s, logDir,
           Seq(("add", payloadId, newText)))
         StreamingOps.cdcLogShardedPqIngest(s, logDir, home, 3, ckpt, fp)
-        val newEmb = new graft.operators.HashingEmbedder().embed(newText).toSeq
+        val newEmb = new graft.operators.HashingEmbedder().embed(newText)
         val nLive = expectedF.size
         def servesNew(dir: String, sh: Int): Boolean = {
           val top = graft.operators.ShardedPq.search(s, dir, sh,

@@ -129,18 +129,7 @@ object VectorQueries extends QuerySet {
         val sigs = emb.select(col("vec_id"), col("label"), col("embedding"))
           .as[(Long, Int, Array[Float])]
           .map { case (id, label, e) =>
-            var sig = 0
-            var p = 0
-            while (p < bHyper.value.length) {
-              val plane = bHyper.value(p)
-              var dot = 0.0
-              var i = 0
-              val n = math.min(plane.length, e.length)
-              while (i < n) { dot += plane(i) * e(i); i += 1 }
-              if (dot >= 0) sig |= (1 << p)
-              p += 1
-            }
-            (id, label, sig)
+            (id, label, graft.functions.VectorFunctions.lshSignature(bHyper.value, e))
           }
           .toDF("vec_id", "label", "bucket")
         sigs.groupBy("bucket")
@@ -159,7 +148,7 @@ object VectorQueries extends QuerySet {
     Q("v07_centroid_udaf",
       (s, d) => {
         val centroid = udaf(graft.functions.VectorCentroid,
-          org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Float]]())
+          org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Float]]())
         t(s, d, "embeddings")
           .groupBy("label")
           .agg(centroid(col("embedding")).as("centroid"))
@@ -185,7 +174,7 @@ object VectorQueries extends QuerySet {
         val model = graft.operators.IvfIndex.train(s, emb, k = 16)
         val assigned = graft.operators.IvfIndex.assign(s, emb, model)
         val query = emb.filter(col("vec_id") === 0).select("embedding")
-          .as[Seq[Float]].head()
+          .as[Array[Float]].head()
         // Graded via a tolerance flag (the t14 pattern): the IVF top-k is
         // approximate, but its recall against the exact cosine top-k is a
         // DETERMINISTIC number (seeded k-means, fixed data), so the engine
@@ -196,7 +185,7 @@ object VectorQueries extends QuerySet {
         // marking replaces the checkpoint + separate hits-count action.
         val ivf = graft.operators.IvfIndex.search(s,
           assigned.filter(col("vec_id") =!= 0), model, query, k = 10)
-        val qCol = lit(query.toArray).cast("array<float>")
+        val qCol = lit(query).cast("array<float>")
         val exact = emb.filter(col("vec_id") =!= 0)
           .select(col("vec_id"),
             round(graft.expressions.GraftFunctions.cosine_sim(col("embedding"), qCol), 6).as("sim"))
@@ -391,7 +380,7 @@ object VectorQueries extends QuerySet {
         val model = graft.operators.PqIndex.train(s, emb)
         val encoded = graft.operators.PqIndex.encode(s, emb, model)
         val query = emb.filter(col("vec_id") === 0).select("embedding")
-          .as[Seq[Float]].head()
+          .as[Array[Float]].head()
         // ONE lazy plan (round-19): the old shape checkpointed the 10-row
         // search result and ran a separate hits-count action — 10 driver
         // round-trips per rep for 10 tasks of work (probed; the driver
@@ -403,7 +392,7 @@ object VectorQueries extends QuerySet {
         val pq = graft.operators.PqIndex.search(s,
           encoded.filter(col("vec_id") =!= 0), emb, model, query,
           k = 10, shortlist = 50)
-        val qCol = lit(query.toArray).cast("array<float>")
+        val qCol = lit(query).cast("array<float>")
         val exact = emb.filter(col("vec_id") =!= 0)
           .select(col("vec_id"),
             round(graft.expressions.GraftFunctions.cosine_sim(col("embedding"), qCol), 6).as("sim"))
@@ -437,14 +426,14 @@ object VectorQueries extends QuerySet {
         val vectors = graft.operators.IvfIndex.loadVectors(s, path)
         val emb = t(s, d, "embeddings")
         val query = emb.filter(col("vec_id") === 0).select("embedding")
-          .as[Seq[Float]].head()
+          .as[Array[Float]].head()
         // graded exactly like v08: deterministic recall@10 vs the exact
         // cosine top-k, emitted as a tolerance flag — in ONE lazy plan
         // (round-19, the v14 rework): inline left-join hit marking replaces
         // the checkpoint + separate hits-count action
         val ivf = graft.operators.IvfIndex.search(s,
           vectors.filter(col("vec_id") =!= 0), model, query, k = 10)
-        val qCol = lit(query.toArray).cast("array<float>")
+        val qCol = lit(query).cast("array<float>")
         val exact = emb.filter(col("vec_id") =!= 0)
           .select(col("vec_id"),
             round(graft.expressions.GraftFunctions.cosine_sim(col("embedding"), qCol), 6).as("sim"))
@@ -480,8 +469,8 @@ object VectorQueries extends QuerySet {
         import spark.implicits._
         val emb = t(s, d, "embeddings")
         val query = emb.filter(col("vec_id") === 0).select("embedding")
-          .as[Seq[Float]].head()
-        val qCol = lit(query.toArray).cast("array<float>")
+          .as[Array[Float]].head()
+        val qCol = lit(query).cast("array<float>")
         val exactIds = graft.operators.ScaleOps.checkpointed(
           emb.filter(col("vec_id") =!= 0)
             .select(col("vec_id"),
@@ -707,7 +696,7 @@ object VectorQueries extends QuerySet {
             val panel = corpus
               .filter(col("vec_id") % 2 === 1 && ((col("vec_id") - 1) / 2) % 50 === 0)
               .select(col("vec_id"), col("embedding"))
-              .as[(Long, Seq[Float])].collect().toSeq.sortBy(_._1)
+              .as[(Long, Array[Float])].collect().toSeq.sortBy(_._1)
             val exact = graft.operators.ScaleOps.checkpointed(
               graft.operators.AnnEval.exactTopK(s, corpus, panel, 10))
             def recall(): Double = graft.operators.AnnEval.meanRecall(
@@ -886,7 +875,7 @@ object VectorQueries extends QuerySet {
               val appendIdem = c1 == nCorpus + nTranche && c2 == c1
               val probe = tranche.orderBy("vec_id")
                 .select(col("vec_id"), col("embedding"))
-                .as[(Long, Seq[Float])].head()
+                .as[(Long, Array[Float])].head()
               val fullFp = corpus.unionAll(tranche)
               val top3 = graft.operators.ShardedPq.search(s, root, 3, fullFp,
                 probe._2, k = 3, nProbe = Int.MaxValue,
@@ -943,7 +932,7 @@ object VectorQueries extends QuerySet {
         import spark.implicits._
         val emb = t(s, d, "embeddings")
         val query = emb.filter(col("vec_id") === 0).select("embedding")
-          .as[Seq[Float]].head()
+          .as[Array[Float]].head()
         val lbl = emb.agg(min(col("label")).cast("long")).head().getLong(0)
         val path = graft.sources.VectorIndexStore.ensureIvf(s, d)
         val model = graft.operators.IvfIndex.loadModel(s, path)
@@ -1006,7 +995,7 @@ object VectorQueries extends QuerySet {
         import spark.implicits._
         val emb = t(s, d, "embeddings")
         val query = emb.filter(col("vec_id") === 0).select("embedding")
-          .as[Seq[Float]].head()
+          .as[Array[Float]].head()
         val lbl = emb.agg(min(col("label")).cast("long")).head().getLong(0)
         val pred = col("label") === lbl
         val path = graft.sources.VectorIndexStore.ensurePq(s, d)
@@ -1082,7 +1071,7 @@ object VectorQueries extends QuerySet {
         import spark.implicits._
         val emb = t(s, d, "embeddings")
         val query = emb.filter(col("vec_id") === 0).select("embedding")
-          .as[Seq[Float]].head()
+          .as[Array[Float]].head()
         val lbl = emb.agg(min(col("label")).cast("long")).head().getLong(0)
         val pred = col("label") === lbl
         val shards = 3
@@ -1160,7 +1149,7 @@ object VectorQueries extends QuerySet {
         import spark.implicits._
         val emb = t(s, d, "embeddings")
         val query = emb.filter(col("vec_id") === 0).select("embedding")
-          .as[Seq[Float]].head()
+          .as[Array[Float]].head()
         val tag = d.replaceAll("[^a-zA-Z0-9]", "_") +
           "_" + graft.sources.PhysicalLayout.sourceTag(d, "embeddings")
         val (rows, rawIntact, readdBlocked, compactOk, readdLands) =
@@ -1248,7 +1237,7 @@ object VectorQueries extends QuerySet {
         import spark.implicits._
         val emb = t(s, d, "embeddings")
         val query = emb.filter(col("vec_id") === 0).select("embedding")
-          .as[Seq[Float]].head()
+          .as[Array[Float]].head()
         val tag = d.replaceAll("[^a-zA-Z0-9]", "_") +
           "_" + graft.sources.PhysicalLayout.sourceTag(d, "embeddings")
         val (rows, routingOk, pqExact, catchupForwards, catchupSurvivesCompact) =
@@ -1431,18 +1420,10 @@ object VectorQueries extends QuerySet {
     * that fell across a hyperplane while still pruning ~2/3 of the scan.
     */
   private def lshKnn(s: org.apache.spark.sql.SparkSession, d: String,
-                     query: Seq[Float], k: Int, radius: Int): org.apache.spark.sql.DataFrame = {
+                     query: Array[Float], k: Int, radius: Int): org.apache.spark.sql.DataFrame = {
     import s.implicits._
     val planes = lshHyperplanes
-    var qSig = 0
-    planes.indices.foreach { p =>
-      var dot = 0.0
-      val plane = planes(p)
-      val n = math.min(plane.length, query.length)
-      var i = 0
-      while (i < n) { dot += plane(i) * query(i); i += 1 }
-      if (dot >= 0) qSig |= (1 << p)
-    }
+    val qSig = graft.functions.VectorFunctions.lshSignature(planes, query)
     val probe = (0 until (1 << LshPlanes))
       .filter(b => Integer.bitCount(b ^ qSig) <= radius)
     val bHyper = s.sparkContext.broadcast(planes)
@@ -1450,21 +1431,10 @@ object VectorQueries extends QuerySet {
       .select(col("vec_id"), col("label"), col("embedding"))
       .as[(Long, Int, Array[Float])]
       .map { case (id, label, e) =>
-        var sig = 0
-        var p = 0
-        while (p < bHyper.value.length) {
-          val plane = bHyper.value(p)
-          var dot = 0.0
-          var i = 0
-          val n = math.min(plane.length, e.length)
-          while (i < n) { dot += plane(i) * e(i); i += 1 }
-          if (dot >= 0) sig |= (1 << p)
-          p += 1
-        }
-        (id, label, e, sig)
+        (id, label, e, graft.functions.VectorFunctions.lshSignature(bHyper.value, e))
       }
       .toDF("vec_id", "label", "embedding", "bucket")
-    val qCol = lit(query.toArray).cast("array<float>")
+    val qCol = lit(query).cast("array<float>")
     sigs.filter(col("bucket").isin(probe: _*) && col("vec_id") =!= 0)
       .select(col("vec_id"), col("label"),
         round(graft.expressions.GraftFunctions.cosine_sim(col("embedding"), qCol), 6).as("sim"))
@@ -1480,24 +1450,12 @@ object VectorQueries extends QuerySet {
     * query — one plan for the panel.
     */
   private def lshTopKBatch(s: org.apache.spark.sql.SparkSession, d: String,
-                           queries: Seq[(Long, Seq[Float])], k: Int,
+                           queries: Seq[(Long, Array[Float])], k: Int,
                            radius: Int): org.apache.spark.sql.DataFrame = {
     import s.implicits._
     val planes = lshHyperplanes
-    def sigOf(v: Seq[Float]): Int = {
-      var sig = 0
-      planes.indices.foreach { p =>
-        var dot = 0.0
-        val plane = planes(p)
-        val n = math.min(plane.length, v.length)
-        var i = 0
-        while (i < n) { dot += plane(i) * v(i); i += 1 }
-        if (dot >= 0) sig |= (1 << p)
-      }
-      sig
-    }
     val probes = queries.flatMap { case (qid, qv) =>
-      val qSig = sigOf(qv)
+      val qSig = graft.functions.VectorFunctions.lshSignature(planes, qv)
       (0 until (1 << LshPlanes))
         .filter(b => Integer.bitCount(b ^ qSig) <= radius)
         .map(b => (qid, b, qv))
@@ -1508,18 +1466,7 @@ object VectorQueries extends QuerySet {
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])]
       .map { case (id, e) =>
-        var sig = 0
-        var p = 0
-        while (p < bHyper.value.length) {
-          val plane = bHyper.value(p)
-          var dot = 0.0
-          var i = 0
-          val n = math.min(plane.length, e.length)
-          while (i < n) { dot += plane(i) * e(i); i += 1 }
-          if (dot >= 0) sig |= (1 << p)
-          p += 1
-        }
-        (id, e, sig)
+        (id, e, graft.functions.VectorFunctions.lshSignature(bHyper.value, e))
       }
       .toDF("vec_id", "embedding", "bucket")
     sigs.filter(col("vec_id") =!= 0)

@@ -155,7 +155,7 @@ class AnnCalibrateSpec extends SparkTestBase {
       f"sentinel probe recall $recall%.3f below the calibrated target")
     // single-query search honors it too (vs the explicit width)
     val (qid, qv) = emb.filter(col("vec_id") === 1)
-      .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])].head()
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].head()
     val viaSentinel = ShardedIvf.search(spark, root, shards, qv, 10,
       nProbe = IvfIndex.NProbeCalibrated)
       .filter(col("vec_id") =!= qid).select("vec_id").as[Long].collect().toSeq

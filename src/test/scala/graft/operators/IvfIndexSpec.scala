@@ -28,7 +28,7 @@ class IvfIndexSpec extends SparkTestBase {
     val model = IvfIndex.train(spark, emb, k = 8)
     val assigned = IvfIndex.assign(spark, emb, model).cache()
     val query = emb.filter(col("vec_id") === 0).select("embedding")
-      .as[Seq[Float]].head()
+      .as[Array[Float]].head()
     val exact = emb.filter(col("vec_id") =!= 0)
       .select(col("vec_id"),
         round(graft.expressions.GraftFunctions.cosine_sim(col("embedding"),
@@ -46,7 +46,7 @@ class IvfIndexSpec extends SparkTestBase {
     val model = IvfIndex.train(spark, emb, k = 16)
     val assigned = IvfIndex.assign(spark, emb, model).cache()
     val queries = emb.filter(col("vec_id") < 5)
-      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect()
+      .select("vec_id", "embedding").as[(Long, Array[Float])].collect()
     var hit = 0
     var total = 0
     queries.foreach { case (qid, qv) =>
@@ -89,8 +89,8 @@ class IvfIndexSpec extends SparkTestBase {
     assert(model.centroids.length == k)
     val flat = IvfIndex.Model(model.centroids.take(IvfIndex.HierThreshold))
     // exact nearest over the FULL centroid set, via the public probe path
-    def exactCell(v: Seq[Float]) = model.nearestCells(v, 1).head
-    val probes = syntheticSample(512, 96).map(_.map(_.toFloat).toSeq)
+    def exactCell(v: Array[Float]) = model.nearestCells(v, 1).head
+    val probes = syntheticSample(512, 96).map(_.map(_.toFloat))
     var agree = 0
     var distRatioSum = 0.0
     probes.foreach { v =>
@@ -119,7 +119,7 @@ class IvfIndexSpec extends SparkTestBase {
     val sample = syntheticSample(1024)
     val m1 = IvfIndex.trainFromSample(sample, k, iters = 5)
     val m2 = IvfIndex.Model(m1.centroids.map(_.clone())) // fresh accelerator build
-    val probes = syntheticSample(256, 96).map(_.map(_.toFloat).toSeq)
+    val probes = syntheticSample(256, 96).map(_.map(_.toFloat))
     probes.foreach { v =>
       assert(m1.nearestCell(v) == m2.nearestCell(v))
       assert(m1.assignCells(v, 3) == m2.assignCells(v, 3))
@@ -147,7 +147,7 @@ class IvfIndexSpec extends SparkTestBase {
     // the trained model assigns (grouped path) without degenerate cells
     // dominating: the first few sample rows land in distinct cells
     val probes = df.orderBy("vec_id").limit(64)
-      .select("embedding").as[Seq[Float]].collect()
+      .select("embedding").as[Array[Float]].collect()
     assert(probes.map(m1.nearestCell(_)).distinct.length > 16)
     // far past MaxTrainCells the build must refuse loudly, not degrade
     intercept[IllegalArgumentException] {
@@ -162,10 +162,10 @@ class IvfIndexSpec extends SparkTestBase {
     val k = IvfIndex.HierThreshold * 2
     val model = IvfIndex.trainFromSample(syntheticSample(1024), k, iters = 5)
     val dim = model.centroids(0).length
-    val probes = syntheticSample(32, dim).map(_.map(_.toFloat).toSeq)
+    val probes = syntheticSample(32, dim).map(_.map(_.toFloat))
     probes.foreach { full =>
       val short = full.take(dim / 2)
-      val padded = short ++ Seq.fill(dim - short.length)(0.0f)
+      val padded = short ++ Array.fill(dim - short.length)(0.0f)
       model.centroids.take(8).foreach { cent =>
         assert(IvfIndex.Hier.sqDist(cent, short) == IvfIndex.Hier.sqDist(cent, padded))
       }
@@ -202,7 +202,7 @@ class IvfIndexSpec extends SparkTestBase {
         Array(0.0, 0.0, 0.0, 1.4),
         Array(0.0, 0.0, 0.0, 5.1)),
       members = Array(Array(0), Array(1), Array(2), Array(3, 4, 5)))
-    val probe: Seq[Float] = Seq(0f, 0f, 0f, 1.05f)
+    val probe: Array[Float] = Array(0f, 0f, 0f, 1.05f)
     // group-center distances: A=0.0025 < B=0.0225 < C=0.1225 << D — the
     // WProbeGroups=3 scan sees only centroids {0,1,2} and picks 0.
     val single = hier.nearestCell(probe, centroids)
@@ -220,7 +220,7 @@ class IvfIndexSpec extends SparkTestBase {
   test("assignCells returns n distinct cells, subset-consistent with the grouped search") {
     val k = IvfIndex.HierThreshold * 2
     val model = IvfIndex.trainFromSample(syntheticSample(1024), k, iters = 5)
-    val probes = syntheticSample(64, 96).map(_.map(_.toFloat).toSeq)
+    val probes = syntheticSample(64, 96).map(_.map(_.toFloat))
     probes.foreach { v =>
       val cells = model.assignCells(v, 3)
       assert(cells.length == 3 && cells.distinct.length == 3)
@@ -272,7 +272,7 @@ class IvfIndexSpec extends SparkTestBase {
     // grouped path (k above HierThreshold)
     val grouped = IvfIndex.trainFromSample(
       syntheticSample(1024), IvfIndex.HierThreshold * 2, iters = 2)
-    val v = syntheticSample(1).head.map(_.toFloat).toSeq
+    val v = syntheticSample(1).head.map(_.toFloat)
     for (n <- Seq(0, -1); m <- Seq(flat, grouped)) {
       assert(m.nearestCells(v, n).isEmpty)
       assert(m.assignCells(v, n).isEmpty)

@@ -99,7 +99,7 @@ class PqIndexSpec extends SparkTestBase {
     val encoded = PqIndex.encode(spark, emb, model).cache()
     val n = emb.count().toInt
     val query = emb.filter(col("vec_id") === 0).select("embedding")
-      .as[Seq[Float]].head()
+      .as[Array[Float]].head()
     val exact = emb.filter(col("vec_id") =!= 0)
       .select(col("vec_id"),
         round(graft.expressions.GraftFunctions.cosine_sim(col("embedding"),
@@ -119,7 +119,7 @@ class PqIndexSpec extends SparkTestBase {
     val model = PqIndex.train(spark, emb)
     val encoded = PqIndex.encode(spark, emb, model).cache()
     val queries = emb.filter(col("vec_id") < 5)
-      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect()
+      .select("vec_id", "embedding").as[(Long, Array[Float])].collect()
     var hit = 0
     var total = 0
     queries.foreach { case (qid, qv) =>

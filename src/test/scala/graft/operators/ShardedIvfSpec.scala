@@ -13,7 +13,7 @@ class ShardedIvfSpec extends SparkTestBase with ShardedKinds {
 
   private lazy val emb = Tables.load(spark, sf, "embeddings")
 
-  private def exactTop(k: Int, qid: Long, qv: Seq[Float]): Seq[Long] = {
+  private def exactTop(k: Int, qid: Long, qv: Array[Float]): Seq[Long] = {
     import spark.implicits._
     emb.filter(col("vec_id") =!= qid)
       .select(col("vec_id"),
@@ -41,7 +41,7 @@ class ShardedIvfSpec extends SparkTestBase with ShardedKinds {
     // sharding is total, so unlike cell pruning it cannot lose a result
     val (qid, qv) = emb.filter(col("vec_id") === 0)
       .select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].head()
+      .as[(Long, Array[Float])].head()
     val all = (0 until shards).map { r =>
       val m = IvfIndex.loadModel(spark, s"$root/shard=$r")
       IvfIndex.search(spark,
@@ -58,7 +58,7 @@ class ShardedIvfSpec extends SparkTestBase with ShardedKinds {
     val root = java.nio.file.Files.createTempDirectory("graft_shivf_f").toString + "/ix"
     ShardedIvf.build(spark, emb, root, shards = 3, nCellsPerShard = 8)
     val qv = emb.filter(col("vec_id") === 0).select("embedding")
-      .as[Seq[Float]].head()
+      .as[Array[Float]].head()
     val pred = col("label") === 3 && col("vec_id") =!= 0
     val maxCells = (0 until 3).map(r =>
       IvfIndex.loadModel(spark, s"$root/shard=$r").centroids.length).max
@@ -86,7 +86,7 @@ class ShardedIvfSpec extends SparkTestBase with ShardedKinds {
     ShardedIvf.build(spark, emb, root, shards, nCellsPerShard = 8)
     assert(ShardedIvf.totalCells(spark, root, shards) == 24)
     val queries = emb.filter(col("vec_id") < 5)
-      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect()
+      .select("vec_id", "embedding").as[(Long, Array[Float])].collect()
     var hit = 0
     var total = 0
     queries.foreach { case (qid, qv) =>
@@ -166,7 +166,7 @@ class ShardedIvfSpec extends SparkTestBase with ShardedKinds {
       "redelivery must not double-insert")
     // full probe over all shards is STILL the brute-force top-k
     val (qid, qv) = emb.filter(col("vec_id") === 0)
-      .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])].head()
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].head()
     val all = (0 until shards).map { r =>
       val m = IvfIndex.loadModel(spark, s"$root/shard=$r")
       IvfIndex.search(spark,
@@ -221,7 +221,7 @@ class ShardedIvfSpec extends SparkTestBase with ShardedKinds {
       assert(ids(a).intersect(ids(b)).isEmpty, s"new shards $a/$b overlap")
     // full probe over the S' shards is still the brute-force top-k
     val (qid, qv) = emb.filter(col("vec_id") === 0)
-      .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])].head()
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].head()
     val all = (0 until 5).map { r =>
       val m = IvfIndex.loadModel(spark, s"$root2/shard=$r")
       IvfIndex.search(spark,
@@ -278,7 +278,7 @@ class ShardedIvfSpec extends SparkTestBase with ShardedKinds {
       ids.distinct().count() == nCorpus + nTranche)
     // ... and full probe over it is exact INCLUDING the replayed tranche
     val probe = tranche.orderBy("vec_id")
-      .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])].head()
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].head()
     val top = ShardedIvf.search(spark, newRoot, 5, probe._2, k = 1,
       nProbe = Int.MaxValue).select("vec_id", "sim")
       .as[(Long, Double)].head()
@@ -482,7 +482,7 @@ class ShardedIvfSpec extends SparkTestBase with ShardedKinds {
     import spark.implicits._
     val got = ShardedIvf.search(spark, root2, 2,
       emb.filter(col("vec_id") === 1).select("embedding")
-        .as[Seq[Float]].head(), k = 5, nProbe = IvfIndex.NProbeCalibrated)
+        .as[Array[Float]].head(), k = 5, nProbe = IvfIndex.NProbeCalibrated)
     assert(got.count() == 5, "uncalibrated new root must still serve probes")
     val ids = (0 until 2).map { r =>
       IvfIndex.loadVectors(spark, s"$root2/shard=$r")
@@ -585,7 +585,7 @@ class ShardedIvfSpec extends SparkTestBase with ShardedKinds {
       IvfIndex.loadVectors(spark, s"$root/shard=$r").count()).sum == before,
       "failed rebuild must not destroy the published artifact")
     val (qid, qv) = emb.filter(col("vec_id") === 0)
-      .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])].head()
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].head()
     assert(ShardedIvf.search(spark, root, 2, qv, k = 5).count() == 5,
       "artifact must keep serving after the failed rebuild")
     assert(!new java.io.File(s"$root/shard=0.building").exists() &&
@@ -600,7 +600,7 @@ class ShardedIvfSpec extends SparkTestBase with ShardedKinds {
     ShardedIvf.build(spark, emb, root, shards = 3, nCellsPerShard = 8)
     assert(ShardedIvf.shardCount(root).contains(3))
     val qv = emb.filter(col("vec_id") === 1).select("embedding")
-      .as[Seq[Float]].head()
+      .as[Array[Float]].head()
     // wrong S in EITHER direction is the silent-wrongness class: probing
     // with fewer shards drops candidates, appending with more routes
     // vectors to directories no reader scans — all verbs must throw

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   */
 final case class KindUnderTest(sharded: Sharded,
                                dataDir: String => String,
-                               search: (String, Int, Seq[Float], Int) => DataFrame,
+                               search: (String, Int, Array[Float], Int) => DataFrame,
                                grow: (String, Long) => (String, Int))
 
 /** Spec bodies shared by both sharded kinds: each case takes the kind as
@@ -47,7 +47,7 @@ trait ShardedKinds { self: SparkTestBase =>
       kind.sharded.append(spark, root, shards,
         emb.filter(col("vec_id") >= lo && col("vec_id") < lo + 60))
     val (qid, qv) = emb.filter(col("vec_id") === 1)
-      .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])].head()
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].head()
     val before = kind.search(root, shards, qv, 10)
       .filter(col("vec_id") =!= qid)
       .select("vec_id").as[Long].collect().toSeq

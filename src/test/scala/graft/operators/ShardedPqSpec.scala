@@ -16,7 +16,7 @@ class ShardedPqSpec extends SparkTestBase with ShardedKinds {
 
   private lazy val emb = Tables.load(spark, sf, "embeddings")
 
-  private def exactTop(k: Int, qid: Long, qv: Seq[Float]): Seq[Long] = {
+  private def exactTop(k: Int, qid: Long, qv: Array[Float]): Seq[Long] = {
     import spark.implicits._
     emb.filter(col("vec_id") =!= qid)
       .select(col("vec_id"),
@@ -42,7 +42,7 @@ class ShardedPqSpec extends SparkTestBase with ShardedKinds {
     // probing every cell with a corpus-wide shortlist makes the candidate
     // set complete; the exact re-rank then IS brute force
     val (qid, qv) = emb.filter(col("vec_id") === 0)
-      .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])].head()
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].head()
     val n = emb.count().toInt
     val got = ShardedPq.search(spark, root, shards,
       emb.filter(col("vec_id") =!= qid), qv, k = 10,
@@ -57,7 +57,7 @@ class ShardedPqSpec extends SparkTestBase with ShardedKinds {
     val root = java.nio.file.Files.createTempDirectory("graft_shpq_f").toString + "/ix"
     ShardedPq.build(spark, emb, root, shards = 3, nCellsPerShard = 8)
     val qv = emb.filter(col("vec_id") === 0).select("embedding")
-      .as[Seq[Float]].head()
+      .as[Array[Float]].head()
     val pred = col("label") === 3 && col("vec_id") =!= 0
     val n = emb.filter(pred).count().toInt
     // nothing pruned (every cell probed, shortlist covers every filtered
@@ -101,7 +101,7 @@ class ShardedPqSpec extends SparkTestBase with ShardedKinds {
       "redelivery must not double-insert")
     // an appended vector is findable at full probe/corpus shortlist
     val (qid, qv) = emb.filter(col("vec_id") === 301)
-      .select(col("vec_id"), col("embedding")).as[(Long, Seq[Float])].head()
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].head()
     val got = ShardedPq.search(spark, root, shards,
       emb.filter(col("vec_id") =!= qid), qv, k = 10,
       nProbe = 8, shortlist = emb.count().toInt)
@@ -172,7 +172,7 @@ class ShardedPqSpec extends SparkTestBase with ShardedKinds {
     val root = java.nio.file.Files.createTempDirectory("graft_shpq_meta").toString + "/ix"
     ShardedPq.build(spark, emb, root, shards = 2, nCellsPerShard = 8)
     assert(ShardedPq.shardCount(root).contains(2))
-    val qv = emb.filter(col("vec_id") === 1).select("embedding").as[Seq[Float]].head()
+    val qv = emb.filter(col("vec_id") === 1).select("embedding").as[Array[Float]].head()
     intercept[IllegalArgumentException] {
       ShardedPq.search(spark, root, 3, emb, qv, k = 5)
     }

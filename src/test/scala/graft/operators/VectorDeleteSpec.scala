@@ -22,7 +22,7 @@ class VectorDeleteSpec extends SparkTestBase {
     java.nio.file.Files.createTempDirectory(prefix).toString + "/ix"
 
   private def exactTop(corpus: org.apache.spark.sql.DataFrame,
-                       qv: Seq[Float], k: Int): Seq[Long] = {
+                       qv: Array[Float], k: Int): Seq[Long] = {
     import spark.implicits._
     corpus.select(col("vec_id"),
       round(graft.expressions.GraftFunctions.cosine_sim(col("embedding"),
@@ -31,9 +31,9 @@ class VectorDeleteSpec extends SparkTestBase {
       .select("vec_id").as[Long].collect().toSeq
   }
 
-  private def queryVec: Seq[Float] = {
+  private def queryVec: Array[Float] = {
     import spark.implicits._
-    emb.filter(col("vec_id") === 0).select("embedding").as[Seq[Float]].head()
+    emb.filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
   }
 
   test("deleteIvf hides ids immediately; full probe equals exact over the remaining corpus") {

@@ -246,7 +246,7 @@ class PlanSpec extends SparkTestBase {
     val emb = graft.sources.Tables.load(spark, sf, "embeddings")
     val model = graft.operators.PqIndex.train(spark, emb)
     val encoded = graft.operators.PqIndex.encode(spark, emb, model)
-    val q = emb.filter(col("vec_id") === 0).select("embedding").as[Seq[Float]].head()
+    val q = emb.filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
     val short = graft.operators.PqIndex.adcShortlist(spark, encoded, model, q,
       nProbe = 4, shortlist = 50)
     short.collect()
@@ -414,7 +414,7 @@ class PlanSpec extends SparkTestBase {
     val model = graft.operators.IvfIndex.loadModel(spark, path)
     val vectors = graft.operators.IvfIndex.loadVectors(spark, path)
     val q = graft.sources.Tables.load(spark, sf, "embeddings")
-      .filter(col("vec_id") === 0).select("embedding").as[Seq[Float]].head()
+      .filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
     val df = graft.operators.IvfIndex.search(spark,
       vectors.filter(col("label") === 3), model, q, k = 10)
     df.collect()
@@ -440,7 +440,7 @@ class PlanSpec extends SparkTestBase {
     val model = graft.operators.PqIndex.loadModel(spark, path)
     val encoded = graft.operators.PqIndex.loadEncoded(spark, path)
     val q = graft.sources.Tables.load(spark, sf, "embeddings")
-      .filter(col("vec_id") === 0).select("embedding").as[Seq[Float]].head()
+      .filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
     val df = graft.operators.PqIndex.adcShortlist(spark,
       encoded.filter(col("label") === 3), model, q, nProbe = 4, shortlist = 20)
     df.collect()

@@ -512,7 +512,7 @@ class ArtifactStoresSpec extends SparkTestBase {
     // probe over the appended artifact == probe over a one-shot assignment
     // with the SAME model
     val query = emb.filter(col("vec_id") === 0).select("embedding")
-      .as[Seq[Float]].head()
+      .as[Array[Float]].head()
     val fromStore = IvfIndex.search(spark, stored.filter(col("vec_id") =!= 0),
       model, query, k = 10, nProbe = 3).collect().toSeq
     val oneShot = IvfIndex.search(spark,
@@ -544,7 +544,7 @@ class ArtifactStoresSpec extends SparkTestBase {
     // probe over build(A)+append(B) == probe over encode(A ∪ B) with the
     // SAME model (pure-function encoding — the equivalence contract)
     val query = emb.filter(col("vec_id") === 0).select("embedding")
-      .as[Seq[Float]].head()
+      .as[Array[Float]].head()
     val fromStore = PqIndex.search(spark,
       PqIndex.loadEncoded(spark, root).filter(col("vec_id") =!= 0),
       emb, model, query, k = 10, nProbe = 3, shortlist = 30).collect().toSeq
@@ -565,7 +565,7 @@ class ArtifactStoresSpec extends SparkTestBase {
     val emb = Tables.load(spark, sf, "embeddings")
     val half = emb.filter(col("vec_id") < 250)
     val query = emb.filter(col("vec_id") === 0).select("embedding")
-      .as[Seq[Float]].head()
+      .as[Array[Float]].head()
 
     // IVF: two appends fragment the cells; compaction publishes a pointer
     // version with identical probe results and fewer files
@@ -623,7 +623,7 @@ class ArtifactStoresSpec extends SparkTestBase {
     val model = PqIndex.loadModel(spark, path)
     val encoded = PqIndex.loadEncoded(spark, path)
     val query = Tables.load(spark, sf, "embeddings")
-      .filter(col("vec_id") === 0).select("embedding").as[Seq[Float]].head()
+      .filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -752,7 +752,7 @@ class ArtifactStoresSpec extends SparkTestBase {
     import spark.implicits._
     val mismatched = IvfIndex.loadVectors(spark, root)
       .select(col("vec_id"), col("embedding"), col("cell").cast("int"))
-      .as[(Long, Seq[Float], Int)].collect()
+      .as[(Long, Array[Float], Int)].collect()
       .count { case (_, e, c) => newModel.nearestCell(e) != c }
     assert(mismatched == 0, s"$mismatched rows assigned to a non-nearest cell")
     // the new baseline absorbs the new regime: a second call is a no-op

@@ -49,7 +49,7 @@ class IndexStoreSpec extends SparkTestBase {
     }
     // a loaded model encodes exactly like the trained one (pure function of
     // the model), and the persisted codes match a fresh encode
-    val v = emb.filter(col("vec_id") === 3).select("embedding").as[Seq[Float]].head()
+    val v = emb.filter(col("vec_id") === 3).select("embedding").as[Array[Float]].head()
     val cell = model.coarse.nearestCell(v)
     assert(loaded.encode(v, cell).sameElements(model.encode(v, cell)))
     val persisted = PqIndex.loadEncoded(spark, dir)
@@ -63,7 +63,7 @@ class IndexStoreSpec extends SparkTestBase {
     val model = IvfIndex.loadModel(spark, path)
     val vectors = IvfIndex.loadVectors(spark, path)
     val query = emb.filter(col("vec_id") === 0).select("embedding")
-      .as[Seq[Float]].head()
+      .as[Array[Float]].head()
     // AQE wraps scans in query stages that hide them from plan.collect;
     // partition pruning is static, so assert on the non-adaptive plan
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
@@ -99,7 +99,7 @@ class IndexStoreSpec extends SparkTestBase {
     val model = IvfIndex.loadModel(spark, path)
     val vectors = IvfIndex.loadVectors(spark, path)
     val query = emb.filter(col("vec_id") === 0).select("embedding")
-      .as[Seq[Float]].head()
+      .as[Array[Float]].head()
     val exact = emb.filter(col("vec_id") =!= 0)
       .select(col("vec_id"),
         round(graft.expressions.GraftFunctions.cosine_sim(col("embedding"),
