@@ -71,13 +71,11 @@ object Graft {
                    maxDistance: Int = 3): DataFrame =
     NearDup.simhashNearDupPairs(spark, docs, maxDistance)
 
-  /** Connected components over near-dup pairs → (id, cluster) labels.
-    * Default "alternating" (O(log n) rounds at any diameter — the scale
-    * default); "propagation" is faster on shallow-component corpora.
+  /** Connected components over near-dup pairs → (id, cluster) labels,
+    * O(log n) rounds at any component diameter.
     */
-  def dupClusters(spark: SparkSession, pairs: DataFrame,
-                  algorithm: String = "alternating"): DataFrame =
-    NearDup.connectedComponents(spark, pairs, algorithm)
+  def dupClusters(spark: SparkSession, pairs: DataFrame): DataFrame =
+    NearDup.connectedComponents(spark, pairs)
 
   /** Exact-substring dedup (Lee et al. 2022 ExactSubstr): per-document
     * cross-corpus duplicated-span statistics — (doc_id, n_words,

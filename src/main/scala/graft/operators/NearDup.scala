@@ -202,38 +202,17 @@ object NearDup {
     rows.join(broadcast(hot), Seq(keyCol), "left_anti")
   }
 
-  /** Session conf key selecting the connected-components algorithm for
-    * [[connectedComponents]]: "alternating" (default) or "propagation".
-    */
-  val CcAlgorithmConf = "spark.graft.cc.algorithm"
-
   /** Connected components over near-dup pairs → (id, cluster = min member
-    * id), dispatching on `algorithm`:
-    *
-    *  - "alternating" (default): large-star/small-star rounds, O(log n)
-    *    rounds at ANY component diameter — the 100 TB default, where a
-    *    single deep chain would stall propagation.
-    *  - "propagation": min-label propagation, rounds = component diameter.
-    *    Measured faster on shallow-component corpora at local scale
-    *    (sf0.1/local[32]: see SURVEY §8 round-3 measurement) because each
-    *    round is one join against the label frame instead of two star
-    *    transforms; it loses when diameter grows.
+    * id) by alternating large-star/small-star rounds
+    * ([[duplicateClustersAlternating]]): O(log n) rounds at ANY component
+    * diameter, where a single deep chain would stall min-label
+    * propagation ([[duplicateClusters]], kept as the spec's reference).
     */
-  def connectedComponents(spark: SparkSession, pairs: DataFrame,
-                          algorithm: String = "alternating"): DataFrame =
-    {
-      // pairs is typically an expensive pipeline (LSH + verify); both
-      // algorithms read it more than once (node set + edge set) — evaluate
-      // it exactly once here
-      val p = pairs.graftCheckpoint()
-      algorithm match {
-        case "alternating" => duplicateClustersAlternating(spark, p)
-        case "propagation" => duplicateClusters(spark, p)
-        case other => throw new IllegalArgumentException(
-          s"unknown connected-components algorithm '$other' " +
-          "(expected 'alternating' or 'propagation')")
-      }
-    }
+  def connectedComponents(spark: SparkSession, pairs: DataFrame): DataFrame =
+    // pairs is typically an expensive pipeline (LSH + verify) that the
+    // rounds read more than once (node set + edge set) — evaluate it
+    // exactly once here
+    duplicateClustersAlternating(spark, pairs.graftCheckpoint())
 
   /** Duplicate clusters from near-dup pairs: distributed connected
     * components via iterative min-label propagation (each node adopts the

@@ -6,13 +6,14 @@ import org.apache.spark.sql.functions._
 /** The ONE sharded-index composition: S independent local indexes over a
   * disjoint hash partition of the corpus (FAISS's sharded indexes; the
   * shape Odyssey and REPOSE use — one generic partitioning layer over
-  * interchangeable local indexes). The local index is the KIND: the
-  * abstract per-shard verbs below, with two instances — [[ShardedIvf]]
-  * (full-precision shards: model + vectors + qerr) and [[ShardedPq]]
-  * (encoded shards: coarse + codebooks + codes + qerr). Every shard is a
-  * self-contained single-index artifact under `path/shard=r`, so each
-  * per-shard verb (probe, calibrate, drift, retrain, compact) is the
-  * single-index verb; what is about SHARDING has one body here:
+  * interchangeable local indexes). The local index is an [[IndexKind]],
+  * with two instances — [[ShardedIvf]] over [[IndexKind.Ivf]]
+  * (full-precision shards: model + vectors + qerr) and [[ShardedPq]] over
+  * [[IndexKind.Pq]] (encoded shards: coarse + codebooks + codes + qerr).
+  * Every shard is a self-contained single-index artifact under
+  * `path/shard=r`, so each per-shard verb (build, append, delete, probe,
+  * calibrate, drift, retrain, compact) is the store's single-index verb
+  * over the kind; what is about SHARDING has one body here:
   *
   *   - ROUTING: `shard = pmod(xxhash64(vec_id), S)` ([[Sharded.shardCol]])
   *     — disjoint and total, so probing every cell of every shard is
@@ -31,36 +32,12 @@ import org.apache.spark.sql.functions._
   *   - GROWTH: [[Sharded.grownShards]], the overflow-safe judgment every
   *     shard-count growth loop calls (the store's and `ShardedHome`'s).
   */
-abstract class Sharded {
-
-  // ---- the index kind: what one local index supplies per shard ----
-
-  /** Build one shard's artifact at `dir` from its partition. */
-  protected def buildAt(spark: SparkSession, dir: String, part: DataFrame,
-                        nCells: Int): Unit
-
-  /** Apply a routed slice to one shard (the single-index append). */
-  protected def appendAt(spark: SparkSession, shardPath: String,
-                         slice: DataFrame): Unit
-
-  /** Tombstone a routed vec_id slice on one shard. */
-  protected def deleteAt(spark: SparkSession, shardPath: String,
-                         ids: DataFrame): Unit
+abstract class Sharded(val kind: IndexKind) {
 
   /** Compact one shard at its own cell count. */
-  private[graft] def compactAt(spark: SparkSession, shardPath: String): Unit
-
-  /** The single-index tombstone-fraction compaction of one shard. */
-  protected def compactIfDeletedAt(spark: SparkSession, shardPath: String,
-                                   maxDeletedFraction: Double): Boolean
-
-  /** One shard's rows: the LOGICAL view (tombstones anti-joined) and the
-    * PHYSICAL table (as stored, footer-countable).
-    */
-  private[graft] def logicalAt(spark: SparkSession, shardPath: String): DataFrame
-  private[graft] def physicalAt(spark: SparkSession, shardPath: String): DataFrame
-
-  // ---- shared verbs ----
+  private[graft] def compactAt(spark: SparkSession, shardPath: String): Unit =
+    graft.sources.VectorIndexStore.compact(spark, kind, shardPath,
+      kind.cells(kind.loadModel(spark, shardPath)))
 
   /** The shard count recorded at build/reshard time, when the artifact
     * carries the `shards.META` sidecar.
@@ -86,10 +63,10 @@ abstract class Sharded {
 
   /** Every shard's logical / physical rows as one plan. */
   private[graft] def logical(spark: SparkSession, path: String, shards: Int): DataFrame =
-    Sharded.unionShards(path, shards)((_, p) => logicalAt(spark, p))
+    Sharded.unionShards(path, shards)((_, p) => kind.logical(spark, p))
 
   private[graft] def physical(spark: SparkSession, path: String, shards: Int): DataFrame =
-    Sharded.unionShards(path, shards)((_, p) => physicalAt(spark, p))
+    Sharded.unionShards(path, shards)((_, p) => kind.physical(spark, p))
 
   /** Build S independent artifacts under `path/shard=r`: one tagging pass
     * over `vectors`, then per-shard builds from pruned partitions (a
@@ -153,7 +130,8 @@ abstract class Sharded {
             // (the per-index parquet writes are ErrorIfExists)
             meta.deleteRecursively(target)
             val n = counts.getOrElse(r, 0L)
-            buildAt(spark, target, tagged.filter(col("shard") === r).drop("shard"),
+            graft.sources.VectorIndexStore.buildAt(spark, kind, target,
+              tagged.filter(col("shard") === r).drop("shard"),
               if (nCellsPerShard > 0) nCellsPerShard
               else graft.sources.VectorIndexStore.autoCells(n))
           }
@@ -217,7 +195,7 @@ abstract class Sharded {
              newVectors: DataFrame): Unit =
     routed(path, shards,
       newVectors.select(col("vec_id"), col("label"), col("embedding")))(
-      appendAt(spark, _, _))
+      graft.sources.VectorIndexStore.append(spark, kind, _, _))
 
   /** DELETE: hash-route the ids (one column, vec_id) to their OWNING
     * shards and tombstone each slice through the kind's single-index
@@ -229,7 +207,8 @@ abstract class Sharded {
     */
   def delete(spark: SparkSession, path: String, shards: Int,
              ids: DataFrame): Unit =
-    routed(path, shards, ids.toDF("vec_id").distinct())(deleteAt(spark, _, _))
+    routed(path, shards, ids.toDF("vec_id").distinct())(
+      graft.sources.VectorIndexStore.delete(spark, kind, _, _))
 
   /** Routing under the sharded ROOT's writer lease: serializes appenders,
     * deleters, retrains and the leased reshard, so two batches cannot
@@ -296,7 +275,8 @@ abstract class Sharded {
                              maxDeletedFraction: Double = 0.1): Int = {
     verifyShards(path, shards)
     (0 until shards).count(r =>
-      compactIfDeletedAt(spark, s"$path/shard=$r", maxDeletedFraction))
+      graft.sources.VectorIndexStore.compactIfDeleted(spark, kind,
+        s"$path/shard=$r", maxDeletedFraction))
   }
 
   /** The reshard precondition: S′ builds at a NEW root (the shard count is

@@ -106,7 +106,7 @@ object ShardedHome {
                       maxShardRows: Long =
                         graft.sources.VectorIndexStore.DefaultMaxShardRows)
       : (String, Int) =
-    grow(spark, home, maxShardRows, ShardedIvf)(
+    grow(spark, home, maxShardRows, IndexKind.Ivf)(
       ShardedIvf.reshardCatchUpBuild(spark, _, _, _, _),
       ShardedIvf.reshardCatchUpReplay(spark, _, _, _, _))
 
@@ -125,7 +125,7 @@ object ShardedHome {
                         maxShardRows: Long =
                           graft.sources.VectorIndexStore.DefaultMaxShardRows)
       : (String, Int) =
-    grow(spark, home, maxShardRows, ShardedPq)(
+    grow(spark, home, maxShardRows, IndexKind.Pq)(
       ShardedPq.reshardCatchUpBuild(spark, _, _, _, _, fpPath),
       ShardedPq.reshardCatchUpReplay(spark, _, _, _, _, fpPath))
 
@@ -158,7 +158,7 @@ object ShardedHome {
     * maintenance step calls it unconditionally and follows the pointer.
     */
   private def grow(spark: SparkSession, home: String, maxShardRows: Long,
-                   kind: Sharded)(
+                   kind: IndexKind)(
       catchUpBuild: (String, Int, String, Int) => Unit,
       catchUpReplay: (String, Int, String, Int) => Long): (String, Int) = {
     val (cur, s) = serving(home).getOrElse(throw new IllegalStateException(
@@ -166,7 +166,7 @@ object ShardedHome {
         "streamed batch publishes it)"))
     val total = (0 until s).map { r =>
       val shardPath = s"$cur/shard=$r"
-      val physical = kind.physicalAt(spark, shardPath).count()
+      val physical = kind.physical(spark, shardPath).count()
       val deleted = graft.sources.Tombstones.read(spark, shardPath)
         .map(_.distinct().count()).getOrElse(0L)
       math.max(0L, physical - deleted)

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * ceiling is that ARRAY itself — one flat coarse quantizer puts every
   * centroid in every executor's memory and every probe's cell-selection
   * scan. S independent sub-indexes cap every object at one shard's
-  * k_s×dim centroids. Each shard is built through
-  * [[graft.sources.VectorIndexStore.buildIvfAt]], so it carries the same
+  * k_s×dim centroids. Each shard is built through the store's
+  * single-index build over [[IndexKind.Ivf]], so it carries the same
   * lifecycle plane as a single index (`model`, cell-partitioned
   * `vectors`, `qerr` watermarks, `qerr.BASELINE`); drift and retrain are
   * judged PER SHARD, so one drifted shard retrains k_s cells, not k.
@@ -38,34 +38,7 @@ import org.apache.spark.sql.functions._
   * needs it, the scale-out form of the reference's one index
   * (db_utils.py:93-110).
   */
-object ShardedIvf extends Sharded {
-
-  protected def buildAt(spark: SparkSession, dir: String, part: DataFrame,
-                        nCells: Int): Unit =
-    graft.sources.VectorIndexStore.buildIvfAt(spark, dir, part, nCells)
-
-  protected def appendAt(spark: SparkSession, shardPath: String,
-                         slice: DataFrame): Unit =
-    graft.sources.VectorIndexStore.appendIvf(spark, shardPath, slice)
-
-  protected def deleteAt(spark: SparkSession, shardPath: String,
-                         ids: DataFrame): Unit =
-    graft.sources.VectorIndexStore.deleteIvf(spark, shardPath, ids)
-
-  private[graft] def compactAt(spark: SparkSession, shardPath: String): Unit =
-    graft.sources.VectorIndexStore.compactIvf(spark, shardPath,
-      IvfIndex.loadModel(spark, shardPath).centroids.length)
-
-  protected def compactIfDeletedAt(spark: SparkSession, shardPath: String,
-                                   maxDeletedFraction: Double): Boolean =
-    graft.sources.VectorIndexStore.compactIvfIfDeleted(
-      spark, shardPath, maxDeletedFraction)
-
-  private[graft] def logicalAt(spark: SparkSession, shardPath: String): DataFrame =
-    IvfIndex.loadVectors(spark, shardPath)
-
-  private[graft] def physicalAt(spark: SparkSession, shardPath: String): DataFrame =
-    IvfIndex.loadVectorsRaw(spark, shardPath)
+object ShardedIvf extends Sharded(IndexKind.Ivf) {
 
   /** Build the S′ composition at `newPath` from the old root's own
     * logical shard tables; a reused target root drops its width sidecar.
@@ -76,7 +49,7 @@ object ShardedIvf extends Sharded {
     build(spark, logical(spark, oldPath, oldShards)
       .select(col("vec_id"), col("label"), col("embedding")),
       newPath, newShards, nCellsPerShard)
-    graft.sources.Versioned.metaBackend.deleteRecursively(s"$newPath/nprobe.CAL")
+    graft.sources.Versioned.metaBackend.deleteRecursively(s"$newPath/${kind.cal.file}")
   }
 
   /** RESHARD: rebuild the composition at a new shard count S′ from the
@@ -157,10 +130,7 @@ object ShardedIvf extends Sharded {
                          oldShards: Int): String =
     (0 until oldShards).map { r =>
       val shardPath = s"$oldPath/shard=$r"
-      val qerr = s"$shardPath/qerr"
-      val w =
-        if (!graft.sources.Fs.exists(spark, qerr)) -1L
-        else spark.read.parquet(qerr).count() - 1
+      val w = graft.sources.VectorIndexStore.nextSeq(spark, shardPath) - 1
       val dw = graft.sources.AppendLog.delSeqWatermark(spark, shardPath)
       val g = graft.sources.Tombstones.generation(shardPath)
       s"$r:$w:$dw:$g"
@@ -221,7 +191,7 @@ object ShardedIvf extends Sharded {
         wm.flatMap(_.get(r))
           .flatMap(m => graft.sources.AppendLog.since(spark, shardPath, m.appendSeq))
           .getOrElse {
-            logicalAt(spark, shardPath)
+            kind.logical(spark, shardPath)
               .select(col("vec_id"), col("label"), col("embedding"))
               .join(snapshotIds, Seq("vec_id"), "left_anti")
           }
@@ -289,7 +259,7 @@ object ShardedIvf extends Sharded {
     * (`retrainIvfIfNeeded` on each shard artifact) through the shared
     * sweep, `continueOnGateFailure` included. Each per-shard retrain
     * invalidates its parent's `nprobe.CAL`
-    * (VectorIndexStore.invalidateProbeCal), so root-calibration staleness
+    * (VectorIndexStore.invalidateCal), so root-calibration staleness
     * needs nothing extra here. Returns the number of shards retrained.
     */
   def retrainIfNeeded(spark: SparkSession, path: String, shards: Int,

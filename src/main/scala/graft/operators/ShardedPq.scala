@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * memory down 32× (one byte per subspace instead of 4·dim bytes — at the
   * reference's 1536-d (db_utils.py:33) a full-precision shard is
   * ~6 KB/vector, untenable exactly where sharding is needed). Each shard
-  * is built through [[graft.sources.VectorIndexStore.buildPqAt]] and
-  * carries the full PQ lifecycle plane (coarse model, codebooks,
+  * is built through the store's single-index build over [[IndexKind.Pq]]
+  * and carries the full PQ lifecycle plane (coarse model, codebooks,
   * cell-partitioned one-byte codes, qerr quantization watermarks,
   * versioned baseline).
   *
@@ -31,34 +31,7 @@ import org.apache.spark.sql.functions._
   *     depth, [[resolveShardedShortlist]]), invalidated by any shard's
   *     retrain.
   */
-object ShardedPq extends Sharded {
-
-  protected def buildAt(spark: SparkSession, dir: String, part: DataFrame,
-                        nCells: Int): Unit =
-    graft.sources.VectorIndexStore.buildPqAt(spark, dir, part, nCells)
-
-  protected def appendAt(spark: SparkSession, shardPath: String,
-                         slice: DataFrame): Unit =
-    graft.sources.VectorIndexStore.appendPq(spark, shardPath, slice)
-
-  protected def deleteAt(spark: SparkSession, shardPath: String,
-                         ids: DataFrame): Unit =
-    graft.sources.VectorIndexStore.deletePq(spark, shardPath, ids)
-
-  private[graft] def compactAt(spark: SparkSession, shardPath: String): Unit =
-    graft.sources.VectorIndexStore.compactPq(spark, shardPath,
-      PqIndex.loadModel(spark, shardPath).coarse.centroids.length)
-
-  protected def compactIfDeletedAt(spark: SparkSession, shardPath: String,
-                                   maxDeletedFraction: Double): Boolean =
-    graft.sources.VectorIndexStore.compactPqIfDeleted(
-      spark, shardPath, maxDeletedFraction)
-
-  private[graft] def logicalAt(spark: SparkSession, shardPath: String): DataFrame =
-    PqIndex.loadEncoded(spark, shardPath)
-
-  private[graft] def physicalAt(spark: SparkSession, shardPath: String): DataFrame =
-    PqIndex.loadEncodedRaw(spark, shardPath)
+object ShardedPq extends Sharded(IndexKind.Pq) {
 
   /** CATCH-UP reshard for the ENCODED composition, phase 1 of 2 — the
     * bounded-stall protocol ([[ShardedIvf.reshardCatchUpBuild]]'s shape).
@@ -86,7 +59,7 @@ object ShardedPq extends Sharded {
       logical(spark, oldPath, oldShards).select("vec_id")),
       newPath, newShards, nCellsPerShard)
     // a reused target root must not serve a depth sized for another S
-    graft.sources.Versioned.metaBackend.deleteRecursively(s"$newPath/shortlist.CAL")
+    graft.sources.Versioned.metaBackend.deleteRecursively(s"$newPath/${kind.cal.file}")
     // recorded at the NEW root so the replay (possibly another process)
     // can fetch the window's payloads file-pruned instead of re-reading
     // the full-width fp store

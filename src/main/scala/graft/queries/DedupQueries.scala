@@ -447,14 +447,10 @@ object DedupQueries extends QuerySet {
     Q("x06_dup_clusters",
       (s, d) => {
         val pairs = minhashPairsMemo(s, d)
-        // algorithm selectable per-session (spark.graft.cc.algorithm);
-        // alternating stays the default — both verified label-identical
-        // (NearDupSpec) and against the oracle's transitive closure
-        val algo = s.conf.getOption(NearDup.CcAlgorithmConf).getOrElse("alternating")
         // sortedOnce: CC's iterative chain would otherwise re-execute
         // under the declared sort's range-sampling pass
         graft.operators.ScaleOps.sortedOnce(
-          NearDup.connectedComponents(s, pairs, algo), col("id"))
+          NearDup.connectedComponents(s, pairs), col("id"))
       },
       Some(s"""WITH RECURSIVE $exactJaccardPairsSql,
         |pairs AS (SELECT da, db FROM jac WHERE j >= 0.5),

@@ -1,7 +1,7 @@
 package graft.sources
 
-import graft.operators.{IvfIndex, PqIndex}
-import org.apache.spark.sql.SparkSession
+import graft.operators.{IndexKind, IvfIndex, PqIndex, ShardedIvf, ShardedPq}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Build-once / probe-many lifecycle for the ANN index family.
   *
@@ -80,36 +80,60 @@ object VectorIndexStore {
   def autoCells(n: Long, targetCellSize: Int = 128): Int =
     math.max(16L, (n + targetCellSize - 1) / targetCellSize).toInt
 
-  /** Idempotent IVF index build over the `embeddings` fixture: train the
-    * coarse quantizer, assign every vector its cell, publish model sidecar +
-    * cell-partitioned vectors. Returns the artifact path; a complete
-    * artifact short-circuits (no training scan).
+  /** Idempotent index build over the `embeddings` fixture — the ONE
+    * "CREATE INDEX IF NOT EXISTS" of every store geometry: the first caller
+    * runs `build(tmp, corpus)` inside [[PhysicalLayout.ensureDir]]'s atomic
+    * temp-dir publication and stamps the completeness marker; a complete
+    * artifact short-circuits (no training scan). Returns the path.
     */
-  def ensureIvf(spark: SparkSession, sfDir: String, nCells: Int = 16): String = {
-    val path = ivfPath(spark, sfDir, nCells)
+  private def ensure(spark: SparkSession, path: String, sfDir: String)(
+      build: (String, DataFrame) => Unit): String = {
     PhysicalLayout.ensureDir(path) { tmp =>
-      buildIvfAt(spark, tmp, Tables.load(spark, sfDir, "embeddings"), nCells)
+      build(tmp, Tables.load(spark, sfDir, "embeddings"))
       markComplete(tmp)
     }
     path
   }
 
-  /** Non-idempotent IVF build core at an explicit directory: train, save,
-    * and stamp the BUILD-TIME DRIFT BASELINE — the full-corpus mean
-    * assignment distortion under the fresh model, logged as `qerr` row 0
-    * and recorded in the `qerr.BASELINE` sidecar that [[retrainIvfIfNeeded]]
-    * compares appends against. Called by [[ensureIvf]] (inside its atomic
-    * temp-dir publication) and by the streaming first-ingest path (which
-    * creates the index on the live path, the reference's
-    * create-index-on-first-ingest).
+  /** Idempotent IVF build: coarse quantizer + cell-partitioned vectors. */
+  def ensureIvf(spark: SparkSession, sfDir: String, nCells: Int = 16): String =
+    ensure(spark, ivfPath(spark, sfDir, nCells), sfDir)(
+      buildAt(spark, IndexKind.Ivf, _, _, nCells))
+
+  /** Idempotent IVF-PQ build: coarse cells + residual codebooks +
+    * cell-partitioned one-byte-per-subspace codes (no full-precision
+    * vectors in the artifact — that is the 32x memory point).
     */
-  def buildIvfAt(spark: SparkSession, dir: String,
-                 vectors: org.apache.spark.sql.DataFrame, nCells: Int = 16): Unit = {
-    val model = IvfIndex.train(spark, vectors, k = nCells)
-    IvfIndex.save(spark, model, IvfIndex.assign(spark, vectors, model), dir)
-    val (seq, mean) = logWatermark(spark, dir, IvfIndex.distortionStats(spark, vectors, model))
-    writeBaseline(dir, mean, seq + 1)
+  def ensurePq(spark: SparkSession, sfDir: String, nCells: Int = 16): String =
+    ensure(spark, pqPath(spark, sfDir, nCells), sfDir)(
+      buildAt(spark, IndexKind.Pq, _, _, nCells))
+
+  /** Non-idempotent build core at an explicit directory: train, write the
+    * kind's rows (assign / encode) and model, and stamp the BUILD-TIME
+    * DRIFT BASELINE — the full-corpus mean error (assignment distortion /
+    * quantization error) under the fresh model, logged as `qerr` row 0 and
+    * recorded in the `qerr.BASELINE` sidecar that [[retrainIfNeeded]]
+    * compares appends against. Called by [[ensure]] (inside its atomic
+    * temp-dir publication), by every sharded build per shard, and by the
+    * streaming first-ingest path (which creates the index on the live
+    * path, the reference's create-index-on-first-ingest). `nCells` sizes
+    * the coarse quantizer — the fixture-class default 16 keeps every pinned
+    * oracle and golden unchanged; scale deployments (and the drill) pass
+    * [[autoCells]] of the corpus so the artifact is constant-occupancy
+    * (fixed cells make probe cost grow ∝ n — the round-10 flat-IVF lesson).
+    */
+  private[graft] def buildAt(spark: SparkSession, kind: IndexKind, dir: String,
+                             vectors: DataFrame, nCells: Int): Unit = {
+    val model = kind.train(spark, vectors, nCells)
+    kind.save(spark, model, kind.rows(spark, vectors, model), dir)
+    stampBaseline(spark, dir, kind.stats(spark, vectors, model))
   }
+
+  def buildIvfAt(spark: SparkSession, dir: String, vectors: DataFrame, nCells: Int = 16): Unit =
+    buildAt(spark, IndexKind.Ivf, dir, vectors, nCells)
+
+  def buildPqAt(spark: SparkSession, dir: String, vectors: DataFrame, nCells: Int = 16): Unit =
+    buildAt(spark, IndexKind.Pq, dir, vectors, nCells)
 
   /** Idempotent SHARDED IVF build over the `embeddings` fixture
     * ([[graft.operators.ShardedIvf]] — S independent sub-indexes over a
@@ -122,8 +146,8 @@ object VectorIndexStore {
     */
   def ensureShardedIvf(spark: SparkSession, sfDir: String, shards: Int,
                        nCellsPerShard: Int = -1): String =
-    ensureSharded(spark, graft.operators.ShardedIvf,
-      shardedIvfPath(spark, sfDir, shards), sfDir, shards, nCellsPerShard)
+    ensure(spark, shardedIvfPath(spark, sfDir, shards), sfDir)(
+      (tmp, corpus) => ShardedIvf.build(spark, corpus, tmp, shards, nCellsPerShard))
 
   /** [[ensureShardedIvf]] for the sharded IVF-PQ composition
     * ([[graft.operators.ShardedPq]] — the sharded coarse geometry with
@@ -131,19 +155,8 @@ object VectorIndexStore {
     */
   def ensureShardedPq(spark: SparkSession, sfDir: String, shards: Int,
                       nCellsPerShard: Int = -1): String =
-    ensureSharded(spark, graft.operators.ShardedPq,
-      shardedPqPath(spark, sfDir, shards), sfDir, shards, nCellsPerShard)
-
-  private def ensureSharded(spark: SparkSession, kind: graft.operators.Sharded,
-                            path: String, sfDir: String, shards: Int,
-                            nCellsPerShard: Int): String = {
-    PhysicalLayout.ensureDir(path) { tmp =>
-      kind.build(spark, Tables.load(spark, sfDir, "embeddings"), tmp, shards,
-        nCellsPerShard)
-      markComplete(tmp)
-    }
-    path
-  }
+    ensure(spark, shardedPqPath(spark, sfDir, shards), sfDir)(
+      (tmp, corpus) => ShardedPq.build(spark, corpus, tmp, shards, nCellsPerShard))
 
   /** The store reshard preconditions: a real S -> S′ change over a
     * complete artifact. Returns the (old, new) identity paths.
@@ -366,7 +379,7 @@ object VectorIndexStore {
     */
   private def reshardShardedIfNeeded(spark: SparkSession, sfDir: String,
                                      shards: Int, maxShardRows: Long,
-                                     kind: graft.operators.Sharded,
+                                     sharded: graft.operators.Sharded,
                                      prefix: String)(
       reshardTo: Int => String): (String, Int) = {
     val path = shardedPath(spark, sfDir, prefix, shards)
@@ -383,9 +396,9 @@ object VectorIndexStore {
             s" (serving artifacts for this corpus: ${siblings.mkString(", ")})"
           else ""))
     }
-    kind.verifyShards(path, shards)
+    sharded.verifyShards(path, shards)
     val total = (0 until shards)
-      .map(r => kind.logicalAt(spark, s"$path/shard=$r").count()).sum
+      .map(r => sharded.kind.logical(spark, s"$path/shard=$r").count()).sum
     graft.operators.Sharded.grownShards(total, shards, maxShardRows) match {
       case None => (path, shards)
       case Some(newShards) => (reshardTo(newShards), newShards)
@@ -422,54 +435,30 @@ object VectorIndexStore {
             "shortlist cannot recover neighbors in unprobed cells"))
     val cal = PqShortCal(shortlist, measured, target, k, panel.size, nProbe,
       ProbeCalSemanticsVersion)
-    writeShortCal(path, cal)
+    writeCal(path, ShortCalSidecar, cal)
     cal
   }
 
-  /** Idempotent IVF-PQ index build: coarse cells + residual codebooks +
-    * cell-partitioned one-byte-per-subspace codes (no full-precision
-    * vectors in the artifact — that is the 32x memory point).
-    */
-  def ensurePq(spark: SparkSession, sfDir: String, nCells: Int = 16): String = {
-    val path = pqPath(spark, sfDir, nCells)
-    PhysicalLayout.ensureDir(path) { tmp =>
-      buildPqAt(spark, tmp, Tables.load(spark, sfDir, "embeddings"), nCells)
-      markComplete(tmp)
-    }
-    path
-  }
-
-  /** [[buildIvfAt]] for the IVF-PQ artifact: the baseline is the
-    * full-corpus mean QUANTIZATION error under the fresh codebooks.
-    * `nCells` sizes the coarse quantizer — the fixture-class default 16
-    * keeps every pinned oracle and golden unchanged; scale deployments
-    * (and the drill) pass [[autoCells]] of the corpus so the PQ artifact
-    * is constant-occupancy like the IVF one (fixed cells make probe cost
-    * grow ∝ n — the round-10 flat-IVF lesson, on the encoded table).
-    */
-  def buildPqAt(spark: SparkSession, dir: String,
-                vectors: org.apache.spark.sql.DataFrame,
-                nCells: Int = 16): Unit = {
-    val model = PqIndex.train(spark, vectors, nCells = nCells)
-    PqIndex.save(spark, model, PqIndex.encode(spark, vectors, model), dir)
-    val (seq, mean) = logWatermark(spark, dir, PqIndex.quantizationStats(spark, vectors, model))
-    writeBaseline(dir, mean, seq + 1)
-  }
-
-  /** INCREMENTAL maintenance for the IVF artifact: assign new vectors with
-    * the EXISTING model (no retrain — the standard IVF append path: coarse
-    * geometry drifts slowly, so retraining is a scheduled rebuild, not a
-    * per-batch cost) and append into the cell-partitioned layout.
+  /** INCREMENTAL maintenance: write new vectors' rows (assign / encode)
+    * with the EXISTING model (no retrain — the standard IVF/IVF-PQ append
+    * path: quantizer geometry drifts slowly, so retraining is a scheduled
+    * rebuild, not a per-batch cost) into the cell-partitioned layout.
     * Idempotent via the vec_id anti-join; probe results over
-    * build(A)+append(B) equal probes over assign(A ∪ B) with the same
-    * model (ArtifactStoresSpec). Each effective append logs an
-    * assignment-distortion watermark to `qerr` (see [[logWatermark]]) —
-    * the IVF analogue of the PQ quantization-error series.
+    * build(A)+append(B) equal probes over the rows of A ∪ B with the same
+    * model (ArtifactStoresSpec).
+    *
+    * Each effective append logs an ERROR WATERMARK into `path/qerr` —
+    * (append_seq, n_vectors, mean_sq_err of the appended batch under the
+    * existing model: assignment distortion / quantization error). A
+    * drifting corpus shows a rising series, the signal that the scheduled
+    * retrain is due ([[retrainIfNeeded]]; asserted in ArtifactStoresSpec).
+    * A journaled kind also records the batch in its [[AppendLog]] first.
     */
-  def appendIvf(spark: SparkSession, path: String, newVectors: org.apache.spark.sql.DataFrame): Unit =
+  private[graft] def append(spark: SparkSession, kind: IndexKind, path: String,
+                            newVectors: DataFrame): Unit =
     Versioned.withWriterLease(path) {
-    val model = IvfIndex.loadModel(spark, path)
-    val dir = IvfIndex.vectorsDir(path)
+    val model = kind.loadModel(spark, path)
+    val dir = kind.dataDir(path)
     val existing = spark.read.parquet(dir).select("vec_id").distinct()
     // NOT persisted, deliberately: `fresh` references `dir`, and the
     // append-write below triggers refreshByPath(dir), which invalidates
@@ -477,41 +466,39 @@ object VectorIndexStore {
     // just-appended rows and read back EMPTY. An uncached plan keeps the
     // file listing pinned from creation, so recomputes stay correct.
     val fresh = newVectors.join(existing, Seq("vec_id"), "left_anti")
-    if (fresh.isEmpty) return // redelivered batch: nothing to assign, no watermark row
-    // append-log FIRST (AppendLog's crash-ordering rationale): the seq
-    // this batch will take is the current qerr row count, and the lease
-    // makes the peek race-free
-    val seq =
-      if (!Fs.exists(spark, s"$path/qerr")) 0L
-      else spark.read.parquet(s"$path/qerr").count()
-    AppendLog.record(spark, path, fresh, seq)
-    // distortion stats materialized BEFORE the write (belt to the pinned
-    // listing's suspenders: a literal one-row frame cannot re-read `dir`)
-    val stats = {
-      import spark.implicits._
-      val (n, mean) = statsMeanOf(spark,
-        IvfIndex.distortionStats(spark, fresh, model))
-      Seq((n, mean)).toDF("n_vectors", "mean_sq_err")
-    }
-    IvfIndex.assign(spark, fresh, model)
+    if (fresh.isEmpty) return // redelivered batch: nothing to write, no watermark row
+    // the seq this batch takes; the lease makes the peek race-free
+    val seq = nextSeq(spark, path)
+    // append-log FIRST (AppendLog's crash-ordering rationale)
+    if (kind.journaled) AppendLog.record(spark, path, fresh, seq)
+    // error stats materialized BEFORE the write (belt to the pinned
+    // listing's suspenders: a driver-side pair cannot re-read `dir`)
+    val stats = statsMeanOf(spark, kind.stats(spark, fresh, model))
+    kind.rows(spark, fresh, model)
       .write.mode("append").partitionBy("cell").parquet(dir)
-    logWatermark(spark, path, stats)
-    ()
+    logWatermark(spark, path, seq, stats)
   }
 
-  /** Small-file COMPACTION for the IVF vectors table: scheduled appends
-    * leave one file set per append inside every cell directory; the
-    * rewrite repartitions by cell (≈ one file per cell) and publishes
-    * behind a [[Versioned]] pointer — the first compaction UPGRADES the
-    * plain `vectors` layout to the pointer protocol (reads fall back to
-    * the plain dir until then, so existing artifacts are untouched), and
-    * the legacy dir is removed once a later compaction proves the pointer
-    * authoritative. Readers mid-probe keep their resolved version.
+  def appendIvf(spark: SparkSession, path: String, newVectors: DataFrame): Unit =
+    append(spark, IndexKind.Ivf, path, newVectors)
+
+  def appendPq(spark: SparkSession, path: String, newVectors: DataFrame): Unit =
+    append(spark, IndexKind.Pq, path, newVectors)
+
+  /** Small-file COMPACTION of the data table: scheduled appends leave one
+    * file set per append inside every cell directory; the rewrite
+    * repartitions by cell (≈ one file per cell) and publishes behind a
+    * [[Versioned]] pointer — the first compaction UPGRADES the plain
+    * layout to the pointer protocol (reads fall back to the plain dir
+    * until then, so existing artifacts are untouched), and the legacy dir
+    * is removed once a later compaction proves the pointer authoritative.
+    * Readers mid-probe keep their resolved version.
     */
-  def compactIvf(spark: SparkSession, path: String, nCells: Int = 16): Unit =
+  private[graft] def compact(spark: SparkSession, kind: IndexKind, path: String,
+                             nCells: Int): Unit =
     Versioned.withWriterLease(path) {
-    val hadPointer = graft.sources.Versioned.readPointer(path, "vectors").isDefined
-    val all = IvfIndex.loadVectors(spark, path)
+    val hadPointer = Versioned.readPointer(path, kind.table).isDefined
+    val all = kind.logical(spark, path)
     // an ENTIRELY tombstoned corpus rewrites to zero rows — a partitionBy
     // write then emits NO files (partition dirs only exist per value) and
     // the published version is unreadable (schema inference finds
@@ -521,16 +508,16 @@ object VectorIndexStore {
     // compact, so a fully-deleted artifact either keeps its sidecar or
     // gets GC'd/rebuilt by the operator.
     require(!all.isEmpty,
-      s"compacting $path would publish an EMPTY vectors version " +
+      s"compacting $path would publish an EMPTY ${kind.table} version " +
         "(every row is tombstoned) — an empty partitioned rewrite is " +
         "unreadable; keep serving through the sidecar, or GC/rebuild")
-    Versioned.publish(path, "vectors", -1L) { v =>
+    Versioned.publish(path, kind.table, -1L) { v =>
       all.repartition(nCells, org.apache.spark.sql.functions.col("cell"))
         .write.partitionBy("cell").parquet(v)
     }
     // the plain legacy dir has had no new readers since the first pointer
     // publish — remove it once a SECOND compaction confirms that
-    if (hadPointer) deleteLegacy(path, "vectors")
+    if (hadPointer) deleteLegacy(path, kind.table)
     // `all` is the LOGICAL view, so the rewrite applied any tombstones
     // physically; publish-then-clear (a crash in between leaves
     // tombstones that anti-join nothing — never resurrected rows)
@@ -538,95 +525,55 @@ object VectorIndexStore {
     // the rewrite also bounds the append log's size (AppendLog.clear doc);
     // a catch-up replay whose watermark predates this clear falls back to
     // the anti-join via the FROM completeness check
-    AppendLog.clear(spark, path)
+    if (kind.journaled) AppendLog.clear(spark, path)
   }
 
-  /** [[compactIvf]] for the PQ encoded table — same pointer upgrade. */
+  def compactIvf(spark: SparkSession, path: String, nCells: Int = 16): Unit =
+    compact(spark, IndexKind.Ivf, path, nCells)
+
   def compactPq(spark: SparkSession, path: String, nCells: Int = 16): Unit =
-    Versioned.withWriterLease(path) {
-    val hadPointer = graft.sources.Versioned.readPointer(path, "encoded").isDefined
-    val all = PqIndex.loadEncoded(spark, path)
-    // empty-rewrite refusal: compactIvf's rationale
-    require(!all.isEmpty,
-      s"compacting $path would publish an EMPTY encoded version " +
-        "(every code is tombstoned) — keep serving through the sidecar, " +
-        "or GC/rebuild")
-    Versioned.publish(path, "encoded", -1L) { v =>
-      all.repartition(nCells, org.apache.spark.sql.functions.col("cell"))
-        .write.partitionBy("cell").parquet(v)
-    }
-    if (hadPointer) deleteLegacy(path, "encoded")
-    // loadEncoded is the logical view — tombstones now physically applied
-    Tombstones.clear(spark, path)
-  }
+    compact(spark, IndexKind.Pq, path, nCells)
 
-  /** INCREMENTAL maintenance for the IVF-PQ artifact: encode new vectors
-    * with the EXISTING coarse cells and codebooks (no retrain — identical
-    * rationale to [[appendIvf]]: quantizer geometry drifts slowly, so
-    * retraining is a scheduled rebuild, not a per-batch cost) and append
-    * the one-byte codes into the cell-partitioned layout. Idempotent via
-    * the vec_id anti-join.
-    *
-    * Each effective append logs a QUANTIZATION-ERROR WATERMARK into
-    * `path/qerr` — (append_seq, n_vectors, mean_sq_err of the appended
-    * batch under the existing codebooks). A drifting corpus shows a rising
-    * error series, which is the operational signal that the scheduled
-    * retrain is due (the per-batch analogue of a clustering-quality
-    * monitor; asserted in ArtifactStoresSpec).
-    */
-  def appendPq(spark: SparkSession, path: String, newVectors: org.apache.spark.sql.DataFrame): Unit =
-    Versioned.withWriterLease(path) {
-    val model = PqIndex.loadModel(spark, path)
-    val dir = PqIndex.encodedDir(path)
-    val existing = spark.read.parquet(dir).select("vec_id").distinct()
-    val fresh = newVectors.join(existing, Seq("vec_id"), "left_anti")
-    if (fresh.isEmpty) return // redelivered batch: nothing to encode, no watermark row
-    PqIndex.encode(spark, fresh, model)
-      .write.mode("append").partitionBy("cell").parquet(dir)
-    logWatermark(spark, path, PqIndex.quantizationStats(spark, fresh, model))
-  }
-
-  /** DELETE vectors from an IVF artifact — the lifecycle verb takedowns
-    * and right-to-be-forgotten requests need: propagating a removal
-    * through a derived index must not rewrite 100 TB per request. Same
-    * LSM discipline as the dedup stores ([[MinhashStore.delete]]):
-    * `ids` (one column, the vec_ids) append to the artifact's
-    * [[Tombstones]] sidecar under the writer lease (cost ∝ deleted ids),
-    * every reader ([[graft.operators.IvfIndex.loadVectors]] — probes,
-    * calibration, drift, retrain, reshard) anti-joins it immediately,
-    * and the next [[compactIvf]] (or a retrain, which rewrites the
-    * corpus anyway) applies it physically and clears the sidecar.
+  /** DELETE vectors — the lifecycle verb takedowns and
+    * right-to-be-forgotten requests need: propagating a removal through a
+    * derived index must not rewrite 100 TB per request. Same LSM
+    * discipline as the dedup stores ([[MinhashStore.delete]]): `ids` (one
+    * column, the vec_ids) append to the artifact's [[Tombstones]] sidecar
+    * under the writer lease (cost ∝ deleted ids), every reader (the
+    * kind's logical view — probes, calibration, drift, retrain, reshard;
+    * PQ's anti-joins BEFORE the ADC scan, so deleted codes never occupy
+    * shortlist slots) anti-joins it immediately, and the next [[compact]]
+    * (or a retrain, which rewrites the corpus anyway) applies it
+    * physically and clears the sidecar.
     *
     * Contract until that compact: a tombstoned id stays deleted —
-    * [[appendIvf]]'s idempotence anti-join reads PHYSICAL presence, so
+    * [[append]]'s idempotence anti-join reads PHYSICAL presence, so
     * re-adding a deleted vector requires a compact first (the documented
     * trade that keeps appends one anti-join instead of a
-    * generation-reconciling merge). The probe calibration (`nprobe.CAL`)
-    * is NOT invalidated: deletes thin cells the same way appends fill
-    * them — bounded staleness under the same measured policy
-    * (SCALE.md round-15 §2), with the retrain drift gate as the backstop.
+    * generation-reconciling merge). The calibration sidecar is NOT
+    * invalidated: deletes thin cells the same way appends fill them —
+    * bounded staleness under the same measured policy (SCALE.md round-15
+    * §2), with the retrain drift gate as the backstop.
     *
-    * Deletes JOURNAL as well as tombstone ([[AppendLog.recordDelete]],
-    * journal-first — its crash-ordering note): the sidecar alone cannot
-    * witness a removal across a mid-window compact (the physical apply
-    * clears it), and the catch-up reshard needs exactly that witness to
-    * keep its delta replay delete-safe. Cost ∝ deleted ids, like the
-    * sidecar write itself.
+    * A journaled kind's deletes JOURNAL as well as tombstone
+    * ([[AppendLog.recordDelete]], journal-first — its crash-ordering
+    * note): the sidecar alone cannot witness a removal across a mid-window
+    * compact (the physical apply clears it), and the catch-up reshard
+    * needs exactly that witness to keep its delta replay delete-safe.
+    * Cost ∝ deleted ids, like the sidecar write itself.
     */
-  def deleteIvf(spark: SparkSession, path: String, ids: org.apache.spark.sql.DataFrame): Unit =
+  private[graft] def delete(spark: SparkSession, kind: IndexKind, path: String,
+                            ids: DataFrame): Unit =
     Versioned.withWriterLease(path) {
-      AppendLog.recordDelete(spark, path, ids)
+      if (kind.journaled) AppendLog.recordDelete(spark, path, ids)
       Tombstones.add(spark, path, ids)
     }
 
-  /** [[deleteIvf]] for the IVF-PQ artifact: the tombstones anti-join the
-    * ENCODED table before the ADC scan
-    * ([[graft.operators.PqIndex.loadEncoded]]), so deleted codes never
-    * occupy shortlist slots. Physically applied (and the sidecar cleared)
-    * by [[compactPq]] or [[retrainPqIfNeeded]]'s re-encode.
-    */
-  def deletePq(spark: SparkSession, path: String, ids: org.apache.spark.sql.DataFrame): Unit =
-    Versioned.withWriterLease(path) { Tombstones.add(spark, path, ids) }
+  def deleteIvf(spark: SparkSession, path: String, ids: DataFrame): Unit =
+    delete(spark, IndexKind.Ivf, path, ids)
+
+  def deletePq(spark: SparkSession, path: String, ids: DataFrame): Unit =
+    delete(spark, IndexKind.Pq, path, ids)
 
   /** SELF-SCHEDULING physical apply for the delete sidecar (the
     * PostingStore.compactIfNeeded pattern on the deletes axis): the
@@ -634,77 +581,79 @@ object VectorIndexStore {
     * every probe broadcasts it, and a sidecar that grows toward the
     * corpus turns "negligible anti-join" into a real per-query tax. When
     * the tombstoned-id count exceeds `maxDeletedFraction` of the
-    * PHYSICAL corpus, compact (apply + clear). The check costs one
-    * sidecar count and one footer count; under the line it does nothing.
-    * Returns whether a compact ran. A maintenance scheduler calls it
-    * unconditionally after takedown batches, like the other `-IfNeeded`
-    * verbs.
+    * PHYSICAL corpus, compact (apply + clear) at the model's own cell
+    * count. The check costs one sidecar count and one footer count; under
+    * the line it does nothing. Returns whether a compact ran. A
+    * maintenance scheduler calls it unconditionally after takedown
+    * batches, like the other `-IfNeeded` verbs.
     */
-  def compactIvfIfDeleted(spark: SparkSession, path: String,
-                          maxDeletedFraction: Double = 0.1): Boolean = {
+  private[graft] def compactIfDeleted(spark: SparkSession, kind: IndexKind,
+                                      path: String,
+                                      maxDeletedFraction: Double): Boolean = {
     require(maxDeletedFraction > 0, s"maxDeletedFraction=$maxDeletedFraction")
     val deleted = Tombstones.read(spark, path)
       .map(_.distinct().count()).getOrElse(0L)
     if (deleted == 0) return false
-    val physical = IvfIndex.loadVectorsRaw(spark, path).count()
+    val physical = kind.physical(spark, path).count()
     if (deleted < maxDeletedFraction * physical) false
-    else if (IvfIndex.loadVectors(spark, path).isEmpty) {
+    else if (kind.logical(spark, path).isEmpty) {
       // fully deleted: compact would publish an unreadable empty version
-      // (compactIvf refuses) — keep serving through the sidecar; a
+      // (compact refuses) — keep serving through the sidecar; a
       // scheduler loop must not crash on this state every pass
       System.err.println(s"[graft] $path is fully tombstoned — compact " +
         "skipped (GC/rebuild the artifact, or let new appends regrow it)")
       false
     } else {
-      compactIvf(spark, path, IvfIndex.loadModel(spark, path).centroids.length)
+      compact(spark, kind, path, kind.cells(kind.loadModel(spark, path)))
       true
     }
   }
 
-  /** [[compactIvfIfDeleted]] for the IVF-PQ artifact. */
+  def compactIvfIfDeleted(spark: SparkSession, path: String,
+                          maxDeletedFraction: Double = 0.1): Boolean =
+    compactIfDeleted(spark, IndexKind.Ivf, path, maxDeletedFraction)
+
   def compactPqIfDeleted(spark: SparkSession, path: String,
-                         maxDeletedFraction: Double = 0.1): Boolean = {
-    require(maxDeletedFraction > 0, s"maxDeletedFraction=$maxDeletedFraction")
-    val deleted = Tombstones.read(spark, path)
-      .map(_.distinct().count()).getOrElse(0L)
-    if (deleted == 0) return false
-    val physical = PqIndex.loadEncodedRaw(spark, path).count()
-    if (deleted < maxDeletedFraction * physical) false
-    else if (PqIndex.loadEncoded(spark, path).isEmpty) {
-      System.err.println(s"[graft] $path is fully tombstoned — compact " +
-        "skipped (GC/rebuild the artifact, or let new appends regrow it)")
-      false
-    } else {
-      compactPq(spark, path,
-        PqIndex.loadModel(spark, path).coarse.centroids.length)
-      true
-    }
-  }
+                         maxDeletedFraction: Double = 0.1): Boolean =
+    compactIfDeleted(spark, IndexKind.Pq, path, maxDeletedFraction)
+
+  /** The `append_seq` the next `qerr` watermark row takes: the log's
+    * current row count (0 before the first row). An fs existence check,
+    * not exception-driven control flow: an expected missing path surfaced
+    * as ERROR-level listener noise on every first append when probed by
+    * catching PATH_NOT_FOUND.
+    */
+  private[graft] def nextSeq(spark: SparkSession, path: String): Long =
+    if (!Fs.exists(spark, s"$path/qerr")) 0L
+    else spark.read.parquet(s"$path/qerr").count()
 
   /** Append one (n_vectors, mean_sq_err, append_seq) watermark row to the
-    * artifact's `qerr` log — the error series both append paths emit (PQ
-    * reconstruction error, IVF assignment distortion); a rising series is
-    * the retrain-due signal, CONSUMED by [[retrainIvfIfNeeded]] /
-    * [[retrainPqIfNeeded]]. Returns (seq, mean_sq_err) of the written row.
+    * artifact's `qerr` log — the error series every append emits; a
+    * rising series is the retrain-due signal, CONSUMED by
+    * [[retrainIfNeeded]].
     */
-  private def logWatermark(spark: SparkSession, path: String,
-                           stats: org.apache.spark.sql.DataFrame): (Long, Double) = {
+  private def logWatermark(spark: SparkSession, path: String, seq: Long,
+                           stats: (Long, Double)): Unit = {
     import spark.implicits._
-    // fs existence check, not exception-driven control flow: an expected
-    // missing path surfaced as ERROR-level listener noise on every first
-    // append when probed by catching PATH_NOT_FOUND
-    val seq =
-      if (!Fs.exists(spark, s"$path/qerr")) 0L
-      else spark.read.parquet(s"$path/qerr").count()
-    val (n, mean) = statsMeanOf(spark, stats)
-    Seq((n, mean, seq)).toDF("n_vectors", "mean_sq_err", "append_seq")
+    Seq((stats._1, stats._2, seq)).toDF("n_vectors", "mean_sq_err", "append_seq")
       .coalesce(1).write.mode("append").parquet(s"$path/qerr")
-    (seq, mean)
+  }
+
+  /** A fresh geometry's full-corpus error (`stats`, under the model just
+    * built or retrained) logged as the next watermark and recorded as the
+    * drift baseline, with drift counted from the row after it.
+    */
+  private def stampBaseline(spark: SparkSession, path: String,
+                            stats: DataFrame): Unit = {
+    val seq = nextSeq(spark, path)
+    val (n, mean) = statsMeanOf(spark, stats)
+    logWatermark(spark, path, seq, (n, mean))
+    writeBaseline(path, mean, seq + 1)
   }
 
   /** Execute a one-row (n_vectors, mean_sq_err) stats frame. */
   private def statsMeanOf(spark: SparkSession,
-                          stats: org.apache.spark.sql.DataFrame): (Long, Double) = {
+                          stats: DataFrame): (Long, Double) = {
     import spark.implicits._
     stats
       .select(org.apache.spark.sql.functions.col("n_vectors").cast("long"),
@@ -783,7 +732,7 @@ object VectorIndexStore {
     * artifact.
     */
   private def rebaselineIfStale(spark: SparkSession, path: String)
-                               (stats: => org.apache.spark.sql.DataFrame): Boolean =
+                               (stats: => DataFrame): Boolean =
     readBaseline(path) match {
       case Some((_, _, ver)) if ver == DistortionSemanticsVersion => false
       case other => // version-stale, corrupt, or missing sidecar: rebaseline
@@ -797,9 +746,7 @@ object VectorIndexStore {
             s"v$ver > supported v$DistortionSemanticsVersion: treating as " +
             "stale — rebaselining under current semantics")
         }
-        val seq =
-          if (!Fs.exists(spark, s"$path/qerr")) 0L
-          else spark.read.parquet(s"$path/qerr").count()
+        val seq = nextSeq(spark, path)
         val (_, mean) = statsMeanOf(spark, stats)
         writeBaseline(path, mean, seq)
         true
@@ -867,155 +814,112 @@ object VectorIndexStore {
     */
   final class RetrainRecallGateFailed(msg: String) extends IllegalStateException(msg)
 
-  /** CLOSE THE WATERMARK LOOP for the IVF artifact: when the appended
-    * corpus has drifted `factor`x past the build-time baseline, retrain the
-    * coarse quantizer on the CURRENT corpus (the artifact is
-    * self-contained: full-precision vectors live in it), re-assign every
-    * vector, recall-gate the candidate geometry, and publish model +
-    * vectors behind atomic [[Versioned]] pointers. The scheduled-rebuild
-    * half of the appendIvf contract ("retraining is a scheduled rebuild,
-    * not a per-batch cost") — called from the streaming maintenance sink
-    * like the compactIfNeeded family; the per-batch cost when drift is
-    * below threshold is one read of the tiny qerr log.
+  /** CLOSE THE WATERMARK LOOP: when the appended corpus has drifted
+    * `factor`x past the build-time baseline, retrain the model on the
+    * CURRENT corpus at the live cell count (the kind's default would
+    * silently revert an autoCells-built artifact to the fixture class),
+    * re-write every row, recall-gate the candidate geometry, and publish
+    * data table + model sidecars behind atomic [[Versioned]] pointers. The
+    * scheduled-rebuild half of the [[append]] contract ("retraining is a
+    * scheduled rebuild, not a per-batch cost") — called from the streaming
+    * maintenance sink like the compactIfNeeded family; the per-batch cost
+    * when drift is below threshold is one read of the tiny qerr log.
     *
-    * Publication order (single writer, crash-self-healing): vectors →
-    * model → baseline reset. A reader between the two pointer flips sees
-    * new-assignment vectors probed with the old centroids — a VALID probe
-    * with degraded recall for that sub-second window, never wrong data
-    * (cells are filtered then scored exactly). A crash anywhere in the
-    * window leaves qerr still above threshold, so the next maintenance
-    * call re-runs the retrain, which is deterministic (seeded sample of
-    * the same corpus) and converges to the same state.
+    * The corpus: an IVF artifact is self-contained (`fullPrecision` None —
+    * its full-precision vectors live in its own logical table). A PQ
+    * artifact carries codes only (that is its point), so the caller
+    * supplies the full-precision corpus (vec_id, label, embedding — at
+    * scale, the cold store the re-rank already reads), minus this
+    * artifact's tombstones.
+    *
+    * Publication order (single writer, crash-self-healing): data table →
+    * model → baseline reset. A reader between the pointer flips sees
+    * new-geometry rows probed with the old model — a VALID probe with
+    * degraded recall for that sub-second window, never wrong data (cells
+    * are filtered then scored exactly). A crash anywhere in the window
+    * leaves qerr still above threshold, so the next maintenance call
+    * re-runs the retrain, which is deterministic (seeded sample of the
+    * same corpus) and converges to the same state. A retrain drops the
+    * kind's calibration sidecar: a width or depth sized for the OLD
+    * geometry is stale.
     *
     * Returns true iff a retrain was performed. Throws
     * [[RetrainRecallGateFailed]] (nothing published) when the candidate's
     * measured panel recall falls below `recallFloor`.
     */
-  def retrainIvfIfNeeded(spark: SparkSession, path: String, factor: Double = 2.0,
-                         recallFloor: Double = 0.2,
-                         nProbe: Int = IvfIndex.NProbeAuto,
-                         k: Int = 10): Boolean = Versioned.withWriterLease(path) {
-    // a semantics-stale baseline is rebaselined (one scan), never retrained
-    rebaselineIfStale(spark, path)(IvfIndex.distortionStats(spark,
-      IvfIndex.loadVectors(spark, path).select("vec_id", "label", "embedding"),
-      IvfIndex.loadModel(spark, path)))
-    if (!driftFactor(spark, path).exists(_ > factor)) return false
-    val corpus = IvfIndex.loadVectors(spark, path)
+  private[graft] def retrainIfNeeded(spark: SparkSession, kind: IndexKind,
+                                     path: String,
+                                     fullPrecision: Option[DataFrame],
+                                     factor: Double, recallFloor: Double,
+                                     nProbe: Int, k: Int,
+                                     shortlist: Int): Boolean =
+    Versioned.withWriterLease(path) {
+    def source = fullPrecision.getOrElse(kind.logical(spark, path))
       .select("vec_id", "label", "embedding")
-    val nCells = IvfIndex.loadModel(spark, path).centroids.length
-    val model = IvfIndex.train(spark, corpus, k = nCells)
-    val assigned = IvfIndex.assign(spark, corpus, model)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (recallFloor > 0) {
-        val panel = graft.operators.AnnEval.rowPanel(corpus)
-        val exact = graft.operators.AnnEval.exactTopK(spark, corpus, panel, k)
-        val recall = graft.operators.AnnEval.meanRecall(
-          graft.operators.AnnEval.ivfTopKFrames(spark, assigned, model, panel, k, nProbe),
-          exact)
-        if (recall < recallFloor)
-          throw new RetrainRecallGateFailed(
-            s"IVF retrain candidate at $path measured panel recall@$k " +
-              f"$recall%.3f < floor $recallFloor%.3f: keeping the live geometry")
-      }
-      val hadVecPtr = Versioned.readPointer(path, "vectors").isDefined
-      val hadModelPtr = Versioned.readPointer(path, "model").isDefined
-      Versioned.publish(path, "vectors", -1L) { v =>
-        // clustered: one file per cell (IvfIndex.save's rationale)
-        assigned.repartition(org.apache.spark.sql.functions.col("cell"))
-          .write.partitionBy("cell").parquet(v)
-      }
-      Versioned.publish(path, "model", -1L) { v =>
-        IvfIndex.saveModel(spark, model, v)
-      }
-      if (hadVecPtr) deleteLegacy(path, "vectors")
-      if (hadModelPtr) deleteLegacy(path, "model")
-      val (seq, mean) = logWatermark(spark, path,
-        IvfIndex.distortionStats(spark, corpus, model))
-      writeBaseline(path, mean, seq + 1)
-      invalidateProbeCal(path) // a width sized for the OLD cells is stale
-      // `corpus` is the logical view — the rewrite applied any tombstones
-      // physically; a stale sidecar left behind would silently hide the
-      // next append of a formerly-deleted id. Cleared LAST: the lazy
-      // `corpus` plan above still references the sidecar's parquet files,
-      // so clearing before its final execution is a FILE_NOT_EXIST crash
-      // (a crash before this line leaves tombstones that anti-join
-      // nothing — the same benign publish-then-clear gap as compact's)
-      Tombstones.clear(spark, path)
-      AppendLog.clear(spark, path) // rewrite bounds the log (compactIvf note)
-      true
-    } finally assigned.unpersist()
-  }
-
-  /** [[retrainIvfIfNeeded]] for the IVF-PQ artifact. The PQ artifact does
-    * NOT carry full-precision vectors (that is its point), so the caller
-    * supplies the full-precision corpus (`fullPrecision`: vec_id, label,
-    * embedding — at scale, the cold full-precision store the reference's
-    * re-rank already reads). Retrains coarse cells + residual codebooks,
-    * re-encodes everything, recall-gates, publishes encoded + both model
-    * sidecars behind [[Versioned]] pointers, resets the baseline.
-    */
-  def retrainPqIfNeeded(spark: SparkSession, path: String,
-                        fullPrecision: org.apache.spark.sql.DataFrame,
-                        factor: Double = 2.0, recallFloor: Double = 0.2,
-                        nProbe: Int = IvfIndex.NProbeAuto, k: Int = 10,
-                        shortlist: Int = PqIndex.DefaultShortlist): Boolean = Versioned.withWriterLease(path) {
     // a semantics-stale baseline is rebaselined (one scan), never retrained
-    rebaselineIfStale(spark, path)(PqIndex.quantizationStats(spark,
-      fullPrecision.select("vec_id", "label", "embedding"),
-      PqIndex.loadModel(spark, path)))
+    rebaselineIfStale(spark, path)(
+      kind.stats(spark, source, kind.loadModel(spark, path)))
     if (!driftFactor(spark, path).exists(_ > factor)) return false
     // the caller's full-precision corpus doesn't know about THIS
     // artifact's deletions — re-encoding it verbatim would resurrect
     // every tombstoned id; anti-join first, clear after the publish
-    val corpus = Tombstones.applyTo(spark, path,
-      fullPrecision.select("vec_id", "label", "embedding"), "vec_id")
-    // preserve the LIVE coarse geometry: train's default (16) would
-    // silently revert an autoCells-built artifact to the fixture class
-    val nCells = PqIndex.loadModel(spark, path).coarse.centroids.length
-    val model = PqIndex.train(spark, corpus, nCells = nCells)
-    val encoded = PqIndex.encode(spark, corpus, model)
+    val corpus =
+      if (fullPrecision.isEmpty) source
+      else Tombstones.applyTo(spark, path, source, "vec_id")
+    val model = kind.train(spark, corpus, kind.cells(kind.loadModel(spark, path)))
+    val rows = kind.rows(spark, corpus, model)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (recallFloor > 0) {
         val panel = graft.operators.AnnEval.rowPanel(corpus)
         val exact = graft.operators.AnnEval.exactTopK(spark, corpus, panel, k)
         val recall = graft.operators.AnnEval.meanRecall(
-          graft.operators.AnnEval.pqTopKFrames(spark, encoded, model, corpus,
-            panel, k, nProbe, shortlist),
+          kind.topKFrames(spark, rows, model, corpus, panel, k, nProbe, shortlist),
           exact)
         if (recall < recallFloor)
           throw new RetrainRecallGateFailed(
-            s"PQ retrain candidate at $path measured panel recall@$k " +
+            s"${kind.name} retrain candidate at $path measured panel recall@$k " +
               f"$recall%.3f < floor $recallFloor%.3f: keeping the live geometry")
       }
-      val hadEncPtr = Versioned.readPointer(path, "encoded").isDefined
-      val hadCoarsePtr = Versioned.readPointer(path, "coarse").isDefined
-      Versioned.publish(path, "encoded", -1L) { v =>
+      val parts = kind.modelParts(spark, model)
+      val hadPointer = (kind.table +: parts.map(_._1))
+        .filter(Versioned.readPointer(path, _).isDefined)
+      Versioned.publish(path, kind.table, -1L) { v =>
         // clustered: one file per cell (IvfIndex.save's rationale)
-        encoded.repartition(org.apache.spark.sql.functions.col("cell"))
+        rows.repartition(org.apache.spark.sql.functions.col("cell"))
           .write.partitionBy("cell").parquet(v)
       }
-      Versioned.publish(path, "coarse", -1L) { v =>
-        IvfIndex.saveModel(spark, model.coarse, v)
-      }
-      Versioned.publish(path, "codebooks", -1L) { v =>
-        PqIndex.saveCodebooks(spark, model, v)
-      }
-      if (hadEncPtr) deleteLegacy(path, "encoded")
-      if (hadCoarsePtr) { deleteLegacy(path, "coarse"); deleteLegacy(path, "codebooks") }
-      val (seq, mean) = logWatermark(spark, path,
-        PqIndex.quantizationStats(spark, corpus, model))
-      writeBaseline(path, mean, seq + 1)
-      invalidateShortCal(path) // a depth sized for the OLD geometry is stale
-      // the re-encode above excluded tombstoned ids — deletions are now
-      // physical; clear so a future re-append isn't silently hidden.
-      // Cleared LAST: the lazy `corpus` anti-join plan above still
-      // references the sidecar files (retrainIvfIfNeeded's ordering note)
+      parts.foreach { case (name, write) => Versioned.publish(path, name, -1L)(write) }
+      hadPointer.foreach(deleteLegacy(path, _))
+      stampBaseline(spark, path, kind.stats(spark, corpus, model))
+      invalidateCal(path, kind.cal)
+      // the rewrite applied any tombstones physically; a stale sidecar left
+      // behind would silently hide the next append of a formerly-deleted
+      // id. Cleared LAST: the lazy `corpus` plan above still references
+      // the sidecar's parquet files, so clearing before its final
+      // execution is a FILE_NOT_EXIST crash (a crash before this line
+      // leaves tombstones that anti-join nothing — the same benign
+      // publish-then-clear gap as compact's)
       Tombstones.clear(spark, path)
+      if (kind.journaled) AppendLog.clear(spark, path) // rewrite bounds the log (compact note)
       true
-    } finally encoded.unpersist()
+    } finally rows.unpersist()
   }
+
+  def retrainIvfIfNeeded(spark: SparkSession, path: String, factor: Double = 2.0,
+                         recallFloor: Double = 0.2,
+                         nProbe: Int = IvfIndex.NProbeAuto,
+                         k: Int = 10): Boolean =
+    retrainIfNeeded(spark, IndexKind.Ivf, path, None, factor, recallFloor, nProbe, k,
+      PqIndex.DefaultShortlist)
+
+  def retrainPqIfNeeded(spark: SparkSession, path: String,
+                        fullPrecision: DataFrame,
+                        factor: Double = 2.0, recallFloor: Double = 0.2,
+                        nProbe: Int = IvfIndex.NProbeAuto, k: Int = 10,
+                        shortlist: Int = PqIndex.DefaultShortlist): Boolean =
+    retrainIfNeeded(spark, IndexKind.Pq, path, Some(fullPrecision), factor,
+      recallFloor, nProbe, k, shortlist)
 
   /** Calibrated-probe sidecar `nprobe.CAL`:
     * `<width> <measuredRecall> <target> <k> <panelSize> <semver>` — the
@@ -1034,39 +938,54 @@ object VectorIndexStore {
 
   val ProbeCalSemanticsVersion = 1
 
-  private def probeCalFile(path: String) = s"$path/nprobe.CAL"
+  /** A calibration sidecar: its file name in the artifact and the policy
+    * probes fall back to while it is absent. `nprobe.CAL` and
+    * `shortlist.CAL` share one reader, writer and invalidator.
+    */
+  private[graft] final case class CalSidecar(file: String, fallback: String)
 
-  private def writeProbeCal(path: String, cal: ProbeCal): Unit =
-    Versioned.metaBackend.writeAtomic(probeCalFile(path),
-      s"${cal.width} ${cal.measured} ${cal.target} ${cal.k} " +
-        s"${cal.panelSize} ${cal.version}")
+  private[graft] val ProbeCalSidecar = CalSidecar("nprobe.CAL", "the auto policy")
+  private[graft] val ShortCalSidecar = CalSidecar("shortlist.CAL", "the default shortlist")
 
-  def readProbeCal(path: String): Option[ProbeCal] =
-    Versioned.metaBackend.readString(probeCalFile(path)).flatMap { content =>
-      try {
-        content.trim.split(" ") match {
-          case Array(w, m, t, k, p, v) =>
-            Some(ProbeCal(w.toInt, m.toDouble, t.toDouble, k.toInt, p.toInt, v.toInt))
-          case _ => throw new NumberFormatException("field count")
-        }
-      } catch {
+  /** Write a calibration record as its fields in declaration order. */
+  private def writeCal(path: String, sidecar: CalSidecar, cal: Product): Unit =
+    Versioned.metaBackend.writeAtomic(s"$path/${sidecar.file}",
+      cal.productIterator.mkString(" "))
+
+  /** Read a calibration record: `parse` maps the space-separated fields
+    * (any other field count, or a bad number, reads as absent), and a
+    * record whose `version` is newer than [[ProbeCalSemanticsVersion]]
+    * reads as absent too — its value may mean something else entirely,
+    * and honoring it silently is the cross-semantics class
+    * qerr.BASELINE's version stamp exists to prevent.
+    */
+  private def readCal[C](path: String, sidecar: CalSidecar)(
+      parse: PartialFunction[Array[String], C])(version: C => Int): Option[C] = {
+    val file = s"$path/${sidecar.file}"
+    Versioned.metaBackend.readString(file).flatMap { content =>
+      try Some(parse.applyOrElse(content.trim.split(" "),
+        (_: Array[String]) => throw new NumberFormatException("field count")))
+      catch {
         case _: NumberFormatException =>
-          System.err.println(s"[graft] unparseable nprobe.CAL at " +
-            s"${probeCalFile(path)} (content: '${content.trim.take(80)}'): " +
-            "treating as absent — probes fall back to the auto policy")
+          System.err.println(s"[graft] unparseable ${sidecar.file} at $file " +
+            s"(content: '${content.trim.take(80)}'): treating as absent — " +
+            s"probes fall back to ${sidecar.fallback}")
           None
       }
     }.filter { cal =>
-      // a FUTURE-semantics sidecar parses but its width may mean something
-      // else entirely (the documented reads-as-absent contract): honoring
-      // it silently is the cross-semantics class qerr.BASELINE's version
-      // stamp exists to prevent
-      val ok = cal.version <= ProbeCalSemanticsVersion
-      if (!ok) System.err.println(s"[graft] nprobe.CAL at $path has " +
-        s"semantics v${cal.version} > supported v$ProbeCalSemanticsVersion: " +
-        "treating as absent — probes fall back to the auto policy")
+      val ok = version(cal) <= ProbeCalSemanticsVersion
+      if (!ok) System.err.println(s"[graft] ${sidecar.file} at $path has " +
+        s"semantics v${version(cal)} > supported v$ProbeCalSemanticsVersion: " +
+        s"treating as absent — probes fall back to ${sidecar.fallback}")
       ok
     }
+  }
+
+  def readProbeCal(path: String): Option[ProbeCal] =
+    readCal(path, ProbeCalSidecar) {
+      case Array(w, m, t, k, p, v) =>
+        ProbeCal(w.toInt, m.toDouble, t.toDouble, k.toInt, p.toInt, v.toInt)
+    }(_.version)
 
   /** The calibrated probe width of an artifact, if one was measured and
     * published — what [[graft.operators.IvfIndex.NProbeCalibrated]]
@@ -1074,27 +993,28 @@ object VectorIndexStore {
     */
   def calibratedWidth(path: String): Option[Int] = readProbeCal(path).map(_.width)
 
-  /** Drop an artifact's `nprobe.CAL` — called by the RETRAIN paths after
-    * publishing a new geometry, because a width sized against the old
-    * cell layout says nothing about the new one (the calibration analogue
-    * of resetting `qerr.BASELINE`; probes degrade to the auto policy
-    * until the operator recalibrates). Appends do NOT invalidate: the
-    * calibration drifts with the corpus exactly like the quantizer does,
-    * and the same `qerr` watermarks that schedule the retrain bound that
-    * staleness — the retrain then lands here.
+  /** Drop an artifact's calibration sidecar — called by the RETRAIN path
+    * after publishing a new geometry, because a width or depth sized
+    * against the old cell layout says nothing about the new one (the
+    * calibration analogue of resetting `qerr.BASELINE`; probes degrade to
+    * the sidecar's fallback until the operator recalibrates). Appends do
+    * NOT invalidate: the calibration drifts with the corpus exactly like
+    * the quantizer does, and the same `qerr` watermarks that schedule the
+    * retrain bound that staleness — the retrain then lands here.
     */
-  private[graft] def invalidateProbeCal(path: String): Unit = {
-    if (Versioned.metaBackend.exists(probeCalFile(path))) {
-      Versioned.metaBackend.deleteRecursively(probeCalFile(path))
-      System.err.println(s"[graft] dropped stale nprobe.CAL at $path " +
-        "(geometry retrained) — probes use the auto policy until recalibrated")
+  private def invalidateCal(path: String, sidecar: CalSidecar): Unit = {
+    val file = s"$path/${sidecar.file}"
+    if (Versioned.metaBackend.exists(file)) {
+      Versioned.metaBackend.deleteRecursively(file)
+      System.err.println(s"[graft] dropped stale ${sidecar.file} at $path " +
+        s"(geometry retrained) — probes use ${sidecar.fallback} until recalibrated")
     }
     // a shard artifact's geometry change stales its sharded ROOT's
     // calibration too — keyed here to the retrain itself, so a direct
-    // per-shard `retrainIvfIfNeeded(path/shard=r)` (the documented
-    // per-shard lifecycle) cannot leave the composition's width stale
+    // per-shard retrain of `path/shard=r` (the documented per-shard
+    // lifecycle) cannot leave the composition's calibration stale
     path match {
-      case ShardChild(parent) => invalidateProbeCal(parent)
+      case ShardChild(parent) => invalidateCal(parent, sidecar)
       case _ => ()
     }
   }
@@ -1128,7 +1048,7 @@ object VectorIndexStore {
           s"$sidecarPath — raise maxWidth (full probe is exact on the " +
           "artifact's own corpus)"))
     val cal = ProbeCal(width, measured, target, k, panel.size, ProbeCalSemanticsVersion)
-    writeProbeCal(sidecarPath, cal)
+    writeCal(sidecarPath, ProbeCalSidecar, cal)
     cal
   }
 
@@ -1142,58 +1062,17 @@ object VectorIndexStore {
   final case class PqShortCal(shortlist: Int, measured: Double, target: Double,
                               k: Int, panelSize: Int, nProbe: Int, version: Int)
 
-  private def shortCalFile(path: String) = s"$path/shortlist.CAL"
-
-  private def writeShortCal(path: String, cal: PqShortCal): Unit =
-    Versioned.metaBackend.writeAtomic(shortCalFile(path),
-      s"${cal.shortlist} ${cal.measured} ${cal.target} ${cal.k} " +
-        s"${cal.panelSize} ${cal.nProbe} ${cal.version}")
-
   def readShortCal(path: String): Option[PqShortCal] =
-    Versioned.metaBackend.readString(shortCalFile(path)).flatMap { content =>
-      try {
-        content.trim.split(" ") match {
-          case Array(s, m, t, k, p, np, v) =>
-            Some(PqShortCal(s.toInt, m.toDouble, t.toDouble, k.toInt,
-              p.toInt, np.toInt, v.toInt))
-          case _ => throw new NumberFormatException("field count")
-        }
-      } catch {
-        case _: NumberFormatException =>
-          System.err.println(s"[graft] unparseable shortlist.CAL at " +
-            s"${shortCalFile(path)} (content: '${content.trim.take(80)}'): " +
-            "treating as absent — probes fall back to the default shortlist")
-          None
-      }
-    }.filter { cal =>
-      val ok = cal.version <= ProbeCalSemanticsVersion
-      if (!ok) System.err.println(s"[graft] shortlist.CAL at $path has " +
-        s"semantics v${cal.version} > supported v$ProbeCalSemanticsVersion: " +
-        "treating as absent — probes fall back to the default shortlist")
-      ok
-    }
+    readCal(path, ShortCalSidecar) {
+      case Array(s, m, t, k, p, np, v) =>
+        PqShortCal(s.toInt, m.toDouble, t.toDouble, k.toInt, p.toInt, np.toInt, v.toInt)
+    }(_.version)
 
   /** The calibrated re-rank shortlist of a PQ artifact, if published —
     * what [[graft.operators.PqIndex.ShortlistCalibrated]] resolves to.
     */
   def calibratedShortlist(path: String): Option[Int] =
     readShortCal(path).map(_.shortlist)
-
-  private[graft] def invalidateShortCal(path: String): Unit = {
-    if (Versioned.metaBackend.exists(shortCalFile(path))) {
-      Versioned.metaBackend.deleteRecursively(shortCalFile(path))
-      System.err.println(s"[graft] dropped stale shortlist.CAL at $path " +
-        "(geometry retrained) — probes use the default shortlist until " +
-        "recalibrated")
-    }
-    // a shard's geometry change stales its sharded ROOT's shortlist
-    // calibration too — keyed to the retrain itself, like
-    // invalidateProbeCal's propagation
-    path match {
-      case ShardChild(parent) => invalidateShortCal(parent)
-      case _ => ()
-    }
-  }
 
   /** Size the smallest ADC re-rank shortlist holding `target` recall@k on
     * the PQ artifact's own corpus at the engine-default (or given) probe
@@ -1229,7 +1108,7 @@ object VectorIndexStore {
       model.coarse.centroids.length)
     val cal = PqShortCal(shortlist, measured, target, k, panel.size, np,
       ProbeCalSemanticsVersion)
-    writeShortCal(path, cal)
+    writeCal(path, ShortCalSidecar, cal)
     cal
   }
 

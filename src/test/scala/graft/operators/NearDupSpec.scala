@@ -115,17 +115,12 @@ class NearDupSpec extends SparkTestBase {
     assert(NearDup.minhashNearDupPairs(spark, docs, threshold = 0.5).isEmpty)
   }
 
-  test("connectedComponents dispatches both algorithms and rejects unknown names") {
+  test("connectedComponents labels every node with its component's minimum id") {
     import spark.implicits._
     val df = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
-    for (algo <- Seq("alternating", "propagation")) {
-      val labels = NearDup.connectedComponents(spark, df, algo)
-        .as[(Long, Long)].collect().toMap
-      assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L), algo)
-    }
-    intercept[IllegalArgumentException] {
-      NearDup.connectedComponents(spark, df, "union-find")
-    }
+    val labels = NearDup.connectedComponents(spark, df)
+      .as[(Long, Long)].collect().toMap
+    assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L))
   }
 
   test("simhashNearDupPairs finds planted near-dups at the d<=3 threshold") {

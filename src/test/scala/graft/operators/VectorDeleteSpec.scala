@@ -8,11 +8,12 @@ import org.apache.spark.sql.functions._
   * ([[graft.sources.VectorIndexStore.deleteIvf]] / `deletePq`,
   * [[ShardedIvf.delete]], [[ShardedPq.delete]]): immediate logical
   * visibility through the load path every reader shares, physical
-  * application (and sidecar clearing) at compact, the re-add-requires-
-  * compact append contract, owning-shard-only routing, and tombstone
-  * survival across the reshard verbs (artifact-sourced IVF reshard
-  * applies them physically; the corpus-sourced PQ reshard and the
-  * catch-up replay FORWARD them).
+  * application (and sidecar clearing) at compact, owning-shard-only
+  * routing, and tombstone survival across the reshard verbs
+  * (artifact-sourced IVF reshard applies them physically; the
+  * corpus-sourced PQ reshard and the catch-up replay FORWARD them). The
+  * re-add-requires-compact contract and the single-index
+  * compact-if-deleted policy run for both kinds in [[IndexKindSpec]].
   */
 class VectorDeleteSpec extends SparkTestBase {
 
@@ -76,23 +77,6 @@ class VectorDeleteSpec extends SparkTestBase {
       "the compacted rewrite must omit tombstoned rows")
     assert(probe() == before,
       "a compaction is a physical no-op for readers — probe rows must be byte-equal")
-  }
-
-  test("re-adding a deleted id is a no-op until a compact physically removes it") {
-    import spark.implicits._
-    val path = tmp("graft_del_readd")
-    VectorIndexStore.buildIvfAt(spark, path, emb, nCells = 8)
-    val victim = emb.filter(col("vec_id") === 1)
-    VectorIndexStore.deleteIvf(spark, path, victim.select("vec_id"))
-    // the append idempotence anti-join reads PHYSICAL presence: the row is
-    // still in the table, so the re-add is skipped and the id stays deleted
-    VectorIndexStore.appendIvf(spark, path, victim)
-    assert(IvfIndex.loadVectors(spark, path).filter(col("vec_id") === 1).count() == 0,
-      "an append must not resurrect a tombstoned id (compact first — the documented contract)")
-    VectorIndexStore.compactIvf(spark, path, nCells = 8)
-    VectorIndexStore.appendIvf(spark, path, victim)
-    assert(IvfIndex.loadVectors(spark, path).filter(col("vec_id") === 1).count() == 1,
-      "after the compact the id is physically gone and a fresh append must land")
   }
 
   test("deletePq excludes codes BEFORE the ADC scan — the logical view equals a manual pre-filter") {
@@ -181,23 +165,8 @@ class VectorDeleteSpec extends SparkTestBase {
       "window deletes must be forwarded — the new root hides them via its own sidecars")
   }
 
-  test("compactIvfIfDeleted: free under the fraction, applies+clears over it; sharded sweep touches only crossed shards") {
+  test("compactShardsIfDeleted compacts only crossed shards") {
     import spark.implicits._
-    val path = tmp("graft_del_ifneeded")
-    VectorIndexStore.buildIvfAt(spark, path, emb, nCells = 8)
-    val n = emb.count()
-    // under the line: ~1 deleted id of n — the check must do nothing
-    VectorIndexStore.deleteIvf(spark, path, emb.filter(col("vec_id") === 1).select("vec_id"))
-    assert(!VectorIndexStore.compactIvfIfDeleted(spark, path, maxDeletedFraction = 0.5))
-    assert(Tombstones.read(spark, path).isDefined, "under the line the sidecar stays")
-    // over the line: half the corpus — the verb compacts and clears
-    VectorIndexStore.deleteIvf(spark, path,
-      emb.filter(col("vec_id") % 2 === 0).select("vec_id"))
-    assert(VectorIndexStore.compactIvfIfDeleted(spark, path, maxDeletedFraction = 0.4))
-    assert(Tombstones.read(spark, path).isEmpty)
-    assert(IvfIndex.loadVectorsRaw(spark, path).count() ==
-      emb.filter(col("vec_id") % 2 =!= 0 && col("vec_id") =!= 1).count())
-    assert(!VectorIndexStore.compactIvfIfDeleted(spark, path), "idempotent when clean")
     // sharded sweep: a SKEWED takedown (every deleted id owned by one
     // shard, minus one survivor) must compact only the crossed shard
     val root = tmp("graft_del_ifneeded_sh")

@@ -16,9 +16,11 @@ reused while it holds the same commit.
 For every end-to-end metric BENCHMARK.json declares, it prints each side's
 median and quartiles, the change's win count (pairs where the working tree
 is strictly better in the metric's declared direction), and whether the
-medians differ by more than REV's interquartile range. A run with no
-result line, a failed operation or a false check is reported too. Run it
-from the repository root, on an otherwise idle host.
+medians differ by more than REV's interquartile range. Below that table
+it prints each side's median of every numeric `<workload>.*` key on the
+runs' detail line (per-verb timings such as `maintain.append_p50_s`). A
+run with no result line, a failed operation or a false check is reported
+too. Run it from the repository root, on an otherwise idle host.
 """
 import argparse
 import json
@@ -56,7 +58,8 @@ def export(rev, scratch):
 
 
 def run(tree, workload, seed, seconds):
-    """One benchmark run in `tree`: (metrics dict or None, note)."""
+    """One benchmark run in `tree`: (metrics dict or None, numeric
+    `<workload>.*` detail fields, note)."""
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
                         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
                        cwd=tree, capture_output=True, text=True)
@@ -66,20 +69,23 @@ def run(tree, workload, seed, seconds):
         metrics = {k: v["value"] for k, v in result["metrics"].items()}
     except (IndexError, ValueError, KeyError, TypeError):
         tail = " | ".join(p.stderr.strip().splitlines()[-3:])
-        return None, f"no result line (exit {p.returncode}): {tail}"
+        return None, {}, f"no result line (exit {p.returncode}): {tail}"
+    detail = {}
+    if len(lines) > 1:
+        try:
+            detail = json.loads(lines[-2])["detail"]
+        except (ValueError, KeyError, TypeError):
+            pass
+    numbers = {k: v for k, v in detail.items() if k.startswith(workload + ".")
+               and isinstance(v, (int, float)) and not isinstance(v, bool)}
     notes = []
     if result["failed"]:
         notes.append(f"{result['failed']}/{result['attempted']} ops failed")
     if not result["correct"]:
-        checks = {}
-        if len(lines) > 1:
-            try:
-                checks = json.loads(lines[-2])["detail"]["checks"]
-            except (ValueError, KeyError, TypeError):
-                pass
+        checks = detail.get("checks") if isinstance(detail.get("checks"), dict) else {}
         bad = sorted(k for k, ok in checks.items() if not ok)
         notes.append("incorrect" + (f" ({', '.join(bad)})" if bad else ""))
-    return metrics, "; ".join(notes)
+    return metrics, numbers, "; ".join(notes)
 
 
 def quartiles(xs):
@@ -110,15 +116,16 @@ def main():
     # one untimed run per side first: it builds the side if needed, and the
     # first run after a build reads slow (maintain setup_s ~1.6x)
     for side, tree in sides.items():
-        _, note = run(tree, args.workload, args.seed0, seconds)
+        _, _, note = run(tree, args.workload, args.seed0, seconds)
         print(f"warm-up {side} {note}".rstrip(), flush=True)
     runs = {"rev": [], "tree": []}
     for i in range(args.pairs):
         seed = args.seed0 + i
         order = ("rev", "tree") if i % 2 == 0 else ("tree", "rev")
         for side in order:
-            metrics, note = run(sides[side], args.workload, seed, seconds)
-            runs[side].append({"seed": seed, "metrics": metrics, "note": note})
+            metrics, numbers, note = run(sides[side], args.workload, seed, seconds)
+            runs[side].append({"seed": seed, "metrics": metrics, "detail": numbers,
+                               "note": note})
             shown = ", ".join(f"{n}={metrics[n]:.4g}" for n, _ in declared) if metrics else ""
             print(f"pair {i + 1}/{args.pairs} seed {seed} {side:4s} {shown} {note}".rstrip(),
                   flush=True)
@@ -141,6 +148,16 @@ def main():
         spread = [f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]" for q in (rev, tree)]
         print(f"{name:12s} {spread[0]:28s} {spread[1]:28s} "
               f"{f'{wins}/{len(pairs)}':7s} {'yes' if clear else 'no'}")
+    keys = sorted({k for side in runs.values() for r in side for k in r["detail"]})
+    if keys:
+        width = max(len(k) for k in keys)
+        print(f"\n{'detail':{width}s} {'rev median':>12s} {'tree median':>12s}")
+        for key in keys:
+            meds = []
+            for side in ("rev", "tree"):
+                xs = [r["detail"][key] for r in runs[side] if key in r["detail"]]
+                meds.append(f"{statistics.median(xs):.4g}" if xs else "-")
+            print(f"{key:{width}s} {meds[0]:>12s} {meds[1]:>12s}")
     bad = [f"{side} seed {r['seed']}: {r['note']}" for side in ("rev", "tree")
            for r in runs[side] if r["note"]]
     print("every run correct, 0 failed ops" if not bad else "\n".join(bad))
