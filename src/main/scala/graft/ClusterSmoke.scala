@@ -439,7 +439,7 @@ object ClusterSmoke {
           graft.sources.FpStore.upsert(spark, pqCuFp, emb3)
           graft.operators.ShardedPq.build(spark, emb3, pqCuOld, 2)
           graft.operators.ShardedPq.reshardCatchUpBuild(
-            spark, pqCuOld, 2, pqCuNew, 3, pqCuFp)
+            spark, pqCuOld, 2, pqCuNew, 3, fp = Some(pqCuFp))
           val tranche = emb3.filter(col("vec_id") % 8 === 3)
             .select((col("vec_id") + 910000L).as("vec_id"), col("label"),
               col("embedding"))
@@ -450,7 +450,7 @@ object ClusterSmoke {
           graft.operators.ShardedPq.compactShardsIfDeleted(spark, pqCuOld, 2,
             maxDeletedFraction = 0.001)
           graft.operators.ShardedPq.reshardCatchUpReplay(
-            spark, pqCuOld, 2, pqCuNew, 3, pqCuFp)
+            spark, pqCuOld, 2, pqCuNew, 3, fp = Some(pqCuFp))
           val resurrected = (0 until 3).map(r =>
             graft.operators.PqIndex.loadEncoded(spark, s"$pqCuNew/shard=$r")
               .select("vec_id")).reduce(_ unionAll _)

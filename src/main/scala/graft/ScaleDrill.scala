@@ -146,6 +146,29 @@ object ScaleDrill {
       extraRows += json.replaceFirst("\\{", s"""{"$marker":true,""")
     }
 
+    /** One catch-up reshard drill, either kind: the unleased snapshot
+      * build (`reshard:<name>_catchup_build`), `delta` landing in the
+      * window (persisted to the fp store first on an encoded
+      * composition), and the leased replay — the measured blocked window
+      * (`reshard:<name>_catchup_replay`) — which must carry exactly it.
+      */
+    def drillCatchUp(scale: Int, name: String, sharded: graft.operators.Sharded,
+                     root: String, shards: Int, newRoot: String, newShards: Int,
+                     delta: DataFrame, fp: Option[String]): Unit = {
+      report(scale, s"reshard:${name}_catchup_build", "cold", timed {
+        sharded.reshardCatchUpBuild(spark, root, shards, newRoot, newShards, fp = fp)
+      })
+      val n = delta.count()
+      fp.foreach(graft.sources.FpStore.upsert(spark, _, delta))
+      sharded.append(spark, root, shards, delta)
+      val (replayed, work) = Harness.measure(spark)(
+        sharded.reshardCatchUpReplay(spark, root, shards, newRoot, newShards, fp))
+      report(scale, s"reshard:${name}_catchup_replay", "replay", work)
+      require(replayed == n,
+        s"$name catch-up replay at x$scale carried $replayed of $n appends")
+      drillLine("DRILLCAL", s"""{"scale":$scale,"name":"reshard:${name}_catchup","replayed":$replayed,"blocked_phase":"replay"}""")
+    }
+
     /** AQE-final plan census for a query: executes the plan once (noop
       * row drain) so AdaptiveSparkPlanExec finalizes, then counts the
       * join/exchange physical nodes — the evidence trail for plan
@@ -566,23 +589,11 @@ object ScaleDrill {
               // cal-staleness measurement.
               val cuRoot = s"$outRoot/catchup_x$scale/ix$shards"
               graft.sources.PosixMetaBackend.deleteRecursively(s"$outRoot/catchup_x$scale")
-              report(scale, "reshard:ivf_catchup_build", "cold", timed {
-                graft.operators.ShardedIvf.reshardCatchUpBuild(
-                  spark, reshRoot, 2 * shards, cuRoot, shards)
-              })
               val cuDelta = emb.filter(pmod(col("vec_id"), lit(4L)) === 1)
                 .select((col("vec_id") + lit(6000000000L)).as("vec_id"),
                   col("label"), col("embedding"))
-              val cuDeltaN = cuDelta.count()
-              graft.operators.ShardedIvf.append(spark, reshRoot, 2 * shards, cuDelta)
-              var replayed = 0L
-              report(scale, "reshard:ivf_catchup_replay", "replay", timed {
-                replayed = graft.operators.ShardedIvf.reshardCatchUpReplay(
-                  spark, reshRoot, 2 * shards, cuRoot, shards)
-              })
-              require(replayed == cuDeltaN,
-                s"catch-up replay at x$scale carried $replayed of $cuDeltaN appends")
-              drillLine("DRILLCAL", s"""{"scale":$scale,"name":"reshard:ivf_catchup","replayed":$replayed,"blocked_phase":"replay"}""")
+              drillCatchUp(scale, "ivf", graft.operators.ShardedIvf,
+                reshRoot, 2 * shards, cuRoot, shards, cuDelta, None)
               // DELETE at drill scale (round 16): the tombstone verb on
               // the caught-up artifact — a ~10% takedown routed to its
               // owning shards (cost ∝ deleted ids: S filtered passes
@@ -930,24 +941,11 @@ object ScaleDrill {
             graft.sources.FpStore.upsert(spark, fpDir, emb)
             val pqCuRoot = s"$outRoot/pq_catchup_x$scale/ix${pqShards / 2}"
             graft.sources.PosixMetaBackend.deleteRecursively(s"$outRoot/pq_catchup_x$scale")
-            report(scale, "reshard:pq_catchup_build", "cold", timed {
-              graft.operators.ShardedPq.reshardCatchUpBuild(
-                spark, shPqPath, pqShards, pqCuRoot, pqShards / 2, fpDir)
-            })
-            val pqDelta = emb.filter(pmod(col("vec_id"), lit(4L)) === 2)
-              .select((col("vec_id") + lit(7000000000L)).as("vec_id"),
-                col("label"), col("embedding"))
-            val pqDeltaN = pqDelta.count()
-            graft.sources.FpStore.upsert(spark, fpDir, pqDelta)
-            graft.operators.ShardedPq.append(spark, shPqPath, pqShards, pqDelta)
-            var pqReplayed = 0L
-            report(scale, "reshard:pq_catchup_replay", "replay", timed {
-              pqReplayed = graft.operators.ShardedPq.reshardCatchUpReplay(
-                spark, shPqPath, pqShards, pqCuRoot, pqShards / 2, fpDir)
-            })
-            require(pqReplayed == pqDeltaN,
-              s"encoded catch-up replay at x$scale carried $pqReplayed of $pqDeltaN appends")
-            drillLine("DRILLCAL", s"""{"scale":$scale,"name":"reshard:pq_catchup","replayed":$pqReplayed,"blocked_phase":"replay"}""")
+            drillCatchUp(scale, "pq", graft.operators.ShardedPq,
+              shPqPath, pqShards, pqCuRoot, pqShards / 2,
+              emb.filter(pmod(col("vec_id"), lit(4L)) === 2)
+                .select((col("vec_id") + lit(7000000000L)).as("vec_id"),
+                  col("label"), col("embedding")), Some(fpDir))
             graft.sources.PosixMetaBackend.deleteRecursively(fpDir)
             graft.sources.PosixMetaBackend.deleteRecursively(s"$outRoot/pq_catchup_x$scale")
           }

@@ -13,21 +13,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * abstract, so a model a kind loads or trains goes back to the SAME
   * kind's writers without a cast.
   *
+  * Both kinds' data tables are their own APPEND JOURNAL: every row
+  * carries the `seq` of the qerr watermark its write logged (build and
+  * retrain: the baseline row; append: the batch's row), so "what landed
+  * after watermark w" is `seq > w` over the kind's own rows ([[journal]]).
+  * The row loaders ([[logical]], [[physical]]) drop the column.
+  *
   * @param name       the kind in diagnostics ("IVF" / "PQ")
   * @param table      pointer name of the cell-partitioned data table
   * @param cal        the calibration sidecar a retrain invalidates
-  * @param journaled  appends and deletes also journal to the artifact's
-  *                   [[graft.sources.AppendLog]] (IVF only: its catch-up
-  *                   reshard replays from the artifact; PQ's replays from
-  *                   the full-precision store)
   */
 sealed abstract class IndexKind(
     val name: String,
     val table: String,
-    private[graft] val cal: graft.sources.VectorIndexStore.CalSidecar,
-    val journaled: Boolean) {
+    private[graft] val cal: graft.sources.VectorIndexStore.CalSidecar) {
 
   type Model
+
+  /** The LOGICAL rows WITH their `seq` column as the table carries it:
+    * absent when the schema Spark infers (from one footer) predates seq
+    * stamping, null for rows of pre-seq files otherwise. Whether EVERY
+    * file carries the column is a per-file question
+    * ([[graft.sources.Fs.everyParquetFileHas]]).
+    */
+  def journal(spark: SparkSession, path: String): DataFrame =
+    graft.sources.Tombstones.applyTo(spark, path, spark.read.parquet(dataDir(path)), "vec_id")
 
   /** The resolved data-table directory (the compaction/retrain pointer
     * once published, else the build-time layout).
@@ -72,8 +82,11 @@ sealed abstract class IndexKind(
 
 object IndexKind {
 
+  /** The data-table column holding each row's write seq. */
+  val SeqColumn = "seq"
+
   object Ivf extends IndexKind("IVF", "vectors",
-    graft.sources.VectorIndexStore.ProbeCalSidecar, journaled = true) {
+    graft.sources.VectorIndexStore.ProbeCalSidecar) {
     type Model = IvfIndex.Model
     def dataDir(path: String): String = IvfIndex.vectorsDir(path)
     def logical(spark: SparkSession, path: String): DataFrame =
@@ -100,7 +113,7 @@ object IndexKind {
   }
 
   object Pq extends IndexKind("PQ", "encoded",
-    graft.sources.VectorIndexStore.ShortCalSidecar, journaled = false) {
+    graft.sources.VectorIndexStore.ShortCalSidecar) {
     type Model = PqIndex.Model
     def dataDir(path: String): String = PqIndex.encodedDir(path)
     def logical(spark: SparkSession, path: String): DataFrame =

@@ -647,10 +647,12 @@ object IvfIndex {
 
   /** The PHYSICAL vectors table — tombstoned rows included. For verbs
     * whose contract is physical presence (append idempotence); readers
-    * answering queries use [[loadVectors]].
+    * answering queries use [[loadVectors]]. The store's write `seq`
+    * column is dropped (the catch-up journal reads it through
+    * [[IndexKind.journal]]).
     */
   def loadVectorsRaw(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(vectorsDir(path))
+    spark.read.parquet(vectorsDir(path)).drop(IndexKind.SeqColumn)
 
   /** Sentinel `nProbe` value: resolve the probe width from the model's
     * cell count via [[autoNProbe]] — the ENGINE DEFAULT probe policy.

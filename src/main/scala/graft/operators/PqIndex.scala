@@ -327,9 +327,11 @@ object PqIndex {
   def loadEncoded(spark: SparkSession, path: String): DataFrame =
     graft.sources.Tombstones.applyTo(spark, path, loadEncodedRaw(spark, path), "vec_id")
 
-  /** The PHYSICAL encoded table — tombstoned rows included. */
+  /** The PHYSICAL encoded table — tombstoned rows included, the write
+    * `seq` column dropped (as [[IvfIndex.loadVectorsRaw]]).
+    */
   def loadEncodedRaw(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(encodedDir(path))
+    spark.read.parquet(encodedDir(path)).drop(IndexKind.SeqColumn)
 
   /** Default ADC re-rank shortlist when no measured calibration applies. */
   val DefaultShortlist = 50

@@ -27,8 +27,11 @@ import org.apache.spark.sql.functions._
   *     leaves the old artifact serving.
   *   - APPEND / DELETE: hash-routed under the root's writer lease.
   *   - MAINTENANCE: the per-shard retrain sweep, [[compactShards]],
-  *     [[compactShardsIfDeleted]], and the catch-up replay's reverse
-  *     delta.
+  *     [[compactShardsIfDeleted]].
+  *   - CATCH-UP RESHARD ([[reshardCatchUpBuild]] / [[reshardCatchUpReplay]]):
+  *     the snapshot watermarks (`catchup.META`, [[Sharded.CatchUp]]) and
+  *     the delta replay, for both kinds; the kind supplies only a
+  *     delta's full-precision [[payload]].
   *   - GROWTH: [[Sharded.grownShards]], the overflow-safe judgment every
   *     shard-count growth loop calls (the store's and `ShardedHome`'s).
   */
@@ -189,13 +192,13 @@ abstract class Sharded(val kind: IndexKind) {
     * assignment or encode, vec_id anti-join idempotence, error
     * watermark — under the shard's own writer lease). S filtered passes
     * over the BATCH, not the corpus — append batches are ingest-sized by
-    * contract.
+    * contract. Returns the rows written (ids already present are not).
     */
   def append(spark: SparkSession, path: String, shards: Int,
-             newVectors: DataFrame): Unit =
+             newVectors: DataFrame): Long =
     routed(path, shards,
       newVectors.select(col("vec_id"), col("label"), col("embedding")))(
-      graft.sources.VectorIndexStore.append(spark, kind, _, _))
+      graft.sources.VectorIndexStore.append(spark, kind, _, _)).sum
 
   /** DELETE: hash-route the ids (one column, vec_id) to their OWNING
     * shards and tombstone each slice through the kind's single-index
@@ -213,16 +216,17 @@ abstract class Sharded(val kind: IndexKind) {
   /** Routing under the sharded ROOT's writer lease: serializes appenders,
     * deleters, retrains and the leased reshard, so two batches cannot
     * interleave their per-shard passes and a delete cannot land between
-    * a reshard's corpus read and its cutover.
+    * a reshard's corpus read and its cutover. Returns each non-empty
+    * slice's `applyAt` result.
     */
-  private def routed(path: String, shards: Int, rows: DataFrame)(
-      applyAt: (String, DataFrame) => Unit): Unit =
+  private def routed[T](path: String, shards: Int, rows: DataFrame)(
+      applyAt: (String, DataFrame) => T): Seq[T] =
     graft.sources.Versioned.withWriterLease(path) {
       verifyShards(path, shards)
       val tagged = rows.withColumn("shard", Sharded.shardCol(shards))
-      for (r <- 0 until shards) {
+      (0 until shards).flatMap { r =>
         val slice = tagged.filter(col("shard") === r).drop("shard")
-        if (!slice.isEmpty) applyAt(s"$path/shard=$r", slice)
+        if (slice.isEmpty) None else Some(applyAt(s"$path/shard=$r", slice))
       }
     }
 
@@ -279,16 +283,142 @@ abstract class Sharded(val kind: IndexKind) {
         s"$path/shard=$r", maxDeletedFraction))
   }
 
-  /** The reshard precondition: S′ builds at a NEW root (the shard count is
-    * part of the artifact identity; an in-place cutover would break
-    * readers holding the old S), from an old root whose S matches.
+  /** The full-precision (vec_id, label, embedding) rows of `rows` — old
+    * shards' logical data rows — the one thing a reshard needs from the
+    * kind: IVF rows carry their own vectors; PQ codes fetch theirs from
+    * the full-precision store `fp`, pruned to the window above `fpw`
+    * when the snapshot recorded that store's watermark.
     */
-  protected def requireNewRoot(oldPath: String, oldShards: Int,
-                               newPath: String): Unit = {
-    require(newPath != oldPath,
-      "reshard builds at a NEW root (shard count is part of the artifact " +
-        "identity; in-place cutover would break readers holding the old S)")
+  protected def payload(spark: SparkSession, rows: DataFrame,
+                        fp: Option[String], fpw: Option[Long]): DataFrame
+
+  /** RESHARD core: build the S′ composition at a NEW root `newPath` (the
+    * shard count is part of the artifact identity; an in-place cutover
+    * would break readers holding the old S) from the [[payload]] of the
+    * old root's logical rows; a reused target root drops its calibration
+    * sidecar (sized for another S).
+    */
+  protected def rebuildAt(spark: SparkSession, oldPath: String, oldShards: Int,
+                          newPath: String, newShards: Int, nCellsPerShard: Int,
+                          fp: Option[String]): Unit = {
+    require(newPath != oldPath, "reshard builds at a NEW root (shard count is part " +
+      "of the artifact identity; in-place cutover would break readers holding the old S)")
     verifyShards(oldPath, oldShards)
+    build(spark, payload(spark, logical(spark, oldPath, oldShards), fp, None),
+      newPath, newShards, nCellsPerShard)
+    graft.sources.Versioned.metaBackend.deleteRecursively(s"$newPath/${kind.cal.file}")
+  }
+
+  /** CATCH-UP reshard, phase 1 of 2 — the bounded-stall protocol for
+    * streaming-fed indexes (the blocking reshards hold the old root's
+    * writer lease across read+build+GC, which at 10⁹ vectors means hours
+    * of blocked ingest). Takes NO lease on the old root: rebuilds the S′
+    * composition at `newPath` from a SNAPSHOT of the old root's logical
+    * rows (an encoded composition re-encodes them from its full-precision
+    * store `fp`) while appends keep landing, and records the snapshot's
+    * watermarks in `newPath/catchup.META`. MUST be followed by
+    * [[reshardCatchUpReplay]] before cutover — publishing a phase-1-only
+    * artifact silently drops every append that landed during the build.
+    */
+  def reshardCatchUpBuild(spark: SparkSession, oldPath: String, oldShards: Int,
+                          newPath: String, newShards: Int, nCellsPerShard: Int = -1,
+                          fp: Option[String] = None): Unit = {
+    // captured BEFORE the corpus read: an append racing the capture lands
+    // in the snapshot AND above the watermark, and the replay's
+    // idempotent append absorbs the overlap; the reverse order could
+    // silently drop a racing append from both
+    val marks = watermarks(spark, oldPath, oldShards, fp)
+    rebuildAt(spark, oldPath, oldShards, newPath, newShards, nCellsPerShard, fp)
+    // recorded at the NEW root so the replay (possibly another process)
+    // knows which appends and deletes the snapshot already holds
+    Sharded.writeCatchUp(newPath, marks)
+  }
+
+  /** Every old shard's current [[Sharded.Mark]] and the full-precision
+    * store's upsert seq — the snapshot capture and the post-replay advance.
+    */
+  private def watermarks(spark: SparkSession, oldPath: String, oldShards: Int,
+                         fp: Option[String]): Sharded.CatchUp =
+    Sharded.CatchUp((0 until oldShards).map { r =>
+      val p = s"$oldPath/shard=$r"
+      r -> Sharded.Mark(graft.sources.VectorIndexStore.nextSeq(spark, p) - 1,
+        graft.sources.DeleteLog.watermark(spark, p), graft.sources.Tombstones.generation(p))
+    }.toMap, fp.map(graft.sources.FpStore.maxSeq(spark, _)))
+
+  /** CATCH-UP reshard, phase 2 of 2 — the ONLY window appends block:
+    * under the old root's writer lease, the appends that landed during
+    * phase 1 are hash-routed into the S′ artifact through the idempotent
+    * [[append]], and the window's deletes are forwarded. The caller cuts
+    * over INSIDE the same lease scope (publish the new identity / flip
+    * the serving pointer, then GC the old root) so nothing can land after
+    * the replay and be lost to the GC. Returns the rows the replay added
+    * to the new root — the measured catch-up size.
+    *
+    * DELTA-SHAPED for a shard the snapshot recorded a [[Sharded.Mark]]
+    * for: its window appends are its own rows with `seq > w`
+    * ([[IndexKind.journal]] — pre-window files are skipped by their
+    * footer statistics, and a mid-window compact keeps `seq`; a null seq,
+    * a pre-seq row a compact rewrote, counts as in the window, which the
+    * idempotent append absorbs), its window deletes the
+    * [[graft.sources.DeleteLog]] rows above `dw` while its tombstone
+    * generation is unchanged (a mid-window compact applies pending
+    * tombstones physically and clears the journal — the one transition
+    * neither can witness). The ONE FALLBACK, for a shard with no mark (no
+    * or a legacy `catchup.META`) or with any data file that predates seq
+    * stamping: its logical rows absent from the new root (an id
+    * anti-join), and the reverse delta ([[replayRemovals]]) for removals.
+    */
+  def reshardCatchUpReplay(spark: SparkSession, oldPath: String, oldShards: Int,
+                           newPath: String, newShards: Int,
+                           fp: Option[String] = None): Long = {
+    verifyShards(oldPath, oldShards)
+    graft.sources.Versioned.withWriterLease(oldPath) {
+      val meta = Sharded.readCatchUp(newPath)
+      // per delta-shaped shard: (window appends, window deletes — None
+      // when the generation moved); absent = the fallback
+      val windows = (0 until oldShards).flatMap { r =>
+        val p = s"$oldPath/shard=$r"
+        for (m <- meta.flatMap(_.shards.get(r))
+             if graft.sources.Fs.everyParquetFileHas(spark, kind.dataDir(p), IndexKind.SeqColumn))
+          yield r -> (kind.journal(spark, p).filter(col(IndexKind.SeqColumn) > m.appendSeq ||
+            col(IndexKind.SeqColumn).isNull).drop(IndexKind.SeqColumn),
+            Option.when(graft.sources.Tombstones.generation(p) == m.gen)(
+              graft.sources.DeleteLog.since(spark, p, m.delSeq).toList))
+      }.toMap
+      lazy val newIds = physical(spark, newPath, newShards).select("vec_id")
+      // materialized ONCE (eager checkpoint) for its count, the payload and
+      // the S routed append slices; a persist() would be unsafe — the
+      // append refreshes the new root's listing, invalidating a cached
+      // plan over it. dropDuplicates: an append batch holding one id twice
+      // writes it twice, and the replay must not copy that twice
+      val delta = ScaleOps.checkpointed(Sharded.unionShards(oldPath, oldShards) { (r, p) =>
+        windows.get(r).fold(kind.logical(spark, p).join(newIds, Seq("vec_id"), "left_anti"))(_._1)
+      }.dropDuplicates("vec_id"))
+      val n = delta.count()
+      val appended = if (n == 0) 0L else {
+        val rows = ScaleOps.checkpointed(payload(spark, delta, fp, meta.flatMap(_.fpw)))
+        require(rows.count() == n, s"catch-up replay found $n window appends but not every " +
+          "one has a full-precision row — every appender of an encoded composition must " +
+          "FpStore.upsert before appending codes, or the replay would silently drop it")
+        append(spark, newPath, newShards, rows)
+      }
+      // DELETES that landed during phase 1 only REMOVE ids from the
+      // logical view: invisible to the forward delta, yet the snapshot's
+      // copies of those ids are physically present in the new artifact.
+      // The journal rows are semi-joined against the new root's PHYSICAL
+      // ids: a delete that raced the snapshot capture is journaled ABOVE
+      // dw yet already absent there, and forwarding it would plant a stale
+      // sidecar row that hides a legitimate post-cutover re-add
+      val deletes = (0 until oldShards).map(r => windows.get(r).flatMap(_._2))
+      if (deletes.exists(_.isEmpty)) replayRemovals(spark, oldPath, oldShards, newPath, newShards)
+      else deletes.flatten.flatten.reduceOption(_ unionAll _).foreach(ids => delete(spark,
+        newPath, newShards, ids.distinct().join(newIds, Seq("vec_id"), "left_semi")))
+      // the new artifact is now current up to each old shard's PRESENT
+      // state (the old lease is held — nothing lands mid-replay): advance
+      // the recorded watermarks so a repeated replay reads an empty delta
+      Sharded.writeCatchUp(newPath, watermarks(spark, oldPath, oldShards, fp))
+      appended
+    }
   }
 
   /** The catch-up replay's REVERSE DELTA: ids physically present in the
@@ -299,9 +429,9 @@ abstract class Sharded(val kind: IndexKind) {
     * repeated replay is a no-op. Id-column reads: corpus-shaped but
     * column-pruned.
     */
-  protected def replayRemovals(spark: SparkSession, oldPath: String,
-                               oldShards: Int, newPath: String,
-                               newShards: Int): Unit = {
+  private def replayRemovals(spark: SparkSession, oldPath: String,
+                             oldShards: Int, newPath: String,
+                             newShards: Int): Unit = {
     val alreadyHidden = (0 until newShards).flatMap(r =>
       graft.sources.Tombstones.read(spark, s"$newPath/shard=$r")
         .map(_.select(col("doc_id").as("vec_id"))))
@@ -347,6 +477,53 @@ object Sharded {
     pmod(xxhash64(col("vec_id")), lit(shards.toLong)).cast("int")
 
   private def shardsMetaFile(path: String) = s"$path/shards.META"
+
+  /** One old shard's snapshot watermarks: the last qerr seq the snapshot
+    * holds (−1 when no qerr exists, matching the first append's seq 0 —
+    * recording 0 would make `seq > 0` drop the seq-0 window append), the
+    * delete-journal seq, and the tombstone generation the delete axis
+    * trusts.
+    */
+  private[graft] final case class Mark(appendSeq: Long, delSeq: Long, gen: Long)
+
+  /** `catchup.META`, the catch-up snapshot's watermarks at the new root:
+    * whitespace-separated tokens, `r:w:dw:g` per old shard ([[Mark]]) and
+    * `fpw:N` — the full-precision store's last upsert seq — when the
+    * composition re-encodes from one.
+    */
+  private[graft] final case class CatchUp(shards: Map[Int, Mark], fpw: Option[Long]) {
+    def render: String = (shards.toSeq.sortBy(_._1).map { case (r, m) =>
+      s"$r:${m.appendSeq}:${m.delSeq}:${m.gen}" } ++ fpw.map(w => s"fpw:$w")).mkString(" ")
+  }
+
+  private def catchUpFile(root: String) = s"$root/catchup.META"
+
+  private def writeCatchUp(root: String, c: CatchUp): Unit =
+    graft.sources.Versioned.metaBackend.writeAtomic(catchUpFile(root), c.render)
+
+  private def readCatchUp(root: String): Option[CatchUp] =
+    graft.sources.Versioned.metaBackend.readString(catchUpFile(root)).map(parseCatchUp(catchUpFile(root), _))
+
+  // bounded digit counts: every match converts without overflow
+  private val MarkToken = """(\d{1,9}):(-?\d{1,18}):(-?\d{1,18}):(-?\d{1,18})""".r
+  private val V1Token = """\d{1,9}:-?\d{1,18}""".r
+  private val FpwToken = """fpw:(-?\d{1,18})""".r
+
+  /** Parse `catchup.META` content read from `file`. Tokens older snapshot
+    * builds wrote parse into the FALLBACK (no [[Mark]] for the shard):
+    * v1 `r:w` (no delete axis), and the encoded composition's bare
+    * `fpw:N` (no per-shard marks; N still prunes the payload fetch). Any
+    * other token raises an IllegalStateException naming the file.
+    */
+  private[graft] def parseCatchUp(file: String, content: String): CatchUp =
+    content.trim.split("\\s+").filter(_.nonEmpty).foldLeft(CatchUp(Map.empty, None)) {
+      case (c, MarkToken(r, w, dw, g)) =>
+        c.copy(shards = c.shards + (r.toInt -> Mark(w.toLong, dw.toLong, g.toLong)))
+      case (c, V1Token()) => c
+      case (c, FpwToken(w)) => c.copy(fpw = Some(w.toLong))
+      case (_, tok) => throw new IllegalStateException(
+        s"unparseable catchup.META token '$tok' in $file")
+    }
 
   /** One plan over every shard: `load(r, path/shard=r)`, unioned. */
   private[graft] def unionShards(path: String, shards: Int)(

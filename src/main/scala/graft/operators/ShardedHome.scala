@@ -31,7 +31,7 @@ import org.apache.spark.sql.SparkSession
   * absorb redelivery — the shrunken-rebuild class is gone because "no
   * pointer" is the ONLY state that builds.
   *
-  * The growth loop here ([[grow]]) uses the kind's CATCH-UP reshard, so
+  * The growth loop here ([[grow]]) uses the CATCH-UP reshard, so
   * the corpus-sized rebuild holds NO lease and ingest blocks only for the
   * delta replay + pointer flip + GC — the bounded-stall protocol a
   * streaming-fed index needs (the store-level `reshardShardedIvf` keeps
@@ -99,24 +99,21 @@ object ShardedHome {
   }
 
   /** The growth loop AT A HOME, for the full-precision composition —
-    * [[grow]] with the artifact-sourced, AppendLog-journaled catch-up pair
-    * ([[ShardedIvf.reshardCatchUpBuild]] / `reshardCatchUpReplay`).
+    * [[grow]] over [[ShardedIvf]], whose catch-up reshard is
+    * artifact-sourced (each shard's rows carry their vectors).
     */
   def reshardIfNeeded(spark: SparkSession, home: String,
                       maxShardRows: Long =
                         graft.sources.VectorIndexStore.DefaultMaxShardRows)
       : (String, Int) =
-    grow(spark, home, maxShardRows, IndexKind.Ivf)(
-      ShardedIvf.reshardCatchUpBuild(spark, _, _, _, _),
-      ShardedIvf.reshardCatchUpReplay(spark, _, _, _, _))
+    grow(spark, home, maxShardRows, ShardedIvf, None)
 
   /** [[reshardIfNeeded]] for an ENCODED home — the growth loop of
     * [[graft.streaming.StreamingOps.arrivalShardedPqIngest]]. Over the
     * line the rebuild RE-ENCODES at S′ from the cold full-precision store
     * `fpPath` ([[graft.sources.FpStore]]) scoped to the serving
-    * generation's LOGICAL membership ([[ShardedPq.reshardCatchUpBuild]] /
-    * `reshardCatchUpReplay`): PQ shards hold one-byte codes, so the
-    * artifact-sourced catch-up does not apply, and the membership
+    * generation's LOGICAL membership: PQ shards hold one-byte codes, so
+    * the catch-up payload comes from the store, and the membership
     * semi-join keeps deletion truth SINGLE — ids the serving index no
     * longer holds fall out of the rebuild, so the new generation is born
     * clean with no tombstone forwarding.
@@ -125,14 +122,13 @@ object ShardedHome {
                         maxShardRows: Long =
                           graft.sources.VectorIndexStore.DefaultMaxShardRows)
       : (String, Int) =
-    grow(spark, home, maxShardRows, IndexKind.Pq)(
-      ShardedPq.reshardCatchUpBuild(spark, _, _, _, _, fpPath),
-      ShardedPq.reshardCatchUpReplay(spark, _, _, _, _, fpPath))
+    grow(spark, home, maxShardRows, ShardedPq, Some(fpPath))
 
   /** The ONE growth loop at a home — the store-level growth loop
-    * re-expressed over the pointer, with the kind's catch-up pair
-    * (`catchUpBuild` / `catchUpReplay`, each taking old path, old S, new
-    * path, new S). Judges per-shard LIVE rows through
+    * re-expressed over the pointer, with the composition's catch-up
+    * reshard ([[Sharded.reshardCatchUpBuild]] / `reshardCatchUpReplay`,
+    * `fp` the full-precision store an encoded composition re-encodes
+    * from). Judges per-shard LIVE rows through
     * [[Sharded.grownShards]], counted as physical parquet footer counts
     * MINUS the tombstone sidecar's id count (each metadata-cheap /
     * sidecar-sized; the LOGICAL count via the anti-joined view would be
@@ -157,16 +153,14 @@ object ShardedHome {
     * Returns the serving (path, shards) pair either way, so a sink's
     * maintenance step calls it unconditionally and follows the pointer.
     */
-  private def grow(spark: SparkSession, home: String, maxShardRows: Long,
-                   kind: IndexKind)(
-      catchUpBuild: (String, Int, String, Int) => Unit,
-      catchUpReplay: (String, Int, String, Int) => Long): (String, Int) = {
+  private[graft] def grow(spark: SparkSession, home: String, maxShardRows: Long,
+                          sharded: Sharded, fp: Option[String]): (String, Int) = {
     val (cur, s) = serving(home).getOrElse(throw new IllegalStateException(
       s"no SERVING pointer at $home — nothing to reshard (the first " +
         "streamed batch publishes it)"))
     val total = (0 until s).map { r =>
       val shardPath = s"$cur/shard=$r"
-      val physical = kind.physical(spark, shardPath).count()
+      val physical = sharded.kind.physical(spark, shardPath).count()
       val deleted = graft.sources.Tombstones.read(spark, shardPath)
         .map(_.distinct().count()).getOrElse(0L)
       math.max(0L, physical - deleted)
@@ -177,11 +171,11 @@ object ShardedHome {
         val newName = s"gen-${genSeq(cur.split('/').last) + 1}"
         val newDir = s"$home/$newName"
         // phase 1 — no lease: ingest flows for the corpus-sized rebuild
-        catchUpBuild(cur, s, newDir, newShards)
+        sharded.reshardCatchUpBuild(spark, cur, s, newDir, newShards, fp = fp)
         // phase 2 — the bounded stall: replay, flip, keep-previous GC
         // under one lease
         graft.sources.Versioned.withWriterLease(cur) {
-          catchUpReplay(cur, s, newDir, newShards)
+          sharded.reshardCatchUpReplay(spark, cur, s, newDir, newShards, fp)
           publishServing(home, newName, newShards)
           gcBelow(home, cur)
         }

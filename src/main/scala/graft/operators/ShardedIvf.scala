@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * `vectors`, `qerr` watermarks, `qerr.BASELINE`); drift and retrain are
   * judged PER SHARD, so one drifted shard retrains k_s cells, not k.
   *
-  * Kind-specific here: the artifact-sourced [[reshard]], the
-  * AppendLog-journal catch-up pair, [[search]] and [[totalCells]].
+  * Kind-specific here: the artifact-sourced [[reshard]] and catch-up
+  * [[payload]] (a shard's own rows), [[search]] and [[totalCells]].
   *
   * PROBE: each shard answers its own pruned top-k (nProbe of ITS cells),
   * and the global answer is the k best of the S×k candidates; driver
@@ -40,17 +40,12 @@ import org.apache.spark.sql.functions._
   */
 object ShardedIvf extends Sharded(IndexKind.Ivf) {
 
-  /** Build the S′ composition at `newPath` from the old root's own
-    * logical shard tables; a reused target root drops its width sidecar.
+  /** An IVF shard's rows carry their own full-precision vectors, so every
+    * reshard (blocking or catch-up) is artifact-sourced; `fp` is unused.
     */
-  private def rebuildFrom(spark: SparkSession, oldPath: String,
-                          oldShards: Int, newPath: String, newShards: Int,
-                          nCellsPerShard: Int): Unit = {
-    build(spark, logical(spark, oldPath, oldShards)
-      .select(col("vec_id"), col("label"), col("embedding")),
-      newPath, newShards, nCellsPerShard)
-    graft.sources.Versioned.metaBackend.deleteRecursively(s"$newPath/${kind.cal.file}")
-  }
+  protected def payload(spark: SparkSession, rows: DataFrame,
+                        fp: Option[String], fpw: Option[Long]): DataFrame =
+    rows.select(col("vec_id"), col("label"), col("embedding"))
 
   /** RESHARD: rebuild the composition at a new shard count S′ from the
     * old artifact's OWN shards — the growth verb for the shard count
@@ -79,181 +74,10 @@ object ShardedIvf extends Sharded(IndexKind.Ivf) {
     * rebuild is the correct trade).
     */
   def reshard(spark: SparkSession, oldPath: String, oldShards: Int,
-              newPath: String, newShards: Int,
-              nCellsPerShard: Int = -1): Unit = {
-    requireNewRoot(oldPath, oldShards, newPath)
+              newPath: String, newShards: Int, nCellsPerShard: Int = -1): Unit =
     graft.sources.Versioned.withWriterLease(oldPath) {
-      rebuildFrom(spark, oldPath, oldShards, newPath, newShards, nCellsPerShard)
+      rebuildAt(spark, oldPath, oldShards, newPath, newShards, nCellsPerShard, None)
     }
-  }
-
-  /** CATCH-UP reshard, phase 1 of 2 — the bounded-stall protocol for
-    * streaming-fed indexes ([[reshard]] holds the old root's writer lease
-    * across read+build+GC, which at 10⁹ vectors means hours of blocked
-    * ingest). This phase takes NO lease on the old root: it builds the S′
-    * composition at `newPath` from a SNAPSHOT of the old shard tables
-    * (the tagging pass materializes it in one read — appends landing
-    * after that listing miss it and are replayed in phase 2). MUST be
-    * followed by [[reshardCatchUpReplay]] before cutover — publishing a
-    * phase-1-only artifact silently drops every append that landed
-    * during the build.
-    */
-  def reshardCatchUpBuild(spark: SparkSession, oldPath: String, oldShards: Int,
-                          newPath: String, newShards: Int,
-                          nCellsPerShard: Int = -1): Unit = {
-    requireNewRoot(oldPath, oldShards, newPath)
-    // captured BEFORE the corpus read: an append racing the capture lands
-    // in the snapshot AND above the watermark, and the replay's
-    // idempotent append absorbs the overlap — the conservative direction;
-    // the reverse order could silently drop a racing append from both
-    val marks = watermarks(spark, oldPath, oldShards)
-    rebuildFrom(spark, oldPath, oldShards, newPath, newShards, nCellsPerShard)
-    // recorded at the NEW root so the replay (possibly another process)
-    // knows which appends and deletes the snapshot already holds
-    graft.sources.Versioned.metaBackend.writeAtomic(s"$newPath/catchup.META", marks)
-  }
-
-  /** Every old shard's current watermarks as `catchup.META` tokens
-    * "r:w:dw:g" — the snapshot capture of [[reshardCatchUpBuild]] and the
-    * post-replay advance of [[reshardCatchUpReplay]]:
-    *   w  — append-seq watermark (last qerr seq; -1 when no qerr exists,
-    *        matching appendIvf's first seq = 0 — recording 0 would make
-    *        since(0) silently drop the seq-0 window append);
-    *   dw — delete-journal watermark (AppendLog.delSeqWatermark; -1 when
-    *        no journal exists);
-    *   g  — Tombstones.generation: the replay trusts the delete journal
-    *        only if g is UNCHANGED, because a mid-window compact applies
-    *        pending tombstones physically and clears both the sidecar
-    *        and the journal — the one transition neither can witness.
-    */
-  private def watermarks(spark: SparkSession, oldPath: String,
-                         oldShards: Int): String =
-    (0 until oldShards).map { r =>
-      val shardPath = s"$oldPath/shard=$r"
-      val w = graft.sources.VectorIndexStore.nextSeq(spark, shardPath) - 1
-      val dw = graft.sources.AppendLog.delSeqWatermark(spark, shardPath)
-      val g = graft.sources.Tombstones.generation(shardPath)
-      s"$r:$w:$dw:$g"
-    }.mkString(" ")
-
-  /** One old shard's snapshot watermarks: append seq, and (v2 META) the
-    * delete-journal seq + tombstone generation the delete axis trusts.
-    */
-  private case class CatchupMark(appendSeq: Long,
-                                 delAxis: Option[(Long, Long)])
-
-  /** Parse `catchup.META` — v2 tokens "r:w:dw:g"; v1 ("r:w", written by
-    * an older snapshot build) parses with no delete axis, so the replay
-    * falls back to the reverse delta for removals.
-    */
-  private def catchupWatermarks(newPath: String): Option[Map[Int, CatchupMark]] =
-    graft.sources.Versioned.metaBackend.readString(s"$newPath/catchup.META")
-      .map(_.trim.split("\\s+").map { tok =>
-        tok.split(":") match {
-          case Array(r, w, dw, g) =>
-            r.toInt -> CatchupMark(w.toLong, Some((dw.toLong, g.toLong)))
-          case Array(r, w) => r.toInt -> CatchupMark(w.toLong, None)
-          case other => throw new IllegalStateException(
-            s"unparseable catchup.META token '${other.mkString(":")}' at $newPath")
-        }
-      }.toMap)
-
-  /** CATCH-UP reshard, phase 2 of 2 — the ONLY window appends block:
-    * under the old root's writer lease, the delta that landed during
-    * phase 1 is hash-routed into the S′ artifact through the idempotent
-    * [[append]], and the window's deletes are forwarded. The caller cuts
-    * over INSIDE the same lease scope (publish the new identity / flip
-    * the serving pointer, then GC the old root) so nothing can land after
-    * the replay and be lost to the GC. Returns the replayed row count —
-    * the measured catch-up size, which the drill grades against the
-    * blocked window.
-    */
-  def reshardCatchUpReplay(spark: SparkSession, oldPath: String,
-                           oldShards: Int, newPath: String,
-                           newShards: Int): Long = {
-    verifyShards(oldPath, oldShards)
-    graft.sources.Versioned.withWriterLease(oldPath) {
-      // DELTA-SHAPED when possible: each old shard's append log serves
-      // exactly the rows with seq above the snapshot's recorded watermark
-      // (graft.sources.AppendLog — I/O ∝ the delta, not the corpus).
-      // Per-shard fallback to the corpus anti-join when the log cannot
-      // prove completeness back to the watermark (legacy artifact, log
-      // cleared by a mid-window compact/retrain) or when no watermark
-      // was recorded (a snapshot built by older code).
-      lazy val snapshotIds = logical(spark, newPath, newShards).select("vec_id")
-      val wm = catchupWatermarks(newPath)
-      // dropDuplicates: a crash between AppendLog.record and the qerr
-      // watermark row makes the retried append re-record the same batch
-      // at the same seq — surplus log rows whose vec_ids must not
-      // double-materialize as physical rows (appendIvf's idempotence
-      // anti-join reads EXISTING presence only, not intra-batch dups)
-      val delta = Sharded.unionShards(oldPath, oldShards) { (r, shardPath) =>
-        wm.flatMap(_.get(r))
-          .flatMap(m => graft.sources.AppendLog.since(spark, shardPath, m.appendSeq))
-          .getOrElse {
-            kind.logical(spark, shardPath)
-              .select(col("vec_id"), col("label"), col("embedding"))
-              .join(snapshotIds, Seq("vec_id"), "left_anti")
-          }
-      }.dropDuplicates("vec_id")
-      val n = delta.count()
-      if (n > 0) append(spark, newPath, newShards, delta)
-      // DELETES that landed during phase 1 are invisible to the forward
-      // delta (they only REMOVE ids from the logical view, and an id the
-      // snapshot already captured is physically present in the new
-      // artifact — serving it would silently undo a takedown). JOURNAL
-      // path (cost ∝ deletes) when every shard's delete journal is
-      // trustworthy — its Tombstones.generation UNCHANGED since the
-      // snapshot (no mid-window compact turned pending tombstones into
-      // unjournaled physical absences): the window's removals are exactly
-      // the journal rows above each dw. Only WINDOW deletes forward: a
-      // pre-snapshot tombstone's id is already physically absent from the
-      // new root, and forwarding it would plant a stale sidecar row that
-      // silently hides a legitimate post-cutover re-add. Otherwise (a
-      // generation moved, a journal cannot prove completeness, or a v1
-      // META) the reverse delta ([[replayRemovals]]).
-      val journalDeletes: Option[Seq[DataFrame]] =
-        wm.flatMap { marks =>
-          val per = (0 until oldShards).map { r =>
-            val shardPath = s"$oldPath/shard=$r"
-            marks.get(r).flatMap(_.delAxis).flatMap { case (dw, g) =>
-              if (graft.sources.Tombstones.generation(shardPath) != g) None
-              else if (graft.sources.AppendLog
-                .delSeqWatermark(spark, shardPath) <= dw)
-                Some(Nil) // no window deletes on this shard
-              else graft.sources.AppendLog.deletesSince(spark, shardPath, dw)
-                .map(df => List(df))
-            }
-          }
-          if (per.forall(_.isDefined)) Some(per.flatMap(_.get)) else None
-        }
-      journalDeletes match {
-        case Some(dfs) if dfs.nonEmpty =>
-          // semi-join against the new root's PHYSICAL ids: a delete that
-          // raced the snapshot capture (landed after the dw capture but
-          // before the corpus materialization) is journaled ABOVE dw yet
-          // already physically absent from the new root — forwarding it
-          // would plant a stale sidecar row that hides a legitimate
-          // post-cutover re-add. Paid only when window deletes exist
-          // (takedowns mid-reshard are rare); the no-delete path stays
-          // delta-shaped.
-          val ids = dfs.reduce(_ unionAll _).distinct()
-            .join(physical(spark, newPath, newShards).select("vec_id"),
-              Seq("vec_id"), "left_semi")
-          if (!ids.isEmpty) delete(spark, newPath, newShards, ids)
-        case Some(_) => () // no window deletes anywhere
-        case None => replayRemovals(spark, oldPath, oldShards, newPath, newShards)
-      }
-      // the new artifact is now current up to each old shard's PRESENT
-      // state (the old lease is held — nothing lands mid-replay), so
-      // advance the recorded watermarks on BOTH axes: a repeated replay
-      // serves an empty delta instead of re-reading the same journal rows
-      if (wm.isDefined)
-        graft.sources.Versioned.metaBackend.writeAtomic(
-          s"$newPath/catchup.META", watermarks(spark, oldPath, oldShards))
-      n
-    }
-  }
 
   /** Per-shard drift check + recall-gated retrain
     * (`retrainIvfIfNeeded` on each shard artifact) through the shared

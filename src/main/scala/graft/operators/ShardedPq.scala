@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   *     the same cold store the re-rank already consults);
   *   - RESHARD re-encodes from the full-precision store at S′ (decoding
   *     codes would bake quantization error into the new artifact): the
-  *     store's `reshardShardedPq`, and the fp-store catch-up pair here;
+  *     store's `reshardShardedPq`, and the catch-up reshard through the
+  *     fp-store [[payload]] here;
   *   - PROBE ([[search]] / [[AnnEval.shardedPqTopK]]): each shard
   *     ADC-scores its probed cells and keeps ITS shortlist (membership is
   *     disjoint, so shortlists union without loss), one exact cosine
@@ -33,117 +34,25 @@ import org.apache.spark.sql.functions._
   */
 object ShardedPq extends Sharded(IndexKind.Pq) {
 
-  /** CATCH-UP reshard for the ENCODED composition, phase 1 of 2 — the
-    * bounded-stall protocol ([[ShardedIvf.reshardCatchUpBuild]]'s shape).
-    * Takes NO lease on the old root: the corpus-sized RE-ENCODE (from the
-    * cold full-precision store scoped to the old root's logical
-    * membership) runs while appends keep landing on the old generation.
-    * MUST be followed by [[reshardCatchUpReplay]] before cutover.
-    *
-    * No journal, unlike the IVF protocol: the encoded tables are ~32×
-    * narrower than full-precision, so the replay's delta discovery is an
-    * id-column anti-join over CODES — already the cheap shape the IVF
-    * append log exists to reach. The snapshot is simply the membership
-    * the build read.
+  /** An encoded shard holds codes, not vectors: the payload of `rows` is
+    * the full-precision store `fp` scoped to their ids (latest-wins, so a
+    * window re-add serves its NEWEST payload). With a snapshot watermark
+    * `fpw`, the fetch first tries the window alone — FpStore's per-upsert
+    * seq stamps let `seq > fpw` skip every pre-window file by footer
+    * stats, so the blocked window does not re-read the full-width store
+    * for a batch-sized delta — and takes it only when it covers every id
+    * (an appender may legally upsert fp BEFORE the snapshot and append
+    * codes after); otherwise the membership-scoped full read.
     */
-  def reshardCatchUpBuild(spark: SparkSession, oldPath: String,
-                          oldShards: Int, newPath: String, newShards: Int,
-                          fpPath: String, nCellsPerShard: Int = -1): Unit = {
-    requireNewRoot(oldPath, oldShards, newPath)
-    // fp watermark captured BEFORE the membership read — the conservative
-    // direction: an upsert racing the capture lands above the watermark
-    // AND (if its codes landed too) in the snapshot, and the replay's
-    // delta semi-join absorbs the overlap
-    val fpw = graft.sources.FpStore.maxSeq(spark, fpPath)
-    build(spark, graft.sources.FpStore.readMember(spark, fpPath,
-      logical(spark, oldPath, oldShards).select("vec_id")),
-      newPath, newShards, nCellsPerShard)
-    // a reused target root must not serve a depth sized for another S
-    graft.sources.Versioned.metaBackend.deleteRecursively(s"$newPath/${kind.cal.file}")
-    // recorded at the NEW root so the replay (possibly another process)
-    // can fetch the window's payloads file-pruned instead of re-reading
-    // the full-width fp store
-    graft.sources.Versioned.metaBackend.writeAtomic(s"$newPath/catchup.META",
-      s"fpw:$fpw")
-  }
-
-  /** CATCH-UP reshard phase 2 — the ONLY window external appenders
-    * block: under the old root's writer lease, reconcile BOTH axes with
-    * id-column anti-joins over the narrow encoded tables:
-    *
-    *   - APPENDS that landed during phase 1: old-logical ids absent from
-    *     the new root's physical codes → their full-precision rows fetch
-    *     from the fp store and re-encode through the idempotent
-    *     [[append]]. Every appender must [[graft.sources.FpStore.upsert]]
-    *     BEFORE appending codes (the sinks do; the require makes an
-    *     appender that skipped it loud, not a silent drop).
-    *   - DELETES that landed during phase 1: the reverse delta
-    *     ([[replayRemovals]]).
-    *
-    * Naturally idempotent with no watermark state: after a replay the
-    * new root's physical ids ⊇ the old logical view, so a repeat serves
-    * an empty delta. The caller cuts over inside the same lease scope.
-    * Returns the replayed append count.
-    */
-  def reshardCatchUpReplay(spark: SparkSession, oldPath: String,
-                           oldShards: Int, newPath: String, newShards: Int,
-                           fpPath: String): Long = {
-    verifyShards(oldPath, oldShards)
-    graft.sources.Versioned.withWriterLease(oldPath) {
-      // materialized ONCE (eager local checkpoint): the delta plan reads
-      // both roots' id columns, and its consumers (count, the window
-      // fetch's semi-join, S per-shard append slices) would each
-      // re-evaluate those corpus-id scans — and a plain persist would be
-      // UNSAFE here (the append below refreshes the new root's listing,
-      // invalidating a cached plan over it; the checkpoint pins the data)
-      val delta = ScaleOps.checkpointed(
-        logical(spark, oldPath, oldShards).select("vec_id")
-          .join(physical(spark, newPath, newShards).select("vec_id"),
-            Seq("vec_id"), "left_anti").distinct())
-      val n = delta.count()
-      if (n > 0) {
-        // Payload fetch, DELTA-SHAPED when possible: the snapshot's fp
-        // watermark (catchup.META) + FpStore's per-batch seq stamps let
-        // the scan prune every pre-window file by footer stats — the
-        // blocked window must not re-read the full-width fp store to
-        // fetch a batch-sized delta (here the fp store's own append-only
-        // layout is the journal). FpStore.since/read resolve max-seq per
-        // id (latest-wins), so a window re-add serves its NEWEST
-        // payload. Falls back to the full semi-join scan when the
-        // watermark is absent (legacy snapshot) or the window files
-        // don't cover the delta (an appender that upserted fp BEFORE
-        // the snapshot but appended codes after — legal under the
-        // upsert-then-append contract). Each fetch is materialized ONCE
-        // (checkpoint) and its count reused: the coverage check, the
-        // require, and the S routed append slices must not re-run the
-        // fp-window join per consumer.
-        val fpw = graft.sources.Versioned.metaBackend
-          .readString(s"$newPath/catchup.META")
-          .map(_.trim).filter(_.startsWith("fpw:"))
-          .flatMap(_.stripPrefix("fpw:").toLongOption)
-        val windowRows = fpw.map(w => ScaleOps.checkpointed(
-          graft.sources.FpStore.since(spark, fpPath, w)
-            .join(delta, Seq("vec_id"), "left_semi")))
-        val rows = windowRows.filter(_.count() == n).getOrElse {
-          ScaleOps.checkpointed(graft.sources.FpStore.read(spark, fpPath)
-            .join(delta, Seq("vec_id"), "left_semi"))
-        }
-        val got = rows.count()
-        require(got == n,
-          s"catch-up replay found $n window appends but only $got have " +
-            "full-precision rows — every appender must FpStore.upsert " +
-            "before appending codes, or the replay would silently drop " +
-            "the difference")
-        append(spark, newPath, newShards, rows)
-      }
-      // advance the watermark so a repeated replay's (empty) fetch stays
-      // file-pruned too
-      graft.sources.Versioned.metaBackend.writeAtomic(
-        s"$newPath/catchup.META",
-        s"fpw:${graft.sources.FpStore.maxSeq(spark, fpPath)}")
-      replayRemovals(spark, oldPath, oldShards, newPath, newShards)
-      n
-    }
+  protected def payload(spark: SparkSession, rows: DataFrame,
+                        fp: Option[String], fpw: Option[Long]): DataFrame = {
+    val store = fp.getOrElse(throw new IllegalArgumentException(
+      "an encoded composition reshards from its full-precision store: pass fp"))
+    val ids = rows.select("vec_id")
+    fpw.map(w => ScaleOps.checkpointed(graft.sources.FpStore.since(spark, store, w)
+        .join(ids, Seq("vec_id"), "left_semi")))
+      .filter(_.count() == ids.count())
+      .getOrElse(graft.sources.FpStore.readMember(spark, store, ids))
   }
 
   /** Per-shard drift check + recall-gated retrain (`retrainPqIfNeeded`

@@ -1222,7 +1222,7 @@ object VectorQueries extends QuerySet {
     //     resharded artifact hides them (with the appends of the same
     //     window present), closing the lost-delete race the snapshot
     //     build opens. Forwarding is delta-shaped: the delete JOURNAL
-    //     (AppendLog.recordDelete) serves exactly the window's ids.
+    //     (DeleteLog.record) serves exactly the window's ids.
     //   - catchup_survives_compact: the same window race under the
     //     DOCUMENTED maintenance policy — a tombstone-fraction compact
     //     runs INSIDE the window, applying the deletes physically on the

@@ -28,4 +28,19 @@ object Fs {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     ()
   }
+
+  /** Whether every data file of the parquet table at `dir` (the files
+    * Spark's own listing reads, partition directories included) declares
+    * `column` in its OWN footer. A directory can mix files written before
+    * and after a column was introduced, and Spark infers a directory's
+    * schema from a single footer, so only a per-file check can tell.
+    * False when `dir` does not exist.
+    */
+  def everyParquetFileHas(spark: SparkSession, dir: String, column: String): Boolean =
+    exists(spark, dir) && spark.read.parquet(dir).inputFiles.forall { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), spark.sparkContext.hadoopConfiguration))
+      try reader.getFileMetaData.getSchema.containsField(column) finally reader.close()
+    }
 }

@@ -1,7 +1,8 @@
 package graft.sources
 
-import graft.operators.{IndexKind, IvfIndex, PqIndex, ShardedIvf, ShardedPq}
+import graft.operators.{IndexKind, IvfIndex, PqIndex, ScaleOps, ShardedIvf, ShardedPq}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Build-once / probe-many lifecycle for the ANN index family.
   *
@@ -113,7 +114,8 @@ object VectorIndexStore {
     * DRIFT BASELINE — the full-corpus mean error (assignment distortion /
     * quantization error) under the fresh model, logged as `qerr` row 0 and
     * recorded in the `qerr.BASELINE` sidecar that [[retrainIfNeeded]]
-    * compares appends against. Called by [[ensure]] (inside its atomic
+    * compares appends against; the rows carry that row's seq. Called by
+    * [[ensure]] (inside its atomic
     * temp-dir publication), by every sharded build per shard, and by the
     * streaming first-ingest path (which creates the index on the live
     * path, the reference's create-index-on-first-ingest). `nCells` sizes
@@ -125,8 +127,9 @@ object VectorIndexStore {
   private[graft] def buildAt(spark: SparkSession, kind: IndexKind, dir: String,
                              vectors: DataFrame, nCells: Int): Unit = {
     val model = kind.train(spark, vectors, nCells)
-    kind.save(spark, model, kind.rows(spark, vectors, model), dir)
-    stampBaseline(spark, dir, kind.stats(spark, vectors, model))
+    val seq = nextSeq(spark, dir)
+    kind.save(spark, model, stamped(kind.rows(spark, vectors, model), seq), dir)
+    stampBaseline(spark, dir, seq, kind.stats(spark, vectors, model))
   }
 
   def buildIvfAt(spark: SparkSession, dir: String, vectors: DataFrame, nCells: Int = 16): Unit =
@@ -245,7 +248,7 @@ object VectorIndexStore {
     * `reshardCatchUpReplay`): the corpus-sized rebuild runs from a
     * SNAPSHOT with no old-root lease — appends keep landing — and the
     * old lease is taken only for the replay of the landed delta
-    * (per-shard anti-joins, batch-sized), the publish rename, and the
+    * (each shard's rows stamped after the snapshot), the publish rename, and the
     * GC, so nothing lands after the replay and is lost. The target
     * collision check runs under the NEW identity's lease, as in
     * [[reshardPublish]]. The publish rename is a POSIX primitive, so a
@@ -277,8 +280,7 @@ object VectorIndexStore {
         markComplete(tmp)
         Option(new java.io.File(newPath).getParentFile).foreach(_.mkdirs())
         if (!new java.io.File(tmp).renameTo(new java.io.File(newPath))) {
-          import scala.reflect.io.Directory
-          new Directory(new java.io.File(tmp)).deleteRecursively()
+          Versioned.metaBackend.deleteRecursively(tmp)
           throw new IllegalStateException(
             s"could not publish $newPath (rename failed)")
         }
@@ -452,32 +454,33 @@ object VectorIndexStore {
     * existing model: assignment distortion / quantization error). A
     * drifting corpus shows a rising series, the signal that the scheduled
     * retrain is due ([[retrainIfNeeded]]; asserted in ArtifactStoresSpec).
-    * A journaled kind also records the batch in its [[AppendLog]] first.
+    * The written rows carry the same seq, so the data table is its own
+    * append journal ([[IndexKind.journal]]). Returns the rows written (0
+    * for a redelivered batch, which logs no watermark row).
     */
   private[graft] def append(spark: SparkSession, kind: IndexKind, path: String,
-                            newVectors: DataFrame): Unit =
+                            newVectors: DataFrame): Long =
     Versioned.withWriterLease(path) {
-    val model = kind.loadModel(spark, path)
-    val dir = kind.dataDir(path)
-    val existing = spark.read.parquet(dir).select("vec_id").distinct()
-    // NOT persisted, deliberately: `fresh` references `dir`, and the
-    // append-write below triggers refreshByPath(dir), which invalidates
-    // any CACHED plan over it — the recompute would then anti-join the
-    // just-appended rows and read back EMPTY. An uncached plan keeps the
-    // file listing pinned from creation, so recomputes stay correct.
-    val fresh = newVectors.join(existing, Seq("vec_id"), "left_anti")
-    if (fresh.isEmpty) return // redelivered batch: nothing to write, no watermark row
-    // the seq this batch takes; the lease makes the peek race-free
-    val seq = nextSeq(spark, path)
-    // append-log FIRST (AppendLog's crash-ordering rationale)
-    if (kind.journaled) AppendLog.record(spark, path, fresh, seq)
-    // error stats materialized BEFORE the write (belt to the pinned
-    // listing's suspenders: a driver-side pair cannot re-read `dir`)
-    val stats = statsMeanOf(spark, kind.stats(spark, fresh, model))
-    kind.rows(spark, fresh, model)
-      .write.mode("append").partitionBy("cell").parquet(dir)
-    logWatermark(spark, path, seq, stats)
-  }
+      val model = kind.loadModel(spark, path)
+      val dir = kind.dataDir(path)
+      val existing = spark.read.parquet(dir).select("vec_id").distinct()
+      // executed ONCE for its three consumers (count, error stats, rows
+      // write) by an eager checkpoint; a persist() would be unsafe — the
+      // write's refreshByPath(dir) drops a cached plan over `dir`, and the
+      // recompute would anti-join the just-written rows and read EMPTY
+      val fresh = ScaleOps.checkpointed(
+        newVectors.join(existing, Seq("vec_id"), "left_anti"))
+      val n = fresh.count()
+      if (n > 0) {
+        // the seq this batch takes; the lease makes the peek race-free
+        val seq = nextSeq(spark, path)
+        val stats = statsMeanOf(spark, kind.stats(spark, fresh, model))
+        stamped(kind.rows(spark, fresh, model), seq)
+          .write.mode("append").partitionBy("cell").parquet(dir)
+        logWatermark(spark, path, seq, stats)
+      }
+      n
+    }
 
   def appendIvf(spark: SparkSession, path: String, newVectors: DataFrame): Unit =
     append(spark, IndexKind.Ivf, path, newVectors)
@@ -498,7 +501,10 @@ object VectorIndexStore {
                              nCells: Int): Unit =
     Versioned.withWriterLease(path) {
     val hadPointer = Versioned.readPointer(path, kind.table).isDefined
-    val all = kind.logical(spark, path)
+    // rows keep their write seq (a catch-up window stays `seq > w` across
+    // the rewrite); rows of pre-seq files rewrite with a null seq, or the
+    // whole table without the column (IndexKind.journal)
+    val all = kind.journal(spark, path)
     // an ENTIRELY tombstoned corpus rewrites to zero rows — a partitionBy
     // write then emits NO files (partition dirs only exist per value) and
     // the published version is unreadable (schema inference finds
@@ -512,8 +518,7 @@ object VectorIndexStore {
         "(every row is tombstoned) — an empty partitioned rewrite is " +
         "unreadable; keep serving through the sidecar, or GC/rebuild")
     Versioned.publish(path, kind.table, -1L) { v =>
-      all.repartition(nCells, org.apache.spark.sql.functions.col("cell"))
-        .write.partitionBy("cell").parquet(v)
+      all.repartition(nCells, col("cell")).write.partitionBy("cell").parquet(v)
     }
     // the plain legacy dir has had no new readers since the first pointer
     // publish — remove it once a SECOND compaction confirms that
@@ -522,10 +527,7 @@ object VectorIndexStore {
     // physically; publish-then-clear (a crash in between leaves
     // tombstones that anti-join nothing — never resurrected rows)
     Tombstones.clear(spark, path)
-    // the rewrite also bounds the append log's size (AppendLog.clear doc);
-    // a catch-up replay whose watermark predates this clear falls back to
-    // the anti-join via the FROM completeness check
-    if (kind.journaled) AppendLog.clear(spark, path)
+    DeleteLog.clear(spark, path)
   }
 
   def compactIvf(spark: SparkSession, path: String, nCells: Int = 16): Unit =
@@ -555,17 +557,17 @@ object VectorIndexStore {
     * bounded staleness under the same measured policy (SCALE.md round-15
     * §2), with the retrain drift gate as the backstop.
     *
-    * A journaled kind's deletes JOURNAL as well as tombstone
-    * ([[AppendLog.recordDelete]], journal-first — its crash-ordering
-    * note): the sidecar alone cannot witness a removal across a mid-window
-    * compact (the physical apply clears it), and the catch-up reshard
-    * needs exactly that witness to keep its delta replay delete-safe.
-    * Cost ∝ deleted ids, like the sidecar write itself.
+    * Deletes JOURNAL as well as tombstone ([[DeleteLog.record]],
+    * journal-first — its crash-ordering note): the sidecar alone cannot
+    * witness a removal across a mid-window compact (the physical apply
+    * clears it), and the catch-up reshard needs exactly that witness to
+    * keep its delta replay delete-safe. Cost ∝ deleted ids, like the
+    * sidecar write itself.
     */
   private[graft] def delete(spark: SparkSession, kind: IndexKind, path: String,
                             ids: DataFrame): Unit =
     Versioned.withWriterLease(path) {
-      if (kind.journaled) AppendLog.recordDelete(spark, path, ids)
+      DeleteLog.record(spark, path, ids)
       Tombstones.add(spark, path, ids)
     }
 
@@ -639,13 +641,17 @@ object VectorIndexStore {
       .coalesce(1).write.mode("append").parquet(s"$path/qerr")
   }
 
+  /** The data-table rows of one write, stamped with the qerr `seq` it logs. */
+  private def stamped(rows: DataFrame, seq: Long): DataFrame =
+    rows.withColumn(IndexKind.SeqColumn, lit(seq))
+
   /** A fresh geometry's full-corpus error (`stats`, under the model just
-    * built or retrained) logged as the next watermark and recorded as the
-    * drift baseline, with drift counted from the row after it.
+    * built or retrained) logged as watermark `seq` — the [[nextSeq]] its
+    * rows were [[stamped]] with — and recorded as the drift baseline, with
+    * drift counted from the row after it.
     */
-  private def stampBaseline(spark: SparkSession, path: String,
+  private def stampBaseline(spark: SparkSession, path: String, seq: Long,
                             stats: DataFrame): Unit = {
-    val seq = nextSeq(spark, path)
     val (n, mean) = statsMeanOf(spark, stats)
     logWatermark(spark, path, seq, (n, mean))
     writeBaseline(path, mean, seq + 1)
@@ -884,14 +890,15 @@ object VectorIndexStore {
       val parts = kind.modelParts(spark, model)
       val hadPointer = (kind.table +: parts.map(_._1))
         .filter(Versioned.readPointer(path, _).isDefined)
+      val seq = nextSeq(spark, path)
       Versioned.publish(path, kind.table, -1L) { v =>
         // clustered: one file per cell (IvfIndex.save's rationale)
-        rows.repartition(org.apache.spark.sql.functions.col("cell"))
+        stamped(rows, seq).repartition(col("cell"))
           .write.partitionBy("cell").parquet(v)
       }
       parts.foreach { case (name, write) => Versioned.publish(path, name, -1L)(write) }
       hadPointer.foreach(deleteLegacy(path, _))
-      stampBaseline(spark, path, kind.stats(spark, corpus, model))
+      stampBaseline(spark, path, seq, kind.stats(spark, corpus, model))
       invalidateCal(path, kind.cal)
       // the rewrite applied any tombstones physically; a stale sidecar left
       // behind would silently hide the next append of a formerly-deleted
@@ -901,7 +908,7 @@ object VectorIndexStore {
       // leaves tombstones that anti-join nothing — the same benign
       // publish-then-clear gap as compact's)
       Tombstones.clear(spark, path)
-      if (kind.journaled) AppendLog.clear(spark, path) // rewrite bounds the log (compact note)
+      DeleteLog.clear(spark, path)
       true
     } finally rows.unpersist()
   }

@@ -40,16 +40,17 @@ private[streaming] object ArrivalSinks {
 
   /** The per-geometry verb set the shared batch body is parameterized
     * by: the sharded composition itself (build, routed append/delete,
-    * per-shard compact) plus what the sinks add per geometry. `persist`
-    * runs FIRST on every non-empty upsert batch (the encoded geometry's
-    * cold full-precision store — [[graft.sources.FpStore]], under its
-    * writer lease; no-op for the self-contained IVF artifacts).
+    * per-shard compact, the growth loop's catch-up reshard) plus the
+    * per-batch `maintain` sweep. `fp` is the encoded geometry's cold
+    * full-precision store ([[graft.sources.FpStore]]): every non-empty
+    * upsert batch persists there FIRST (under its writer lease), and the
+    * growth loop re-encodes from it; None for the self-contained IVF
+    * artifacts.
     */
   private[streaming] case class GeomVerbs(
     sharded: graft.operators.Sharded,
     maintain: (SparkSession, String, Int) => Unit,
-    grow: (SparkSession, String, Long) => Unit,
-    persist: (SparkSession, DataFrame) => Unit)
+    fp: Option[String])
 
   private[streaming] def ivfVerbs(): GeomVerbs = GeomVerbs(
     sharded = graft.operators.ShardedIvf,
@@ -58,21 +59,12 @@ private[streaming] object ArrivalSinks {
         continueOnGateFailure = true)
       ()
     },
-    grow = (sp, h, maxRows) => {
-      graft.operators.ShardedHome.reshardIfNeeded(sp, h, maxRows)
-      ()
-    },
-    persist = (_, _) => ())
+    fp = None)
 
-  private[streaming] def pqVerbs(fpPath: String): GeomVerbs =
-    GeomVerbs(
-      sharded = graft.operators.ShardedPq,
+  private[streaming] def pqVerbs(fp: Option[String]): GeomVerbs =
+    GeomVerbs(graft.operators.ShardedPq,
       maintain = (_, _, _) => (), // PQ retrain is external scheduled work
-      grow = (sp, h, maxRows) => {
-        graft.operators.ShardedHome.reshardPqIfNeeded(sp, h, fpPath, maxRows)
-        ()
-      },
-      persist = (sp, vecs) => graft.sources.FpStore.upsert(sp, fpPath, vecs))
+      fp = fp)
 
   /** The ids of `ids` (one vec_id column) one shard's sidecar tombstones. */
   private def shardTombstoned(sp: SparkSession, shardPath: String,
@@ -100,7 +92,8 @@ private[streaming] object ArrivalSinks {
     val upsEmpty = ups.isEmpty
     // persist holds the fp store's writer lease (serialized with an
     // external vacuum) — contention is transient maintenance, retried
-    if (!upsEmpty) StreamingOps.retryOnContention() { verbs.persist(sp, ups) }
+    if (!upsEmpty) verbs.fp.foreach(p =>
+      StreamingOps.retryOnContention() { graft.sources.FpStore.upsert(sp, p, ups) })
     def applyDeletes(dir: String, sN: Int): Unit =
       if (!dels.isEmpty) StreamingOps.retryOnContention() {
         verbs.sharded.delete(sp, dir, sN, dels)
@@ -181,7 +174,7 @@ private[streaming] object ArrivalSinks {
         // minus sidecar-sized tombstone counts — metadata-cheap),
         // catch-up reshard + pointer flip when over the line
         if (maxShardRows != Long.MaxValue)
-          verbs.grow(sp, home, maxShardRows)
+          graft.operators.ShardedHome.grow(sp, home, maxShardRows, verbs.sharded, verbs.fp)
     }
   }
 

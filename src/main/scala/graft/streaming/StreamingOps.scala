@@ -782,7 +782,7 @@ object StreamingOps {
       val dels = net.filter(col("op") === "del")
         .select(col("doc_id").as("vec_id"))
       ArrivalSinks.processBatch(sp, shardedHome, shards,
-        ArrivalSinks.pqVerbs(fpStore), ups, dels,
+        ArrivalSinks.pqVerbs(Some(fpStore)), ups, dels,
         maxShardRows, readdCompacts = true)
     })
   }
@@ -843,12 +843,8 @@ object StreamingOps {
         batch.filter(col("op") === "doc").select("doc_id", "text"))
       val dels = batch.filter(col("op") === "del")
         .select(col("doc_id").as("vec_id"))
-      val verbs = fpStore match {
-        case Some(fp) => ArrivalSinks.pqVerbs(fp)
-        case None => ArrivalSinks.pqVerbs("")
-          .copy(persist = (_, _) => ())
-      }
-      ArrivalSinks.processBatch(sp, shardedHome, shards, verbs, ups, dels,
+      ArrivalSinks.processBatch(sp, shardedHome, shards,
+        ArrivalSinks.pqVerbs(fpStore), ups, dels,
         maxShardRows, readdCompacts = false)
     })
   }

@@ -245,225 +245,43 @@ class ShardedIvfSpec extends SparkTestBase with ShardedKinds {
   }
 
   test("catch-up reshard: appends land during the unleased build and the replay carries exactly the delta") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_shivf_cu").toString
-    val root = s"$tmp/ix"
-    val newRoot = s"$tmp/ix5"
-    val corpus = emb.select((col("vec_id") * 2).as("vec_id"), col("label"),
-      col("embedding"))
-    val tranche = emb.select((col("vec_id") * 2 + 1).as("vec_id"), col("label"),
-      transform(col("embedding"), x => x + lit(1.0f))
-        .cast("array<float>").as("embedding"))
-    val nCorpus = corpus.count()
-    val nTranche = tranche.count()
-    ShardedIvf.build(spark, corpus, root, shards = 3, nCellsPerShard = 8)
-    // PHASE 1 — snapshot rebuild at S'=5 holds NO lease on the old root
-    ShardedIvf.reshardCatchUpBuild(spark, root, 3, newRoot, 5,
-      nCellsPerShard = 8)
-    // ... so an append lands DURING the reshard — under the blocking
-    // verb this interleaving is impossible (reshard holds the old lease
-    // for read+build+GC); here it is the protocol's defining scenario
-    ShardedIvf.append(spark, root, 3, tranche)
-    // PHASE 2 — the replay finds exactly the landed delta and routes it
-    // through the idempotent append
-    assert(ShardedIvf.reshardCatchUpReplay(spark, root, 3, newRoot, 5)
-      == nTranche, "replay must carry exactly the appends the snapshot missed")
-    // replay is idempotent: nothing further to carry
-    assert(ShardedIvf.reshardCatchUpReplay(spark, root, 3, newRoot, 5) == 0L)
-    // the caught-up artifact is disjoint-total over corpus+tranche ...
-    val ids = (0 until 5).map { r =>
-      IvfIndex.loadVectors(spark, s"$newRoot/shard=$r").select("vec_id")
-    }.reduce(_ unionAll _)
-    assert(ids.count() == nCorpus + nTranche &&
-      ids.distinct().count() == nCorpus + nTranche)
-    // ... and full probe over it is exact INCLUDING the replayed tranche
-    val probe = tranche.orderBy("vec_id")
-      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].head()
-    val top = ShardedIvf.search(spark, newRoot, 5, probe._2, k = 1,
-      nProbe = Int.MaxValue).select("vec_id", "sim")
-      .as[(Long, Double)].head()
-    assert(top._2 == 1.0, s"replayed vector must be served: $top")
+    catchUpCarriesDeltaCase(ivfKind)
   }
 
-  test("catch-up replay is delta-shaped via the append log; falls back to the anti-join when the log can't prove completeness") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_shivf_alog").toString
-    val root = s"$tmp/ix"
-    ShardedIvf.build(spark, emb, root, shards = 3, nCellsPerShard = 8)
-    val tranche = emb.limit(30)
-      .select((col("vec_id") + 700000L).as("vec_id"), col("label"), col("embedding"))
-    // LOG PATH: snapshot records watermarks; the window append writes the
-    // per-shard logs; the replay must serve the delta from them
-    val newRoot = s"$tmp/ix2"
-    ShardedIvf.reshardCatchUpBuild(spark, root, 3, newRoot, 2, nCellsPerShard = 8)
-    assert(graft.sources.Versioned.metaBackend
-      .readString(s"$newRoot/catchup.META").isDefined,
-      "the snapshot build must record per-shard watermarks")
-    ShardedIvf.append(spark, root, 3, tranche)
-    assert((0 until 3).exists(r =>
-      graft.sources.AppendLog.completeFrom(s"$root/shard=$r").isDefined),
-      "the window append must have written per-shard append logs")
-    assert(ShardedIvf.reshardCatchUpReplay(spark, root, 3, newRoot, 2) == 30)
-    // idempotence through the ADVANCED watermark, not the anti-join: a
-    // second replay reads an empty delta from the log
-    assert(ShardedIvf.reshardCatchUpReplay(spark, root, 3, newRoot, 2) == 0L)
-    val ids = (0 until 2).map(r => IvfIndex
-      .loadVectors(spark, s"$newRoot/shard=$r").select("vec_id"))
-      .reduce(_ unionAll _)
-    assert(ids.filter(col("vec_id") >= 700000L).count() == 30)
-    // FALLBACK PATH: a mid-window compact clears the logs (completeness
-    // lost) — the replay must fall back to the corpus anti-join and still
-    // carry the delta
-    val root2 = s"$tmp/jx"
-    ShardedIvf.build(spark, emb, root2, shards = 3, nCellsPerShard = 8)
-    val newRoot2 = s"$tmp/jx2"
-    ShardedIvf.reshardCatchUpBuild(spark, root2, 3, newRoot2, 2, nCellsPerShard = 8)
-    ShardedIvf.append(spark, root2, 3, tranche)
-    ShardedIvf.compactShards(spark, root2, 3) // clears every append log
-    (0 until 3).foreach(r => assert(
-      graft.sources.AppendLog.completeFrom(s"$root2/shard=$r").isEmpty,
-      "compact must clear the log"))
-    assert(ShardedIvf.reshardCatchUpReplay(spark, root2, 3, newRoot2, 2) == 30,
-      "with the log gone the anti-join fallback must still find the delta")
-    val ids2 = (0 until 2).map(r => IvfIndex
-      .loadVectors(spark, s"$newRoot2/shard=$r").select("vec_id"))
-      .reduce(_ unionAll _)
-    assert(ids2.filter(col("vec_id") >= 700000L).count() == 30)
+  test("catch-up replay is delta-shaped via the seq-stamped rows, across a mid-window compact too") {
+    catchUpSeqJournalCase(ivfKind)
   }
 
   test("catch-up replay survives a mid-window tombstone compaction: deleted ids stay hidden in the new generation") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_shivf_dc").toString
-    val root = s"$tmp/ix"
-    val newRoot = s"$tmp/ix2"
-    ShardedIvf.build(spark, emb, root, shards = 3, nCellsPerShard = 8)
-    ShardedIvf.reshardCatchUpBuild(spark, root, 3, newRoot, 2, nCellsPerShard = 8)
-    // window: a takedown lands, THEN the documented maintenance policy
-    // runs its tombstone-fraction sweep — the per-shard compact applies
-    // the deletes PHYSICALLY on the old root and clears both the sidecar
-    // and the journals; before the generation marker the replay's
-    // forwarding read the now-empty sidecars and the new generation
-    // silently resurrected the ids (round-16 verdict, What's wrong #1)
-    val delIds = emb.filter(col("vec_id") % 9 === 4).select("vec_id")
-    val nDel = delIds.count()
-    val tranche = emb.limit(12)
-      .select((col("vec_id") + 800000L).as("vec_id"), col("label"), col("embedding"))
-    ShardedIvf.append(spark, root, 3, tranche)
-    ShardedIvf.delete(spark, root, 3, delIds)
-    assert(ShardedIvf.compactShardsIfDeleted(spark, root, 3,
-      maxDeletedFraction = 0.01) > 0,
-      "premise: the mid-window sweep must physically compact at least one shard")
-    (0 until 3).foreach { r =>
-      assert(graft.sources.Tombstones.read(spark, s"$root/shard=$r")
-        .forall(_.isEmpty), s"premise: shard $r sidecar must be cleared")
-    }
-    ShardedIvf.reshardCatchUpReplay(spark, root, 3, newRoot, 2)
-    val member = (0 until 2).map(r =>
-      IvfIndex.loadVectors(spark, s"$newRoot/shard=$r").select("vec_id"))
-      .reduce(_ unionAll _)
-    assert(member.filter(col("vec_id") % 9 === 4 &&
-      col("vec_id") < 800000L).count() == 0,
-      "a mid-window compact must not resurrect the window's deletes")
-    assert(member.filter(col("vec_id") >= 800000L).count() == 12,
-      "the window's appends must still be carried")
-    assert(member.count() == emb.count() - nDel + 12,
-      "the new generation must serve exactly the old root's logical view")
+    catchUpTombstoneCompactCase(ivfKind)
   }
 
   test("catch-up replay forwards only WINDOW deletes: a pre-snapshot tombstone leaves no stale sidecar row on the new root") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_shivf_ps").toString
-    val root = s"$tmp/ix"
-    val newRoot = s"$tmp/ix2"
-    ShardedIvf.build(spark, emb, root, shards = 3, nCellsPerShard = 8)
-    // PRE-snapshot delete: still pending (no compact) when the snapshot
-    // reads the logical view — the ids are physically ABSENT from the new
-    // root, so forwarding their tombstones would plant stale sidecar rows
-    // that hide a legitimate post-cutover re-add
-    val preDel = emb.filter(col("vec_id") % 13 === 5).select("vec_id")
-    ShardedIvf.delete(spark, root, 3, preDel)
-    ShardedIvf.reshardCatchUpBuild(spark, root, 3, newRoot, 2, nCellsPerShard = 8)
-    // WINDOW delete: must forward (the snapshot captured these ids)
-    val winDel = emb.filter(col("vec_id") % 13 === 6).select("vec_id")
-    ShardedIvf.delete(spark, root, 3, winDel)
-    ShardedIvf.reshardCatchUpReplay(spark, root, 3, newRoot, 2)
-    import spark.implicits._
-    val newTombs = (0 until 2).flatMap(r =>
-      graft.sources.Tombstones.read(spark, s"$newRoot/shard=$r")
-        .map(_.as[Long].collect().toSet))
-      .foldLeft(Set.empty[Long])(_ ++ _)
-    val preSet = preDel.as[Long].collect().toSet
-    val winSet = winDel.as[Long].collect().toSet
-    assert(newTombs.intersect(preSet).isEmpty,
-      "pre-snapshot tombstones are already physically applied in the new " +
-        "root — forwarding them would break the post-cutover re-add contract")
-    assert(winSet.subsetOf(newTombs),
-      "window deletes must be forwarded as live tombstones")
-    // and the re-add contract actually holds: a post-cutover append of a
-    // pre-snapshot-deleted id LANDS and is served (the snapshot acted as
-    // its compact)
-    val victim = preSet.head
-    val readd = emb.filter(col("vec_id") === victim)
-    ShardedIvf.append(spark, newRoot, 2, readd)
-    val served = (0 until 2).map(r =>
-      IvfIndex.loadVectors(spark, s"$newRoot/shard=$r").select("vec_id"))
-      .reduce(_ unionAll _).filter(col("vec_id") === victim).count()
-    assert(served == 1, "post-cutover re-add of a pre-snapshot-deleted id must land")
+    catchUpWindowDeletesOnlyCase(ivfKind)
   }
 
   test("catch-up watermark for a shard with no qerr log is -1: the seq-0 window append is not dropped") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_shivf_w0").toString
-    val root = s"$tmp/ix"
-    val newRoot = s"$tmp/ix2"
-    ShardedIvf.build(spark, emb, root, shards = 3, nCellsPerShard = 8)
-    // simulate a legacy artifact whose shards carry no qerr series: the
-    // first window append then takes seq = 0, and a watermark recorded as
-    // 0 would pass the FROM completeness check yet filter seq > 0 — the
-    // append silently vanishing from the replay
-    (0 until 3).foreach { r =>
-      graft.sources.Versioned.metaBackend.deleteRecursively(s"$root/shard=$r/qerr")
-      graft.sources.Versioned.metaBackend.deleteRecursively(s"$root/shard=$r/qerr.BASELINE")
-    }
-    ShardedIvf.reshardCatchUpBuild(spark, root, 3, newRoot, 2, nCellsPerShard = 8)
-    val tranche = emb.limit(9)
-      .select((col("vec_id") + 900000L).as("vec_id"), col("label"), col("embedding"))
-    ShardedIvf.append(spark, root, 3, tranche)
-    assert(ShardedIvf.reshardCatchUpReplay(spark, root, 3, newRoot, 2) == 9,
-      "the seq-0 window append must be replayed, not dropped by an " +
-        "off-by-one watermark")
-    val member = (0 until 2).map(r =>
-      IvfIndex.loadVectors(spark, s"$newRoot/shard=$r").select("vec_id"))
-      .reduce(_ unionAll _)
-    assert(member.filter(col("vec_id") >= 900000L).count() == 9)
+    catchUpNoQerrCase(ivfKind)
   }
 
-  test("crash-retry surplus journal rows do not double-materialize in the replay") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_shivf_cr").toString
-    val root = s"$tmp/ix"
-    val newRoot = s"$tmp/ix2"
-    ShardedIvf.build(spark, emb, root, shards = 3, nCellsPerShard = 8)
-    ShardedIvf.reshardCatchUpBuild(spark, root, 3, newRoot, 2, nCellsPerShard = 8)
-    val tranche = emb.limit(6)
-      .select((col("vec_id") + 950000L).as("vec_id"), col("label"), col("embedding"))
-    ShardedIvf.append(spark, root, 3, tranche)
-    // simulate the record()-then-crash-then-retry window: the same batch
-    // re-recorded at the same seq (qerr unchanged at crash time) leaves
-    // duplicate vec_id rows in the journal
-    val tagged = tranche.withColumn("shard",
-      pmod(xxhash64(col("vec_id")), lit(3L)).cast("int"))
-    (0 until 3).foreach { r =>
-      val slice = tagged.filter(col("shard") === r).drop("shard")
-      if (!slice.isEmpty) {
-        val qerr = s"$root/shard=$r/qerr"
-        val seq = spark.read.parquet(qerr).count() - 1
-        graft.sources.AppendLog.record(spark, s"$root/shard=$r", slice, seq)
-      }
-    }
-    assert(ShardedIvf.reshardCatchUpReplay(spark, root, 3, newRoot, 2) == 6,
-      "the deduped delta must carry each appended vec_id once")
-    val phys = (0 until 2).map(r =>
-      IvfIndex.loadVectorsRaw(spark, s"$newRoot/shard=$r").select("vec_id"))
-      .reduce(_ unionAll _).filter(col("vec_id") >= 950000L)
-    assert(phys.count() == 6 && phys.distinct().count() == 6,
-      "surplus journal rows must not become duplicate physical rows")
+  test("a crashed append (rows written, no qerr row) is replayed once, never double-materialized") {
+    catchUpCrashedAppendCase(ivfKind)
+  }
+
+  test("catch-up reshard: window appends carried, window deletes hidden even across a mid-window compact, replay idempotent") {
+    catchUpMidWindowSweepCase(ivfKind)
+  }
+
+  test("a catch-up window spanning a compact carries the batches on both sides of it") {
+    catchUpAcrossCompactCase(ivfKind)
+  }
+
+  test("a catch-up window spanning a retrain adds exactly the window's rows") {
+    catchUpAcrossRetrainCase(ivfKind)
+  }
+
+  test("a legacy-layout shard whose data files lack seq replays through the fallback") {
+    catchUpLegacyLayoutCase(ivfKind)
   }
 
   test("reshard drops calibration (a width for S says nothing about S') and can shrink") {

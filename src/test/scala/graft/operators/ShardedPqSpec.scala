@@ -242,73 +242,18 @@ class ShardedPqSpec extends SparkTestBase with ShardedKinds {
   }
 
   test("encoded catch-up reshard: window appends carried, window deletes hidden even across a mid-window compact, replay idempotent") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_shpq_cu").toString
-    val root = s"$tmp/ix"
-    val newRoot = s"$tmp/ix2"
-    val fp = s"$tmp/fp"
-    graft.sources.FpStore.upsert(spark, fp, emb)
-    ShardedPq.build(spark, emb, root, shards = 3, nCellsPerShard = 8)
-    // pre-snapshot delete, still pending: the snapshot (logical
-    // membership) excludes it — and the replay must NOT forward its
-    // tombstone (the id is already physically absent from the new root)
-    val preDel = emb.filter(col("vec_id") % 13 === 5).select("vec_id")
-    ShardedPq.delete(spark, root, 3, preDel)
-    // PHASE 1 — no lease on the old root
-    ShardedPq.reshardCatchUpBuild(spark, root, 3, newRoot, 2, fp,
-      nCellsPerShard = 8)
-    // window: an append lands (fp first — the appender contract), a
-    // takedown lands, and the documented maintenance sweep applies it
-    // physically and clears the sidecars (the resurrection schedule)
-    val tranche = emb.limit(10)
-      .select((col("vec_id") + 880000L).as("vec_id"), col("label"),
-        col("embedding"))
-    graft.sources.FpStore.upsert(spark, fp, tranche)
-    ShardedPq.append(spark, root, 3, tranche)
-    val winDel = emb.filter(col("vec_id") % 13 === 6).select("vec_id")
-    ShardedPq.delete(spark, root, 3, winDel)
-    assert(ShardedPq.compactShardsIfDeleted(spark, root, 3,
-      maxDeletedFraction = 0.001) > 0,
-      "premise: the mid-window sweep must physically compact")
-    // PHASE 2 — replay reconciles both axes from the narrow id columns
-    assert(ShardedPq.reshardCatchUpReplay(spark, root, 3, newRoot, 2, fp)
-      == 10, "the replay must carry exactly the window's appends")
-    assert(ShardedPq.reshardCatchUpReplay(spark, root, 3, newRoot, 2, fp)
-      == 0L, "a repeated replay must serve an empty delta")
-    val member = (0 until 2).map(r =>
-      PqIndex.loadEncoded(spark, s"$newRoot/shard=$r").select("vec_id"))
-      .reduce(_ unionAll _)
-    assert(member.filter(col("vec_id") >= 880000L).count() == 10,
-      "window appends must be served by the new generation")
-    assert(member.filter(col("vec_id") < 880000L &&
-      col("vec_id") % 13 === 6).count() == 0,
-      "a mid-window compact must not resurrect the window's deletes")
-    assert(member.filter(col("vec_id") < 880000L &&
-      col("vec_id") % 13 === 5).count() == 0,
-      "pre-snapshot deletes stay deleted (excluded by the snapshot)")
-    // ... and no stale tombstone blocks a post-cutover re-add of a
-    // pre-snapshot-deleted id (the snapshot acted as its compact)
-    val newTombs = (0 until 2).flatMap(r =>
-      graft.sources.Tombstones.read(spark, s"$newRoot/shard=$r")
-        .map(_.as[Long].collect().toSet))
-      .foldLeft(Set.empty[Long])(_ ++ _)
-    val preSet = preDel.as[Long].collect().toSet
-    assert(newTombs.intersect(preSet).isEmpty,
-      "pre-snapshot tombstones must not be forwarded as stale sidecar rows")
-    val victim = preSet.head
-    ShardedPq.append(spark, newRoot, 2,
-      emb.filter(col("vec_id") === victim))
-    assert((0 until 2).map(r =>
-      PqIndex.loadEncoded(spark, s"$newRoot/shard=$r").select("vec_id"))
-      .reduce(_ unionAll _).filter(col("vec_id") === victim).count() == 1,
-      "post-cutover re-add of a pre-snapshot-deleted id must land")
-    // a window append whose fp row is missing fails LOUDLY, never a
-    // silent drop
+    catchUpMidWindowSweepCase(pqKind)
+  }
+
+  test("a window append whose fp row is missing fails the replay loudly") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_shpq_orphan").toString
     val root2 = s"$tmp/jx"
     val newRoot2 = s"$tmp/jx2"
+    val fp = Some(s"$tmp/fp")
+    graft.sources.FpStore.upsert(spark, fp.get, emb)
     ShardedPq.build(spark, emb, root2, shards = 2, nCellsPerShard = 8)
-    ShardedPq.reshardCatchUpBuild(spark, root2, 2, newRoot2, 3, fp,
-      nCellsPerShard = 8)
+    ShardedPq.reshardCatchUpBuild(spark, root2, 2, newRoot2, 3,
+      nCellsPerShard = 8, fp = fp)
     val orphan = emb.limit(3)
       .select((col("vec_id") + 990000L).as("vec_id"), col("label"),
         col("embedding"))
@@ -317,5 +262,45 @@ class ShardedPqSpec extends SparkTestBase with ShardedKinds {
       ShardedPq.reshardCatchUpReplay(spark, root2, 2, newRoot2, 3, fp)
     }
     assert(e.getMessage.contains("FpStore.upsert"), e.getMessage)
+  }
+
+  test("catch-up reshard: appends land during the unleased build and the replay carries exactly the delta") {
+    catchUpCarriesDeltaCase(pqKind)
+  }
+
+  test("catch-up replay is delta-shaped via the seq-stamped rows, across a mid-window compact too") {
+    catchUpSeqJournalCase(pqKind)
+  }
+
+  test("catch-up replay survives a mid-window tombstone compaction: deleted ids stay hidden in the new generation") {
+    catchUpTombstoneCompactCase(pqKind)
+  }
+
+  test("catch-up replay forwards only WINDOW deletes: a pre-snapshot tombstone leaves no stale sidecar row on the new root") {
+    catchUpWindowDeletesOnlyCase(pqKind)
+  }
+
+  test("catch-up watermark for a shard with no qerr log is -1: the seq-0 window append is not dropped") {
+    catchUpNoQerrCase(pqKind)
+  }
+
+  test("a crashed append (rows written, no qerr row) is replayed once, never double-materialized") {
+    catchUpCrashedAppendCase(pqKind)
+  }
+
+  test("catch-up replay forwards deletes that landed during the rebuild window") {
+    catchUpForwardsWindowDeletesCase(pqKind)
+  }
+
+  test("a catch-up window spanning a compact carries the batches on both sides of it") {
+    catchUpAcrossCompactCase(pqKind)
+  }
+
+  test("a catch-up window spanning a retrain adds exactly the window's rows") {
+    catchUpAcrossRetrainCase(pqKind)
+  }
+
+  test("a legacy-layout shard whose data files lack seq replays through the fallback") {
+    catchUpLegacyLayoutCase(pqKind)
   }
 }

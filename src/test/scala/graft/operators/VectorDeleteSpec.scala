@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * re-add-requires-compact contract and the single-index
   * compact-if-deleted policy run for both kinds in [[IndexKindSpec]].
   */
-class VectorDeleteSpec extends SparkTestBase {
+class VectorDeleteSpec extends SparkTestBase with ShardedKinds {
 
   private lazy val emb = Tables.load(spark, sf, "embeddings")
 
@@ -139,30 +139,7 @@ class VectorDeleteSpec extends SparkTestBase {
   }
 
   test("catch-up replay forwards deletes that landed during the rebuild window") {
-    import spark.implicits._
-    val oldRoot = tmp("graft_del_cu_old")
-    val newRoot = tmp("graft_del_cu_new")
-    ShardedIvf.build(spark, emb, oldRoot, shards = 3, nCellsPerShard = 8)
-    // phase 1: snapshot rebuild, no old-root lease — ingest still flowing
-    ShardedIvf.reshardCatchUpBuild(spark, oldRoot, 3, newRoot, 2, nCellsPerShard = 8)
-    // during the window: one append AND one delete land on the OLD root
-    val tranche = emb.filter(col("vec_id") < 8)
-      .select((col("vec_id") + 1000000).as("vec_id"), col("label"), col("embedding"))
-    ShardedIvf.append(spark, oldRoot, 3, tranche)
-    val delIds = emb.filter(col("vec_id") % 9 === 4).select("vec_id")
-    ShardedIvf.delete(spark, oldRoot, 3, delIds)
-    // phase 2: the replay must carry BOTH classes to the new root
-    val replayed = ShardedIvf.reshardCatchUpReplay(spark, oldRoot, 3, newRoot, 2)
-    assert(replayed == tranche.count(),
-      "the replay delta is exactly the appends that landed during the window")
-    def logical(root: String, s: Int) = (0 until s).map(r =>
-      IvfIndex.loadVectors(spark, s"$root/shard=$r").select("vec_id"))
-      .reduce(_ unionAll _)
-    val ids = logical(newRoot, 2)
-    assert(ids.filter(col("vec_id") >= 1000000).count() == tranche.count(),
-      "window appends must be present in the new artifact")
-    assert(ids.filter(col("vec_id") % 9 === 4 && col("vec_id") < 1000000).count() == 0,
-      "window deletes must be forwarded — the new root hides them via its own sidecars")
+    catchUpForwardsWindowDeletesCase(ivfKind)
   }
 
   test("compactShardsIfDeleted compacts only crossed shards") {
