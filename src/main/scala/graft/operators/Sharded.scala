@@ -406,7 +406,7 @@ abstract class Sharded(val kind: IndexKind) {
       // logical view: invisible to the forward delta, yet the snapshot's
       // copies of those ids are physically present in the new artifact.
       // The journal rows are semi-joined against the new root's PHYSICAL
-      // ids: a delete that raced the snapshot capture is journaled ABOVE
+      // ids: a delete that raced the snapshot capture is recorded ABOVE
       // dw yet already absent there, and forwarding it would plant a stale
       // sidecar row that hides a legitimate post-cutover re-add
       val deletes = (0 until oldShards).map(r => windows.get(r).flatMap(_._2))

@@ -50,7 +50,7 @@ object DeleteLog {
       .coalesce(1) // delete batches are takedown-sized by contract
       .write.mode("append").parquet(dir(path))
 
-  /** The ids deleted after `watermark` (none when nothing was journaled
+  /** The ids deleted after `watermark` (none when nothing was recorded
     * since). Complete only while the generation the watermark was taken
     * under is unchanged.
     */
