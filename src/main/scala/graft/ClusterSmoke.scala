@@ -58,6 +58,240 @@ object ClusterSmoke {
   final case class Run(name: String, secs: Double, digest: String,
                        rows: Long, rowsIn: Long, shuffleRows: Long)
 
+  /** Where a row's index-store root points while it runs. */
+  sealed trait Root
+  /** The mode's own artifact root (the session conf). */
+  case object PerMode extends Root
+  /** The invocation's shared root: the first mode builds its artifacts, the
+    * other short-circuits on the completeness marker, so both probe the
+    * identical file layout (the layout-equal-inputs rule exact counter
+    * equality needs). The shared ensures and the query panel run before
+    * the row, outside its timed window.
+    */
+  case object Shared extends Root
+  /** A fresh per-mode root `<mode root>/<dir>`: the row pays a cold build
+    * on this mode's executors.
+    */
+  final case class Cold(dir: String) extends Root
+
+  /** One smoke row: its `body` returns the frame whose sorted rows are
+    * digested, and whose work (with any verb run before it) is counted.
+    * `shuffleTol`/`rowsInTol` are the relative bands within which the two
+    * modes' counters must agree (0 = byte-equal).
+    */
+  final case class Check(name: String, needs: Seq[String] = Nil, root: Root = PerMode,
+                         shuffleTol: Double = 0, rowsInTol: Double = 0)(
+                         val body: Mode => DataFrame)
+
+  /** One mode's session and paths; `shared` is forced only under the shared root. */
+  final class Mode private[ClusterSmoke] (val spark: SparkSession, val sfDir: String,
+                                          val root: String) {
+    def emb: DataFrame = graft.sources.Tables.load(spark, sfDir, "embeddings")
+    lazy val shared: SharedArtifacts = SharedArtifacts(
+      graft.sources.VectorIndexStore.ensureShardedIvf(spark, sfDir, shards = 3),
+      graft.sources.VectorIndexStore.ensureIvf(spark, sfDir),
+      graft.sources.VectorIndexStore.ensureShardedPq(spark, sfDir, shards = 3),
+      graft.operators.AnnEval.queryPanel(spark, emb))
+  }
+
+  final case class SharedArtifacts(sharded: String, ivf: String, shardedPq: String,
+                                   panel: Seq[(Long, Array[Float])])
+
+  /** A verb's work plus an empty frame: the counters carry the build. */
+  private def built(m: Mode)(verb: => Any): DataFrame = { verb; m.spark.range(0).toDF("done") }
+
+  // Shuffle counters include per-task PARTIAL rows (window-group-limit /
+  // partial-agg emissions) whose count depends on file->task packing and
+  // attempt interleaving — the root-caused benign divergence classes of
+  // SCALE.md round-14 §3. Rows that sit squarely in them are
+  // attempt-sensitive at the percent level EVEN WITHIN one mode (v19's
+  // persist+rank partials; the reshard rows probe artifacts each mode
+  // wrote itself, so their window partials see per-mode file layouts):
+  // they get a 5% shuffle band — a real plan regression moves counters at
+  // the multiple level (x03's transition measured 112x). The catch-up
+  // lifecycle (and the rows chained onto ITS artifact) also sees the
+  // warm-vs-cold lazy-artifact class on the INPUT side: whether a stage
+  // is recomputed or shuffle-reused across the build→append→replay→probe
+  // chain differs per attempt, moving rows_in by ~0.3% (measured 34,206
+  // vs 34,110 on one run, byte-equal on another — same code both times).
+  // Everything else stays byte-exact, as do ALL results.
+  private val Band = 0.05
+
+  private val fPred = org.apache.spark.sql.functions.col("label") === 3
+
+  /** The slice queries, then the store rows, in run order. */
+  val table: Seq[Check] = SliceNames.map { q =>
+    Check(q, shuffleTol = if (q == "v19_pq_drift_retrain") Band else 0)(m =>
+      SparkEntry.queries(q)(m.spark, m.sfDir))
+  } ++ Seq(
+    // Cold IVF store BUILD, entirely in this mode (slice queries may have
+    // warmed the mode's main index root; the cluster run must pay its own
+    // executor-side train/assign/write here). Measured byte-equal across
+    // modes.
+    Check("store:ivf_build", root = Cold("index_cold"))(m =>
+      built(m)(graft.sources.VectorIndexStore.ensureIvf(m.spark, m.sfDir))),
+    // DISTRIBUTED trainer under this mode: broadcast + typed map +
+    // repartition/sort/mapPartitions — exactly the closure-serialization
+    // surface a cluster can break. The model is bit-deterministic across
+    // partitionings BY CONTRACT (IvfIndexSpec), so the centroid array
+    // itself is the digest: both modes must train the IDENTICAL model.
+    Check("store:ivf_dist_train") { m =>
+      import m.spark.implicits._
+      val model = graft.operators.IvfIndex.trainDistributed(m.spark, m.emb, k = 8, iters = 3)
+      model.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cell", "centroid")
+    },
+    // SHARDED store build IN THIS MODE: ShardedIvf.build submits S
+    // concurrent Spark jobs from a bounded thread pool — concurrent stages
+    // interleaving across executor JVMs, parallel executor-side clustered
+    // writes. Counters are per-shard-deterministic; the CONCURRENCY must
+    // not change them.
+    Check("store:sharded_build", root = Cold("index_sharded"))(m =>
+      built(m)(graft.sources.VectorIndexStore.ensureShardedIvf(m.spark, m.sfDir, shards = 3))),
+    // SHARDED-PQ build in this mode: concurrent per-shard PQ builds
+    // (coarse train + codebooks + encode writes).
+    Check("store:sharded_pq_build", root = Cold("index_sharded_pq"))(m =>
+      built(m)(graft.sources.VectorIndexStore.ensureShardedPq(m.spark, m.sfDir, shards = 3))),
+    // batched sharded top-k over the shared artifact
+    Check("store:sharded_probe", root = Shared)(m =>
+      graft.operators.AnnEval.shardedTopK(m.spark, m.shared.sharded, 3, m.shared.panel, k = 10)),
+    // the one-pass recall-curve verb (AnnCalibrate): deterministic by
+    // contract, so both modes must size the IDENTICAL width and measure
+    // the identical recall (the digest IS the calibration)
+    Check("store:sharded_cal", root = Shared) { m =>
+      import m.spark.implicits._
+      val cal = graft.sources.VectorIndexStore.calibrateShardedIvf(
+        m.spark, m.shared.sharded, shards = 3, target = 0.9, k = 10)
+      Seq((cal.width, cal.measured, cal.target, cal.k)).toDF("width", "measured", "target", "k")
+    },
+    // single-index batched probe (its ensure ran before the timed window)
+    Check("store:ivf_probe", root = Shared)(m =>
+      graft.operators.AnnEval.ivfTopK(m.spark, m.shared.ivf, m.shared.panel, k = 10, nProbe = 4)),
+    // the growth verb: re-tag the SHARED 3-shard artifact into a per-mode
+    // 2-shard one (concurrent per-shard rebuilds on THIS mode's
+    // executors), then probe it
+    Check("store:reshard", root = Shared, shuffleTol = Band) { m =>
+      graft.operators.ShardedIvf.reshard(m.spark, m.shared.sharded, 3, reshardedRoot(m), 2)
+      graft.operators.AnnEval.shardedTopK(m.spark, reshardedRoot(m), 2, m.shared.panel, k = 10)
+    },
+    // the bounded-stall reshard: snapshot rebuild of THIS MODE's 2-shard
+    // artifact at S'=4 with NO old-root lease, an append landing between
+    // the phases, then the leased replay (the only blocked window)
+    // carrying exactly that delta. Digest = the caught-up probe + the
+    // replayed count.
+    Check("store:reshard_catchup", Seq("store:reshard"), Shared, Band, Band) { m =>
+      import org.apache.spark.sql.functions.{col, lit}
+      graft.operators.ShardedIvf.reshardCatchUpBuild(m.spark, reshardedRoot(m), 2, catchupRoot(m), 4)
+      val tranche = m.emb.select((col("vec_id") + 900000L).as("vec_id"),
+        col("label"), col("embedding"))
+      graft.operators.ShardedIvf.append(m.spark, reshardedRoot(m), 2, tranche)
+      val replayed = graft.operators.ShardedIvf.reshardCatchUpReplay(
+        m.spark, reshardedRoot(m), 2, catchupRoot(m), 4)
+      graft.operators.AnnEval.shardedTopK(m.spark, catchupRoot(m), 4, m.shared.panel, k = 10)
+        .withColumn("replayed", lit(replayed))
+    },
+    // the tombstone verb: hash-routed delete on THIS MODE's caught-up
+    // 4-shard artifact (owning-shard sidecar writes), then the sharded
+    // probe over the LOGICAL view — the per-shard broadcast anti-joins run
+    // in executor JVMs
+    Check("store:delete_probe", Seq("store:reshard_catchup"), Shared, Band, Band) { m =>
+      import org.apache.spark.sql.functions.col
+      graft.operators.ShardedIvf.delete(m.spark, catchupRoot(m), 4,
+        m.emb.filter(col("vec_id") % 6 === 1).select("vec_id"))
+      graft.operators.AnnEval.shardedTopK(m.spark, catchupRoot(m), 4, m.shared.panel, k = 10)
+    },
+    // a catch-up reshard of THIS MODE's tombstoned 4-shard artifact with a
+    // takedown AND the tombstone-fraction compact landing INSIDE the
+    // window (the schedule that silently resurrected deletes before the
+    // generation marker + reverse delta). Digest = the new generation's
+    // probe + a resurrected-id count that must read 0 in both modes.
+    Check("store:catchup_compact_safe", Seq("store:delete_probe"), Shared, Band, Band) { m =>
+      import org.apache.spark.sql.functions.{col, lit}
+      val ccRoot = s"${m.root}/index_catchup_safe/ix2"
+      graft.operators.ShardedIvf.reshardCatchUpBuild(m.spark, catchupRoot(m), 4, ccRoot, 2)
+      graft.operators.ShardedIvf.delete(m.spark, catchupRoot(m), 4,
+        m.emb.filter(col("vec_id") % 6 === 2).select("vec_id"))
+      graft.operators.ShardedIvf.compactShardsIfDeleted(m.spark, catchupRoot(m), 4,
+        maxDeletedFraction = 0.001)
+      graft.operators.ShardedIvf.reshardCatchUpReplay(m.spark, catchupRoot(m), 4, ccRoot, 2)
+      val resurrected = (0 until 2).map(r =>
+        graft.operators.IvfIndex.loadVectors(m.spark, s"$ccRoot/shard=$r")
+          .select("vec_id")).reduce(_ unionAll _)
+        .filter(col("vec_id") % 6 === 2 && col("vec_id") < 900000L).count()
+      graft.operators.AnnEval.shardedTopK(m.spark, ccRoot, 2, m.shared.panel, k = 10)
+        .withColumn("resurrected", lit(resurrected))
+    },
+    // the composed probe plan: per-shard ADC frames (broadcast table maps
+    // in executor JVMs), per-(qid, shard) rank window over their union,
+    // exact re-rank join, global window
+    Check("store:sharded_pq_probe", root = Shared)(m =>
+      graft.operators.AnnEval.shardedPqTopK(m.spark, m.shared.shardedPq, 3, m.emb,
+        m.shared.panel, k = 10)),
+    // the filtered-ANN composition (v22) and its predicate-aware
+    // calibration: the filtered capture-width pass must size the
+    // IDENTICAL width with the identical measured recall in both modes
+    Check("store:filtered_probe", root = Shared) { m =>
+      import org.apache.spark.sql.functions.col
+      val vecs = graft.operators.IvfIndex.loadVectors(m.spark, m.shared.ivf)
+        .filter(col("vec_id") =!= 0).filter(fPred)
+      graft.operators.AnnEval.ivfTopKFrames(m.spark, vecs,
+        graft.operators.IvfIndex.loadModel(m.spark, m.shared.ivf), m.shared.panel,
+        k = 10, nProbe = 4)
+    },
+    Check("store:filtered_cal", root = Shared) { m =>
+      import m.spark.implicits._
+      graft.operators.AnnCalibrate.calibrateFilteredWidth(m.spark, Seq(m.shared.ivf),
+        m.shared.panel, k = 10, target = 0.9, predicate = fPred).toSeq.toDF("width", "measured")
+    },
+    // the filtered ENCODED composition (v24) and its per-workload
+    // shortlist calibration: per-shard predicate-filtered ADC scans of the
+    // shared sharded-PQ artifact; both modes must size the IDENTICAL depth
+    Check("store:pq_filtered_probe", root = Shared)(m =>
+      graft.operators.AnnEval.shardedPqTopK(m.spark, m.shared.shardedPq, 3, m.emb,
+        m.shared.panel, k = 10, predicate = Some(fPred))),
+    Check("store:pq_filtered_cal", root = Shared) { m =>
+      import m.spark.implicits._
+      graft.operators.AnnCalibrate.calibrateFilteredShortlist(m.spark,
+        (0 until 3).map(r => s"${m.shared.shardedPq}/shard=$r"), m.emb, m.shared.panel,
+        k = 10, target = 0.9, predicate = fPred, nProbe = Int.MaxValue)
+        .toSeq.toDF("shortlist", "measured")
+    },
+    // the encoded bounded-stall reshard with the takedown + mid-window
+    // compact racing it: per-mode 2-shard encoded build + fp store,
+    // unleased re-encode at S'=3, a window append AND delete + the
+    // tombstone-fraction sweep, then the leased replay reconciling both
+    // axes from the narrow code tables. Digest = the caught-up encoded
+    // probe + a resurrected count that must read 0 in both modes.
+    Check("store:pq_catchup_safe", root = Shared, shuffleTol = Band, rowsInTol = Band) { m =>
+      import org.apache.spark.sql.functions.{col, lit}
+      import graft.operators.ShardedPq
+      val (old, now, fp) = (s"${m.root}/pq_catchup/ix2", s"${m.root}/pq_catchup/ix3",
+        Some(s"${m.root}/pq_catchup/fp"))
+      val emb = m.emb
+      graft.sources.FpStore.upsert(m.spark, fp.get, emb)
+      ShardedPq.build(m.spark, emb, old, 2)
+      ShardedPq.reshardCatchUpBuild(m.spark, old, 2, now, 3, fp = fp)
+      val tranche = emb.filter(col("vec_id") % 8 === 3)
+        .select((col("vec_id") + 910000L).as("vec_id"), col("label"), col("embedding"))
+      graft.sources.FpStore.upsert(m.spark, fp.get, tranche)
+      ShardedPq.append(m.spark, old, 2, tranche)
+      ShardedPq.delete(m.spark, old, 2, emb.filter(col("vec_id") % 8 === 5).select("vec_id"))
+      ShardedPq.compactShardsIfDeleted(m.spark, old, 2, maxDeletedFraction = 0.001)
+      ShardedPq.reshardCatchUpReplay(m.spark, old, 2, now, 3, fp = fp)
+      val resurrected = (0 until 3).map(r =>
+        graft.operators.PqIndex.loadEncoded(m.spark, s"$now/shard=$r").select("vec_id"))
+        .reduce(_ unionAll _)
+        .filter(col("vec_id") % 8 === 5 && col("vec_id") < 910000L).count()
+      graft.operators.AnnEval.shardedPqTopK(m.spark, now, 3,
+        graft.sources.FpStore.read(m.spark, fp.get), m.shared.panel, k = 10)
+        .withColumn("resurrected", lit(resurrected))
+    })
+
+  private def reshardedRoot(m: Mode) = s"${m.root}/index_resharded/ix2"
+  private def catchupRoot(m: Mode) = s"${m.root}/index_catchup/ix4"
+
+  private lazy val byName = table.map(c => c.name -> c).toMap
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val outRoot = args.lift(1).getOrElse("/tmp/graft_clustersmoke")
@@ -66,9 +300,11 @@ object ClusterSmoke {
         "executor JVMs are launched from it")
     new java.io.File(outRoot).mkdirs()
 
-    // focus filters for iterating on one failure (Bench's ONLY contract)
+    // focus filter for iterating on one failure (Bench's ONLY contract);
+    // a named row brings the rows whose artifacts it continues
     val slice = Harness.selectOrExit("SPARK_GRAFT_SMOKE_ONLY",
-      sys.env.get("SPARK_GRAFT_SMOKE_ONLY"), SliceNames)
+      sys.env.get("SPARK_GRAFT_SMOKE_ONLY"), table.map(_.name), byName(_).needs)
+      .map(byName)
     val clusterOnly = sys.env.contains("SPARK_GRAFT_SMOKE_CLUSTER_ONLY")
 
     // the shared probe artifact must be rebuilt per INVOCATION (a prior
@@ -84,50 +320,20 @@ object ClusterSmoke {
       s"$outRoot/cluster", sharedIndex, slice)
     if (clusterOnly) return
 
-    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-    var failed = 0
-    // Shuffle counters include per-task PARTIAL rows (window-group-limit /
-    // partial-agg emissions) whose count depends on file->task packing and
-    // attempt interleaving — the root-caused benign divergence classes of
-    // SCALE.md round-14 §3. Two slice rows sit squarely in them and are
-    // attempt-sensitive at the percent level EVEN WITHIN one mode (v19's
-    // persist+rank partials; store:reshard probes an artifact each mode
-    // wrote itself, so its window partials see per-mode file layouts).
-    // Those two get a 5% shuffle band — a real plan regression moves
-    // counters at the multiple level (x03's transition measured 112x) —
-    // everything else stays byte-exact, as do ALL rows_in and results.
-    val shuffleBand = Set("v19_pq_drift_retrain", "store:reshard",
-      "store:reshard_catchup", "store:delete_probe",
-      "store:catchup_compact_safe", "store:pq_catchup_safe")
-    // The catch-up lifecycle (and the delete probe chained onto ITS
-    // artifact) also sees the warm-vs-cold lazy-artifact class on the
-    // INPUT side: whether a stage is recomputed or shuffle-reused across
-    // the build→append→replay→probe chain differs per attempt, moving
-    // rows_in by ~0.3% (measured 34,206 vs 34,110 on one run, byte-equal
-    // on another — same code both times). Results stay byte-exact.
-    val rowsInBand = Set("store:reshard_catchup", "store:delete_probe",
-      "store:catchup_compact_safe", "store:pq_catchup_safe")
-    for ((name, l) <- localRuns) {
-      val c = clusterRuns(name)
+    def within(a: Long, b: Long, tol: Double) = math.abs(a - b) <= tol * math.max(a, b)
+    val lines = slice.map { check =>
+      val (l, c) = (localRuns(check.name), clusterRuns(check.name))
       val resultOk = l.digest == c.digest && l.rows == c.rows
-      val shuffleOk =
-        if (shuffleBand(name))
-          math.abs(l.shuffleRows - c.shuffleRows) <=
-            0.05 * math.max(l.shuffleRows, c.shuffleRows)
-        else l.shuffleRows == c.shuffleRows
-      val rowsInOk =
-        if (rowsInBand(name))
-          math.abs(l.rowsIn - c.rowsIn) <= 0.05 * math.max(l.rowsIn, c.rowsIn)
-        else l.rowsIn == c.rowsIn
-      val countersOk = rowsInOk && shuffleOk
-      if (!(resultOk && countersOk)) failed += 1
-      lines += f"""{"name":"$name","result_match":$resultOk,"counters_match":$countersOk,"rows":${l.rows},"local_secs":${l.secs}%.3f,"cluster_secs":${c.secs}%.3f,"rows_in":[${l.rowsIn},${c.rowsIn}],"shuffle_rows":[${l.shuffleRows},${c.shuffleRows}]}"""
+      val countersOk = within(l.rowsIn, c.rowsIn, check.rowsInTol) &&
+        within(l.shuffleRows, c.shuffleRows, check.shuffleTol)
+      (resultOk && countersOk, f"""{"name":"${check.name}","result_match":$resultOk,"counters_match":$countersOk,"rows":${l.rows},"local_secs":${l.secs}%.3f,"cluster_secs":${c.secs}%.3f,"rows_in":[${l.rowsIn},${c.rowsIn}],"shuffle_rows":[${l.shuffleRows},${c.shuffleRows}]}""")
     }
-    lines.foreach(l => println(s"CLUSTERSMOKE $l"))
-    println(s"""CLUSTERSMOKE# {"pass":${failed == 0},"queries":${localRuns.size},"mismatches":$failed}""")
+    val failed = lines.count(!_._1)
+    lines.foreach(l => println(s"CLUSTERSMOKE ${l._2}"))
+    println(s"""CLUSTERSMOKE# {"pass":${failed == 0},"queries":${lines.size},"mismatches":$failed}""")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$outRoot/cluster_smoke.jsonl"),
-      (lines.mkString("", "\n", "\n")).getBytes("UTF-8"))
+      lines.map(_._2).mkString("", "\n", "\n").getBytes("UTF-8"))
     if (failed > 0) sys.exit(1)
   }
 
@@ -137,7 +343,7 @@ object ClusterSmoke {
     */
   private def runMode(mode: String, master: String, sfDir: String,
                       artifactRoot: String, sharedIndexRoot: String,
-                      slice: Seq[String] = SliceNames): Map[String, Run] = {
+                      slice: Seq[Check]): Map[String, Run] = {
     graft.sources.PosixMetaBackend.deleteRecursively(artifactRoot)
     // memoized lifecycle drills (v19) must run IN THIS MODE, on this
     // mode's executors — not reuse the previous session's scalars
@@ -153,6 +359,7 @@ object ClusterSmoke {
       "spark.graft.minhash.dir" -> s"$artifactRoot/minhash",
       "spark.graft.postings.dir" -> s"$artifactRoot/postings",
       "spark.graft.substr.dir" -> s"$artifactRoot/substr")
+    val m = new Mode(spark, sfDir, artifactRoot)
 
     def timedRun(name: String, df: => DataFrame): Run = {
       val (collected, w) = Harness.measure(spark)(df.collect())
@@ -167,9 +374,8 @@ object ClusterSmoke {
 
     /** Run `body` with the index-store root overridden, restoring OR
       * UNSETTING afterwards — `prev.foreach(set)` alone leaks the
-      * override when the conf was unset at entry (benign only while the
-      * next block happens to set its own root; a reordering would build
-      * artifacts under the wrong root silently).
+      * override when the conf was unset at entry (a reordering would
+      * build artifacts under the wrong root silently).
       */
     def withRootConf[T](root: String)(body: => T): T = {
       val key = graft.sources.VectorIndexStore.RootConf
@@ -181,305 +387,17 @@ object ClusterSmoke {
       }
     }
 
-    try {
-      val qs = SparkEntry.queries
-      val runs = slice.map { n =>
-        val r = timedRun(n, qs(n)(spark, sfDir))
-        println(f"CLUSTERSMOKE# $mode $n ${r.secs}%.2fs rows=${r.rows}")
-        n -> r
+    try slice.map { check =>
+      def run = timedRun(check.name, check.body(m))
+      val r = check.root match {
+        case PerMode => run
+        case Cold(dir) => withRootConf(s"$artifactRoot/$dir")(run)
+        case Shared => withRootConf(sharedIndexRoot) { m.shared; run }
       }
-      // Cold IVF store BUILD, entirely in this mode (its own root,
-      // deleted first — slice queries may have warmed the mode's main
-      // index root; the cluster run must pay its own executor-side
-      // train/assign/write here). Build counters are plan-deterministic;
-      // measured byte-equal across modes.
-      val coldRoot = s"$artifactRoot/index_cold"
-      graft.sources.PosixMetaBackend.deleteRecursively(coldRoot)
-      val buildRun = withRootConf(coldRoot) {
-        timedRun("store:ivf_build", {
-          graft.sources.VectorIndexStore.ensureIvf(spark, sfDir)
-          spark.range(0).toDF("done") // counters carry the build work
-        })
-      }
-      println(f"CLUSTERSMOKE# $mode store:ivf_build ${buildRun.secs}%.2fs")
-      // Batched kNN PROBE against a SHARED artifact (first mode builds
-      // it, the other short-circuits on the completeness marker): the
-      // window top-k's PARTIAL WindowGroupLimit emits top-k per qid per
-      // scan task, so its output cardinality depends on file->task
-      // packing — i.e. on the artifact's physical file layout, not on
-      // the execution mode (measured: per-mode artifacts gave 310 vs
-      // 320 partial rows on byte-identical 90-row results). Probing one
-      // shared artifact makes the counter comparison exact again.
-      // DISTRIBUTED trainer under this mode: the round-13 off-driver
-      // Lloyd is broadcast + typed map + repartition/sort/mapPartitions —
-      // exactly the closure-serialization surface a cluster can break.
-      // The model is bit-deterministic across partitionings BY CONTRACT
-      // (IvfIndexSpec), so here the centroid array itself is the digest:
-      // local and cluster runs must train the IDENTICAL model.
-      val distRun = timedRun("store:ivf_dist_train", {
-        import spark.implicits._
-        val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
-        val m = graft.operators.IvfIndex.trainDistributed(spark, emb, k = 8, iters = 3)
-        m.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-          .toDF("cell", "centroid")
-      })
-      println(f"CLUSTERSMOKE# $mode store:ivf_dist_train ${distRun.secs}%.2fs")
-      // SHARDED store build IN THIS MODE (round 14): ShardedIvf.build
-      // submits S concurrent Spark jobs from a bounded thread pool — the
-      // one surface of the sharded lifecycle a single-JVM run cannot
-      // vouch for on a real cluster scheduler (concurrent stages
-      // interleaving across executor JVMs, parallel executor-side
-      // clustered writes). Work counters are per-shard-deterministic and
-      // sum over shards; the CONCURRENCY must not change them.
-      val shRoot = s"$artifactRoot/index_sharded"
-      graft.sources.PosixMetaBackend.deleteRecursively(shRoot)
-      val shBuildRun = withRootConf(shRoot) {
-        timedRun("store:sharded_build", {
-          graft.sources.VectorIndexStore.ensureShardedIvf(spark, sfDir, shards = 3)
-          spark.range(0).toDF("done") // counters carry the build work
-        })
-      }
-      println(f"CLUSTERSMOKE# $mode store:sharded_build ${shBuildRun.secs}%.2fs")
-      // SHARDED-PQ build in this mode (round 15): the composed geometry's
-      // concurrent per-shard PQ builds (coarse train + codebooks + encode
-      // writes) on this mode's executors — same per-mode-root pattern as
-      // store:sharded_build; counters are per-shard-deterministic.
-      val shPqRoot = s"$artifactRoot/index_sharded_pq"
-      graft.sources.PosixMetaBackend.deleteRecursively(shPqRoot)
-      val shPqBuildRun = withRootConf(shPqRoot) {
-        timedRun("store:sharded_pq_build", {
-          graft.sources.VectorIndexStore.ensureShardedPq(spark, sfDir, shards = 3)
-          spark.range(0).toDF("done") // counters carry the build work
-        })
-      }
-      println(f"CLUSTERSMOKE# $mode store:sharded_pq_build ${shPqBuildRun.secs}%.2fs")
-      // SHARED-artifact rows (first mode builds, the other
-      // short-circuits — the layout-equal-inputs rule exact counter
-      // equality needs), all under one RootConf window:
-      //   store:sharded_probe — batched sharded top-k;
-      //   store:sharded_cal   — the one-pass recall-curve verb
-      //     (AnnCalibrate): an exact panel grading plus a broadcast rank
-      //     join, deterministic by contract, so both modes must size the
-      //     IDENTICAL width and measure the identical recall (the digest
-      //     IS the calibration);
-      //   store:ivf_probe     — single-index batched probe (its ensure
-      //     runs OUTSIDE the timed window: the first mode pays the shared
-      //     build there, both modes' counters cover probing only).
-      val (shProbeRun, calRun, probeRun, reshardRun, catchupRun, deleteRun,
-           catchupSafeRun, shPqProbeRun, filteredProbeRun, filteredCalRun,
-           pqFilteredProbeRun, pqFilteredCalRun, pqCatchupSafeRun) =
-        withRootConf(sharedIndexRoot) {
-        val shPath = graft.sources.VectorIndexStore.ensureShardedIvf(spark, sfDir, shards = 3)
-        val panel = graft.operators.AnnEval.queryPanel(spark,
-          graft.sources.Tables.load(spark, sfDir, "embeddings"))
-        val p = timedRun("store:sharded_probe",
-          graft.operators.AnnEval.shardedTopK(spark, shPath, 3, panel, k = 10))
-        println(f"CLUSTERSMOKE# $mode store:sharded_probe ${p.secs}%.2fs rows=${p.rows}")
-        val c = timedRun("store:sharded_cal", {
-          import spark.implicits._
-          val cal = graft.sources.VectorIndexStore.calibrateShardedIvf(
-            spark, shPath, shards = 3, target = 0.9, k = 10)
-          Seq((cal.width, cal.measured, cal.target, cal.k))
-            .toDF("width", "measured", "target", "k")
-        })
-        println(f"CLUSTERSMOKE# $mode store:sharded_cal ${c.secs}%.2fs rows=${c.rows}")
-        val ivfPath = graft.sources.VectorIndexStore.ensureIvf(spark, sfDir)
-        val i = timedRun("store:ivf_probe",
-          graft.operators.AnnEval.ivfTopK(spark, ivfPath, panel, k = 10, nProbe = 4))
-        println(f"CLUSTERSMOKE# $mode store:ivf_probe ${i.secs}%.2fs rows=${i.rows}")
-        //   store:reshard — the round-15 growth verb: re-tag the SHARED
-        //     3-shard artifact (identical input layout in both modes)
-        //     into a per-mode 2-shard artifact (concurrent per-shard
-        //     rebuilds on THIS mode's executors), then probe the result.
-        //     Digest = the resharded top-k; counters cover the re-tag
-        //     pass + both shard builds + the probe.
-        val reshRoot = s"$artifactRoot/index_resharded/ix2"
-        graft.sources.PosixMetaBackend.deleteRecursively(s"$artifactRoot/index_resharded")
-        val rr = timedRun("store:reshard", {
-          graft.operators.ShardedIvf.reshard(spark, shPath, 3, reshRoot, 2)
-          graft.operators.AnnEval.shardedTopK(spark, reshRoot, 2, panel, k = 10)
-        })
-        println(f"CLUSTERSMOKE# $mode store:reshard ${rr.secs}%.2fs rows=${rr.rows}")
-        //   store:reshard_catchup — the round-16 bounded-stall reshard
-        //     across the JVM boundary: snapshot rebuild of THIS MODE's
-        //     2-shard artifact at S'=4 with NO old-root lease, an append
-        //     landing between the phases, then the leased replay (the
-        //     only blocked window) carrying exactly that delta. Digest =
-        //     the caught-up probe + the replayed count; per-mode
-        //     artifact, so its window partials get the store:reshard 5%
-        //     shuffle band.
-        val cuRoot = s"$artifactRoot/index_catchup/ix4"
-        graft.sources.PosixMetaBackend.deleteRecursively(s"$artifactRoot/index_catchup")
-        val cu = timedRun("store:reshard_catchup", {
-          import org.apache.spark.sql.functions.{col, lit}
-          graft.operators.ShardedIvf.reshardCatchUpBuild(spark, reshRoot, 2, cuRoot, 4)
-          val emb0 = graft.sources.Tables.load(spark, sfDir, "embeddings")
-          val tranche = emb0.select((col("vec_id") + 900000L).as("vec_id"),
-            col("label"), col("embedding"))
-          graft.operators.ShardedIvf.append(spark, reshRoot, 2, tranche)
-          val replayed = graft.operators.ShardedIvf.reshardCatchUpReplay(
-            spark, reshRoot, 2, cuRoot, 4)
-          graft.operators.AnnEval.shardedTopK(spark, cuRoot, 4, panel, k = 10)
-            .withColumn("replayed", lit(replayed))
-        })
-        println(f"CLUSTERSMOKE# $mode store:reshard_catchup ${cu.secs}%.2fs rows=${cu.rows}")
-        //   store:delete_probe — the tombstone lifecycle verb across the
-        //     JVM boundary: hash-routed delete on THIS MODE's caught-up
-        //     4-shard artifact (owning-shard sidecar writes), then the
-        //     batched sharded probe over the LOGICAL view — the per-shard
-        //     broadcast anti-joins run in executor JVMs. Results must be
-        //     byte-equal across modes; per-mode artifact, so its window
-        //     partials share the reshard 5% shuffle band.
-        val dp = timedRun("store:delete_probe", {
-          import org.apache.spark.sql.functions.col
-          val emb1 = graft.sources.Tables.load(spark, sfDir, "embeddings")
-          graft.operators.ShardedIvf.delete(spark, cuRoot, 4,
-            emb1.filter(col("vec_id") % 6 === 1).select("vec_id"))
-          graft.operators.AnnEval.shardedTopK(spark, cuRoot, 4, panel, k = 10)
-        })
-        println(f"CLUSTERSMOKE# $mode store:delete_probe ${dp.secs}%.2fs rows=${dp.rows}")
-        //   store:catchup_compact_safe — the round-17 flagship fix across
-        //     the JVM boundary: a catch-up reshard of THIS MODE's
-        //     tombstoned 4-shard artifact with a takedown AND the
-        //     tombstone-fraction compact landing INSIDE the window (the
-        //     documented maintenance schedule that silently resurrected
-        //     deletes before the generation marker + reverse delta).
-        //     Digest = the new generation's probe + a resurrected-id
-        //     count that must read 0 in both modes; per-mode artifact,
-        //     so it shares the reshard 5% bands.
-        val ccRoot = s"$artifactRoot/index_catchup_safe/ix2"
-        graft.sources.PosixMetaBackend.deleteRecursively(s"$artifactRoot/index_catchup_safe")
-        val cs = timedRun("store:catchup_compact_safe", {
-          import org.apache.spark.sql.functions.{col, lit}
-          graft.operators.ShardedIvf.reshardCatchUpBuild(spark, cuRoot, 4, ccRoot, 2)
-          val emb2 = graft.sources.Tables.load(spark, sfDir, "embeddings")
-          val winDel = emb2.filter(col("vec_id") % 6 === 2).select("vec_id")
-          graft.operators.ShardedIvf.delete(spark, cuRoot, 4, winDel)
-          graft.operators.ShardedIvf.compactShardsIfDeleted(spark, cuRoot, 4,
-            maxDeletedFraction = 0.001)
-          graft.operators.ShardedIvf.reshardCatchUpReplay(spark, cuRoot, 4, ccRoot, 2)
-          val resurrected = (0 until 2).map(r =>
-            graft.operators.IvfIndex.loadVectors(spark, s"$ccRoot/shard=$r")
-              .select("vec_id")).reduce(_ unionAll _)
-            .filter(col("vec_id") % 6 === 2 && col("vec_id") < 900000L).count()
-          graft.operators.AnnEval.shardedTopK(spark, ccRoot, 2, panel, k = 10)
-            .withColumn("resurrected", lit(resurrected))
-        })
-        println(f"CLUSTERSMOKE# $mode store:catchup_compact_safe ${cs.secs}%.2fs rows=${cs.rows}")
-        //   store:sharded_pq_probe — the composed probe plan across the
-        //     JVM boundary: per-shard ADC frames (broadcast table maps in
-        //     executor JVMs), per-(qid, shard) rank window over their
-        //     union, exact re-rank join, global window. Probes the SHARED
-        //     artifact (first mode builds), so counters are exact.
-        val shPqPath = graft.sources.VectorIndexStore.ensureShardedPq(spark, sfDir, shards = 3)
-        val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
-        val pq = timedRun("store:sharded_pq_probe",
-          graft.operators.AnnEval.shardedPqTopK(spark, shPqPath, 3, emb, panel, k = 10))
-        println(f"CLUSTERSMOKE# $mode store:sharded_pq_probe ${pq.secs}%.2fs rows=${pq.rows}")
-        //   store:filtered_probe / store:filtered_cal — the filtered-ANN
-        //     composition (v22) and its predicate-aware calibration verb
-        //     across the JVM boundary: the predicate-filtered
-        //     partition-pruned scan runs on this mode's executors, and
-        //     the filtered capture-width pass must size the IDENTICAL
-        //     width with the identical measured recall (the digest IS
-        //     the calibration, like store:sharded_cal). Probes the
-        //     SHARED artifact, so counters are exact.
-        import org.apache.spark.sql.functions.col
-        val fPred = col("label") === 3
-        val fVecs = graft.operators.IvfIndex.loadVectors(spark, ivfPath)
-          .filter(col("vec_id") =!= 0).filter(fPred)
-        val fModel = graft.operators.IvfIndex.loadModel(spark, ivfPath)
-        val fp = timedRun("store:filtered_probe",
-          graft.operators.AnnEval.ivfTopKFrames(spark, fVecs, fModel,
-            panel, k = 10, nProbe = 4))
-        println(f"CLUSTERSMOKE# $mode store:filtered_probe ${fp.secs}%.2fs rows=${fp.rows}")
-        val fc = timedRun("store:filtered_cal", {
-          import spark.implicits._
-          val cal = graft.operators.AnnCalibrate.calibrateFilteredWidth(
-            spark, Seq(ivfPath), panel, k = 10, target = 0.9,
-            predicate = fPred)
-          cal.map { case (w, r) => (w, r) }.toSeq.toDF("width", "measured")
-        })
-        println(f"CLUSTERSMOKE# $mode store:filtered_cal ${fc.secs}%.2fs rows=${fc.rows}")
-        //   store:pq_filtered_probe / store:pq_filtered_cal — the
-        //     round-16 filtered ENCODED composition (v24) and its
-        //     per-workload shortlist calibration across the JVM
-        //     boundary: per-shard predicate-filtered ADC scans of the
-        //     SHARED sharded-PQ artifact, and the filtered
-        //     capture-shortlist pass must size the IDENTICAL depth with
-        //     the identical measured recall in both modes.
-        val pqf = timedRun("store:pq_filtered_probe",
-          graft.operators.AnnEval.shardedPqTopK(spark, shPqPath, 3, emb,
-            panel, k = 10, predicate = Some(fPred)))
-        println(f"CLUSTERSMOKE# $mode store:pq_filtered_probe ${pqf.secs}%.2fs rows=${pqf.rows}")
-        val pqc = timedRun("store:pq_filtered_cal", {
-          import spark.implicits._
-          val cal = graft.operators.AnnCalibrate.calibrateFilteredShortlist(
-            spark, (0 until 3).map(r => s"$shPqPath/shard=$r"), emb, panel,
-            k = 10, target = 0.9, predicate = fPred, nProbe = Int.MaxValue)
-          cal.toSeq.toDF("shortlist", "measured")
-        })
-        println(f"CLUSTERSMOKE# $mode store:pq_filtered_cal ${pqc.secs}%.2fs rows=${pqc.rows}")
-        //   store:pq_catchup_safe — the round-17 encoded bounded-stall
-        //     reshard with the takedown + mid-window compact racing it,
-        //     across the JVM boundary: per-mode 2-shard encoded build +
-        //     fp store, unleased re-encode at S'=3, a window append AND
-        //     delete + the tombstone-fraction sweep, then the leased
-        //     replay reconciling both axes from the narrow code tables.
-        //     Digest = the caught-up encoded probe + a resurrected-count
-        //     column that must read 0 in both modes; per-mode artifact,
-        //     reshard 5% bands.
-        val pqCuOld = s"$artifactRoot/pq_catchup/ix2"
-        val pqCuNew = s"$artifactRoot/pq_catchup/ix3"
-        val pqCuFp = s"$artifactRoot/pq_catchup/fp"
-        graft.sources.PosixMetaBackend.deleteRecursively(s"$artifactRoot/pq_catchup")
-        val pcs = timedRun("store:pq_catchup_safe", {
-          import org.apache.spark.sql.functions.{col, lit}
-          val emb3 = graft.sources.Tables.load(spark, sfDir, "embeddings")
-          graft.sources.FpStore.upsert(spark, pqCuFp, emb3)
-          graft.operators.ShardedPq.build(spark, emb3, pqCuOld, 2)
-          graft.operators.ShardedPq.reshardCatchUpBuild(
-            spark, pqCuOld, 2, pqCuNew, 3, fp = Some(pqCuFp))
-          val tranche = emb3.filter(col("vec_id") % 8 === 3)
-            .select((col("vec_id") + 910000L).as("vec_id"), col("label"),
-              col("embedding"))
-          graft.sources.FpStore.upsert(spark, pqCuFp, tranche)
-          graft.operators.ShardedPq.append(spark, pqCuOld, 2, tranche)
-          val winDel = emb3.filter(col("vec_id") % 8 === 5).select("vec_id")
-          graft.operators.ShardedPq.delete(spark, pqCuOld, 2, winDel)
-          graft.operators.ShardedPq.compactShardsIfDeleted(spark, pqCuOld, 2,
-            maxDeletedFraction = 0.001)
-          graft.operators.ShardedPq.reshardCatchUpReplay(
-            spark, pqCuOld, 2, pqCuNew, 3, fp = Some(pqCuFp))
-          val resurrected = (0 until 3).map(r =>
-            graft.operators.PqIndex.loadEncoded(spark, s"$pqCuNew/shard=$r")
-              .select("vec_id")).reduce(_ unionAll _)
-            .filter(col("vec_id") % 8 === 5 && col("vec_id") < 910000L).count()
-          graft.operators.AnnEval.shardedPqTopK(spark, pqCuNew, 3,
-            graft.sources.FpStore.read(spark, pqCuFp), panel, k = 10)
-            .withColumn("resurrected", lit(resurrected))
-        })
-        println(f"CLUSTERSMOKE# $mode store:pq_catchup_safe ${pcs.secs}%.2fs rows=${pcs.rows}")
-        (p, c, i, rr, cu, dp, cs, pq, fp, fc, pqf, pqc, pcs)
-      }
-      (runs ++ Seq("store:ivf_build" -> buildRun,
-        "store:ivf_dist_train" -> distRun,
-        "store:sharded_build" -> shBuildRun,
-        "store:sharded_probe" -> shProbeRun,
-        "store:sharded_cal" -> calRun,
-        "store:ivf_probe" -> probeRun,
-        "store:reshard" -> reshardRun,
-        "store:reshard_catchup" -> catchupRun,
-        "store:delete_probe" -> deleteRun,
-        "store:catchup_compact_safe" -> catchupSafeRun,
-        "store:pq_catchup_safe" -> pqCatchupSafeRun,
-        "store:sharded_pq_build" -> shPqBuildRun,
-        "store:sharded_pq_probe" -> shPqProbeRun,
-        "store:filtered_probe" -> filteredProbeRun,
-        "store:filtered_cal" -> filteredCalRun,
-        "store:pq_filtered_probe" -> pqFilteredProbeRun,
-        "store:pq_filtered_cal" -> pqFilteredCalRun)).toMap
-    } finally {
+      println(f"CLUSTERSMOKE# $mode ${check.name} ${r.secs}%.2fs rows=${r.rows}")
+      check.name -> r
+    }.toMap
+    finally {
       spark.stop()
       // the state-store maintenance threads are JVM-global and would keep
       // polling THIS (now dead) session's coordinator while the next

@@ -104,21 +104,37 @@ object Harness {
   }
 
   /** The members of `universe` a comma list names, in universe order; an
-    * absent or empty list names all of them. A name outside `universe`
-    * throws, naming every such entry — a typo must not quietly shrink a
-    * run into one that reads as success.
+    * absent or empty list names every member that is not `optIn`. Each
+    * picked member brings its `needs`, transitively (an opt-in member
+    * runs only when named or needed). A name outside `universe` throws,
+    * naming every such entry — a typo must not quietly shrink a run into
+    * one that reads as success.
     */
-  def select(source: String, filter: Option[String], universe: Seq[String]): Seq[String] = {
+  def select(source: String, filter: Option[String], universe: Seq[String],
+             needs: String => Seq[String] = _ => Nil,
+             optIn: String => Boolean = _ => false): Seq[String] = {
     val names = filter.toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
     val unknown = names.filterNot(universe.contains).distinct
     if (unknown.nonEmpty)
       throw new IllegalArgumentException(s"$source names unknown entries: ${unknown.mkString(",")}")
-    if (names.isEmpty) universe else universe.filter(names.contains)
+    @annotation.tailrec
+    def close(todo: List[String], got: Set[String]): Set[String] = todo match {
+      case Nil => got
+      case n :: rest =>
+        val fresh = needs(n).filterNot(got)
+        require(fresh.forall(universe.contains), s"$source: $n needs an entry outside the table")
+        close(fresh.toList ++ rest, got ++ fresh)
+    }
+    val picked = if (names.isEmpty) universe.filterNot(optIn) else names
+    val all = close(picked.toList, picked.toSet)
+    universe.filter(all)
   }
 
   /** [[select]] for a main: unknown names print to stderr and exit 2. */
-  def selectOrExit(source: String, filter: Option[String], universe: Seq[String]): Seq[String] =
-    try select(source, filter, universe)
+  def selectOrExit(source: String, filter: Option[String], universe: Seq[String],
+                   needs: String => Seq[String] = _ => Nil,
+                   optIn: String => Boolean = _ => false): Seq[String] =
+    try select(source, filter, universe, needs, optIn)
     catch {
       case e: IllegalArgumentException =>
         System.err.println(s"[harness] ${e.getMessage}")

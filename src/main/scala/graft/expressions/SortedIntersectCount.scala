@@ -15,7 +15,9 @@ import org.apache.spark.sql.types._
   * table and no output array. Equivalent to size(array_intersect) exactly
   * when both inputs are ascending-sorted and duplicate-free (the per-doc
   * distinct shingle-set contract; array_intersect deduplicates, a set
-  * already is) — callers own that precondition.
+  * already is). The interpreted path checks that precondition and fails
+  * naming the function; the codegen path (the one x07 runs) trusts the
+  * caller and pays no check.
   *
   * Null handling: null array → null (BinaryExpression default). Element
   * nulls are not expected (collect_list never emits them).
@@ -43,6 +45,11 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     val b = r.asInstanceOf[ArrayData]
     val na = a.numElements()
     val nb = b.numElements()
+    for ((side, arr, len) <- Seq(("left", a, na), ("right", b, nb)); k <- 1 until len)
+      if (arr.getLong(k - 1) >= arr.getLong(k))
+        throw new IllegalArgumentException(s"sorted_intersect_count: the $side input " +
+          s"is not strictly ascending at index $k (${arr.getLong(k - 1)} then " +
+          s"${arr.getLong(k)}) — it needs sorted, duplicate-free arrays")
     var i = 0
     var j = 0
     var n = 0

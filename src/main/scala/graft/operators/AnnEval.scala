@@ -225,9 +225,8 @@ object AnnEval {
                     shortlist: Int = PqIndex.DefaultShortlist,
                     predicate: Option[org.apache.spark.sql.Column] = None)
       : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     ShardedPq.verifyShards(path, shards) // wrong S silently drops shards
-    val sl = ShardedPq.resolveShardedShortlist(path, nProbe, shortlist)
+    val sl = PqIndex.resolveShortlist(path, nProbe, shortlist)
     val scored = Sharded.unionShards(path, shards) { (r, shardPath) =>
       val enc = PqIndex.loadEncoded(spark, shardPath).filter(col("vec_id") =!= 0)
       pqApproxScores(spark, predicate.fold(enc)(enc.filter),
@@ -239,17 +238,7 @@ object AnnEval {
         Window.partitionBy("qid", "shard").orderBy(col("approx_d"), col("vec_id"))))
       .filter(col("rn") <= sl)
       .select("qid", "vec_id")
-    val panel = {
-      import spark.implicits._
-      broadcast(queries.toDF("qid", "qemb"))
-    }
-    topKPerQuery(
-      short.join(fullPrecision.select(col("vec_id"), col("embedding")), "vec_id")
-        .join(panel, "qid")
-        .select(col("qid"), col("vec_id"),
-          round(graft.expressions.GraftFunctions.cosine_sim(
-            col("embedding"), col("qemb")), 6).as("sim")),
-      k)
+    rerank(spark, short, fullPrecision, queries, k)
   }
 
   /** Batched IVF-PQ probe against a PERSISTED index: per-(qid, cell) ADC
@@ -262,29 +251,12 @@ object AnnEval {
              nProbe: Int = IvfIndex.NProbeAuto,
              shortlist: Int = PqIndex.DefaultShortlist): DataFrame = {
     val model = PqIndex.loadModel(spark, pqPath)
+    // the single-index sidecar records the one width it was sized at
     val servedNp = IvfIndex.resolveNProbe(nProbe, model.coarse.centroids.length)
-    // ShortlistCalibrated: the artifact's measured re-rank depth
-    // (shortlist.CAL) — valid ONLY at the probe width it was sized for
-    // (the curve is conditional on nProbe: the sidecar records it).
-    // Serving a calibrated depth at a different width would void the
-    // recall promise silently, so that mismatch degrades to the default
-    // depth with a diagnostic; an uncalibrated artifact degrades too.
-    val sl =
-      if (shortlist == PqIndex.ShortlistCalibrated)
-        graft.sources.VectorIndexStore.readShortCal(pqPath) match {
-          case Some(cal) if cal.nProbe == servedNp => cal.shortlist
-          case Some(cal) =>
-            System.err.println(s"[graft] shortlist.CAL at $pqPath was sized " +
-              s"at nProbe=${cal.nProbe} but this probe serves nProbe=$servedNp" +
-              " — its recall promise does not transfer; using the default " +
-              "shortlist (recalibrate at the serving width)")
-            PqIndex.DefaultShortlist
-          case None => PqIndex.DefaultShortlist
-        }
-      else shortlist
     pqTopKFrames(spark,
       PqIndex.loadEncoded(spark, pqPath).filter(col("vec_id") =!= 0),
-      model, fullPrecision, queries, k, servedNp, sl)
+      model, fullPrecision, queries, k, servedNp,
+      PqIndex.resolveShortlist(pqPath, servedNp, shortlist))
   }
 
   /** [[pqTopK]] over explicit (encoded, model) frames — the form the
@@ -295,17 +267,24 @@ object AnnEval {
                    fullPrecision: DataFrame, queries: Seq[(Long, Array[Float])],
                    k: Int, nProbe: Int = IvfIndex.NProbeAuto,
                    shortlist: Int = PqIndex.DefaultShortlist): DataFrame = {
-    import spark.implicits._
-    val approx = pqApproxScores(spark, encoded, model, queries, nProbe)
-    val short = approx
+    val short = pqApproxScores(spark, encoded, model, queries, nProbe)
       .withColumn("rn", row_number().over(
         Window.partitionBy("qid").orderBy(col("approx_d"), col("vec_id"))))
       .filter(col("rn") <= PqIndex.resolveShortlist(shortlist))
       .select("qid", "vec_id")
-    val panel = broadcast(queries.toDF("qid", "qemb"))
+    rerank(spark, short, fullPrecision, queries, k)
+  }
+
+  /** The exact re-rank tail of every PQ top-k: the (qid, vec_id)
+    * shortlist joined to full precision and the broadcast query panel,
+    * scored by rounded cosine, cut to k per query.
+    */
+  private def rerank(spark: SparkSession, short: DataFrame, fullPrecision: DataFrame,
+                     queries: Seq[(Long, Array[Float])], k: Int): DataFrame = {
+    import spark.implicits._
     topKPerQuery(
       short.join(fullPrecision.select(col("vec_id"), col("embedding")), "vec_id")
-        .join(panel, "qid")
+        .join(broadcast(queries.toDF("qid", "qemb")), "qid")
         .select(col("qid"), col("vec_id"),
           round(graft.expressions.GraftFunctions.cosine_sim(
             col("embedding"), col("qemb")), 6).as("sim")),

@@ -374,6 +374,29 @@ object PqIndex {
       shortlist
     }
 
+  /** `shortlist` argument resolution for an artifact at `path`: the
+    * calibration sentinel reads its `shortlist.CAL`, which holds only at
+    * the probe width it was sized for — `nProbe` as the sidecar records
+    * it (the single index records its one resolved width; a sharded root
+    * records the requested policy verbatim, since per-shard resolved
+    * widths differ). A mismatch or an uncalibrated artifact degrades
+    * loudly to [[DefaultShortlist]]: serving a calibrated depth at another
+    * width would void its recall promise silently.
+    */
+  private[graft] def resolveShortlist(path: String, nProbe: Int, shortlist: Int): Int =
+    if (shortlist == ShortlistCalibrated)
+      graft.sources.VectorIndexStore.readShortCal(path) match {
+        case Some(cal) if cal.nProbe == nProbe => cal.shortlist
+        case Some(cal) =>
+          System.err.println(s"[graft] shortlist.CAL at $path was sized " +
+            s"at nProbe=${cal.nProbe} but this probe serves nProbe=$nProbe" +
+            " — its recall promise does not transfer; using the default " +
+            "shortlist (recalibrate at the serving width)")
+          DefaultShortlist
+        case None => DefaultShortlist
+      }
+    else resolveShortlist(shortlist)
+
   /** ADC shortlist: probe the `nProbe` nearest cells, score every encoded
     * row by m table lookups, keep the `shortlist` smallest approximate
     * distances (TakeOrderedAndProject). Returns (vec_id, label, approx_d).

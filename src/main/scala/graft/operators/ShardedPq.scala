@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *     re-rank of the union against the full-precision store, one global
   *     top-k;
   *   - CALIBRATION: one `shortlist.CAL` at the sharded root (per-shard
-  *     depth, [[resolveShardedShortlist]]), invalidated by any shard's
+  *     depth, [[PqIndex.resolveShortlist]]), invalidated by any shard's
   *     retrain.
   */
 object ShardedPq extends Sharded(IndexKind.Pq) {
@@ -116,7 +116,7 @@ object ShardedPq extends Sharded(IndexKind.Pq) {
                      predicate: Option[org.apache.spark.sql.Column] = None)
       : DataFrame = {
     verifyShards(path, shards)
-    val sl = resolveShardedShortlist(path, nProbe, shortlist)
+    val sl = PqIndex.resolveShortlist(path, nProbe, shortlist)
     val shorts = Sharded.unionShards(path, shards) { (_, shardPath) =>
       val enc = PqIndex.loadEncoded(spark, shardPath)
       PqIndex.adcShortlist(spark, predicate.fold(enc)(enc.filter),
@@ -130,27 +130,4 @@ object ShardedPq extends Sharded(IndexKind.Pq) {
       .orderBy(desc("sim"), col("vec_id"))
       .limit(k)
   }
-
-  /** Resolve the per-shard shortlist for a sharded ROOT: the
-    * calibration sentinel reads the root's `shortlist.CAL`, which is
-    * honored only at the REQUESTED-nProbe policy it was measured under
-    * (per-shard resolved widths differ across shards, so the sidecar
-    * records the requested policy value verbatim — unlike the
-    * single-index sidecar, which records its one resolved width). A
-    * mismatch or an uncalibrated root degrades loudly to the default.
-    */
-  private[graft] def resolveShardedShortlist(path: String, nProbe: Int,
-                                             shortlist: Int): Int =
-    if (shortlist == PqIndex.ShortlistCalibrated)
-      graft.sources.VectorIndexStore.readShortCal(path) match {
-        case Some(cal) if cal.nProbe == nProbe => cal.shortlist
-        case Some(cal) =>
-          System.err.println(s"[graft] shortlist.CAL at $path was sized " +
-            s"under probe policy ${cal.nProbe} but this probe requests " +
-            s"$nProbe — its recall promise does not transfer; using the " +
-            "default shortlist (recalibrate at the serving policy)")
-          PqIndex.DefaultShortlist
-        case None => PqIndex.DefaultShortlist
-      }
-    else PqIndex.resolveShortlist(shortlist)
 }

@@ -413,7 +413,7 @@ object VectorIndexStore {
     * at the root. The sidecar records the REQUESTED probe policy
     * verbatim (per-shard resolved widths differ across shards), and the
     * sentinel honors it only at that policy —
-    * [[graft.operators.ShardedPq.resolveShardedShortlist]].
+    * [[graft.operators.PqIndex.resolveShortlist]].
     */
   def calibrateShardedPqShortlist(spark: SparkSession, path: String,
                                   shards: Int, fullPrecision: org.apache.spark.sql.DataFrame,

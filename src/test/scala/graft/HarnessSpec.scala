@@ -44,6 +44,47 @@ class HarnessSpec extends SparkTestBase {
     assert(!e.getMessage.contains("k01_bm25_topk"), e.getMessage)
   }
 
+  test("select pulls in needs transitively, in universe order") {
+    val universe = Seq("build", "probe", "reshard", "catchup", "delete", "other")
+    val needs = Map("probe" -> Seq("build"), "reshard" -> Seq("build"),
+      "catchup" -> Seq("reshard"), "delete" -> Seq("catchup", "probe"))
+      .withDefaultValue(Seq.empty[String])
+    assert(Harness.select("ONLY", Some("delete"), universe, needs) ==
+      Seq("build", "probe", "reshard", "catchup", "delete"))
+    assert(Harness.select("ONLY", Some("other,catchup"), universe, needs) ==
+      Seq("build", "reshard", "catchup", "other"))
+    assert(Harness.select("ONLY", None, universe, needs) == universe)
+  }
+
+  test("select runs an opt-in entry only when it is named or needed") {
+    val universe = Seq("sweep", "build", "probe", "pastmax")
+    val needs = Map("probe" -> Seq("build"), "pastmax" -> Seq("build"))
+      .withDefaultValue(Seq.empty[String])
+    val optIn = Set("sweep", "pastmax")
+    assert(Harness.select("ONLY", None, universe, needs, optIn) == Seq("build", "probe"))
+    assert(Harness.select("ONLY", Some(""), universe, needs, optIn) == Seq("build", "probe"))
+    assert(Harness.select("ONLY", Some("pastmax"), universe, needs, optIn) ==
+      Seq("build", "pastmax"))
+    assert(Harness.select("ONLY", Some("sweep,probe"), universe, needs, optIn) ==
+      Seq("sweep", "build", "probe"))
+    val needsOptIn = needs.updated("probe", Seq("sweep"))
+    assert(Harness.select("ONLY", Some("probe"), universe, needsOptIn, optIn) ==
+      Seq("sweep", "probe"))
+  }
+
+  test("select with needs still rejects an unknown name, and a need outside the table") {
+    val universe = Seq("build", "probe")
+    val needs = Map("probe" -> Seq("build")).withDefaultValue(Seq.empty[String])
+    val e = intercept[IllegalArgumentException] {
+      Harness.select("SPARK_GRAFT_DRILL_ONLY", Some("probe,prbe"), universe, needs)
+    }
+    assert(e.getMessage.contains("prbe") && !e.getMessage.contains("build"), e.getMessage)
+    val broken = intercept[IllegalArgumentException] {
+      Harness.select("ONLY", Some("probe"), universe, Map("probe" -> Seq("biuld")))
+    }
+    assert(broken.getMessage.contains("probe"), broken.getMessage)
+  }
+
   test("the factory's session runs in UTC with the native functions and rule") {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     val sim = spark.sql(

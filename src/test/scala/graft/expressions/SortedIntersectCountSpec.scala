@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * size(array_intersect(a, b)) on sorted duplicate-free arrays — the
   * precondition its callers own — across randomized set pairs, empties,
   * disjoint and identical sets, and must be null-safe in both the codegen
-  * and interpreted paths.
+  * and interpreted paths; the interpreted path enforces the precondition.
   */
 class SortedIntersectCountSpec extends SparkTestBase {
 
@@ -69,6 +69,24 @@ class SortedIntersectCountSpec extends SparkTestBase {
         .select(sic(col("a"), col("b")).as("merge"),
           size(array_intersect(col("a"), col("b"))).as("hash"))
       assert(df.filter(col("merge") =!= col("hash")).count() == 0)
+    }
+  }
+
+  test("the interpreted path rejects unsorted or duplicated input, naming the function") {
+    import spark.implicits._
+    withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+      // merge-walking these gives a silently wrong count (1 and 2 where
+      // size(array_intersect) is 3 and 1)
+      for ((a, b) <- Seq((Seq(3L, 1L, 2L), Seq(1L, 2L, 3L)), (Seq(2L, 2L, 5L), Seq(2L, 2L)))) {
+        val e = intercept[Exception] {
+          Seq((a, b)).toDF("a", "b").select(sic(col("a"), col("b"))).collect()
+        }
+        val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+        assert(messages.contains("sorted_intersect_count"), messages)
+        assert(messages.contains("strictly ascending"), messages)
+      }
     }
   }
 
