@@ -35,8 +35,11 @@ object Bench {
       .sortBy(n => (lifecycleLast.contains(n), n))
     val spark = Harness.localSession()
 
-    // warmup: touch every table + exercise codegen once
+    // warmup: touch every table + exercise codegen once, and ensure the
+    // document artifacts, so a cold artifact is never built inside the
+    // first timed rep of whichever query reads it first
     Tables.all.foreach(n => Tables.load(spark, sfDir, n).count())
+    graft.sources.DocArtifact.all.foreach(_._2.ensure(spark, sfDir))
 
     // HOST-WARMTH SENTINEL: a fixed, registry-independent query (lineitem
     // group-agg through the noop sink) timed min-of-3 after warmup. Its

@@ -418,33 +418,33 @@ object Graft {
     * fixture corpus — built once, served from the tok-sorted artifact.
     */
   def postings(spark: SparkSession, sfDir: String): DataFrame =
-    sources.PostingStore.postings(spark, sfDir)
+    sources.PostingStore.table(spark, sfDir, "postings")
 
   /** The persisted (tok, df) document-frequency table. */
   def postingDf(spark: SparkSession, sfDir: String): DataFrame =
-    sources.PostingStore.dfTable(spark, sfDir)
+    sources.PostingStore.derived(spark, sfDir, "df")
 
   /** The persisted one-row (n_docs, avgdl) corpus stats. */
   def postingStats(spark: SparkSession, sfDir: String): DataFrame =
-    sources.PostingStore.stats(spark, sfDir)
+    sources.PostingStore.derived(spark, sfDir, "stats")
 
   /** The persisted (doc_id, sh) shingle rows. */
   def shingles(spark: SparkSession, sfDir: String): DataFrame =
-    sources.ShingleStore.rows(spark, sfDir)
+    sources.ShingleStore.table(spark, sfDir, "rows")
 
   /** The persisted (sh, df) shingle document frequencies. */
   def shingleDf(spark: SparkSession, sfDir: String): DataFrame =
-    sources.ShingleStore.dfTable(spark, sfDir)
+    sources.ShingleStore.derived(spark, sfDir, "df")
 
   /** The persisted (id, band, bucket) MinHash-LSH band table. */
   def bands(spark: SparkSession, sfDir: String): DataFrame =
-    sources.MinhashStore.bands(spark, sfDir)
+    sources.MinhashStore.table(spark, sfDir, "bands")
 
   /** The persisted positional substring-anchor rows
     * (doc_id, n_words, pos, h).
     */
   def substrAnchors(spark: SparkSession, sfDir: String): DataFrame =
-    sources.SubstrStore.rows(spark, sfDir)
+    sources.SubstrStore.table(spark, sfDir, "rows")
 
   /** The persisted (h, df) substring-anchor document frequencies for
     * DUPLICATED anchors (df >= 2 — the only rows substring dedup reads;
@@ -452,7 +452,7 @@ object Graft {
     * at any corpus scale).
     */
   def substrDf(spark: SparkSession, sfDir: String): DataFrame =
-    sources.SubstrStore.dfTable(spark, sfDir)
+    sources.SubstrStore.derived(spark, sfDir, "df")
 
   /** Register every persisted artifact (plus the documents corpus) as a
     * temp view, so the SQL user can JOIN against the index structures
@@ -465,14 +465,14 @@ object Graft {
     * recompute-from-corpus oracle.
     */
   def registerArtifactViews(spark: SparkSession, sfDir: String): Unit = {
-    sources.PostingStore.postings(spark, sfDir).createOrReplaceTempView("graft_postings")
-    sources.PostingStore.dfTable(spark, sfDir).createOrReplaceTempView("graft_posting_df")
-    sources.PostingStore.stats(spark, sfDir).createOrReplaceTempView("graft_posting_stats")
-    sources.ShingleStore.rows(spark, sfDir).createOrReplaceTempView("graft_shingles")
-    sources.ShingleStore.dfTable(spark, sfDir).createOrReplaceTempView("graft_shingle_df")
-    sources.MinhashStore.bands(spark, sfDir).createOrReplaceTempView("graft_minhash_bands")
-    sources.SubstrStore.rows(spark, sfDir).createOrReplaceTempView("graft_substr_anchors")
-    sources.SubstrStore.dfTable(spark, sfDir).createOrReplaceTempView("graft_substr_df")
+    sources.PostingStore.table(spark, sfDir, "postings").createOrReplaceTempView("graft_postings")
+    sources.PostingStore.derived(spark, sfDir, "df").createOrReplaceTempView("graft_posting_df")
+    sources.PostingStore.derived(spark, sfDir, "stats").createOrReplaceTempView("graft_posting_stats")
+    sources.ShingleStore.table(spark, sfDir, "rows").createOrReplaceTempView("graft_shingles")
+    sources.ShingleStore.derived(spark, sfDir, "df").createOrReplaceTempView("graft_shingle_df")
+    sources.MinhashStore.table(spark, sfDir, "bands").createOrReplaceTempView("graft_minhash_bands")
+    sources.SubstrStore.table(spark, sfDir, "rows").createOrReplaceTempView("graft_substr_anchors")
+    sources.SubstrStore.derived(spark, sfDir, "df").createOrReplaceTempView("graft_substr_df")
     sources.Tables.load(spark, sfDir, "documents").createOrReplaceTempView("graft_documents")
   }
 

@@ -44,13 +44,13 @@ object DedupQueries extends QuerySet {
     * the oracles keep recomputing from `documents` via [[shingleSql]].
     */
   private def shingleRows(s: SparkSession, d: String): DataFrame =
-    graft.sources.ShingleStore.rows(s, d)
+    graft.sources.ShingleStore.table(s, d, "rows")
 
   /** The store's precomputed global (sh, df) document-frequency table —
     * input to the boilerplate cap and x07's rarest-first prefix rank.
     */
   private def shingleDf(s: SparkSession, d: String): DataFrame =
-    graft.sources.ShingleStore.dfTable(s, d)
+    graft.sources.ShingleStore.derived(s, d, "df")
 
   /** Verified MinHash near-dup pairs served from the PERSISTED band/set
     * artifact (graft.sources.MinhashStore, built once per corpus) — the
@@ -60,8 +60,8 @@ object DedupQueries extends QuerySet {
     */
   private def minhashPairsFromStore(s: SparkSession, d: String): DataFrame =
     NearDup.minhashNearDupPairsFrom(s,
-      graft.sources.MinhashStore.bands(s, d),
-      graft.sources.MinhashStore.shingleSets(s, d), threshold = 0.5)
+      graft.sources.MinhashStore.table(s, d, "bands"),
+      graft.sources.MinhashStore.table(s, d, "sets"), threshold = 0.5)
 
   /** [[minhashPairsFromStore]], memoized per (SparkContext, fixture
     * fingerprint) and checkpoint-materialized once: x06/x10 and the
@@ -430,7 +430,7 @@ object DedupQueries extends QuerySet {
     // the complete banding — shingle base hashes, the 64 spliced
     // universal-hash permutations in HUGEINT, per-band md5 buckets.
     Q("x05_minhash_bucket_profile",
-      (s, d) => graft.sources.MinhashStore.bands(s, d)
+      (s, d) => graft.sources.MinhashStore.table(s, d, "bands")
         .groupBy("band", "bucket").agg(count(lit(1)).as("n"))
         .groupBy("band")
         .agg(count(lit(1)).as("n_buckets"), max("n").as("max_bucket"),
@@ -985,9 +985,9 @@ object DedupQueries extends QuerySet {
     // this corpus.
     Q("x15_exact_substring_dedup",
       (s, d) => graft.sources.SubstrStore.spanStats(
-          graft.sources.SubstrStore.rows(s, d),
-          graft.sources.SubstrStore.docTable(s, d),
-          graft.sources.SubstrStore.dfTable(s, d))
+          graft.sources.SubstrStore.table(s, d, "rows"),
+          graft.sources.SubstrStore.table(s, d, "docs"),
+          graft.sources.SubstrStore.derived(s, d, "df"))
         .orderBy("doc_id"),
       Some(s"""WITH norms AS (
         |  SELECT doc_id, lower($normSql) AS norm FROM documents),

@@ -315,7 +315,7 @@ object StreamingQueries extends QuerySet {
         val idx = s"/tmp/graft_s14_$pid/idx_$tag"
         val ckpt = s"${StreamingOps.ckptParent}/graft_s14_$pid/ckpt_$tag"
         // lifecycle ONCE PER PROCESS (DrillOnce): fresh dirs, two tranches
-        // across a restart, per-batch maintenance of all three stores,
+        // across a restart, per-batch maintenance of all four stores,
         // then off-line compaction — the driver's Verify always runs it
         // (fresh JVM); bench reps 2+ time the PROBE plans below instead of
         // re-paying the harness. 500 docs in two tranches: the freshness
@@ -342,14 +342,14 @@ object StreamingQueries extends QuerySet {
         // — each count must equal the oracle's from-documents recompute,
         // so drift in ANY maintained store breaks the hash.
         val ndPairs = graft.operators.NearDup.minhashNearDupPairsFrom(s,
-          graft.sources.MinhashStore.bandsAt(s, s"$idx/minhash"),
-          graft.sources.MinhashStore.setsAt(s, s"$idx/minhash"),
+          graft.sources.MinhashStore.tableAt(s, s"$idx/minhash", "bands"),
+          graft.sources.MinhashStore.tableAt(s, s"$idx/minhash", "sets"),
           threshold = 0.5).count()
-        val subDupDocs = graft.sources.SubstrStore.rowsAt(s, s"$idx/substr")
-          .join(graft.sources.SubstrStore.dfAt(s, s"$idx/substr")
+        val subDupDocs = graft.sources.SubstrStore.tableAt(s, s"$idx/substr", "rows")
+          .join(graft.sources.SubstrStore.derivedAt(s, s"$idx/substr", "df")
             .filter(col("df") >= 2), Seq("h"))
           .select("doc_id").distinct().count()
-        val shRows = graft.sources.ShingleStore.rowsAt(s, s"$idx/shingles")
+        val shRows = graft.sources.ShingleStore.tableAt(s, s"$idx/shingles", "rows")
         val sizes = shRows.groupBy("doc_id").agg(count(lit(1)).as("sz"))
         val shPairs = shRows.select(col("doc_id").as("da"), col("sh"))
           .join(shRows.select(col("doc_id").as("db"), col("sh")), "sh")

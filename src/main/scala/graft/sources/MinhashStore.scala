@@ -2,19 +2,16 @@ package graft.sources
 
 import graft.operators.NearDup
 import graft.text.TextKernel
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Build-once MinHash artifact for the LSH near-dup family — the third leg
-  * of the round-6 lifecycle work (with [[VectorIndexStore]] and
-  * [[ShingleStore]]): signatures are a pure deterministic function of the
+/** Build-once MinHash artifact for the LSH near-dup family — a
+  * [[DocArtifact]]: signatures are a pure deterministic function of the
   * corpus, so a real pipeline computes them ONCE at ingest and every
   * near-dup job joins the persisted band table instead of re-hashing every
   * shingle of every document per invocation.
   *
-  * Artifact layout (both tables behind the [[Versioned]] pointer protocol
-  * — appends land inside the current version, small-file [[compact]]ion
-  * re-points atomically, readers always see a complete table):
+  * Artifact layout (no derived table — signatures are per-document):
   *   `bands` — (id, band, bucket): the 16x4 LSH banding of every
   *             document's 64-permutation minhash signature
   *             (NearDup.minhashBuckets output, verbatim);
@@ -22,29 +19,19 @@ import org.apache.spark.sql.functions._
   *             array — the exact-Jaccard verify input, so the verify
   *             stage reads arrays instead of re-shingling text.
   *
-  * Oracles are untouched: they recompute signatures from `documents` in
-  * SQL (x03/x05/x06/x10), which is precisely what makes the artifact safe
-  * — any build/probe skew breaks a hash compare.
+  * Per-table append keying matters here: a duplicated band row would
+  * corrupt x05's bucket counts. Oracles are untouched: they recompute
+  * signatures from `documents` in SQL (x03/x05/x06/x10), which is
+  * precisely what makes the artifact safe — any build/probe skew breaks
+  * a hash compare.
   */
-object MinhashStore {
+object MinhashStore extends DocArtifact("spark.graft.minhash.dir", "graft_minhash",
+  // v2 layout (pointer-versioned tables)
+  "mh2_") {
 
-  /** Conf key overriding the artifact root (default: system tmpdir). */
-  val RootConf = "spark.graft.minhash.dir"
-
-  def path(spark: SparkSession, sfDir: String): String = {
-    val root = spark.conf.getOption(RootConf)
-      .getOrElse(s"${System.getProperty("java.io.tmpdir")}/graft_minhash")
-    val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      PhysicalLayout.sourceTag(sfDir, "documents")
-    // v2 layout (pointer-versioned tables): the prefix keys the layout so
-    // a pre-existing flat artifact is never misread
-    s"$root/mh2_$tag"
-  }
-
-  /** The (tid, tsh) sorted verify sets of a (doc_id, text) frame — the
-    * shared definition for build and append.
-    */
-  private def setsOf(spark: SparkSession, docs: DataFrame): DataFrame = {
+  /** The (tid, tsh) sorted verify sets of a (doc_id, text) frame. */
+  private def setsOf(docs: DataFrame): DataFrame = {
+    val spark = docs.sparkSession
     import spark.implicits._
     graft.operators.ScaleOps.spread(
       docs.select(col("doc_id").cast("long").as("tid"), col("text"))
@@ -55,121 +42,7 @@ object MinhashStore {
       .toDF("tid", "tsh")
   }
 
-  /** Build the artifact from any (doc_id, text) frame into `dir` — the
-    * corpus-general entry (pair with [[append]] for incremental corpora).
-    */
-  def build(spark: SparkSession, docs: DataFrame, dir: String): Unit =
-    Versioned.withWriterLease(dir) {
-    Versioned.publish(dir, "bands", -1L) { v =>
-      NearDup.minhashBuckets(spark, docs).write.parquet(v)
-    }
-    Versioned.publish(dir, "sets", -1L) { v =>
-      setsOf(spark, docs).write.parquet(v)
-    }
-    Versioned.metaBackend.createMarker(s"$dir/_SUCCESS")
-  }
-
-  /** Idempotent build over the `documents` fixture: one signature pass
-    * (narrow map) for the band table + one shingle pass for the sorted
-    * verify sets, published atomically.
-    */
-  def ensure(spark: SparkSession, sfDir: String): String = {
-    val p = path(spark, sfDir)
-    PhysicalLayout.ensureDir(p) { tmp =>
-      build(spark, Tables.load(spark, sfDir, "documents"), tmp)
-    }
-    p
-  }
-
-  /** The (id, band, bucket) band table at an explicit path, tombstones
-    * applied.
-    */
-  def bandsAt(spark: SparkSession, path: String): DataFrame =
-    Tombstones.applyTo(spark, path, Versioned.read(spark, path, "bands"), "id")
-
-  /** The (tid, tsh) verify sets at an explicit path, tombstones applied. */
-  def setsAt(spark: SparkSession, path: String): DataFrame =
-    Tombstones.applyTo(spark, path, Versioned.read(spark, path, "sets"), "tid")
-
-  /** The persisted (id, band, bucket) LSH band table. */
-  def bands(spark: SparkSession, sfDir: String): DataFrame =
-    bandsAt(spark, ensure(spark, sfDir))
-
-  /** The persisted (tid, tsh) sorted shingle sets (verify input). */
-  def shingleSets(spark: SparkSession, sfDir: String): DataFrame =
-    setsAt(spark, ensure(spark, sfDir))
-
-  /** INCREMENTAL maintenance: signatures are per-document (no derived
-    * global table), so appending new documents' bands and verify sets is
-    * pure append — idempotent via the anti-join on already-present ids,
-    * cost ∝ new documents. build(A) + append(B) == build(A ∪ B)
-    * (ArtifactStoresSpec). An absent store bootstraps (first streamed
-    * micro-batch creates it).
-    *
-    * Each sub-table anti-joins against its OWN existing ids: a crash
-    * between the two writes leaves them inconsistent (bands ahead of
-    * sets), and a retry keyed on one shared table would re-append the
-    * other's rows — per-table keying makes redelivery converge instead
-    * of duplicating band rows (which would corrupt x05 bucket counts).
-    */
-  def append(spark: SparkSession, path: String, newDocs: DataFrame): Unit =
-    Versioned.withWriterLease(path) {
-    if (Versioned.readPointer(path, "bands").isEmpty) {
-      build(spark, newDocs, path)
-      return
-    }
-    // RAW reads for the existing-checks: a tombstoned id counts as
-    // present, so a deleted doc cannot be re-appended before a compact
-    val bandsDir = Versioned.readPointer(path, "bands").get.dir
-    val bandIds = spark.read.parquet(s"$path/$bandsDir")
-      .select(col("id").as("doc_id")).distinct()
-    NearDup.minhashBuckets(spark, newDocs.join(bandIds, Seq("doc_id"), "left_anti"))
-      .write.mode("append").parquet(s"$path/$bandsDir")
-    val setsDir = Versioned.readPointer(path, "sets").get.dir
-    val setIds = spark.read.parquet(s"$path/$setsDir")
-      .select(col("tid").as("doc_id")).distinct()
-    setsOf(spark, newDocs.join(setIds, Seq("doc_id"), "left_anti"))
-      .write.mode("append").parquet(s"$path/$setsDir")
-  }
-
-  /** DELETE documents: tombstone their ids across bands AND sets in one
-    * sidecar (immediately visible, cost ∝ deleted ids); the next
-    * [[compact]] applies it physically. A tombstoned id stays deleted
-    * until a compact clears the sidecar.
-    */
-  def delete(spark: SparkSession, path: String, docIds: DataFrame): Unit =
-    Versioned.withWriterLease(path) { Tombstones.add(spark, path, docIds) }
-
-  /** Small-file COMPACTION: N appends leave N file sets per table (open
-    * cost erodes the bucket-join scan — the many-small-files tax; there
-    * are no range probes here, so pruning is not at stake). Rewrites each
-    * table into `partitions` files behind one atomic re-point per table;
-    * readers mid-join keep the previous version.
-    */
-  def compact(spark: SparkSession, path: String, partitions: Int = 4): Unit =
-    Versioned.withWriterLease(path) {
-    val bands = bandsAt(spark, path) // tombstones applied
-    Versioned.publish(path, "bands", -1L) { v =>
-      bands.repartition(partitions).write.parquet(v)
-    }
-    val sets = setsAt(spark, path)
-    Versioned.publish(path, "sets", -1L) { v =>
-      sets.repartition(partitions).write.parquet(v)
-    }
-    // both tables rewritten clean — publish-then-clear (a crash between
-    // the two publishes leaves tombstones that still apply to sets)
-    Tombstones.clear(spark, path)
-  }
-
-  /** SELF-SCHEDULING small-file compaction (the PostingStore.compactIfNeeded
-    * pattern), triggered on the bands table's file count (both tables
-    * fragment in lockstep — one append each per batch). Returns whether a
-    * compaction ran.
-    */
-  def compactIfNeeded(spark: SparkSession, path: String,
-                      maxFiles: Int = 16, partitions: Int = 4): Boolean = {
-    val fragmented = Versioned.partFileCount(path, "bands") > maxFiles
-    if (fragmented) compact(spark, path, partitions)
-    fragmented
-  }
+  protected val tables = Seq(
+    DocArtifact.Table("bands", "id", docs => NearDup.minhashBuckets(docs.sparkSession, docs)),
+    DocArtifact.Table("sets", "tid", setsOf))
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Physical-layout levers that pay off at cluster scale: sort-on-write for
@@ -40,13 +40,15 @@ object PhysicalLayout {
     * file covers a disjoint range, every row group a tight sub-range.
     * Page size scales with the block size (a 128 MiB group with 16 KiB
     * pages would fragment the column chunks; a 64 KiB test group needs
-    * sub-group pages for page-level pruning to be visible).
+    * sub-group pages for page-level pruning to be visible). `mode` Append
+    * adds one sorted segment to an existing table.
     */
   def writeSorted(df: DataFrame, sortCol: String, path: String,
-                  partitions: Int = 4, blockSize: Int = ProductionBlockSize): Unit =
+                  partitions: Int = 4, blockSize: Int = ProductionBlockSize,
+                  mode: SaveMode = SaveMode.Overwrite): Unit =
     df.repartitionByRange(partitions, col(sortCol))
       .sortWithinPartitions(sortCol)
-      .write.mode("overwrite")
+      .write.mode(mode)
       .option("parquet.block.size", blockSize)
       .option("parquet.page.size", math.max(16 * 1024, blockSize / 128))
       .parquet(path)

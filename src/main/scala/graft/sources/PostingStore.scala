@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Build-once INVERTED INDEX for ranked keyword retrieval — the engine-side
@@ -11,9 +11,7 @@ import org.apache.spark.sql.functions._
   * k01/k02 invocation; a real deployment tokenizes 100 TB once and serves
   * every query from the index.
   *
-  * Artifact layout (all three tables behind the [[Versioned]] pointer
-  * protocol — readers always see a complete version, crashes never leave a
-  * silently-stale derived table):
+  * A [[DocArtifact]]; artifact layout:
   *   `postings` — (tok, doc_id, tf, dl): one row per (term, doc), with the
   *                doc length denormalized in (no join at query time).
   *                Written SORTED BY tok ([[PhysicalLayout.writeSorted]]):
@@ -21,38 +19,21 @@ import org.apache.spark.sql.functions._
   *                row-group min/max pruning, so a probe reads the queried
   *                terms' posting lists, not the corpus — the inverted-index
   *                access path, expressed as physical layout. Incremental
-  *                [[append]]s add per-segment-sorted files; [[compact]]
-  *                re-sorts globally and atomically re-points.
-  *   `df`       — (tok, df): global document frequency (vocabulary-sized,
-  *                broadcast at query time). Watermarked with the postings
-  *                row count it was derived from.
-  *   `stats`    — (n_docs, avgdl): one row. Same watermark.
+  *                appends add per-segment-sorted files; compaction
+  *                re-sorts globally (SCALE.md "posting-segment
+  *                compaction").
+  *   `df`       — derived (tok, df): global document frequency
+  *                (vocabulary-sized, broadcast at query time).
+  *   `stats`    — derived (n_docs, avgdl): one row.
   *
   * All three tables are exact integer/long-sum quantities computed with the
   * same tokenization as [[graft.operators.Retrieval.bm25Contrib]], so
   * scores over the store are bitwise the scores over the corpus — k01/k02
   * stay hash-green against oracles that keep recomputing from `documents`.
-  *
-  * Lifecycle contract: single WRITER per artifact (append/compact are index
-  * maintenance jobs); readers are unrestricted and crash-safe — a reader of
-  * df/stats verifies the watermark against the postings footer count and
-  * self-repairs a stale derived table (crash between append and refresh)
-  * before serving it.
   */
-object PostingStore {
-
-  /** Conf key overriding the artifact root (default: system tmpdir). */
-  val RootConf = "spark.graft.postings.dir"
-
-  def path(spark: SparkSession, sfDir: String): String = {
-    val root = spark.conf.getOption(RootConf)
-      .getOrElse(s"${System.getProperty("java.io.tmpdir")}/graft_postings")
-    val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      PhysicalLayout.sourceTag(sfDir, "documents")
-    // v2 layout (pointer-versioned tables): the prefix keys the layout so a
-    // pre-existing round-6 flat artifact is never misread
-    s"$root/pt2_$tag"
-  }
+object PostingStore extends DocArtifact("spark.graft.postings.dir", "graft_postings",
+  // v2 layout (pointer-versioned tables)
+  "pt2_") {
 
   /** THE tokenization: (doc_id, dl, tok, tf) rows of a (doc_id, text)
     * frame — single definition shared by build and append so segments can
@@ -67,213 +48,23 @@ object PostingStore {
       .groupBy("tok", "doc_id", "dl").agg(count(lit(1)).as("tf"))
   }
 
-  /** Build the index from any (doc_id, text) frame into `dir` — the
-    * corpus-general entry (pair with [[append]] for incremental corpora).
-    * Production block size by default; tests pass
-    * [[PhysicalLayout.TestBlockSize]] explicitly to observe multi-group
-    * pruning at fixture scale.
-    */
-  def build(spark: SparkSession, docs: DataFrame, dir: String,
-            blockSize: Int = PhysicalLayout.ProductionBlockSize): Unit =
-    Versioned.withWriterLease(dir) {
-    // watermark −1: postings is the base table (self-versioned for atomic
-    // compaction re-pointing; staleness is defined only for DERIVED tables)
-    Versioned.publish(dir, "postings", -1L) { v =>
-      PhysicalLayout.writeSorted(postingRowsOf(docs), "tok", v, blockSize = blockSize)
-    }
-    refreshDerived(spark, dir)
-    Versioned.metaBackend.createMarker(s"$dir/_SUCCESS")
-  }
-
-  /** Idempotent index build over the `documents` fixture: one tokenization
-    * pass → tok-sorted postings + df + corpus stats, published atomically.
-    */
-  def ensure(spark: SparkSession, sfDir: String): String = {
-    val p = path(spark, sfDir)
-    PhysicalLayout.ensureDir(p) { tmp =>
-      build(spark, Tables.load(spark, sfDir, "documents"), tmp)
-    }
-    p
-  }
-
-  // ---- path-based readers (shared by the fixture surface, the streaming
-  // ---- maintenance sink, and the specs) ----
-
-  /** The current postings version at an explicit artifact path, with any
-    * pending tombstones applied (a [[delete]] is visible immediately;
-    * compaction later applies it physically).
-    */
-  def postingsAt(spark: SparkSession, path: String): DataFrame =
-    Tombstones.applyTo(spark, path,
-      Versioned.read(spark, path, "postings"), "doc_id")
-
-  /** Current df table, watermark-checked: a recorded watermark that does
-    * not match the postings footer count means a crash landed between a
-    * segment append and the derived refresh — repair (one pass over the
-    * persisted postings) before serving, instead of returning stale
-    * frequencies. The check is parquet footer metadata, not a data scan.
-    */
-  def dfAt(spark: SparkSession, path: String): DataFrame =
-    derivedChecked(spark, path, "df")
-
-  /** Current stats table, watermark-checked (see [[dfAt]]). */
-  def statsAt(spark: SparkSession, path: String): DataFrame =
-    derivedChecked(spark, path, "stats")
-
-  private def derivedChecked(spark: SparkSession, path: String, name: String): DataFrame = {
-    // fingerprint-cached: the staleness DECISION runs every read; the
-    // count recomputes only when the table's fs fingerprint changed
-    val base = RowCountCache.countFor(path, "postings") {
-      postingsAt(spark, path).count()
-    }
-    if (!Versioned.readPointer(path, name).exists(_.watermark == base))
-      try refreshDerived(spark, path)
-      catch {
-        // an ACTIVE writer holds the lease and its own refresh is in
-        // flight — reads don't fail on maintenance contention; the repair
-        // belongs to the lease holder. The deliberate tradeoff: a CRASHED
-        // writer's unexpired lease also lands here, so a reader may serve
-        // the previous (stale-but-complete) derived version for up to the
-        // lease TTL — bounded at 5 min now that healthy writers renew via
-        // heartbeat, after which expiry takeover lets the next read repair.
-        case _: Versioned.ConcurrentWriterException => ()
-      }
-    Versioned.read(spark, path, name)
-  }
-
-  def postings(spark: SparkSession, sfDir: String): DataFrame =
-    postingsAt(spark, ensure(spark, sfDir))
-
-  def dfTable(spark: SparkSession, sfDir: String): DataFrame =
-    dfAt(spark, ensure(spark, sfDir))
-
-  def stats(spark: SparkSession, sfDir: String): DataFrame =
-    statsAt(spark, ensure(spark, sfDir))
-
-  /** INCREMENTAL maintenance: append new documents' postings as a fresh
-    * tok-sorted segment (row-group min/max pruning is per row group, so
-    * per-segment sort keeps term probes pruned without a global resort —
-    * the standard segmented-index trade; [[compact]] performs the off-line
-    * re-sort), then refresh df and stats FROM the artifact (one pass over
-    * persisted postings, not the corpus). Idempotent via the doc_id
-    * anti-join; build(A) + append(B) ≡ build(A ∪ B) up to segment layout
-    * (ArtifactStoresSpec asserts table equality and probe-score equality).
-    * An absent store bootstraps (first streamed micro-batch creates it).
-    *
-    * `deferDerived`: skip the eager df/stats refresh and let the FIRST
-    * checked read repair them (one refresh per read-after-N-appends
-    * instead of one per append). Safe BECAUSE of the watermark protocol —
-    * a deferred derived table is indistinguishable from a crash-stale one,
-    * and both are detected and repaired before serving. High-frequency
-    * appenders (the streaming maintenance sink) use this to keep per-batch
-    * cost proportional to batch size only.
-    */
-  def append(spark: SparkSession, path: String, newDocs: DataFrame,
-             blockSize: Int = PhysicalLayout.ProductionBlockSize,
-             deferDerived: Boolean = false): Unit =
-    Versioned.withWriterLease(path) {
-    if (Versioned.readPointer(path, "postings").isEmpty) {
-      build(spark, newDocs, path, blockSize)
-      return
-    }
-    appendSegment(spark, path, newDocs, blockSize)
-    if (!deferDerived) refreshDerived(spark, path)
-  }
-
-  /** The segment write alone, WITHOUT the derived refresh —
-    * private[sources] so the crash-recovery spec can simulate a failure
-    * between the two steps. Production callers use [[append]].
-    */
-  private[sources] def appendSegment(spark: SparkSession, path: String,
-                                     newDocs: DataFrame, blockSize: Int): Unit = {
-    val cur = Versioned.readPointer(path, "postings").get.dir
-    val existing = spark.read.parquet(s"$path/$cur").select("doc_id").distinct()
-    val fresh = newDocs.join(existing, Seq("doc_id"), "left_anti")
-    postingRowsOf(fresh)
-      .repartitionByRange(4, col("tok")).sortWithinPartitions("tok")
-      .write.mode("append")
-      .option("parquet.block.size", blockSize)
-      .option("parquet.page.size", math.max(16 * 1024, blockSize / 128))
-      .parquet(s"$path/$cur")
-  }
-
-  /** DELETE documents from the index: tombstone their ids (cost ∝ deleted
-    * ids, no table rewrite — [[Tombstones]]), immediately visible to every
-    * reader; the next [[compact]] applies the deletion physically. The
-    * derived tables self-align: the df/stats watermark no longer matches
-    * the post-tombstone postings count, so the next checked read refreshes
-    * them over the surviving rows (or pass eager = true to refresh now).
-    * A tombstoned id stays deleted until a compact clears the sidecar —
-    * re-adding a deleted document requires compacting first.
-    */
-  def delete(spark: SparkSession, path: String, docIds: DataFrame,
-             eager: Boolean = true): Unit =
-    Versioned.withWriterLease(path) {
-    Tombstones.add(spark, path, docIds)
-    if (eager) refreshDerived(spark, path)
-  }
-
-  /** Off-line COMPACTION: global re-sort of all accumulated segments into
-    * the canonical tok-sorted layout, published as a new postings version
-    * with one atomic pointer flip (readers mid-probe keep the previous
-    * version; the next probe sees the compacted one). Appends erode probe
-    * pruning — each segment is only sorted within itself, so a term probe
-    * reads one row-group-range PER SEGMENT — and compaction restores the
-    * one-range-per-term layout of a fresh build. Pending tombstones are
-    * applied PHYSICALLY (the rewrite omits deleted rows) and then cleared
-    * — publish-then-clear, so a crash in between leaves only no-op
-    * tombstones. Derived tables are untouched: compaction preserves the
-    * post-tombstone row set the watermark was stamped against. Scheduling
-    * at 100 TB: SCALE.md "posting-segment compaction".
-    */
-  def compact(spark: SparkSession, path: String,
-              blockSize: Int = PhysicalLayout.ProductionBlockSize): Unit =
-    Versioned.withWriterLease(path) {
-    val all = postingsAt(spark, path) // tombstones applied
-    Versioned.publish(path, "postings", -1L) { v =>
-      PhysicalLayout.writeSorted(all, "tok", v, blockSize = blockSize)
-    }
-    Tombstones.clear(spark, path)
-  }
-
-  /** Number of data files in the current postings version — the segment-
-    * fragmentation signal (one driver-side directory listing, no job).
-    */
-  def segmentFileCount(path: String): Int =
-    Versioned.partFileCount(path, "postings")
-
-  /** SELF-SCHEDULING compaction: run [[compact]] only when the segment
-    * file count exceeds `maxFiles` — the LSM-style trigger from SCALE.md
-    * made executable, so a long-running maintenance loop (the streaming
-    * sink calls this per batch) bounds its own probe amplification instead
-    * of waiting for an operator. The check is a driver-side listing;
-    * between triggers the appends pay nothing. Returns whether a
-    * compaction ran.
-    */
-  def compactIfNeeded(spark: SparkSession, path: String, maxFiles: Int = 16,
-                      blockSize: Int = PhysicalLayout.ProductionBlockSize): Boolean = {
-    val fragmented = segmentFileCount(path) > maxFiles
-    if (fragmented) compact(spark, path, blockSize)
-    fragmented
-  }
+  // appends add one tok-sorted SEGMENT: row-group min/max pruning is per
+  // row group, so a per-segment sort keeps term probes pruned without a
+  // global resort (the standard segmented-index trade); compaction
+  // performs the off-line global re-sort
+  protected val tables = Seq(DocArtifact.Table("postings", "doc_id", postingRowsOf,
+    build = DocArtifact.sorted("tok"),
+    append = DocArtifact.sorted("tok", SaveMode.Append),
+    compact = DocArtifact.sorted("tok")))
 
   // df is additive and stats are a weighted average — both are exactly
-  // recomputable from the artifact itself (every doc has >= 1 posting row,
-  // dl is constant per doc), so the refresh never rereads the corpus. Both
-  // versions carry the SAME watermark (the postings count of one snapshot).
-  private[sources] def refreshDerived(spark: SparkSession, path: String): Unit =
-    Versioned.withWriterLease(path) {
-    val postings = postingsAt(spark, path)
-    val wm = postings.count()
-    Versioned.publish(path, "df", wm) { v =>
-      postings.groupBy("tok").agg(count(lit(1)).as("df")).write.parquet(v)
-    }
-    Versioned.publish(path, "stats", wm) { v =>
-      postings.select("doc_id", "dl").distinct()
-        .agg(count(lit(1)).cast("double").as("n_docs"), avg(col("dl")).as("avgdl"))
-        .coalesce(1).write.parquet(v)
-    }
-  }
+  // recomputable from the artifact itself (every doc has >= 1 posting
+  // row, dl is constant per doc), so a refresh never rereads the corpus
+  override protected val derivedTables = Seq(
+    DocArtifact.Derived("df", _.groupBy("tok").agg(count(lit(1)).as("df"))),
+    DocArtifact.Derived("stats", _.select("doc_id", "dl").distinct()
+      .agg(count(lit(1)).cast("double").as("n_docs"), avg(col("dl")).as("avgdl"))
+      .coalesce(1)))
 
   /** Per-(doc, term) BM25 contribution served FROM an index at an explicit
     * path: filter the sorted postings to `terms` (row-group pruned scan),
@@ -285,9 +76,9 @@ object PostingStore {
                              k1: Double = graft.operators.Retrieval.DefaultK1,
                              b: Double = graft.operators.Retrieval.DefaultB): DataFrame = {
     require(terms.nonEmpty, "terms must be non-empty")
-    val tf = postingsAt(spark, path).filter(col("tok").isin(terms: _*))
-    val df = dfAt(spark, path).filter(col("tok").isin(terms: _*))
-    tf.join(broadcast(df), "tok").crossJoin(broadcast(statsAt(spark, path)))
+    val tf = tableAt(spark, path, "postings").filter(col("tok").isin(terms: _*))
+    val df = derivedAt(spark, path, "df").filter(col("tok").isin(terms: _*))
+    tf.join(broadcast(df), "tok").crossJoin(broadcast(derivedAt(spark, path, "stats")))
       .withColumn("idf", log(lit(1.0) +
         (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
       .select(col("doc_id").as("id"), (col("idf") * (col("tf") * (k1 + 1)) /

@@ -1,8 +1,7 @@
 package graft.sources
 
 /** Process-wide cache for the watermark row counts the checked derived-table
-  * reads need (ShingleStore/SubstrStore/PostingStore `dfAt`-style repair
-  * checks): the check itself must run on EVERY read — that is what detects a
+  * reads need ([[DocArtifact.derivedAt]]'s repair check): the check itself must run on EVERY read — that is what detects a
   * crash between an append and its derived refresh — but the count it
   * compares only changes when the underlying table changes. Re-counting a
   * posting table per probe is a full scan per query invocation (at 100 TB, a

@@ -1,38 +1,33 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Build-once shingle/posting artifact for the dedup family — the same
-  * lifecycle as [[VectorIndexStore]]: a real corpus maintains ONE shingle
-  * table (written at ingest, incrementally appended), and every
-  * set-similarity query probes it; rebuilding the normalize→split→shingle→
-  * explode string pipeline inside each query invocation was round 5's x02/
-  * x07 shared floor (~2.4 s of every run at sf0.1).
+/** Build-once shingle/posting artifact for the dedup family — a
+  * [[DocArtifact]] (the lifecycle shared with the other document stores):
+  * a real corpus maintains ONE shingle table (written at ingest,
+  * incrementally appended), and every set-similarity query probes it;
+  * rebuilding the normalize→split→shingle→explode string pipeline inside
+  * each query invocation was round 5's x02/x07 shared floor (~2.4 s of
+  * every run at sf0.1).
   *
   * Artifact layout:
-  *   `path/rows` — (doc_id, sh): distinct 3-word shingles of the lowercased
-  *                 normalized text, one row per (doc, shingle);
-  *   `path/df`   — (sh, df): global document frequency per shingle — the
-  *                 input to both the boilerplate cap and PPJoin's
-  *                 rarest-first prefix rank, precomputed once. Published
-  *                 through the [[Versioned]] pointer protocol with a
-  *                 rows-count watermark (reader-safe refresh, crash-stale
-  *                 detection + self-repair).
+  *   `rows` — (doc_id, sh): distinct 3-word shingles of the lowercased
+  *            normalized text, one row per (doc, shingle);
+  *   `df`   — derived (sh, df): global document frequency per shingle —
+  *            the input to both the boilerplate cap and PPJoin's
+  *            rarest-first prefix rank, precomputed once.
   *
   * At 100 TB the rows table would be written bucketed by `sh` (shuffle-free
   * posting self-joins) and maintained incrementally next to the chunk
-  * store; locally both tables sit behind the [[Versioned]] pointer
-  * protocol inside an atomically-published, fingerprint-pathed artifact
-  * ([[PhysicalLayout.ensureDir]]) so a regenerated corpus rebuilds instead
-  * of serving stale postings. The DuckDB oracles keep recomputing shingles
-  * from `documents` — the artifact is a plan-level materialization, not a
-  * semantic change.
+  * store. Rows joins shuffle on `sh` with no range probes, so compaction
+  * only fights the many-small-files tax (a plain repartitioned rewrite).
+  * The DuckDB oracles keep recomputing shingles from `documents` — the
+  * artifact is a plan-level materialization, not a semantic change.
   */
-object ShingleStore {
-
-  /** Conf key overriding the artifact root (default: system tmpdir). */
-  val RootConf = "spark.graft.shingles.dir"
+object ShingleStore extends DocArtifact("spark.graft.shingles.dir", "graft_shingles",
+  // v3 layout (EVERY table pointer-versioned)
+  "sh3_") {
 
   /** (doc_id, sh) shingle rows computed from a documents frame — pure
     * Catalyst (codegen), matching TextKernel.shingles semantics: docs
@@ -55,173 +50,8 @@ object ShingleStore {
     base.select(col("doc_id"), explode(array_distinct(grams)).as("sh"))
   }
 
-  def path(spark: SparkSession, sfDir: String): String = {
-    val root = spark.conf.getOption(RootConf)
-      .getOrElse(s"${System.getProperty("java.io.tmpdir")}/graft_shingles")
-    val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      PhysicalLayout.sourceTag(sfDir, "documents")
-    // v3 layout (EVERY table pointer-versioned): the prefix keys the
-    // layout so a pre-existing flat artifact is never misread
-    s"$root/sh3_$tag"
-  }
+  protected val tables = Seq(DocArtifact.Table("rows", "doc_id", shingleRowsOf))
 
-  /** Build the artifact from any (doc_id, text) frame into `dir` — the
-    * corpus-general entry (callers with their own corpora use this +
-    * [[append]] directly; the fixture queries go through [[ensure]]).
-    */
-  def build(spark: SparkSession, docs: DataFrame, dir: String): Unit =
-    Versioned.withWriterLease(dir) {
-    Versioned.publish(dir, "rows", -1L) { v =>
-      shingleRowsOf(docs).write.parquet(v)
-    }
-    // df over the JUST-WRITTEN rows: one parquet read beats recomputing
-    // the string pipeline a second time
-    refreshDf(spark, dir)
-    Versioned.metaBackend.createMarker(s"$dir/_SUCCESS")
-  }
-
-  /** Idempotent build of the shingle artifact over the `documents` fixture:
-    * first caller pays one pass (shingle explode + one df groupBy); later
-    * callers — and every query in any JVM — read the published parquet.
-    */
-  def ensure(spark: SparkSession, sfDir: String): String = {
-    val p = path(spark, sfDir)
-    PhysicalLayout.ensureDir(p) { tmp =>
-      build(spark, Tables.load(spark, sfDir, "documents"), tmp)
-    }
-    p
-  }
-
-  /** The persisted (doc_id, sh) posting rows at an explicit path (current
-    * version — appends land inside it, compaction re-points it), with any
-    * pending tombstones applied.
-    */
-  def rowsAt(spark: SparkSession, path: String): DataFrame =
-    Tombstones.applyTo(spark, path,
-      Versioned.read(spark, path, "rows"), "doc_id")
-
-  /** Current df version at an explicit path, watermark-checked: a recorded
-    * watermark that does not match the rows footer count means a crash
-    * landed between a rows append and the df refresh — repair (one pass
-    * over persisted rows) before serving stale frequencies. Footer
-    * metadata, not a data scan.
-    */
-  def dfAt(spark: SparkSession, path: String): DataFrame = {
-    // fingerprint-cached count (RowCountCache): the staleness check runs
-    // every read, the full count only when the table actually changed
-    val base = RowCountCache.countFor(path, "rows") {
-      rowsAt(spark, path).count()
-    }
-    if (!Versioned.readPointer(path, "df").exists(_.watermark == base))
-      try refreshDf(spark, path)
-      catch {
-        // an ACTIVE writer holds the lease and its own refresh is in
-        // flight — reads don't fail on maintenance contention
-        case _: Versioned.ConcurrentWriterException => ()
-      }
-    Versioned.read(spark, path, "df")
-  }
-
-  /** The persisted (doc_id, sh) posting rows. */
-  def rows(spark: SparkSession, sfDir: String): DataFrame =
-    rowsAt(spark, ensure(spark, sfDir))
-
-  /** The persisted (sh, df) document-frequency table. */
-  def dfTable(spark: SparkSession, sfDir: String): DataFrame =
-    dfAt(spark, ensure(spark, sfDir))
-
-  /** INCREMENTAL maintenance: append the shingle rows of documents not yet
-    * in the artifact (idempotent — already-present doc_ids are anti-joined
-    * away, so redelivery is a no-op), then refresh the derived df table
-    * from the artifact itself (one pass over persisted rows, not the
-    * corpus). Append-only corpus contract (the reference's chunk store is
-    * insert-or-skip, db_utils.py:131-146): a CHANGED document is not
-    * re-shingled by append — route changes through snapshotDiff and
-    * rebuild, or delete+append, as with any segmented index. This is how a
-    * live corpus keeps the artifact current without the full rebuild:
-    * append cost ∝ new documents. An absent store bootstraps (first
-    * streamed micro-batch creates it).
-    *
-    * Equivalence build(A) + append(B) == build(A ∪ B) is asserted in
-    * ArtifactStoresSpec. The df refresh publishes through the [[Versioned]]
-    * pointer protocol: concurrent readers see the old or the new version
-    * (never a missing table), and a crash between the rows append and the
-    * refresh is DETECTED by the df watermark and self-repaired on the next
-    * read. Single writer per artifact, as with any segmented index.
-    */
-  def append(spark: SparkSession, path: String, newDocs: DataFrame,
-             deferDerived: Boolean = false): Unit =
-    Versioned.withWriterLease(path) {
-    if (Versioned.readPointer(path, "rows").isEmpty) {
-      build(spark, newDocs, path)
-      return
-    }
-    appendRows(spark, path, newDocs)
-    // deferDerived: leave df to the first checked read's watermark repair
-    // (one refresh per read-after-N-appends — the streaming sink's mode)
-    if (!deferDerived) refreshDf(spark, path)
-  }
-
-  /** The rows append alone, WITHOUT the df refresh — private[sources] so
-    * the crash-recovery spec can simulate a failure between the two steps.
-    */
-  private[sources] def appendRows(spark: SparkSession, path: String,
-                                  newDocs: DataFrame): Unit = {
-    val cur = Versioned.readPointer(path, "rows").get.dir
-    // RAW read for the existing-check: a tombstoned id counts as present,
-    // so a deleted doc cannot be re-appended before a compact clears it
-    val existing = spark.read.parquet(s"$path/$cur").select("doc_id").distinct()
-    val fresh = newDocs.join(existing, Seq("doc_id"), "left_anti")
-    shingleRowsOf(fresh).write.mode("append").parquet(s"$path/$cur")
-  }
-
-  /** DELETE documents: tombstone their ids (immediately visible, cost ∝
-    * deleted ids); the next [[compactRows]] applies it physically. The df
-    * watermark self-aligns via the checked read (or eager = true now).
-    * A tombstoned id stays deleted until a compact clears the sidecar.
-    */
-  def delete(spark: SparkSession, path: String, docIds: DataFrame,
-             eager: Boolean = true): Unit =
-    Versioned.withWriterLease(path) {
-    Tombstones.add(spark, path, docIds)
-    if (eager) refreshDf(spark, path)
-  }
-
-  /** Small-file COMPACTION for the rows table: N appends leave N file
-    * sets whose per-file open cost erodes scan throughput (the
-    * many-small-files tax, not a pruning loss — rows joins shuffle on
-    * `sh`, no range probes). Rewrites the current version into
-    * `partitions` files behind one atomic re-point; readers mid-join keep
-    * the previous version. Pending tombstones are applied physically and
-    * cleared (publish-then-clear — a crash in between leaves no-op
-    * tombstones). df is untouched (the rewrite preserves the
-    * post-tombstone row set the watermark was stamped against).
-    */
-  def compactRows(spark: SparkSession, path: String, partitions: Int = 4): Unit =
-    Versioned.withWriterLease(path) {
-    val all = rowsAt(spark, path) // tombstones applied
-    Versioned.publish(path, "rows", -1L) { v =>
-      all.repartition(partitions).write.parquet(v)
-    }
-    Tombstones.clear(spark, path)
-  }
-
-  /** SELF-SCHEDULING small-file compaction (the PostingStore.compactIfNeeded
-    * pattern): one driver-side file-count check; the rewrite runs only past
-    * `maxFiles`. Returns whether a compaction ran.
-    */
-  def compactRowsIfNeeded(spark: SparkSession, path: String,
-                          maxFiles: Int = 16, partitions: Int = 4): Boolean = {
-    val fragmented = Versioned.partFileCount(path, "rows") > maxFiles
-    if (fragmented) compactRows(spark, path, partitions)
-    fragmented
-  }
-
-  private[sources] def refreshDf(spark: SparkSession, path: String): Unit =
-    Versioned.withWriterLease(path) {
-    val rows = rowsAt(spark, path)
-    Versioned.publish(path, "df", rows.count()) { v =>
-      rows.groupBy("sh").agg(count(lit(1)).as("df")).write.parquet(v)
-    }
-  }
+  override protected val derivedTables = Seq(DocArtifact.Derived("df",
+    _.groupBy("sh").agg(count(lit(1)).as("df"))))
 }

@@ -1,13 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Build-once POSITIONAL anchor artifact for exact-substring deduplication
   * (Lee et al. 2022, "Deduplicating Training Data Makes Language Models
   * Better" — the ExactSubstr modality: verbatim spans of >= L tokens shared
-  * ACROSS documents, beyond what shingle-set similarity measures). Same
-  * lifecycle as [[ShingleStore]]: a real corpus maintains the anchor tables
+  * ACROSS documents, beyond what shingle-set similarity measures). A
+  * [[DocArtifact]]: a real corpus maintains the anchor tables
   * at ingest and every substring-dedup query probes them instead of
   * re-running the tokenize→gram→hash pipeline per invocation.
   *
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * consecutive anchors covering all S positions — no span is missed, none
   * is overcounted).
   *
-  * Artifact layout (each behind the [[Versioned]] pointer protocol):
+  * Artifact layout:
   *   `rows` — (doc_id, n_words, pos, h): one row per anchor START, where
   *            `h = xxhash64(anchor text)`. Hashing the 8-word window to 64
   *            bits divides the posting payload by ~6x and makes the df
@@ -31,10 +31,8 @@ import org.apache.spark.sql.functions._
   *   `docs` — (doc_id, n_words): per-document token counts for EVERY
   *            non-empty document (including those shorter than the anchor
   *            width), so coverage queries never re-read the corpus text.
-  *   `df`   — (h, df) for DUPLICATED anchors only (df >= 2), precomputed
-  *            once per maintenance cycle (watermarked like ShingleStore's
-  *            df — a crash between a rows append and the refresh is
-  *            detected and self-repaired on the next read). Unique
+  *            A tiny sidecar: compaction rewrites it into one file.
+  *   `df`   — derived (h, df) for DUPLICATED anchors only (df >= 2). Unique
   *            anchors dominate any real corpus (the table would otherwise
   *            be as large as the corpus word count), and every consumer
   *            filters df >= 2 anyway — storing only the dup side shrinks
@@ -47,7 +45,8 @@ import org.apache.spark.sql.functions._
   *
   * At 100 TB: rows are written CLUSTERED by doc_id (PhysicalLayout
   * .writeSorted — each document's anchors co-located, tight doc_id
-  * row-group ranges for per-doc provenance probes). Clustering by `h`
+  * row-group ranges for per-doc provenance probes; appends add unsorted
+  * files until a compaction re-clusters them). Clustering by `h`
   * was measured and REJECTED: no declared query probes by h, and
   * h-ordering scatters each doc's anchors across partitions, which
   * destroys the partial-aggregation locality of the covered-position
@@ -61,29 +60,20 @@ import org.apache.spark.sql.functions._
   * is a plan-level materialization, not a semantic change (modulo the
   * documented hash-collision odds).
   */
-object SubstrStore {
+object SubstrStore extends DocArtifact("spark.graft.substr.dir", "graft_substr",
+  // v2: dup-only df table (round 10) — the layout version in the path
+  // retires pre-change cached artifacts instead of serving a stale
+  // full-df table through the idempotent ensure()
+  s"sub${SubstrStore.AnchorWords}v2_") {
 
   /** Anchor window width in words: a shared verbatim run of >= 8 words
     * (~50+ chars) counts as a duplicated span — the smallest width at
     * which boilerplate 3-grams stop dominating (at width 3 the synthetic
     * corpus is ~92% "duplicated"; at 8 the signal is the actual shared
-    * passages: ~9% of docs).
+    * passages: ~9% of docs). A constant, so the layout prefix above can
+    * read it before this object is initialized.
     */
-  val AnchorWords = 8
-
-  /** Conf key overriding the artifact root (default: system tmpdir). */
-  val RootConf = "spark.graft.substr.dir"
-
-  def path(spark: SparkSession, sfDir: String): String = {
-    val root = spark.conf.getOption(RootConf)
-      .getOrElse(s"${System.getProperty("java.io.tmpdir")}/graft_substr")
-    val tag = sfDir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      PhysicalLayout.sourceTag(sfDir, "documents")
-    // v2: dup-only df table + h-sorted rows (round 10) — the layout
-    // version in the path retires pre-change cached artifacts instead of
-    // serving a stale full-df table through the idempotent ensure()
-    s"$root/sub${AnchorWords}v2_$tag"
-  }
+  final val AnchorWords = 8
 
   private def normBase(docs: DataFrame): DataFrame = {
     val norm = lower(trim(regexp_replace(col("text"), "\\s+", " ")))
@@ -133,106 +123,17 @@ object SubstrStore {
       anchors.groupBy("h").agg(countDistinct(col("doc_id")).as("df")))
   }
 
-  /** Build the artifact from any (doc_id, text) frame into `dir`. */
-  def build(spark: SparkSession, docs: DataFrame, dir: String): Unit =
-    Versioned.withWriterLease(dir) {
-      Versioned.publish(dir, "rows", -1L) { v =>
-        PhysicalLayout.writeSorted(anchorRowsOf(docs), "doc_id", v)
-      }
-      Versioned.publish(dir, "docs", -1L) { v =>
-        docRowsOf(docs).write.parquet(v)
-      }
-      refreshDf(spark, dir)
-      Versioned.metaBackend.createMarker(s"$dir/_SUCCESS")
-    }
+  protected val tables = Seq(
+    DocArtifact.Table("rows", "doc_id", anchorRowsOf,
+      build = DocArtifact.sorted("doc_id"), compact = DocArtifact.sorted("doc_id")),
+    DocArtifact.Table("docs", "doc_id", docRowsOf,
+      compact = (rows, dir, _) => rows.coalesce(1).write.parquet(dir)))
 
-  /** Idempotent build over the `documents` fixture (first caller pays one
-    * corpus pass; later callers in any JVM read the published parquet).
-    */
-  def ensure(spark: SparkSession, sfDir: String): String = {
-    val p = path(spark, sfDir)
-    PhysicalLayout.ensureDir(p) { tmp =>
-      build(spark, Tables.load(spark, sfDir, "documents"), tmp)
-    }
-    p
-  }
-
-  /** Current anchor rows at an explicit path, tombstones applied. */
-  def rowsAt(spark: SparkSession, path: String): DataFrame =
-    Tombstones.applyTo(spark, path,
-      Versioned.read(spark, path, "rows"), "doc_id")
-
-  /** Current per-doc word counts at an explicit path, tombstones applied. */
-  def docsAt(spark: SparkSession, path: String): DataFrame =
-    Tombstones.applyTo(spark, path,
-      Versioned.read(spark, path, "docs"), "doc_id")
-
-  /** Current df table (DUPLICATED anchors only, df >= 2), watermark-checked
-    * against the rows footer count
-    * (the ShingleStore.dfAt protocol: a crash between a rows append and
-    * the df refresh is repaired by one pass over persisted rows).
-    */
-  def dfAt(spark: SparkSession, path: String): DataFrame = {
-    // fingerprint-cached count (RowCountCache, the ShingleStore.dfAt note)
-    val base = RowCountCache.countFor(path, "rows") {
-      rowsAt(spark, path).count()
-    }
-    if (!Versioned.readPointer(path, "df").exists(_.watermark == base))
-      try refreshDf(spark, path)
-      catch {
-        case _: Versioned.ConcurrentWriterException => ()
-      }
-    Versioned.read(spark, path, "df")
-  }
-
-  /** The persisted positional anchor rows over the fixture. */
-  def rows(spark: SparkSession, sfDir: String): DataFrame =
-    rowsAt(spark, ensure(spark, sfDir))
-
-  /** The persisted (doc_id, n_words) table over the fixture. */
-  def docTable(spark: SparkSession, sfDir: String): DataFrame =
-    docsAt(spark, ensure(spark, sfDir))
-
-  /** The persisted (h, df) dup-anchor (df >= 2) frequency table over the
-    * fixture.
-    */
-  def dfTable(spark: SparkSession, sfDir: String): DataFrame =
-    dfAt(spark, ensure(spark, sfDir))
-
-  /** INCREMENTAL maintenance, ShingleStore.append's contract: append
-    * anchors + doc rows for documents not yet present (idempotent under
-    * redelivery), then refresh df from the artifact itself. Append-only
-    * corpus contract; changed documents route through delete + append.
-    */
-  def append(spark: SparkSession, path: String, newDocs: DataFrame,
-             deferDerived: Boolean = false): Unit =
-    Versioned.withWriterLease(path) {
-      if (Versioned.readPointer(path, "rows").isEmpty) {
-        build(spark, newDocs, path)
-        return
-      }
-      val curRows = Versioned.readPointer(path, "rows").get.dir
-      val curDocs = Versioned.readPointer(path, "docs").get.dir
-      // RAW read for the existing-check: a tombstoned id counts as present,
-      // so a deleted doc cannot be re-appended before a compact clears it
-      val existing = spark.read.parquet(s"$path/$curDocs")
-        .select("doc_id").distinct()
-      val fresh = newDocs.join(existing, Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
-      anchorRowsOf(fresh).write.mode("append").parquet(s"$path/$curRows")
-      docRowsOf(fresh).write.mode("append").parquet(s"$path/$curDocs")
-      if (!deferDerived) refreshDf(spark, path)
-    }
-
-  /** DELETE documents: tombstone ids (visible immediately, cost ∝ deleted
-    * ids); df realigns via the checked read or eagerly now.
-    */
-  def delete(spark: SparkSession, path: String, docIds: DataFrame,
-             eager: Boolean = true): Unit =
-    Versioned.withWriterLease(path) {
-      Tombstones.add(spark, path, docIds)
-      if (eager) refreshDf(spark, path)
-    }
+  // dup anchors only (df >= 2) — see the layout scaladoc: consumers never
+  // read unique anchors, and dropping them is what keeps this table
+  // broadcast-sized at any corpus scale
+  override protected val derivedTables = Seq(DocArtifact.Derived("df",
+    _.groupBy("h").agg(countDistinct(col("doc_id")).as("df")).filter(col("df") >= 2)))
 
   /** Per-document duplicated-span statistics from anchor/df/doc frames —
     * the exact-substring-dedup computation itself (x15's engine side and
@@ -268,42 +169,4 @@ object SubstrStore {
         round(coalesce(col("dup_words"), lit(0L)) /
           col("n_words").cast("double"), 6).as("dup_frac"))
   }
-
-  /** Small-file compaction for the anchor rows table + the tiny docs
-    * sidecar (the ShingleStore.compactRows contract: atomic re-point,
-    * pending tombstones applied physically then cleared, df untouched).
-    */
-  def compactRows(spark: SparkSession, path: String, partitions: Int = 4): Unit =
-    Versioned.withWriterLease(path) {
-      val rows = rowsAt(spark, path)
-      val docs = docsAt(spark, path)
-      Versioned.publish(path, "rows", -1L) { v =>
-        PhysicalLayout.writeSorted(rows, "doc_id", v, partitions = partitions)
-      }
-      Versioned.publish(path, "docs", -1L) { v =>
-        docs.coalesce(1).write.parquet(v)
-      }
-      Tombstones.clear(spark, path)
-    }
-
-  /** Self-scheduling compaction (one driver-side file-count check). */
-  def compactRowsIfNeeded(spark: SparkSession, path: String,
-                          maxFiles: Int = 16, partitions: Int = 4): Boolean = {
-    val fragmented = Versioned.partFileCount(path, "rows") > maxFiles
-    if (fragmented) compactRows(spark, path, partitions)
-    fragmented
-  }
-
-  private[sources] def refreshDf(spark: SparkSession, path: String): Unit =
-    Versioned.withWriterLease(path) {
-      val rows = rowsAt(spark, path)
-      Versioned.publish(path, "df", rows.count()) { v =>
-        // dup anchors only (df >= 2) — see the layout scaladoc: consumers
-        // never read unique anchors, and dropping them is what keeps this
-        // table broadcast-sized at any corpus scale
-        rows.groupBy("h").agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") >= 2)
-          .write.parquet(v)
-      }
-    }
 }

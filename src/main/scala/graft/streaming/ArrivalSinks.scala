@@ -178,10 +178,12 @@ private[streaming] object ArrivalSinks {
     }
   }
 
-  /** The shared stream scaffold: session conf tweaks (restored in a
-    * finally), a binaryFile or CDC-log source built by `mkRows`, one
-    * foreachBatch draining synchronously. `mkBatch` turns a raw batch
-    * into the (ups, dels) pair for [[processBatch]].
+  /** The stream scaffold of every arrival sink: session conf tweaks
+    * (restored in a finally), a binaryFile or CDC-log `source`, one
+    * foreachBatch running `body` per batch, drained synchronously. The
+    * many-small-files scan pins the per-file open cost to 8 KiB: the
+    * default 4 MiB padding fragments a folder of KB-sized documents into
+    * hundreds of near-empty tasks.
     */
   private[streaming] def runArrival(spark: SparkSession, checkpoint: String,
                                     source: DataFrame,
@@ -208,7 +210,9 @@ private[streaming] object ArrivalSinks {
     }
   }
 
-  /** The binaryFile arrival source the marker sinks share. */
+  /** The binaryFile arrival source every file-arrival sink shares (the
+    * schema is fixed and declared: streaming file sources do not infer).
+    */
   private[streaming] def binarySource(spark: SparkSession, srcDir: String,
                                       glob: String): DataFrame = {
     import org.apache.spark.sql.types._

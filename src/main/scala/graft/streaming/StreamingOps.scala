@@ -285,101 +285,61 @@ object StreamingOps {
     */
   def binaryArrivalIngest(spark: SparkSession, srcDir: String, glob: String,
                           targetPath: String, checkpoint: String): Unit = {
-    import org.apache.spark.sql.types._
-    // the binaryFile source's schema is fixed; declared explicitly because
-    // streaming file sources do not infer
-    val schema = StructType(Seq(
-      StructField("path", StringType),
-      StructField("modificationTime", TimestampType),
-      StructField("length", LongType),
-      StructField("content", BinaryType)))
-    // many-small-files scan: the default 4 MiB per-file open cost padding
-    // fragments a folder of KB-sized documents into hundreds of near-empty
-    // tasks; 8 KiB keeps task count proportional to actual bytes. Pinned
-    // for the drain and restored (same pattern as runToMemory).
-    val prevOpenCost = spark.conf.get("spark.sql.files.openCostInBytes")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.files.openCostInBytes", "8192")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val stream = spark.readStream.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .schema(schema)
-      .load(srcDir)
-    val rows = stream.select(
+    val rows = ArrivalSinks.binarySource(spark, srcDir, glob).select(
         regexp_replace(regexp_extract(col("path"), "([^/]+)$", 1),
           "[^a-zA-Z0-9_\\-=]", "_").as("doc_key"),
         trim(regexp_replace(decode(col("content"), "UTF-8"), "\\s+", " ")).as("norm"))
       .select(col("doc_key"), md5(col("norm")).as("text_hash"),
         length(col("norm")).as("n_chars_norm"))
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      // start() inside the try: a startup failure must still restore confs
-      q = rows.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val sp = batch.sparkSession
-          val dedup = graft.operators.Ingest
-            .dedupExactDeterministic(batch.toDF(), Seq("doc_key"))
-          // first batch only: the store does not exist yet
-          val existingKeys =
-            parquetIfExists(sp, targetPath).map(_.select("text_hash").distinct())
-          val fresh = existingKeys match {
-            case Some(ex) => dedup.join(ex, Seq("text_hash"), "left_anti")
-            case None => dedup
-          }
-          fresh.write.mode("append").parquet(targetPath)
-        }
-        .start()
-      q.processAllAvailable()
-    } finally {
-      try { if (q != null) q.stop() } finally {
-        spark.conf.set("spark.sql.files.openCostInBytes", prevOpenCost)
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+    ArrivalSinks.runArrival(spark, checkpoint, rows, { batch =>
+      appendNewHashes(batch.sparkSession, batch, targetPath)
+    })
+  }
+
+  /** The chunk-store step of the arrival sinks — the reference's
+    * insert-or-skip: dedup `batch` (doc_key, text_hash, n_chars_norm)
+    * within itself, drop the hashes the store at `targetPath` already
+    * holds (absent store: the first batch), append the rest.
+    */
+  private def appendNewHashes(sp: SparkSession, batch: DataFrame,
+                              targetPath: String): Unit = {
+    val dedup = graft.operators.Ingest
+      .dedupExactDeterministic(batch, Seq("doc_key"))
+    val fresh = parquetIfExists(sp, targetPath) match {
+      case Some(ex) => dedup.join(ex.select("text_hash").distinct(), Seq("text_hash"), "left_anti")
+      case None => dedup
     }
+    fresh.write.mode("append").parquet(targetPath)
   }
 
   /** A1 streaming ingest WITH DERIVED-ARTIFACT MAINTENANCE: the s09
     * arrival pipeline extended so every micro-batch ALSO appends its
-    * documents to the three derived stores (postings / shingles / minhash)
-    * under `indexRoot`. The reference updates its one queryable index
-    * transactionally on every ingest (db_utils.py:169-170); the engine
-    * equivalent is keeping every derived artifact fresh AT INGEST TIME —
-    * without this, a live corpus serves stale postings/bands until someone
-    * runs a manual append. The store appends are idempotent (anti-join on
-    * already-present ids, bootstrap on an absent store), so foreachBatch's
-    * at-least-once redelivery — including a crash between the chunk-store
-    * write and the index appends — converges instead of duplicating.
+    * documents to the four document artifacts
+    * ([[graft.sources.DocArtifact.all]]: postings / shingles / minhash /
+    * substr) under `indexRoot`. The reference updates its one queryable
+    * index transactionally on every ingest (db_utils.py:169-170); the
+    * engine equivalent is keeping every derived artifact fresh AT INGEST
+    * TIME — without this, a live corpus serves stale postings/bands until
+    * someone runs a manual append. The store appends are idempotent
+    * (per-table anti-join on already-present ids, bootstrap on an absent
+    * store), so foreachBatch's at-least-once redelivery — including a
+    * crash between the chunk-store write and the index appends — converges
+    * instead of duplicating.
     *
     * Scale shape: per micro-batch the maintenance cost is ∝ batch size
     * (tokenize/shingle/sign the NEW docs only; derived-table refreshes are
-    * one pass over persisted artifacts, not the corpus). Segment
-    * fragmentation from many small appends is reclaimed by the scheduled
-    * [[graft.sources.PostingStore.compact]] (SCALE.md).
+    * deferred to the first checked read). Segment fragmentation from many
+    * small appends is bounded by each artifact's self-scheduling
+    * compactIfNeeded, run after all appends (SCALE.md).
     */
   def arrivalIngestMaintained(spark: SparkSession, srcDir: String, glob: String,
                               targetPath: String, checkpoint: String,
                               indexRoot: String): Unit = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("path", StringType),
-      StructField("modificationTime", TimestampType),
-      StructField("length", LongType),
-      StructField("content", BinaryType)))
-    val prevOpenCost = spark.conf.get("spark.sql.files.openCostInBytes")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.files.openCostInBytes", "8192")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val stream = spark.readStream.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .schema(schema)
-      .load(srcDir)
     // doc_id parsed from the fixture filename (doc_<id>.txt) so the
     // maintained artifacts carry the same ids the batch stores use; text
     // stays RAW — each store applies its own normalization, identical to
     // the batch build path (that is what keeps the oracle hash-exact)
-    val rows = stream.select(
+    val rows = ArrivalSinks.binarySource(spark, srcDir, glob).select(
         regexp_extract(col("path"), "doc_(\\d+)\\.txt$", 1).cast("long").as("doc_id"),
         regexp_replace(regexp_extract(col("path"), "([^/]+)$", 1),
           "[^a-zA-Z0-9_\\-=]", "_").as("doc_key"),
@@ -387,77 +347,23 @@ object StreamingOps {
       .withColumn("norm", trim(regexp_replace(col("text"), "\\s+", " ")))
       .select(col("doc_id"), col("doc_key"), col("text"),
         md5(col("norm")).as("text_hash"), length(col("norm")).as("n_chars_norm"))
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      q = rows.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val sp = batch.sparkSession
-          val b = batch.toDF().persist() // reused by the store write + 3 appends
-          try {
-            // (a) chunk-store upsert — the reference's insert-or-skip step
-            // (same dedup semantics as binaryArrivalIngest)
-            val dedup = graft.operators.Ingest.dedupExactDeterministic(
-              b.select("doc_key", "text_hash", "n_chars_norm"), Seq("doc_key"))
-            val existingKeys =
-              parquetIfExists(sp, targetPath).map(_.select("text_hash").distinct())
-            val freshRows = existingKeys match {
-              case Some(ex) => dedup.join(ex, Seq("text_hash"), "left_anti")
-              case None => dedup
-            }
-            freshRows.write.mode("append").parquet(targetPath)
-            // (b) derived-artifact maintenance: every store's BASE tables
-            // (postings / shingle rows / bands+sets) current at the end of
-            // the batch (ALL streamed docs are indexed — dedup governs the
-            // chunk store, not corpus statistics). The vocabulary-sized
-            // derived aggregates (df/stats) are DEFERRED to the first
-            // checked read: the watermark protocol repairs them on demand,
-            // so per-batch cost stays proportional to batch size instead
-            // of paying a full derived refresh per micro-batch.
-            val docs = b.select("doc_id", "text")
-            retryOnContention() {
-              graft.sources.PostingStore.append(sp, s"$indexRoot/postings", docs,
-                deferDerived = true)
-            }
-            retryOnContention() {
-              graft.sources.ShingleStore.append(sp, s"$indexRoot/shingles", docs,
-                deferDerived = true)
-            }
-            retryOnContention() {
-              graft.sources.MinhashStore.append(sp, s"$indexRoot/minhash", docs)
-            }
-            retryOnContention() {
-              graft.sources.SubstrStore.append(sp, s"$indexRoot/substr", docs,
-                deferDerived = true)
-            }
-            // self-scheduling compaction: the sink bounds its own
-            // fragmentation across ALL maintained stores (driver-side
-            // file-count checks per batch; rewrites run only past the
-            // threshold — SCALE.md scheduling)
-            retryOnContention() {
-              graft.sources.PostingStore.compactIfNeeded(sp, s"$indexRoot/postings")
-            }
-            retryOnContention() {
-              graft.sources.ShingleStore.compactRowsIfNeeded(sp, s"$indexRoot/shingles")
-            }
-            retryOnContention() {
-              graft.sources.MinhashStore.compactIfNeeded(sp, s"$indexRoot/minhash")
-            }
-            retryOnContention() {
-              graft.sources.SubstrStore.compactRowsIfNeeded(sp, s"$indexRoot/substr")
-            }
-            ()
-          } finally b.unpersist()
+    ArrivalSinks.runArrival(spark, checkpoint, rows, { batch =>
+      val sp = batch.sparkSession
+      val b = batch.persist() // reused by the store write + 4 appends
+      try {
+        appendNewHashes(sp, b.select("doc_key", "text_hash", "n_chars_norm"), targetPath)
+        // every artifact's BASE tables current at the end of the batch
+        // (ALL streamed docs are indexed — dedup governs the chunk store,
+        // not corpus statistics); the derived aggregates are DEFERRED to
+        // the first checked read, which the watermark protocol repairs
+        val docs = b.select("doc_id", "text")
+        val stores = graft.sources.DocArtifact.all.map { case (sub, a) => (a, s"$indexRoot/$sub") }
+        stores.foreach { case (a, p) =>
+          retryOnContention() { a.append(sp, p, docs, deferDerived = true) }
         }
-        .start()
-      q.processAllAvailable()
-    } finally {
-      try { if (q != null) q.stop() } finally {
-        spark.conf.set("spark.sql.files.openCostInBytes", prevOpenCost)
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
-    }
+        stores.foreach { case (a, p) => retryOnContention() { a.compactIfNeeded(sp, p) } }
+      } finally b.unpersist()
+    })
   }
 
   /** The reference's LITERAL ingest loop as a stream: file arrival →
@@ -474,7 +380,7 @@ object StreamingOps {
     *     [[graft.sources.VectorIndexStore.appendIvf]]s its vectors with
     *     the existing model (assign-only — retrain is a scheduled job).
     *
-    * Each table keys idempotency on its OWN ids (the MinhashStore
+    * Each table keys idempotency on its OWN ids (the DocArtifact
     * discipline), so a crash between the two writes converges on
     * redelivery instead of double-writing or training on an empty batch.
     * Integer bucket counts are what make the downstream kNN serve
@@ -485,114 +391,82 @@ object StreamingOps {
                          storePath: String, checkpoint: String,
                          ivfPath: String,
                          semPairsPath: Option[String] = None): Unit = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("path", StringType),
-      StructField("modificationTime", TimestampType),
-      StructField("length", LongType),
-      StructField("content", BinaryType)))
-    val prevOpenCost = spark.conf.get("spark.sql.files.openCostInBytes")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.files.openCostInBytes", "8192")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val stream = spark.readStream.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .schema(schema)
-      .load(srcDir)
-    val rows = stream.select(
+    val rows = ArrivalSinks.binarySource(spark, srcDir, glob).select(
       regexp_extract(col("path"), "doc_(\\d+)\\.txt$", 1).cast("long").as("doc_id"),
       decode(col("content"), "UTF-8").as("text"))
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
-      q = rows.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val sp = batch.sparkSession
-          import sp.implicits._
-          val b = batch.toDF().persist()
-          try {
-            // (a) sparse embedding store, keyed on its own ids
-            val existing =
-              parquetIfExists(sp, storePath).map(_.select("doc_id").distinct())
-            val freshSparse = existing match {
-              case Some(ex) => b.join(ex, Seq("doc_id"), "left_anti")
-              case None => b
-            }
-            freshSparse.select(col("doc_id"), col("text")).as[(Long, String)]
-              .mapPartitions { it =>
-                val emb = new graft.operators.HashingEmbedder()
-                it.flatMap { case (id, tx) =>
-                  emb.rawBucketCounts(tx).iterator.zipWithIndex
-                    .filter(_._1 != 0)
-                    .map { case (c, i) => (id, i, c) }
-                }
-              }
-              .toDF("doc_id", "idx", "cnt")
-              .write.mode("append").parquet(storePath)
-            // (b) vector index, keyed on its own vec_ids
-            val vecs = b.select(col("doc_id"), col("text")).as[(Long, String)]
-              .mapPartitions { it =>
-                val emb = new graft.operators.HashingEmbedder()
-                it.map { case (id, tx) => (id, 0, emb.embed(tx).toSeq) }
-              }
-              .toDF("vec_id", "label", "embedding")
-            // index-exists must resolve the Versioned pointer, NOT the
-            // legacy plain dir: after a second retrain deleteLegacy removes
-            // $path/model, and a plain-dir check would "rebuild" the index
-            // from one micro-batch into dirs no reader resolves — silently
-            // dropping every later batch from the served index
-            if (!graft.sources.Fs.exists(sp,
-                graft.operators.IvfIndex.modelDir(ivfPath))) {
-              // first ingest creates the index (train on the first batch —
-              // the bounded driver-side sample the IVF contract documents)
-              // and stamps the drift baseline the retrain check consumes
-              retryOnContention() {
-                graft.sources.VectorIndexStore.buildIvfAt(sp, ivfPath, vecs)
-              }
-            } else {
-              // lease contention (external maintenance holding the writer
-              // lease) gets the same bounded retry as the keyword-store
-              // sink — ConcurrentWriterException must not kill the stream
-              retryOnContention() {
-                graft.sources.VectorIndexStore.appendIvf(sp, ivfPath, vecs)
-              }
-              // close the watermark loop: when appended batches have
-              // drifted past the build-time baseline, retrain + re-gate +
-              // atomic pointer swap (below threshold this costs one read
-              // of the tiny qerr log — same self-scheduling discipline as
-              // the compactIfNeeded family). A candidate that fails its
-              // recall gate must NOT kill ingestion: the stale-but-valid
-              // geometry keeps serving and the failure surfaces as an
-              // operator alert (the direct API still throws).
-              try retryOnContention() {
-                graft.sources.VectorIndexStore.retrainIvfIfNeeded(sp, ivfPath)
-              }
-              catch {
-                case e: graft.sources.VectorIndexStore.RetrainRecallGateFailed =>
-                  System.err.println(s"[graft] retrain skipped: ${e.getMessage}")
-              }
-              ()
-            }
-            // (c) OPTIONAL semantic-pair maintenance (SemDeDup's pair set
-            // kept current by the sink itself, the s14 near-dup pattern):
-            // candidates from the just-maintained IVF cells, verified with
-            // EXACT integer cosine from the just-maintained sparse store,
-            // appended incrementally — see maintainSemPairs
-            semPairsPath.foreach { pp =>
-              maintainSemPairs(sp, ivfPath, storePath, pp,
-                b.select(col("doc_id")))
-            }
-          } finally b.unpersist()
+    ArrivalSinks.runArrival(spark, checkpoint, rows, { batch =>
+      val sp = batch.sparkSession
+      import sp.implicits._
+      val b = batch.persist()
+      try {
+        // (a) sparse embedding store, keyed on its own ids
+        val existing =
+          parquetIfExists(sp, storePath).map(_.select("doc_id").distinct())
+        val freshSparse = existing match {
+          case Some(ex) => b.join(ex, Seq("doc_id"), "left_anti")
+          case None => b
         }
-        .start()
-      q.processAllAvailable()
-    } finally {
-      try { if (q != null) q.stop() } finally {
-        spark.conf.set("spark.sql.files.openCostInBytes", prevOpenCost)
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
-    }
+        freshSparse.select(col("doc_id"), col("text")).as[(Long, String)]
+          .mapPartitions { it =>
+            val emb = new graft.operators.HashingEmbedder()
+            it.flatMap { case (id, tx) =>
+              emb.rawBucketCounts(tx).iterator.zipWithIndex
+                .filter(_._1 != 0)
+                .map { case (c, i) => (id, i, c) }
+            }
+          }
+          .toDF("doc_id", "idx", "cnt")
+          .write.mode("append").parquet(storePath)
+        // (b) vector index, keyed on its own vec_ids
+        val vecs = ArrivalSinks.embed(sp, b)
+        // index-exists must resolve the Versioned pointer, NOT the
+        // legacy plain dir: after a second retrain deleteLegacy removes
+        // $path/model, and a plain-dir check would "rebuild" the index
+        // from one micro-batch into dirs no reader resolves — silently
+        // dropping every later batch from the served index
+        if (!graft.sources.Fs.exists(sp,
+            graft.operators.IvfIndex.modelDir(ivfPath))) {
+          // first ingest creates the index (train on the first batch —
+          // the bounded driver-side sample the IVF contract documents)
+          // and stamps the drift baseline the retrain check consumes
+          retryOnContention() {
+            graft.sources.VectorIndexStore.buildIvfAt(sp, ivfPath, vecs)
+          }
+        } else {
+          // lease contention (external maintenance holding the writer
+          // lease) gets the same bounded retry as the keyword-store
+          // sink — ConcurrentWriterException must not kill the stream
+          retryOnContention() {
+            graft.sources.VectorIndexStore.appendIvf(sp, ivfPath, vecs)
+          }
+          // close the watermark loop: when appended batches have
+          // drifted past the build-time baseline, retrain + re-gate +
+          // atomic pointer swap (below threshold this costs one read
+          // of the tiny qerr log — same self-scheduling discipline as
+          // the compactIfNeeded family). A candidate that fails its
+          // recall gate must NOT kill ingestion: the stale-but-valid
+          // geometry keeps serving and the failure surfaces as an
+          // operator alert (the direct API still throws).
+          try retryOnContention() {
+            graft.sources.VectorIndexStore.retrainIvfIfNeeded(sp, ivfPath)
+          }
+          catch {
+            case e: graft.sources.VectorIndexStore.RetrainRecallGateFailed =>
+              System.err.println(s"[graft] retrain skipped: ${e.getMessage}")
+          }
+          ()
+        }
+        // (c) OPTIONAL semantic-pair maintenance (SemDeDup's pair set
+        // kept current by the sink itself, the s14 near-dup pattern):
+        // candidates from the just-maintained IVF cells, verified with
+        // EXACT integer cosine from the just-maintained sparse store,
+        // appended incrementally — see maintainSemPairs
+        semPairsPath.foreach { pp =>
+          maintainSemPairs(sp, ivfPath, storePath, pp,
+            b.select(col("doc_id")))
+        }
+      } finally b.unpersist()
+    })
   }
 
   /** STREAMED maintenance of a SHARDED vector index — the

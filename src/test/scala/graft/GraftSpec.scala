@@ -160,9 +160,9 @@ class GraftSpec extends SparkTestBase {
     val docs = graft.sources.Tables.load(spark, sf, "documents")
     val fresh = Graft.duplicatedSpans(spark, docs)
     val stored = graft.sources.SubstrStore.spanStats(
-      graft.sources.SubstrStore.rows(spark, sf),
-      graft.sources.SubstrStore.docTable(spark, sf),
-      graft.sources.SubstrStore.dfTable(spark, sf))
+      graft.sources.SubstrStore.table(spark, sf, "rows"),
+      graft.sources.SubstrStore.table(spark, sf, "docs"),
+      graft.sources.SubstrStore.derived(spark, sf, "df"))
     assert(fresh.count() == stored.count())
     assert(fresh.except(stored).isEmpty && stored.except(fresh).isEmpty)
     // structural sanity: dup_words bounded by n_words, frac consistent

@@ -17,11 +17,11 @@ class ArtifactStoresSpec extends SparkTestBase {
   private lazy val docs = Tables.load(spark, sf, "documents")
 
   test("ShingleStore rows and df equal a fresh computation") {
-    val stored = ShingleStore.rows(spark, sf)
+    val stored = ShingleStore.table(spark, sf, "rows")
     val fresh = ShingleStore.shingleRowsOf(docs)
     assert(stored.count() == fresh.count())
     assert(stored.except(fresh).isEmpty && fresh.except(stored).isEmpty)
-    val df = ShingleStore.dfTable(spark, sf)
+    val df = ShingleStore.derived(spark, sf, "df")
     val freshDf = fresh.groupBy("sh").agg(count(lit(1)).as("df"))
     assert(df.except(freshDf).isEmpty && freshDf.except(df).isEmpty)
   }
@@ -70,7 +70,7 @@ class ArtifactStoresSpec extends SparkTestBase {
     var computes = 0
     def counted(): Long = RowCountCache.countFor(s"$root/sh", "rows") {
       computes += 1
-      ShingleStore.rowsAt(spark, s"$root/sh").count()
+      ShingleStore.tableAt(spark, s"$root/sh", "rows").count()
     }
     val n1 = counted(); val n1b = counted()
     assert(n1 == n1b && computes == 1, "unchanged table must serve the memo")
@@ -84,7 +84,7 @@ class ArtifactStoresSpec extends SparkTestBase {
     val n3 = counted()
     assert(n3 < n2 && computes == 3, "tombstone must invalidate the memo")
     // compaction re-points the version -> fingerprint moves; count stable
-    ShingleStore.compactRows(spark, s"$root/sh", partitions = 2)
+    ShingleStore.compact(spark, s"$root/sh", partitions = 2)
     val n4 = counted()
     assert(n4 == n3 && computes == 4, "compact must invalidate the memo")
   }
@@ -93,15 +93,15 @@ class ArtifactStoresSpec extends SparkTestBase {
     import org.apache.spark.sql.DataFrame
     def eq(a: DataFrame, b: DataFrame): Boolean =
       a.count() == b.count() && a.except(b).isEmpty && b.except(a).isEmpty
-    val stored = SubstrStore.rows(spark, sf)
+    val stored = SubstrStore.table(spark, sf, "rows")
     val fresh = SubstrStore.anchorRowsOf(docs)
     assert(eq(stored, fresh))
-    assert(eq(SubstrStore.docTable(spark, sf), SubstrStore.docRowsOf(docs)))
+    assert(eq(SubstrStore.table(spark, sf, "docs"), SubstrStore.docRowsOf(docs)))
     // the stored df table keeps ONLY duplicated anchors (df >= 2) — the
     // broadcast-sized dup side every consumer joins against
     val freshDf = fresh.groupBy("h").agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") >= 2)
-    assert(eq(SubstrStore.dfTable(spark, sf), freshDf))
+    assert(eq(SubstrStore.derived(spark, sf, "df"), freshDf))
     // every anchor start must sit at a valid window position
     assert(fresh.filter(col("pos") < 1 ||
       col("pos") > col("n_words") - (SubstrStore.AnchorWords - 1)).isEmpty)
@@ -112,23 +112,23 @@ class ArtifactStoresSpec extends SparkTestBase {
     SubstrStore.build(spark, halfA, s"$root/inc")
     SubstrStore.append(spark, s"$root/inc", docs)
     SubstrStore.build(spark, docs, s"$root/full")
-    assert(eq(SubstrStore.rowsAt(spark, s"$root/inc"),
-      SubstrStore.rowsAt(spark, s"$root/full")))
-    assert(eq(SubstrStore.docsAt(spark, s"$root/inc"),
-      SubstrStore.docsAt(spark, s"$root/full")))
-    assert(eq(SubstrStore.dfAt(spark, s"$root/inc"),
-      SubstrStore.dfAt(spark, s"$root/full")))
+    assert(eq(SubstrStore.tableAt(spark, s"$root/inc", "rows"),
+      SubstrStore.tableAt(spark, s"$root/full", "rows")))
+    assert(eq(SubstrStore.tableAt(spark, s"$root/inc", "docs"),
+      SubstrStore.tableAt(spark, s"$root/full", "docs")))
+    assert(eq(SubstrStore.derivedAt(spark, s"$root/inc", "df"),
+      SubstrStore.derivedAt(spark, s"$root/full", "df")))
     // idempotence: re-appending the same corpus changes nothing
-    val before = SubstrStore.rowsAt(spark, s"$root/inc").count()
+    val before = SubstrStore.tableAt(spark, s"$root/inc", "rows").count()
     SubstrStore.append(spark, s"$root/inc", docs)
-    assert(SubstrStore.rowsAt(spark, s"$root/inc").count() == before)
+    assert(SubstrStore.tableAt(spark, s"$root/inc", "rows").count() == before)
     // delete: tombstoned doc vanishes from every table, df realigns
     val victim = docs.select(col("doc_id")).orderBy(col("doc_id")).limit(1)
     val vid = victim.head().getLong(0)
     SubstrStore.delete(spark, s"$root/inc", victim)
-    assert(SubstrStore.rowsAt(spark, s"$root/inc")
+    assert(SubstrStore.tableAt(spark, s"$root/inc", "rows")
       .filter(col("doc_id") === vid).isEmpty)
-    assert(SubstrStore.docsAt(spark, s"$root/inc")
+    assert(SubstrStore.tableAt(spark, s"$root/inc", "docs")
       .filter(col("doc_id") === vid).isEmpty)
   }
 
@@ -136,27 +136,27 @@ class ArtifactStoresSpec extends SparkTestBase {
     val root = java.nio.file.Files.createTempDirectory("graft_substr_defer").toString
     val halfA = docs.filter(col("doc_id") < 25)
     SubstrStore.build(spark, halfA, s"$root/st")
-    val dfBefore = SubstrStore.dfAt(spark, s"$root/st").count()
+    val dfBefore = SubstrStore.derivedAt(spark, s"$root/st", "df").count()
     // sink-mode append: rows land, df deliberately deferred (the crash-
     // equivalent state — watermark no longer matches the rows count)
     SubstrStore.append(spark, s"$root/st", docs, deferDerived = true)
-    val rowsNow = SubstrStore.rowsAt(spark, s"$root/st").count()
+    val rowsNow = SubstrStore.tableAt(spark, s"$root/st", "rows").count()
     assert(!Versioned.readPointer(s"$root/st", "df").exists(_.watermark == rowsNow),
       "deferred append must leave the df watermark stale")
     // the checked read repairs it — and the fingerprint cache must not
     // serve the pre-append count (the append changed the part listing)
-    val dfAfter = SubstrStore.dfAt(spark, s"$root/st").count()
+    val dfAfter = SubstrStore.derivedAt(spark, s"$root/st", "df").count()
     assert(dfAfter > dfBefore, "repair must rebuild df over the appended rows")
     assert(Versioned.readPointer(s"$root/st", "df").exists(_.watermark == rowsNow),
       "repair must stamp the current rows count")
   }
 
   test("MinhashStore bands/sets equal fresh computation; probed pairs identical") {
-    val bands = MinhashStore.bands(spark, sf)
+    val bands = MinhashStore.table(spark, sf, "bands")
     val freshBands = NearDup.minhashBuckets(spark, docs)
     assert(bands.except(freshBands).isEmpty && freshBands.except(bands).isEmpty)
     val fromStore = NearDup.minhashNearDupPairsFrom(spark,
-      bands, MinhashStore.shingleSets(spark, sf), threshold = 0.5)
+      bands, MinhashStore.table(spark, sf, "sets"), threshold = 0.5)
     val direct = NearDup.minhashNearDupPairs(spark, docs, threshold = 0.5)
     assert(fromStore.collect().toSeq == direct.collect().toSeq)
   }
@@ -188,7 +188,7 @@ class ArtifactStoresSpec extends SparkTestBase {
       // probe reads ~1 of ~5 groups (measured 2508 of 11743 rows); at real
       // posting-table sizes the same layout reads the queried terms' slice.
       val emitted = postingScan.get.metrics("numOutputRows").value
-      val total = PostingStore.postingsAt(spark, dir).count()
+      val total = PostingStore.tableAt(spark, dir, "postings").count()
       assert(emitted < total / 2,
         s"probe emitted $emitted of $total postings — row-group pruning not effective")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
@@ -215,34 +215,118 @@ class ArtifactStoresSpec extends SparkTestBase {
     ShingleStore.build(spark, halfA, s"$root/sh_inc")
     ShingleStore.append(spark, s"$root/sh_inc", docs)
     ShingleStore.build(spark, docs, s"$root/sh_full")
-    assert(eq(ShingleStore.rowsAt(spark, s"$root/sh_inc"),
-      ShingleStore.rowsAt(spark, s"$root/sh_full")))
-    assert(eq(ShingleStore.dfAt(spark, s"$root/sh_inc"),
-      ShingleStore.dfAt(spark, s"$root/sh_full")))
+    assert(eq(ShingleStore.tableAt(spark, s"$root/sh_inc", "rows"),
+      ShingleStore.tableAt(spark, s"$root/sh_full", "rows")))
+    assert(eq(ShingleStore.derivedAt(spark, s"$root/sh_inc", "df"),
+      ShingleStore.derivedAt(spark, s"$root/sh_full", "df")))
     // idempotence: re-appending the same corpus changes nothing
-    val before = ShingleStore.rowsAt(spark, s"$root/sh_inc").count()
+    val before = ShingleStore.tableAt(spark, s"$root/sh_inc", "rows").count()
     ShingleStore.append(spark, s"$root/sh_inc", docs)
-    assert(ShingleStore.rowsAt(spark, s"$root/sh_inc").count() == before)
+    assert(ShingleStore.tableAt(spark, s"$root/sh_inc", "rows").count() == before)
 
     // minhash: per-doc tables, pure append
     MinhashStore.build(spark, halfA, s"$root/mh_inc")
     MinhashStore.append(spark, s"$root/mh_inc", docs)
     MinhashStore.build(spark, docs, s"$root/mh_full")
-    assert(eq(MinhashStore.bandsAt(spark, s"$root/mh_inc"),
-      MinhashStore.bandsAt(spark, s"$root/mh_full")))
-    assert(MinhashStore.setsAt(spark, s"$root/mh_inc").count() ==
-      MinhashStore.setsAt(spark, s"$root/mh_full").count())
+    assert(eq(MinhashStore.tableAt(spark, s"$root/mh_inc", "bands"),
+      MinhashStore.tableAt(spark, s"$root/mh_full", "bands")))
+    assert(MinhashStore.tableAt(spark, s"$root/mh_inc", "sets").count() ==
+      MinhashStore.tableAt(spark, s"$root/mh_full", "sets").count())
 
     // postings: table equality up to segment layout + derived tables exact
     PostingStore.build(spark, halfA, s"$root/pt_inc")
     PostingStore.append(spark, s"$root/pt_inc", docs)
     PostingStore.build(spark, docs, s"$root/pt_full")
-    assert(eq(PostingStore.postingsAt(spark, s"$root/pt_inc"),
-      PostingStore.postingsAt(spark, s"$root/pt_full")))
-    assert(eq(PostingStore.dfAt(spark, s"$root/pt_inc"),
-      PostingStore.dfAt(spark, s"$root/pt_full")))
-    assert(eq(PostingStore.statsAt(spark, s"$root/pt_inc"),
-      PostingStore.statsAt(spark, s"$root/pt_full")))
+    assert(eq(PostingStore.tableAt(spark, s"$root/pt_inc", "postings"),
+      PostingStore.tableAt(spark, s"$root/pt_full", "postings")))
+    assert(eq(PostingStore.derivedAt(spark, s"$root/pt_inc", "df"),
+      PostingStore.derivedAt(spark, s"$root/pt_full", "df")))
+    assert(eq(PostingStore.derivedAt(spark, s"$root/pt_inc", "stats"),
+      PostingStore.derivedAt(spark, s"$root/pt_full", "stats")))
+
+    // substr: both base tables and the dup-anchor df, then idempotence
+    SubstrStore.build(spark, halfA, s"$root/sub_inc")
+    SubstrStore.append(spark, s"$root/sub_inc", docs)
+    SubstrStore.build(spark, docs, s"$root/sub_full")
+    for (t <- Seq("rows", "docs"))
+      assert(eq(SubstrStore.tableAt(spark, s"$root/sub_inc", t),
+        SubstrStore.tableAt(spark, s"$root/sub_full", t)), t)
+    assert(eq(SubstrStore.derivedAt(spark, s"$root/sub_inc", "df"),
+      SubstrStore.derivedAt(spark, s"$root/sub_full", "df")))
+    SubstrStore.append(spark, s"$root/sub_inc", docs)
+    for (t <- Seq("rows", "docs"))
+      assert(eq(SubstrStore.tableAt(spark, s"$root/sub_inc", t),
+        SubstrStore.tableAt(spark, s"$root/sub_full", t)), s"re-append changed $t")
+  }
+
+  test("a crash between two base tables' appends converges on retry (substr rows/docs, minhash bands/sets)") {
+    import org.apache.spark.sql.DataFrame
+    def eq(a: DataFrame, b: DataFrame): Boolean =
+      a.count() == b.count() && a.except(b).isEmpty && b.except(a).isEmpty
+    val root = java.nio.file.Files.createTempDirectory("graft_twotable_crash").toString
+    val halfA = docs.filter(col("doc_id") < 25)
+    val newDocs = docs.filter(col("doc_id") >= 25)
+
+    // substr: the batch's anchor rows landed, then the crash — its docs
+    // rows never did. The retry must not append the anchors a second time.
+    SubstrStore.build(spark, halfA, s"$root/sub")
+    val rowsDir = Versioned.readPointer(s"$root/sub", "rows").get.dir
+    SubstrStore.anchorRowsOf(newDocs).write.mode("append").parquet(s"$root/sub/$rowsDir")
+    SubstrStore.append(spark, s"$root/sub", newDocs)
+    SubstrStore.build(spark, docs, s"$root/sub_full")
+    for (t <- Seq("rows", "docs"))
+      assert(eq(SubstrStore.tableAt(spark, s"$root/sub", t),
+        SubstrStore.tableAt(spark, s"$root/sub_full", t)), t)
+    assert(eq(SubstrStore.derivedAt(spark, s"$root/sub", "df"),
+      SubstrStore.derivedAt(spark, s"$root/sub_full", "df")))
+
+    // minhash: the batch's bands landed, its sets never did
+    MinhashStore.build(spark, halfA, s"$root/mh")
+    val bandsDir = Versioned.readPointer(s"$root/mh", "bands").get.dir
+    NearDup.minhashBuckets(spark, newDocs).write.mode("append").parquet(s"$root/mh/$bandsDir")
+    MinhashStore.append(spark, s"$root/mh", newDocs)
+    MinhashStore.build(spark, docs, s"$root/mh_full")
+    assert(eq(MinhashStore.tableAt(spark, s"$root/mh", "bands"),
+      MinhashStore.tableAt(spark, s"$root/mh_full", "bands")))
+    assert(MinhashStore.tableAt(spark, s"$root/mh", "sets").count() ==
+      MinhashStore.tableAt(spark, s"$root/mh_full", "sets").count())
+  }
+
+  test("artifact paths keep their layout prefixes") {
+    val tag = sf.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
+      PhysicalLayout.sourceTag(sf, "documents")
+    val tmp = System.getProperty("java.io.tmpdir")
+    val expected = Seq(
+      (ShingleStore, "spark.graft.shingles.dir", "graft_shingles", "sh3_"),
+      (MinhashStore, "spark.graft.minhash.dir", "graft_minhash", "mh2_"),
+      (PostingStore, "spark.graft.postings.dir", "graft_postings", "pt2_"),
+      (SubstrStore, "spark.graft.substr.dir", "graft_substr", "sub8v2_"))
+    for ((a, conf, dir, prefix) <- expected) {
+      assert(a.RootConf == conf)
+      assert(a.path(spark, sf) == s"$tmp/$dir/$prefix$tag")
+    }
+  }
+
+  test("the document stores hold only their format; localCheckpoint only behind ScaleOps") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // split literals: this file must not match its own scan
+    val lifecycle = Seq("Versioned." + "withWriterLease", "Tombstones" + ".",
+      "RowCount" + "Cache", "partFile" + "Count")
+    val stores = Seq("Shingle", "Minhash", "Posting", "Substr")
+      .map(n => Paths.get(s"src/main/scala/graft/sources/${n}Store.scala"))
+    val leaks = stores.flatMap { p =>
+      val text = Files.readString(p)
+      lifecycle.filter(text.contains).map(w => s"$p: $w")
+    }
+    assert(leaks.isEmpty, leaks.mkString(", "))
+    val files = Files.walk(Paths.get("src/main"))
+    val checkpoints =
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filter(p => Files.readString(p).contains("localCheckpoint" + "("))
+        .map(_.getFileName.toString).toList
+      finally files.close()
+    assert(checkpoints == List("ScaleOps.scala"), checkpoints.mkString(", "))
   }
 
   test("a reader concurrent with a refresh always sees a complete df version") {
@@ -250,7 +334,7 @@ class ArtifactStoresSpec extends SparkTestBase {
     val halfA = docs.filter(col("doc_id") < 25)
     ShingleStore.build(spark, halfA, s"$root/sh")
     // resolve the CURRENT version (as a concurrent reader would)…
-    val oldDf = ShingleStore.dfAt(spark, s"$root/sh")
+    val oldDf = ShingleStore.derivedAt(spark, s"$root/sh", "df")
     val oldRows = oldDf.count()
     val oldPtr = Versioned.readPointer(s"$root/sh", "df").get
     // …then a refresh publishes a NEW version while the old read is open
@@ -262,8 +346,8 @@ class ArtifactStoresSpec extends SparkTestBase {
     assert(new java.io.File(s"$root/sh/${oldPtr.dir}").exists())
     assert(oldDf.count() == oldRows)
     // a new reader resolves the refreshed version with the bumped watermark
-    assert(newPtr.watermark == ShingleStore.rowsAt(spark, s"$root/sh").count())
-    assert(ShingleStore.dfAt(spark, s"$root/sh").count() >= oldRows)
+    assert(newPtr.watermark == ShingleStore.tableAt(spark, s"$root/sh", "rows").count())
+    assert(ShingleStore.derivedAt(spark, s"$root/sh", "df").count() >= oldRows)
   }
 
   test("crash between append and refresh: watermark detects staleness, reader self-repairs") {
@@ -272,29 +356,29 @@ class ArtifactStoresSpec extends SparkTestBase {
 
     // shingle store: simulate the crash (rows appended, df refresh never ran)
     ShingleStore.build(spark, halfA, s"$root/sh")
-    ShingleStore.appendRows(spark, s"$root/sh", docs)
+    ShingleStore.appendBase(spark, s"$root/sh", docs)
     val shPtr = Versioned.readPointer(s"$root/sh", "df").get
-    assert(shPtr.watermark != ShingleStore.rowsAt(spark, s"$root/sh").count(),
+    assert(shPtr.watermark != ShingleStore.tableAt(spark, s"$root/sh", "rows").count(),
       "stale df must be detectable via the watermark")
     // the checked reader repairs before serving: df equals a fresh build's
     ShingleStore.build(spark, docs, s"$root/sh_full")
-    val repaired = ShingleStore.dfAt(spark, s"$root/sh")
-    val expected = ShingleStore.dfAt(spark, s"$root/sh_full")
+    val repaired = ShingleStore.derivedAt(spark, s"$root/sh", "df")
+    val expected = ShingleStore.derivedAt(spark, s"$root/sh_full", "df")
     assert(repaired.except(expected).isEmpty && expected.except(repaired).isEmpty)
     assert(Versioned.readPointer(s"$root/sh", "df").get.watermark ==
-      ShingleStore.rowsAt(spark, s"$root/sh").count())
+      ShingleStore.tableAt(spark, s"$root/sh", "rows").count())
 
     // posting store: same drill for df AND stats
     PostingStore.build(spark, halfA, s"$root/pt")
-    PostingStore.appendSegment(spark, s"$root/pt", docs, PhysicalLayout.TestBlockSize)
+    PostingStore.appendBase(spark, s"$root/pt", docs, PhysicalLayout.TestBlockSize)
     assert(Versioned.readPointer(s"$root/pt", "df").get.watermark !=
-      PostingStore.postingsAt(spark, s"$root/pt").count())
+      PostingStore.tableAt(spark, s"$root/pt", "postings").count())
     PostingStore.build(spark, docs, s"$root/pt_full")
-    val rdf = PostingStore.dfAt(spark, s"$root/pt")
-    val edf = PostingStore.dfAt(spark, s"$root/pt_full")
+    val rdf = PostingStore.derivedAt(spark, s"$root/pt", "df")
+    val edf = PostingStore.derivedAt(spark, s"$root/pt_full", "df")
     assert(rdf.except(edf).isEmpty && edf.except(rdf).isEmpty)
-    val rst = PostingStore.statsAt(spark, s"$root/pt")
-    val est = PostingStore.statsAt(spark, s"$root/pt_full")
+    val rst = PostingStore.derivedAt(spark, s"$root/pt", "stats")
+    val est = PostingStore.derivedAt(spark, s"$root/pt_full", "stats")
     assert(rst.except(est).isEmpty && est.except(rst).isEmpty)
   }
 
@@ -317,12 +401,12 @@ class ArtifactStoresSpec extends SparkTestBase {
 
     def eq(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
       a.count() == b.count() && a.except(b).isEmpty && b.except(a).isEmpty
-    assert(eq(PostingStore.postingsAt(spark, s"$root/inc"),
-      PostingStore.postingsAt(spark, s"$root/full")))
+    assert(eq(PostingStore.tableAt(spark, s"$root/inc", "postings"),
+      PostingStore.tableAt(spark, s"$root/full", "postings")))
     // derived tables untouched by compact (same rows ⇒ same watermark) and
     // still exact
-    assert(eq(PostingStore.dfAt(spark, s"$root/inc"),
-      PostingStore.dfAt(spark, s"$root/full")))
+    assert(eq(PostingStore.derivedAt(spark, s"$root/inc", "df"),
+      PostingStore.derivedAt(spark, s"$root/full", "df")))
 
     // probe IO: the compacted artifact's term probe reads the same slice a
     // fresh build's does (global sort restored ⇒ one row-group range per
@@ -331,14 +415,14 @@ class ArtifactStoresSpec extends SparkTestBase {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       def probeRows(path: String): Long = {
-        val probe = PostingStore.postingsAt(spark, path)
+        val probe = PostingStore.tableAt(spark, path, "postings")
           .filter(col("tok").isin("dup", "vector"))
         probe.collect()
         probe.queryExecution.executedPlan.collect {
           case f: FileSourceScanExec => f.metrics("numOutputRows").value
         }.sum
       }
-      val total = PostingStore.postingsAt(spark, s"$root/full").count()
+      val total = PostingStore.tableAt(spark, s"$root/full", "postings").count()
       val fresh = probeRows(s"$root/full")
       val compacted = probeRows(s"$root/inc")
       assert(fresh < total / 2, s"fresh-build probe read $fresh of $total")
@@ -376,22 +460,22 @@ class ArtifactStoresSpec extends SparkTestBase {
     ShingleStore.build(spark, docs.filter(col("doc_id") < 15), s"$root/sh")
     ShingleStore.append(spark, s"$root/sh", docs.filter(col("doc_id") < 30))
     ShingleStore.append(spark, s"$root/sh", docs)
-    val shBefore = ShingleStore.rowsAt(spark, s"$root/sh")
+    val shBefore = ShingleStore.tableAt(spark, s"$root/sh", "rows")
     val shCount = shBefore.count()
     val fragmented = filesIn(s"$root/sh", "rows")
-    ShingleStore.compactRows(spark, s"$root/sh", partitions = 2)
+    ShingleStore.compact(spark, s"$root/sh", partitions = 2)
     assert(filesIn(s"$root/sh", "rows") == 2 && fragmented > 2,
       s"expected 2 files after compact (was $fragmented)")
-    assert(ShingleStore.rowsAt(spark, s"$root/sh").count() == shCount)
+    assert(ShingleStore.tableAt(spark, s"$root/sh", "rows").count() == shCount)
     ShingleStore.build(spark, docs, s"$root/sh_full")
-    assert(eq(ShingleStore.rowsAt(spark, s"$root/sh"),
-      ShingleStore.rowsAt(spark, s"$root/sh_full")))
-    assert(eq(ShingleStore.dfAt(spark, s"$root/sh"),
-      ShingleStore.dfAt(spark, s"$root/sh_full")))
+    assert(eq(ShingleStore.tableAt(spark, s"$root/sh", "rows"),
+      ShingleStore.tableAt(spark, s"$root/sh_full", "rows")))
+    assert(eq(ShingleStore.derivedAt(spark, s"$root/sh", "df"),
+      ShingleStore.derivedAt(spark, s"$root/sh_full", "df")))
 
     // the self-scheduling trigger: below threshold nothing runs, past it
     // the rewrite restores the bounded layout
-    assert(!ShingleStore.compactRowsIfNeeded(spark, s"$root/sh", maxFiles = 64))
+    assert(!ShingleStore.compactIfNeeded(spark, s"$root/sh", maxFiles = 64))
 
     MinhashStore.build(spark, docs.filter(col("doc_id") < 15), s"$root/mh")
     MinhashStore.append(spark, s"$root/mh", docs.filter(col("doc_id") < 30))
@@ -403,10 +487,34 @@ class ArtifactStoresSpec extends SparkTestBase {
     assert(filesIn(s"$root/mh", "bands") == 2 && mhFragmented > 2)
     assert(filesIn(s"$root/mh", "sets") == 2)
     MinhashStore.build(spark, docs, s"$root/mh_full")
-    assert(eq(MinhashStore.bandsAt(spark, s"$root/mh"),
-      MinhashStore.bandsAt(spark, s"$root/mh_full")))
-    assert(MinhashStore.setsAt(spark, s"$root/mh").count() ==
-      MinhashStore.setsAt(spark, s"$root/mh_full").count())
+    assert(eq(MinhashStore.tableAt(spark, s"$root/mh", "bands"),
+      MinhashStore.tableAt(spark, s"$root/mh_full", "bands")))
+    assert(MinhashStore.tableAt(spark, s"$root/mh", "sets").count() ==
+      MinhashStore.tableAt(spark, s"$root/mh_full", "sets").count())
+
+    // postings and substr: the same trigger and rewrite; the substr docs
+    // sidecar compacts into one file
+    for ((a, name, tables, derived) <- Seq(
+        (PostingStore, "pt", Seq("postings"), Seq("df", "stats")),
+        (SubstrStore, "sub", Seq("rows", "docs"), Seq("df")))) {
+      val first = tables.head
+      a.build(spark, docs.filter(col("doc_id") < 15), s"$root/$name")
+      a.append(spark, s"$root/$name", docs.filter(col("doc_id") < 30))
+      a.append(spark, s"$root/$name", docs)
+      val before = filesIn(s"$root/$name", first)
+      assert(!a.compactIfNeeded(spark, s"$root/$name", maxFiles = 64))
+      assert(a.compactIfNeeded(spark, s"$root/$name", maxFiles = 2, partitions = 2))
+      assert(filesIn(s"$root/$name", first) == 2 && before > 2,
+        s"$name: expected 2 files after compact (was $before)")
+      if (tables.contains("docs")) assert(filesIn(s"$root/$name", "docs") == 1)
+      a.build(spark, docs, s"$root/${name}_full")
+      for (t <- tables)
+        assert(eq(a.tableAt(spark, s"$root/$name", t),
+          a.tableAt(spark, s"$root/${name}_full", t)), s"$name $t")
+      for (d <- derived)
+        assert(eq(a.derivedAt(spark, s"$root/$name", d),
+          a.derivedAt(spark, s"$root/${name}_full", d)), s"$name $d")
+    }
   }
 
   test("delete tombstones: immediate reads, derived refresh, physical compaction, re-add after clear") {
@@ -422,47 +530,69 @@ class ArtifactStoresSpec extends SparkTestBase {
     PostingStore.build(spark, docs, s"$root/pt", PhysicalLayout.TestBlockSize)
     PostingStore.delete(spark, s"$root/pt", dele)
     PostingStore.build(spark, remaining, s"$root/pt_ref", PhysicalLayout.TestBlockSize)
-    assert(eq(PostingStore.postingsAt(spark, s"$root/pt"),
-      PostingStore.postingsAt(spark, s"$root/pt_ref")))
-    assert(eq(PostingStore.dfAt(spark, s"$root/pt"),
-      PostingStore.dfAt(spark, s"$root/pt_ref")))
-    assert(eq(PostingStore.statsAt(spark, s"$root/pt"),
-      PostingStore.statsAt(spark, s"$root/pt_ref")))
+    assert(eq(PostingStore.tableAt(spark, s"$root/pt", "postings"),
+      PostingStore.tableAt(spark, s"$root/pt_ref", "postings")))
+    assert(eq(PostingStore.derivedAt(spark, s"$root/pt", "df"),
+      PostingStore.derivedAt(spark, s"$root/pt_ref", "df")))
+    assert(eq(PostingStore.derivedAt(spark, s"$root/pt", "stats"),
+      PostingStore.derivedAt(spark, s"$root/pt_ref", "stats")))
     // a tombstoned id cannot sneak back in via append (raw existing-check)
     PostingStore.append(spark, s"$root/pt", docs, PhysicalLayout.TestBlockSize)
-    assert(eq(PostingStore.postingsAt(spark, s"$root/pt"),
-      PostingStore.postingsAt(spark, s"$root/pt_ref")))
+    assert(eq(PostingStore.tableAt(spark, s"$root/pt", "postings"),
+      PostingStore.tableAt(spark, s"$root/pt_ref", "postings")))
     // compaction applies the deletion physically and clears the sidecar
     PostingStore.compact(spark, s"$root/pt", PhysicalLayout.TestBlockSize)
     assert(Tombstones.read(spark, s"$root/pt").isEmpty)
     val cur = Versioned.readPointer(s"$root/pt", "postings").get.dir
     assert(spark.read.parquet(s"$root/pt/$cur")
       .join(dele, Seq("doc_id")).count() == 0, "deleted rows survived compaction")
-    assert(eq(PostingStore.postingsAt(spark, s"$root/pt"),
-      PostingStore.postingsAt(spark, s"$root/pt_ref")))
+    assert(eq(PostingStore.tableAt(spark, s"$root/pt", "postings"),
+      PostingStore.tableAt(spark, s"$root/pt_ref", "postings")))
     // after the clear, a re-append restores the documents
     PostingStore.append(spark, s"$root/pt", docs, PhysicalLayout.TestBlockSize)
     PostingStore.build(spark, docs, s"$root/pt_all", PhysicalLayout.TestBlockSize)
-    assert(eq(PostingStore.postingsAt(spark, s"$root/pt"),
-      PostingStore.postingsAt(spark, s"$root/pt_all")))
+    assert(eq(PostingStore.tableAt(spark, s"$root/pt", "postings"),
+      PostingStore.tableAt(spark, s"$root/pt_all", "postings")))
 
     // shingle + minhash: delete visible in every table, physical after compact
     ShingleStore.build(spark, docs, s"$root/sh")
     ShingleStore.delete(spark, s"$root/sh", dele)
-    assert(eq(ShingleStore.rowsAt(spark, s"$root/sh"),
+    assert(eq(ShingleStore.tableAt(spark, s"$root/sh", "rows"),
       ShingleStore.shingleRowsOf(remaining)))
-    ShingleStore.compactRows(spark, s"$root/sh")
+    ShingleStore.compact(spark, s"$root/sh")
     assert(Tombstones.read(spark, s"$root/sh").isEmpty)
-    assert(eq(ShingleStore.rowsAt(spark, s"$root/sh"),
+    assert(eq(ShingleStore.tableAt(spark, s"$root/sh", "rows"),
       ShingleStore.shingleRowsOf(remaining)))
     MinhashStore.build(spark, docs, s"$root/mh")
     MinhashStore.delete(spark, s"$root/mh", dele)
-    assert(eq(MinhashStore.bandsAt(spark, s"$root/mh"),
+    assert(eq(MinhashStore.tableAt(spark, s"$root/mh", "bands"),
       NearDup.minhashBuckets(spark, remaining)))
     MinhashStore.compact(spark, s"$root/mh")
     assert(Tombstones.read(spark, s"$root/mh").isEmpty)
-    assert(eq(MinhashStore.bandsAt(spark, s"$root/mh"),
+    assert(eq(MinhashStore.tableAt(spark, s"$root/mh", "bands"),
       NearDup.minhashBuckets(spark, remaining)))
+
+    // substr: delete visible in both base tables and the df, physical
+    // after compact, and a re-append after the clear restores the docs
+    def sameSubstr(a: String, b: String): Boolean =
+      Seq("rows", "docs").forall(t =>
+        eq(SubstrStore.tableAt(spark, a, t), SubstrStore.tableAt(spark, b, t))) &&
+        eq(SubstrStore.derivedAt(spark, a, "df"), SubstrStore.derivedAt(spark, b, "df"))
+    SubstrStore.build(spark, docs, s"$root/sub")
+    SubstrStore.delete(spark, s"$root/sub", dele)
+    SubstrStore.build(spark, remaining, s"$root/sub_ref")
+    assert(sameSubstr(s"$root/sub", s"$root/sub_ref"))
+    SubstrStore.compact(spark, s"$root/sub")
+    assert(Tombstones.read(spark, s"$root/sub").isEmpty)
+    for (t <- Seq("rows", "docs")) {
+      val cur = Versioned.readPointer(s"$root/sub", t).get.dir
+      assert(spark.read.parquet(s"$root/sub/$cur")
+        .join(dele, Seq("doc_id")).count() == 0, s"deleted $t rows survived compaction")
+    }
+    assert(sameSubstr(s"$root/sub", s"$root/sub_ref"))
+    SubstrStore.append(spark, s"$root/sub", docs)
+    SubstrStore.build(spark, docs, s"$root/sub_all")
+    assert(sameSubstr(s"$root/sub", s"$root/sub_all"))
   }
 
   test("compactIfNeeded triggers only past the segment threshold and restores the layout") {
@@ -478,16 +608,16 @@ class ArtifactStoresSpec extends SparkTestBase {
       assert(!PostingStore.compactIfNeeded(spark, root, maxFiles = 64,
         blockSize = PhysicalLayout.TestBlockSize))
     }
-    val fragmented = PostingStore.segmentFileCount(root)
+    val fragmented = PostingStore.fileCount(root)
     assert(fragmented > 8, s"expected fragmentation, saw $fragmented files")
     // past the threshold the re-sort runs and the canonical layout returns
     assert(PostingStore.compactIfNeeded(spark, root, maxFiles = 8,
       blockSize = PhysicalLayout.TestBlockSize))
-    assert(PostingStore.segmentFileCount(root) <= 8)
+    assert(PostingStore.fileCount(root) <= 8)
     PostingStore.build(spark, docs, s"${root}_full",
       blockSize = PhysicalLayout.TestBlockSize)
-    val a = PostingStore.postingsAt(spark, root)
-    val b = PostingStore.postingsAt(spark, s"${root}_full")
+    val a = PostingStore.tableAt(spark, root, "postings")
+    val b = PostingStore.tableAt(spark, s"${root}_full", "postings")
     assert(a.count() == b.count() && a.except(b).isEmpty && b.except(a).isEmpty)
   }
 
@@ -660,13 +790,13 @@ class ArtifactStoresSpec extends SparkTestBase {
       assert(loser.getMessage.contains("single-writer") ||
         loser.getMessage.contains("active writer"))
       // the refused append left the store EXACTLY as it was
-      assert(ShingleStore.rowsAt(spark, dir).count() ==
+      assert(ShingleStore.tableAt(spark, dir, "rows").count() ==
         ShingleStore.shingleRowsOf(a).count())
     } finally { release.countDown(); holder.join() }
     // retried after the writer finished: final state == serial execution
     ShingleStore.append(spark, dir, b)
     val serial = ShingleStore.shingleRowsOf(a.union(b))
-    val stored = ShingleStore.rowsAt(spark, dir)
+    val stored = ShingleStore.tableAt(spark, dir, "rows")
     assert(stored.except(serial).isEmpty && serial.except(stored).isEmpty)
     assert(!new java.io.File(
         new java.io.File(dir).getCanonicalPath + ".WRITER.LEASE").exists(),

@@ -137,21 +137,21 @@ class StreamingOpsSpec extends SparkTestBase {
     // postings: maintained index == one-shot build over the same corpus
     val fresh = Files.createTempDirectory("graft_maintained_fresh").toString
     graft.sources.PostingStore.build(spark, docs, s"$fresh/postings")
-    assert(eq(graft.sources.PostingStore.postingsAt(spark, s"$idx/postings"),
-      graft.sources.PostingStore.postingsAt(spark, s"$fresh/postings")))
-    assert(eq(graft.sources.PostingStore.dfAt(spark, s"$idx/postings"),
-      graft.sources.PostingStore.dfAt(spark, s"$fresh/postings")))
-    assert(eq(graft.sources.PostingStore.statsAt(spark, s"$idx/postings"),
-      graft.sources.PostingStore.statsAt(spark, s"$fresh/postings")))
+    assert(eq(graft.sources.PostingStore.tableAt(spark, s"$idx/postings", "postings"),
+      graft.sources.PostingStore.tableAt(spark, s"$fresh/postings", "postings")))
+    assert(eq(graft.sources.PostingStore.derivedAt(spark, s"$idx/postings", "df"),
+      graft.sources.PostingStore.derivedAt(spark, s"$fresh/postings", "df")))
+    assert(eq(graft.sources.PostingStore.derivedAt(spark, s"$idx/postings", "stats"),
+      graft.sources.PostingStore.derivedAt(spark, s"$fresh/postings", "stats")))
     // shingles + minhash: same freshness guarantee
-    assert(eq(graft.sources.ShingleStore.rowsAt(spark, s"$idx/shingles"),
+    assert(eq(graft.sources.ShingleStore.tableAt(spark, s"$idx/shingles", "rows"),
       graft.sources.ShingleStore.shingleRowsOf(docs)))
-    assert(eq(graft.sources.MinhashStore.bandsAt(spark, s"$idx/minhash"),
+    assert(eq(graft.sources.MinhashStore.tableAt(spark, s"$idx/minhash", "bands"),
       graft.operators.NearDup.minhashBuckets(spark, docs)))
     // and redelivering everything after the fact changes nothing
     graft.sources.PostingStore.append(spark, s"$idx/postings", docs)
-    assert(eq(graft.sources.PostingStore.postingsAt(spark, s"$idx/postings"),
-      graft.sources.PostingStore.postingsAt(spark, s"$fresh/postings")))
+    assert(eq(graft.sources.PostingStore.tableAt(spark, s"$idx/postings", "postings"),
+      graft.sources.PostingStore.tableAt(spark, s"$fresh/postings", "postings")))
   }
 
   test("embed ingest maintains the sparse store and IVF index equal to one-shot builds") {

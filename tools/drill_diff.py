@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Compare two drill or cluster-smoke artifacts row by row.
+"""Compare two drill, cluster-smoke or bench artifacts row by row.
 
 Usage: python3 tools/drill_diff.py A.jsonl B.jsonl
 
@@ -7,6 +7,9 @@ Rows are keyed as follows:
   ScaleDrill timing rows   (scale, name, phase)
   ScaleDrill quality rows  (scale, name, marker)  marker = recall_line | cal_line
   ClusterSmoke rows        (name,)
+  Bench output             (query,)  one row per entry of the line's `work`
+                           object; Bench's short trailing total line (no
+                           `work`) is skipped
 It prints the keys only one side has, and for keys on both sides every
 differing rows_in / shuffle_rows / rows / recall_at_10 value (seconds are
 never compared). Exit status: 1 when a key is missing or extra, else 0.
@@ -26,17 +29,25 @@ def key(row):
     return ("timing", row["scale"], row["name"], row["phase"])
 
 
+def keyed(row):
+    """The (key, row) pairs one artifact line contributes."""
+    if "work" in row:
+        return [(("bench", q), w) for q, w in row["work"].items()]
+    if row.get("metric") == "total":
+        return []
+    return [(key(row), row)]
+
+
 def load(path):
     rows = {}
     with open(path) as f:
         for n, line in enumerate(f, 1):
             if not line.strip():
                 continue
-            row = json.loads(line)
-            k = key(row)
-            if k in rows:
-                sys.exit(f"{path}:{n}: duplicate key {k}")
-            rows[k] = row
+            for k, row in keyed(json.loads(line)):
+                if k in rows:
+                    sys.exit(f"{path}:{n}: duplicate key {k}")
+                rows[k] = row
     return rows
 
 
