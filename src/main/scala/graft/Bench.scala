@@ -1,6 +1,7 @@
 package graft
 
-import graft.sources.Tables
+import graft.sources.{Tables, VectorIndexStore}
+import org.apache.spark.sql.SparkSession
 
 /** Perf gate (driver contract): run every declared query at the given SF and
   * print one JSON line of per-query seconds. A warmup pass first scans each
@@ -36,10 +37,17 @@ object Bench {
     val spark = Harness.localSession()
 
     // warmup: touch every table + exercise codegen once, and ensure the
-    // document artifacts, so a cold artifact is never built inside the
-    // first timed rep of whichever query reads it first
+    // document artifacts and the index-store geometries the registry's
+    // queries ensure (every ensureIvf/ensurePq under graft/queries), so a
+    // cold artifact is never built inside the first timed rep of whichever
+    // query reads it first
     Tables.all.foreach(n => Tables.load(spark, sfDir, n).count())
     graft.sources.DocArtifact.all.foreach(_._2.ensure(spark, sfDir))
+    Seq[SparkSession => String](
+      VectorIndexStore.ensureIvf(_, sfDir),
+      s => VectorIndexStore.ensureIvf(s, sfDir,
+        VectorIndexStore.autoCells(graft.queries.VectorQueries.embeddingCount(s, sfDir))),
+      VectorIndexStore.ensurePq(_, sfDir)).foreach(_(spark))
 
     // HOST-WARMTH SENTINEL: a fixed, registry-independent query (lineitem
     // group-agg through the noop sink) timed min-of-3 after warmup. Its

@@ -610,14 +610,36 @@ object IvfIndex {
     * parquet exactly, so the loaded model is bitwise the trained one
     * (asserted in IndexStoreSpec) — probe results cannot drift from the
     * build-time model.
+    *
+    * Served from the driver-side model cache: keyed by the resolved model
+    * dir (and the SparkContext, so each context's work counters include
+    * its own first load), valid while the dir's listing fingerprint
+    * ([[graft.sources.Versioned.listingFingerprint]]) is unchanged. A
+    * retrain publishes a new versioned dir; a rebuild of the unversioned
+    * `model` dir writes new UUID-named part files — either moves the key
+    * or the token, so a probe never sees a stale model, and a hit costs a
+    * pointer read and one listing instead of a schema job and a collect.
+    * Callers must not mutate the returned arrays.
     */
   def loadModel(spark: SparkSession, path: String): Model = {
-    import spark.implicits._
-    val rows = spark.read.parquet(modelDir(path))
-      .select("cell", "centroid").as[(Int, Seq[Double])]
-      .collect().sortBy(_._1)
-    Model(rows.map(_._2.toArray))
+    val dir = modelDir(path)
+    models(s"${spark.sparkContext.applicationId}#$dir",
+      graft.sources.Versioned.listingFingerprint(dir)) {
+      import spark.implicits._
+      val rows = spark.read.parquet(dir)
+        .select("cell", "centroid").as[(Int, Seq[Double])]
+        .collect().sortBy(_._1)
+      Model(rows.map(_._2.toArray))
+    }
   }
+
+  /** Centroid doubles the model cache holds at once (128 MiB); a larger
+    * model is loaded per call, as without a cache.
+    */
+  private val ModelCacheDoubles = 1L << 24
+
+  private val models = new graft.sources.FreshnessMemo[Model](ModelCacheDoubles,
+    _.centroids.iterator.map(_.length.toLong).sum)
 
   /** Resolve the current vectors directory: the [[graft.sources.Versioned]]
     * pointer when a compaction has published one, else the original
@@ -649,10 +671,11 @@ object IvfIndex {
     * whose contract is physical presence (append idempotence); readers
     * answering queries use [[loadVectors]]. The store's write `seq`
     * column is dropped (the catch-up journal reads it through
-    * [[IndexKind.journal]]).
+    * [[IndexKind.journal]]). The schema comes from one footer read on the
+    * driver ([[graft.sources.Fs.readParquet]]), so loading launches no job.
     */
   def loadVectorsRaw(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(vectorsDir(path)).drop(IndexKind.SeqColumn)
+    graft.sources.Fs.readParquet(spark, vectorsDir(path)).drop(IndexKind.SeqColumn)
 
   /** Sentinel `nProbe` value: resolve the probe width from the model's
     * cell count via [[autoNProbe]] — the ENGINE DEFAULT probe policy.

@@ -291,19 +291,35 @@ object PqIndex {
 
   /** Load the model sidecars back into a [[Model]] (bitwise the trained one
     * — doubles round-trip parquet exactly; subDim is recovered from the
-    * codebook centroid length).
+    * codebook centroid length). Served from the driver-side model cache
+    * like [[IvfIndex.loadModel]], keyed by both resolved dirs and valid
+    * while both listing fingerprints are unchanged.
     */
   def loadModel(spark: SparkSession, path: String): Model = {
-    import spark.implicits._
-    val coarse = spark.read.parquet(coarseDir(path))
-      .select("cell", "centroid").as[(Int, Seq[Double])]
-      .collect().sortBy(_._1).map(_._2.toArray)
-    val books = spark.read.parquet(codebooksDir(path))
-      .select("sub", "code", "centroid").as[(Int, Int, Seq[Double])]
-      .collect().groupBy(_._1).toArray.sortBy(_._1)
-      .map { case (_, rows) => rows.sortBy(_._2).map(_._3.toArray) }
-    Model(IvfIndex.Model(coarse), books, books(0)(0).length)
+    val (cDir, bDir) = (coarseDir(path), codebooksDir(path))
+    models(s"${spark.sparkContext.applicationId}#$cDir#$bDir",
+      graft.sources.Versioned.listingFingerprint(cDir) + "#" +
+        graft.sources.Versioned.listingFingerprint(bDir)) {
+      import spark.implicits._
+      val coarse = spark.read.parquet(cDir)
+        .select("cell", "centroid").as[(Int, Seq[Double])]
+        .collect().sortBy(_._1).map(_._2.toArray)
+      val books = spark.read.parquet(bDir)
+        .select("sub", "code", "centroid").as[(Int, Int, Seq[Double])]
+        .collect().groupBy(_._1).toArray.sortBy(_._1)
+        .map { case (_, rows) => rows.sortBy(_._2).map(_._3.toArray) }
+      Model(IvfIndex.Model(coarse), books, books(0)(0).length)
+    }
   }
+
+  /** Coarse-centroid plus codebook doubles the model cache holds at once
+    * (128 MiB); a larger model is loaded per call.
+    */
+  private val ModelCacheDoubles = 1L << 24
+
+  private val models = new graft.sources.FreshnessMemo[Model](ModelCacheDoubles, m =>
+    (m.coarse.centroids.iterator ++ m.codebooks.iterator.flatMap(_.iterator))
+      .map(_.length.toLong).sum)
 
   /** Resolve the current encoded directory: the pointer when a compaction
     * has published one, else the original `encoded` layout (backward
@@ -328,10 +344,11 @@ object PqIndex {
     graft.sources.Tombstones.applyTo(spark, path, loadEncodedRaw(spark, path), "vec_id")
 
   /** The PHYSICAL encoded table — tombstoned rows included, the write
-    * `seq` column dropped (as [[IvfIndex.loadVectorsRaw]]).
+    * `seq` column dropped, the schema read from one footer (as
+    * [[IvfIndex.loadVectorsRaw]]).
     */
   def loadEncodedRaw(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(encodedDir(path)).drop(IndexKind.SeqColumn)
+    graft.sources.Fs.readParquet(spark, encodedDir(path)).drop(IndexKind.SeqColumn)
 
   /** Default ADC re-rank shortlist when no measured calibration applies. */
   val DefaultShortlist = 50

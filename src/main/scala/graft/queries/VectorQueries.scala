@@ -1486,7 +1486,7 @@ object VectorQueries extends QuerySet {
     * every query invocation (the count is fixture-stable; the key embeds
     * the source fingerprint so a regenerated corpus recounts).
     */
-  private[queries] def embeddingCount(s: org.apache.spark.sql.SparkSession,
+  private[graft] def embeddingCount(s: org.apache.spark.sql.SparkSession,
                                       d: String): Long =
     DrillOnce.cached("emb_count#" + s.sparkContext.applicationId + "#" + d +
         "#" + graft.sources.PhysicalLayout.sourceTag(d, "embeddings")) {

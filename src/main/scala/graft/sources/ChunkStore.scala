@@ -88,7 +88,7 @@ object ChunkStore {
               .parquet(dir)
           }
         case Some(dir) =>
-          val existing = spark.read.parquet(dir).select(keyCol).distinct()
+          val existing = Fs.readParquet(spark, dir).select(keyCol).distinct()
           val fresh = deduped.join(existing, Seq(keyCol), "left_anti")
           val w = fresh.write.mode(SaveMode.Append)
           (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
@@ -107,7 +107,7 @@ object ChunkStore {
     * ensure/upsert ever created.
     */
   def readPhysical(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(currentDir(path).getOrElse(throw new IllegalStateException(
+    Fs.readParquet(spark, currentDir(path).getOrElse(throw new IllegalStateException(
       s"chunk store at $path has no published version (run ensure/upsert first)")))
 
   /** The LOGICAL store view: the physical table minus the [[Tombstones]]

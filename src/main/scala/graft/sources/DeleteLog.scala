@@ -33,7 +33,7 @@ object DeleteLog {
     */
   def watermark(spark: SparkSession, path: String): Long = {
     if (!Fs.exists(spark, dir(path))) return -1L
-    val row = spark.read.parquet(dir(path)).agg(max(col("seq"))).head()
+    val row = Fs.readParquet(spark, dir(path)).agg(max(col("seq"))).head()
     if (row.isNullAt(0)) -1L else row.getLong(0) // crash-left empty dir
   }
 
@@ -56,7 +56,7 @@ object DeleteLog {
     */
   def since(spark: SparkSession, path: String, watermark: Long): Option[DataFrame] =
     if (this.watermark(spark, path) <= watermark) None
-    else Some(spark.read.parquet(dir(path)).filter(col("seq") > watermark).select("vec_id"))
+    else Some(Fs.readParquet(spark, dir(path)).filter(col("seq") > watermark).select("vec_id"))
 
   /** Drop the journal: a compact/retrain rewrote the corpus and applied
     * pending tombstones physically, so its rows are absorbed into the new

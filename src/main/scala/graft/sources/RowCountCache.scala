@@ -13,38 +13,25 @@ package graft.sources
   * files to the current dir, compaction re-points the version, deletes
   * write the sidecar, clears remove it. The listing is a metadata operation
   * (the compactIfNeeded pattern) — only the COUNT is cached, never the
-  * staleness decision. Cross-process writers are covered because the token
-  * is recomputed from the filesystem on every read; the cache is only ever
-  * a (token → count) memo.
+  * staleness decision (a [[FreshnessMemo]]).
   */
 object RowCountCache {
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
+  /** Counts kept at once; one entry per (store, derived table). */
+  private val MaxCounts = 4096L
+
+  private val counts = new FreshnessMemo[Long](MaxCounts, _ => 1L)
 
   private def fingerprint(path: String, name: String): String = {
-    def listFp(dir: String): String =
-      Versioned.metaBackend.list(dir)
-        .filterNot(_.name.startsWith("."))
-        .sortBy(_.name)
-        .map(e => s"${e.name}:${e.size}")
-        .mkString("|")
     val cur = Versioned.readPointer(path, name).map(_.dir).getOrElse("-")
-    s"$cur#${listFp(s"$path/$cur")}#${listFp(s"$path/tombstones")}"
+    s"$cur#${Versioned.listingFingerprint(s"$path/$cur")}#" +
+      Versioned.listingFingerprint(s"$path/tombstones")
   }
 
   /** The row count of derived table `name`'s current version at `path`,
     * recomputed via `compute` only when the version's filesystem
     * fingerprint changed since the last call in this process.
     */
-  def countFor(path: String, name: String)(compute: => Long): Long = {
-    val token = fingerprint(path, name)
-    val hit = cache.get(s"$path#$name")
-    if (hit != null && hit._1 == token) hit._2
-    else {
-      val n = compute
-      cache.put(s"$path#$name", (token, n))
-      n
-    }
-  }
+  def countFor(path: String, name: String)(compute: => Long): Long =
+    counts(s"$path#$name", fingerprint(path, name))(compute)
 }

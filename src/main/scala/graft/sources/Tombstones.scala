@@ -54,7 +54,7 @@ object Tombstones {
   /** The tombstoned ids, if any ([None] when no delete ever ran). */
   def read(spark: SparkSession, path: String): Option[DataFrame] =
     if (!Fs.exists(spark, dir(path))) None
-    else Some(spark.read.parquet(dir(path)))
+    else Some(Fs.readParquet(spark, dir(path)))
 
   /** Anti-join `df` against the sidecar on `idCol` (no-op without one).
     * Column order is preserved — a using-column join moves the key first,

@@ -463,7 +463,7 @@ object VectorIndexStore {
     Versioned.withWriterLease(path) {
       val model = kind.loadModel(spark, path)
       val dir = kind.dataDir(path)
-      val existing = spark.read.parquet(dir).select("vec_id").distinct()
+      val existing = Fs.readParquet(spark, dir).select("vec_id").distinct()
       // executed ONCE for its three consumers (count, error stats, rows
       // write) by an eager checkpoint; a persist() would be unsafe — the
       // write's refreshByPath(dir) drops a cached plan over `dir`, and the
@@ -627,7 +627,7 @@ object VectorIndexStore {
     */
   private[graft] def nextSeq(spark: SparkSession, path: String): Long =
     if (!Fs.exists(spark, s"$path/qerr")) 0L
-    else spark.read.parquet(s"$path/qerr").count()
+    else Fs.readParquet(spark, s"$path/qerr").count()
 
   /** Append one (n_vectors, mean_sq_err, append_seq) watermark row to the
     * artifact's `qerr` log — the error series every append emits; a

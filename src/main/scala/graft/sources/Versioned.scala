@@ -276,6 +276,20 @@ object Versioned {
     metaBackend.list(s"$path/$cur").count(_.name.startsWith("part-"))
   }
 
+  /** Listing fingerprint of `dir`: each visible child's name and size
+    * (`.`-prefixed checksum and tmp siblings skipped), in name order; ""
+    * when absent. A driver-side metadata read that moves whenever a file
+    * is added, removed or rewritten under a new name (parquet writers name
+    * every part file with a fresh UUID) — the freshness token of every
+    * [[FreshnessMemo]] over a directory.
+    */
+  def listingFingerprint(dir: String): String =
+    metaBackend.list(dir)
+      .filterNot(_.name.startsWith("."))
+      .sortBy(_.name)
+      .map(e => s"${e.name}:${e.size}")
+      .mkString("|")
+
   /** Resolve the current version of derived table `name`, if published. */
   def readPointer(path: String, name: String): Option[Current] =
     metaBackend.readString(pointerFile(path, name)).map { content =>

@@ -541,4 +541,32 @@ trait ShardedKinds { self: SparkTestBase =>
       "the new generation must serve exactly the old root's logical view")
     assert(cu.replay(root, 3, newRoot, 2) == 0L)
   }
+
+  def reshardFreshnessCase(kind: KindUnderTest): Unit = {
+    import spark.implicits._
+    val home = java.nio.file.Files.createTempDirectory("graft_sh_fresh").toString
+    val fp = if (kind.encoded) Some(s"$home/fp") else None
+    val gen1 = s"$home/${ShardedHome.InitialGen}"
+    fp.foreach(FpStore.upsert(spark, _, kindEmb))
+    kind.sharded.build(spark, kindEmb, gen1, 2, nCellsPerShard = 8)
+    ShardedHome.publishServing(home, ShardedHome.InitialGen, 2)
+    // probe the serving generation: every shard's model is now cached
+    val (qid, qv) = kindEmb.filter(col("vec_id") === 1)
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].head()
+    assert(kind.exactSearch(gen1, 2, qv, 10, fp).select("vec_id").as[Long]
+      .collect().contains(qid))
+    (0 until 2).foreach(r => ServedModel.assertCurrent(spark, kind.sharded.kind, s"$gen1/shard=$r"))
+    val batch = tranche(30, 500000L)
+    fp.foreach(FpStore.upsert(spark, _, batch))
+    kind.sharded.append(spark, gen1, 2, batch)
+    val n = kindEmb.count() + 30
+    val (root, shards) = kind.grow(home, math.max(1L, (n + 2) / 3))
+    assert(root == s"$home/gen-2" && shards == 3, s"premise: the home grew, got ($root, $shards)")
+    val (bid, bv) = batch.orderBy("vec_id").select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])].head()
+    assert(kind.exactSearch(root, shards, bv, 10, fp).select("vec_id").as[Long]
+      .collect().contains(bid), "a probe of the new generation must find an appended vector")
+    (0 until shards).foreach(r =>
+      ServedModel.assertCurrent(spark, kind.sharded.kind, s"$root/shard=$r"))
+  }
 }
